@@ -12,7 +12,7 @@ import graft.queries._
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks
     * rows>0. The full clinical pipeline — scan, broadcast left joins,
-    * derivations, all five window metrics, filters — is the engine's
+    * derivations, filters, all five metrics — is the engine's
     * reason to exist, so it is the smoke test.
     */
   def entry(spark: SparkSession): DataFrame =

@@ -1,19 +1,18 @@
 package graft.clinical
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Presentation filters (pandas_DataModel.py:6-31).
   *
-  * Deliberately applied AFTER the window metrics: PSW/TSW/TBWL are
-  * defined over the user's full unfiltered history (SURVEY.md §4). The
-  * three predicates are per-user-constant, so pushing them below the
-  * UID-partitioned windows is semantics-preserving — done by
-  * [[graft.plans.UserConstantPredicatePushdown]] as an optimizer rule
-  * in strict mode, and by [[Pipeline]] handing [[predicate]] to the
-  * bug-compatible path as an early main-branch filter (the optimizer
-  * rule cannot see through that path's boundary join, so the pipeline
-  * exploits the same user-constant property structurally).
+  * The reference filters the finished frame, after the metrics:
+  * PSW/TSW/TBWL are defined over the user's full unfiltered history
+  * (SURVEY.md §4). The three predicates are constant per user (users
+  * holds one row per UID) and every metric group is a user or finer, so
+  * [[Pipeline]] applies [[predicate]] to the joined frame instead, below
+  * the metric pass: the pass never sorts or walks rows the filter
+  * discards. The one cross-user metric, the bug-compatible diff, reads
+  * its successor table from the unfiltered frame.
   */
 object Filters {
 
@@ -24,7 +23,4 @@ object Filters {
     gender && col("Age").between(cfg.minAge, cfg.maxAge) &&
       col("ClinicID") === cfg.clinicId
   }
-
-  def apply(df: DataFrame, cfg: PipelineConfig): DataFrame =
-    df.filter(predicate(cfg))
 }

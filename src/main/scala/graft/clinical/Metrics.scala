@@ -1,23 +1,26 @@
 package graft.clinical
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable.{ArrayBuffer, HashMap}
 
-/** Window-metric definitions — the heart of the data model.
+/** Metric definitions — the heart of the data model.
   *
   * The reference establishes one global 6-key sort
   * (pandas_DataModel.py:85-90) and then computes every metric with
-  * order-sensitive `groupby(...).transform(...)` calls. In Spark the
-  * ordering moves INTO each window spec (`partitionBy(...).orderBy(...)`)
-  * so the work distributes per-partition instead of requiring a global
-  * sort to survive the whole plan.
+  * order-sensitive `groupby(...).transform(...)` calls. Every metric
+  * group is a user or finer, so the sort only has to hold within a
+  * user: one hash exchange on `UID`, one sort within partitions on
+  * [[Metrics.sortKeys]], and one walk over each user's rows
+  * ([[UserPass]]) compute all five metrics. Six window specs used to
+  * re-sort the ~40-column joined row once each; that formulation now
+  * lives on only as the reference the equivalence spec compares
+  * against.
   *
-  * Two Spark-specific correctness traps handled here (SURVEY.md §7.4):
-  *  - ordered windows default to frame `unboundedPreceding → currentRow`;
-  *    `last` (and `first`-with-nulls) need the explicit FULL frame;
-  *  - pandas `transform('first'/'last'/'max'/'count')` skip nulls, so
-  *    every aggregate here uses ignoreNulls / null-skipping forms.
+  * The pandas `transform('first'/'last'/'max'/'count')` calls skip
+  * nulls, and so does the pass (SURVEY.md §7.4).
   */
 object Metrics {
 
@@ -34,20 +37,6 @@ object Metrics {
 
   private val treatmentKeys = Seq(col("UID"), col("TreatmentTypeID"), col("Tmt_StartDate"))
   private def cohortKeys(cohort: String) = treatmentKeys :+ col(cohort)
-
-  private def fullFrame(w: WindowSpec): WindowSpec =
-    w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-
-  /** Whole-partition, unordered — for count/max broadcasts. */
-  private def byCohort(cohort: String): WindowSpec =
-    Window.partitionBy(cohortKeys(cohort): _*)
-
-  private val byUserOrdered: WindowSpec =
-    fullFrame(Window.partitionBy(col("UID")).orderBy(sortKeys: _*))
-  private val byTreatmentOrdered: WindowSpec =
-    fullFrame(Window.partitionBy(treatmentKeys: _*).orderBy(sortKeys: _*))
-  private def byCohortOrdered(cohort: String): WindowSpec =
-    fullFrame(Window.partitionBy(cohortKeys(cohort): _*).orderBy(sortKeys: _*))
 
   /** Days between two timestamps with pandas semantics:
     * `(a - b).dt.days` floors the true timedelta toward -inf
@@ -87,34 +76,6 @@ object Metrics {
   def weekCol: Column =
     floor(dayDiff(col("Wts_CreatedDate"), col("Tmt_StartDate")) / lit(7.0)).cast("int")
 
-  /** Weigh-in rate: count of non-null Wts_UpdatedDate per cohort,
-    * broadcast to every row (pandas_DataModel.py:112-114). `count(col)`
-    * is null-skipping, matching pandas `transform('count')`.
-    */
-  def wir(cohort: String): Column =
-    count(col("Wts_UpdatedDate")).over(byCohort(cohort))
-
-  /** Patient starting weight: first Weight per user in global sort order
-    * (pandas_DataModel.py:117). ignoreNulls matches pandas first().
-    */
-  def psw: Column = first(col("Weight"), ignoreNulls = true).over(byUserOrdered)
-
-  /** Treatment starting weight (pandas_DataModel.py:120-121). */
-  def tsw: Column = first(col("Weight"), ignoreNulls = true).over(byTreatmentOrdered)
-
-  /** Treatment ending weight (pandas_DataModel.py:129-131). The FULL
-    * frame is load-bearing: with Spark's default ordered frame, `last`
-    * degenerates to "current row".
-    */
-  def tew: Column = last(col("Weight"), ignoreNulls = true).over(byTreatmentOrdered)
-
-  /** First Weight of the row's cohort, broadcast to each row — the
-    * `transform('first')` half of the patient-TBWL computation
-    * (pandas_DataModel.py:139-142).
-    */
-  def cohortFirstWeight(cohort: String): Column =
-    first(col("Weight"), ignoreNulls = true).over(byCohortOrdered(cohort))
-
   /** A column wrapped so struct-MIN ordering matches `asc_nulls_last`:
     * the leading isNull flag makes every null sort after every value.
     */
@@ -131,17 +92,17 @@ object Metrics {
     nullsLast(col("Wts_CreatedDate")).as("k4"),
     nullsLast(col("Wts_UpdatedDate")).as("k5"))
 
-  /** One row per user: (`_b_uid`, `_ufw`) where `_ufw` is the fw
-    * ([[cohortFirstWeight]]) of the user's globally-FIRST row — i.e. the
+  /** One row per user: (`_b_uid`, `_ufw`) where `_ufw` is the fw (the
+    * cohort's first non-null Weight) of the user's globally-FIRST row — i.e. the
     * first non-null Weight of the user's first cohort. Formulated as two
     * partial-aggregating GROUP BYs (per-cohort argmin, then per-user
     * argmin over cohort groups) instead of a window: no sort, map-side
     * combine on both levels, and Catalyst prunes the input to the six
     * key/weight columns. Validated value-identical to the window
-    * formulation on all three sfs.
+    * formulation on all three sfs; the per-user pass itself never needs
+    * it — only the bug-compatible successor does.
     */
-  def boundaryTable(src: org.apache.spark.sql.DataFrame,
-                    cohort: String): org.apache.spark.sql.DataFrame = {
+  def boundaryTable(src: DataFrame, cohort: String): DataFrame = {
     src
       .groupBy(cohortKeys(cohort): _*)
       .agg(
@@ -167,70 +128,197 @@ object Metrics {
       .select(col("UID").as("_b_uid"), col("_m").getField("w").as("_ufw"))
   }
 
-  /** The reference's `.diff(-1)`: x[i] − x[i+1] over the WHOLE frame in
-    * global sort order — it deliberately(?) crosses cohort, treatment and
-    * even user boundaries (verified empirically; SURVEY.md §2.9).
-    *
-    * Strict mode partitions the lead by UID: the diff never crosses
-    * users and the window distributes. Choose via
-    * [[PipelineConfig.strictCohorts]].
-    *
-    * Bug-compatible mode reproduces the cross-user quirk WITHOUT the
-    * unpartitioned window it used to cost (a single-partition cliff —
-    * round-1's only clinical scale flaw): only each user's globally-LAST
-    * row sees a cross-user lead, and because UID is the leading global
-    * sort key, that lead is exactly the NEXT UID's first-row fw. So:
-    * per-user lead (distributed window) + a one-row-per-user boundary
-    * table ranked in UID order ([[graft.operators.SortedNeighborhood
-    * .globalRank]] — range-partitioned, no single task) self-joined at
-    * rank+1 to fetch each user's successor fw, joined back on UID.
-    *
-    * The boundary table is built from `boundarySource` — the UNFILTERED
-    * frame — by [[boundaryTable]], a pure two-level aggregate (no window
-    * sort at all). The cross-user dependence lives entirely in that
-    * one-row-per-user table, so callers may pre-filter the main frame
-    * with user-constant predicates (they commute with every per-user
-    * window) and the full-width five-metric stack never runs over rows
-    * the filter will discard. Round 2 built the boundary from the
-    * post-metric frame instead, re-running the window stack — the
-    * bench's only regression.
+  /** Each user's successor first weight for the bug-compatible
+    * `.diff(-1)`: one row per user, (`UID`, `_next_ufw`), where
+    * `_next_ufw` is the `_ufw` of the next UID in ascending order (null
+    * for the last). Built from `src` — the UNFILTERED frame — so the
+    * cross-user quirk sees every user whatever the demographic filter
+    * keeps. [[graft.operators.DistributedLead]]'s rank-idiom self-join
+    * gives partition-consistent ranks at scale; its two
+    * construction-time driver jobs run over the cheap [[boundaryTable]]
+    * aggregate, not over the metric pass.
     */
-  def withWgtDiff(df: org.apache.spark.sql.DataFrame, cohort: String,
-                  strict: Boolean,
-                  boundarySource: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val fw = cohortFirstWeight(cohort)
-    val wUser = Window.partitionBy(col("UID")).orderBy(sortKeys: _*)
-    if (strict) df.withColumn("wgt_diff", fw - lead(fw, 1).over(wUser))
-    else {
-      // One row per user: the first row's fw verbatim (NOT ignoreNulls —
-      // global diff(-1) takes the next row's value null included; the
-      // rn==1 row's own fw IS first(fw) over the user). Each user's
-      // successor fw comes from [[graft.operators.DistributedLead]]'s
-      // rank-idiom self-join — its two construction-time driver jobs
-      // (range sampling + zipWithIndex count) run over THIS cheap
-      // aggregate, not the window stack, and buy partition-consistent
-      // ranks that no lazy per-partition-id formulation can guarantee
-      // at scale (see the operator's scaladoc).
-      val bnd = boundaryTable(boundarySource.getOrElse(df), cohort)
-      val succ = graft.operators.DistributedLead
-        .withSuccessorValue(bnd, col("_b_uid"), col("_ufw"), "_next_ufw")
-        .select(col("_b_uid").as("UID"), col("_next_ufw"))
-      df.withColumn("_fw", fw)
-        .withColumn("_lead_u", lead(col("_fw"), 1).over(wUser))
-        .withColumn("_rn", row_number().over(wUser))
-        .withColumn("_n", count(lit(1)).over(Window.partitionBy(col("UID"))))
-        .join(succ, Seq("UID"), "left")
-        .withColumn("wgt_diff",
-          when(col("_rn") === col("_n"), col("_fw") - col("_next_ufw"))
-            .otherwise(col("_fw") - col("_lead_u")))
-        .drop("_fw", "_lead_u", "_rn", "_n", "_next_ufw")
-    }
+  def successorFirstWeights(src: DataFrame, cohort: String): DataFrame =
+    graft.operators.DistributedLead
+      .withSuccessorValue(boundaryTable(src, cohort), col("_b_uid"), col("_ufw"),
+        "_next_ufw")
+      .select(col("_b_uid").as("UID"), col("_next_ufw"))
+
+  /** The columns [[withCohortMetrics]] appends, in output order. */
+  val metricColumns: Seq[String] =
+    Seq("WIR", "PSW", "TSW", "TEW", "treatment_TBWL", "patient_TBWL")
+
+  /** The five metrics (pandas_DataModel.py:112-151) in one sorted
+    * per-user pass: `df` is hash-partitioned by `UID`, sorted within
+    * partitions by [[sortKeys]], and [[UserPass]] walks each user's rows
+    * once. Appends [[metricColumns]] to `df`'s columns, in `df`'s order.
+    *
+    * The reference's `.diff(-1)` is x[i] − x[i+1] over the WHOLE frame
+    * in global sort order, where x is the row's cohort-first weight; it
+    * crosses cohort, treatment and even user boundaries (SURVEY.md
+    * §2.9). With `successor = None` (strict mode) the diff stays inside
+    * each user: a user's last row has a null diff. With `successor`
+    * given (bug-compatible mode, a [[successorFirstWeights]] table),
+    * only each user's last row sees a cross-user value, and because UID
+    * leads the global sort that value is the next UID's first-row
+    * weight: the pass reads it from the `_next_ufw` column the left join
+    * on `UID` attaches.
+    */
+  def withCohortMetrics(df: DataFrame, cohort: String,
+                        successor: Option[DataFrame]): DataFrame = {
+    val clash = (metricColumns :+ "_next_ufw").filter(df.columns.contains)
+    require(clash.isEmpty,
+      s"column(s) ${clash.mkString(", ")} are derived by the metric pass — rename first")
+    require(df.schema("Weight").dataType == DoubleType,
+      s"Weight must be a double column, not ${df.schema("Weight").dataType}")
+    val input = successor.fold(df)(df.join(_, Seq("UID"), "left"))
+    val out = StructType(df.schema.fields ++
+      (StructField("WIR", LongType, nullable = false) +:
+        metricColumns.tail.map(StructField(_, DoubleType))))
+    val pass = new UserPass(input.schema, df.columns, cohort, successor.isDefined)
+    input.repartition(col("UID"))
+      .sortWithinPartitions(sortKeys: _*)
+      .mapPartitions(pass(_))(Encoders.row(out))
+      // the encoder drops column metadata; `to` restores it (the users
+      // columns' graft.plans.Fd declaration still holds per UID)
+      .to(out)
+  }
+}
+
+/** The per-user walk behind [[Metrics.withCohortMetrics]]. Input rows
+  * arrive grouped by UID (a null UID is one group) and in [[Metrics
+  * .sortKeys]] order within each user; a user's rows are buffered, its
+  * groups aggregated, and each row is emitted with, in the pandas
+  * `groupby(...).transform` semantics (pandas_DataModel.py:112-151):
+  *  - WIR: count of non-null `Wts_UpdatedDate` per cohort group, a long;
+  *  - PSW: the user's first non-null Weight in sort order;
+  *  - TSW / TEW: first / last non-null Weight per treatment;
+  *  - treatment_TBWL = TEW − TSW;
+  *  - patient_TBWL: max over the cohort group of wgt_diff = fw − fw of
+  *    the next row (fw: the cohort's first non-null Weight), nulls
+  *    skipped and NaN ranking largest like Spark's `max`.
+  *
+  * Treatment and cohort groups are keyed through hash maps, not by
+  * contiguity: a cohort expression need not be monotone in sort order.
+  * Group keys compare like Spark's grouping: -0.0 equals 0.0, every NaN
+  * equals every other, binary by content.
+  *
+  * A user holding more than `maxRowsPerUser` rows (262,144 in the
+  * pipeline — about 250 MB of buffered rows at ~1 KB a row) fails the
+  * task with an error naming the UID and the bound, rather than
+  * exhausting the executor's heap.
+  */
+private[clinical] final class UserPass(in: StructType, outColumns: Array[String],
+    cohort: String, withSuccessor: Boolean,
+    maxRowsPerUser: Int = UserPass.MaxRowsPerUser) extends Serializable {
+  import UserPass._
+
+  private val uid = in.fieldIndex("UID")
+  private val treatment = in.fieldIndex("TreatmentTypeID")
+  private val start = in.fieldIndex("Tmt_StartDate")
+  private val cohortAt = in.fieldIndex(cohort)
+  private val weight = in.fieldIndex("Weight")
+  private val updated = in.fieldIndex("Wts_UpdatedDate")
+  private val nextUfw = if (withSuccessor) in.fieldIndex("_next_ufw") else -1
+  private val project = outColumns.map(in.fieldIndex)
+
+  def apply(rows: Iterator[Row]): Iterator[Row] = {
+    val it = rows.buffered
+    Iterator.continually(it).takeWhile(_.hasNext).flatMap(user)
   }
 
-  /** Patient TBWL: max of wgt_diff per cohort (pandas_DataModel.py:146-149).
-    * `max` skips nulls, matching pandas NaN-skip on the frame's last row.
-    */
-  def patientTbwl(cohort: String): Column =
-    max(col("wgt_diff")).over(byCohort(cohort))
+  /** Consumes one user's rows from `it` and returns them with metrics. */
+  private def user(it: collection.BufferedIterator[Row]): Iterator[Row] = {
+    val key = groupKey(it.head.get(uid))
+    val rows = ArrayBuffer.empty[Row]
+    while (it.hasNext && groupKey(it.head.get(uid)) == key) {
+      if (rows.length == maxRowsPerUser)
+        throw new IllegalStateException(s"UID '${it.head.get(uid)}' has more " +
+          s"than $maxRowsPerUser rows, the per-user bound of the clinical metric pass")
+      rows += it.next()
+    }
+    val n = rows.length
+    val treatments = HashMap.empty[(Any, Any), Treatment]
+    val cohorts = HashMap.empty[(Any, Any, Any), Cohort]
+    val byTreatment = new Array[Treatment](n)
+    val byCohort = new Array[Cohort](n)
+    var psw: JDouble = null
+    var i = 0
+    while (i < n) {
+      val r = rows(i)
+      val tk = (groupKey(r.get(treatment)), groupKey(r.get(start)))
+      val t = treatments.getOrElseUpdate(tk, new Treatment)
+      val c = cohorts.getOrElseUpdate((tk._1, tk._2, groupKey(r.get(cohortAt))), new Cohort)
+      if (!r.isNullAt(updated)) c.wir += 1
+      if (!r.isNullAt(weight)) {
+        val w: JDouble = r.getDouble(weight)
+        if (psw == null) psw = w
+        if (t.first == null) t.first = w
+        t.last = w
+        if (c.fw == null) c.fw = w
+      }
+      byTreatment(i) = t
+      byCohort(i) = c
+      i += 1
+    }
+    i = 0
+    while (i < n) {
+      val next: JDouble =
+        if (i + 1 < n) byCohort(i + 1).fw
+        else if (withSuccessor && !rows(i).isNullAt(nextUfw)) rows(i).getDouble(nextUfw)
+        else null
+      byCohort(i).observe(minus(byCohort(i).fw, next))
+      i += 1
+    }
+    Iterator.tabulate(n) { j =>
+      val r = rows(j)
+      val t = byTreatment(j)
+      val c = byCohort(j)
+      val out = new Array[Any](project.length + 6)
+      var k = 0
+      while (k < project.length) { out(k) = r.get(project(k)); k += 1 }
+      out(k) = c.wir
+      out(k + 1) = psw
+      out(k + 2) = t.first
+      out(k + 3) = t.last
+      out(k + 4) = minus(t.last, t.first)
+      out(k + 5) = c.maxDiff
+      Row.fromSeq(ArraySeq.unsafeWrapArray(out))
+    }
+  }
+}
+
+private[clinical] object UserPass {
+  val MaxRowsPerUser: Int = 1 << 18
+
+  private type JDouble = java.lang.Double
+
+  private final class Treatment {
+    var first: JDouble = null
+    var last: JDouble = null
+  }
+
+  private final class Cohort {
+    var wir = 0L
+    var fw: JDouble = null
+    var maxDiff: JDouble = null
+    /** Spark's `max`: nulls skipped; among equals the earlier value stays. */
+    def observe(d: JDouble): Unit =
+      if (d != null && (maxDiff == null || compare(d, maxDiff) > 0)) maxDiff = d
+  }
+
+  /** Spark's double ordering: NaN above everything, -0.0 equal to 0.0. */
+  private def compare(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  private def minus(a: JDouble, b: JDouble): JDouble =
+    if (a == null || b == null) null else a - b
+
+  /** A value as a grouping key: equal exactly when Spark groups it equal. */
+  private def groupKey(v: Any): Any = v match {
+    case d: Double => if (d == 0.0) 0.0 else if (d.isNaN) Double.NaN else d
+    case f: Float => if (f == 0.0f) 0.0f else if (f.isNaN) Float.NaN else f
+    case b: Array[Byte] => ArraySeq.unsafeWrapArray(b)
+    case other => other
+  }
 }

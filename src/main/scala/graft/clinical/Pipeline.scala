@@ -3,8 +3,8 @@ package graft.clinical
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The cohort-metrics data model: join → derive → window metrics →
-  * filter → dedup (pandas_DataModel.py:34-161), re-expressed as one lazy
+/** The cohort-metrics data model: join → derive → filter → metric pass
+  * → dedup (pandas_DataModel.py:34-161), re-expressed as one lazy
   * Catalyst plan.
   *
   * Differences from the reference's execution (same results, Spark-first
@@ -12,12 +12,18 @@ import org.apache.spark.sql.functions._
   *  - columns are disambiguated BEFORE the join (select-with-alias), so
   *    no post-join `_x/_y` drop/rename pass is needed
   *    (pandas_DataModel.py:63-74) and the join output is never ambiguous;
-  *  - the global 6-key sort (py:85-90) lives inside each window spec, not
-  *    as a plan-wide barrier; only presentation sorts globally;
+  *  - the demographic filter runs BEFORE the metrics, not after
+  *    (pandas_DataModel.py:6-31 filters the finished frame): it is
+  *    constant per user and every metric group is a user or finer, so
+  *    only the cross-user bug-compatible diff could tell, and that one
+  *    reads its successor table from the unfiltered frame;
+  *  - the global 6-key sort (py:85-90) is only needed within a user, so
+  *    it becomes one sort within `UID` hash partitions feeding the
+  *    metric pass ([[Metrics.withCohortMetrics]]); only presentation
+  *    sorts globally;
   *  - users/treatments are broadcast to the weights side (they are small
   *    dimension tables — 1k rows in the reference); the big fact table
-  *    never shuffles for the joins, only once for the UID-partitioned
-  *    windows.
+  *    never shuffles for the joins, only once for the metric pass.
   */
 object Pipeline {
 
@@ -69,7 +75,7 @@ object Pipeline {
   def withDerived(df: DataFrame): DataFrame =
     df.withColumns(Map("month" -> Metrics.monthCol, "week" -> Metrics.weekCol))
 
-  /** The five windowed metrics (pandas_DataModel.py:112-151). */
+  /** The five metrics (pandas_DataModel.py:112-151). */
   def withMetrics(df: DataFrame, cfg: PipelineConfig): DataFrame =
     withMetricsCohort(df, cfg.cohort, cfg.strictCohorts)
 
@@ -79,31 +85,21 @@ object Pipeline {
     * [[runWithCohortExpr]]).
     *
     * `earlyFilter`, when given, must be a USER-CONSTANT predicate (each
-    * UID's rows all pass or all fail). Every metric window is partitioned
-    * by UID or finer, so such a predicate commutes with the whole stack;
-    * applying it to the main branch here keeps the five-metric windows
-    * off rows a later [[Filters]] pass would discard anyway. The
-    * bug-compatible diff's cross-user boundary table is always built
-    * from the UNFILTERED frame, so the quirk still sees every user.
+    * UID's rows all pass or all fail). Every metric group is a user or
+    * finer, so such a predicate commutes with the metric pass, which
+    * then never sees rows the filter discards. The bug-compatible
+    * diff's cross-user successor table is always built from the
+    * UNFILTERED frame, so the quirk still sees every user.
+    *
+    * TEW is an intermediate in pandas (unnamed local, py:129) but a real
+    * column in polars (polars_DataModel.py:130-132); it is kept — it
+    * costs nothing and documents treatment_TBWL.
     */
   def withMetricsCohort(df: DataFrame, cohortCol: String, strict: Boolean,
-                        earlyFilter: Option[org.apache.spark.sql.Column] = None)
-      : DataFrame = {
-    val main = earlyFilter.map(df.filter).getOrElse(df)
-    main.withColumns(Map(
-        "WIR" -> Metrics.wir(cohortCol),
-        "PSW" -> Metrics.psw,
-        "TSW" -> Metrics.tsw,
-        "TEW" -> Metrics.tew))
-      .withColumn("treatment_TBWL", col("TEW") - col("TSW"))
-      .transform(Metrics.withWgtDiff(_, cohortCol, strict,
-        boundarySource = if (strict) None else Some(df)))
-      .withColumn("patient_TBWL", Metrics.patientTbwl(cohortCol))
-      .drop("wgt_diff")
-      // TEW is an intermediate in pandas (unnamed local, py:129) but a
-      // real column in polars (polars_DataModel.py:130-132); keep it —
-      // it costs nothing and documents treatment_TBWL.
-  }
+                        earlyFilter: Option[Column] = None)
+      : DataFrame =
+    Metrics.withCohortMetrics(earlyFilter.fold(df)(df.filter), cohortCol,
+      if (strict) None else Some(Metrics.successorFirstWeights(df, cohortCol)))
 
   /** Full pipeline from the three (un-renamed) source tables. One
     * spelling (r17 review): delegates to [[runWithCohortExpr]] with the
@@ -117,34 +113,29 @@ object Pipeline {
     runWithCohortExpr(users, weights, treatments,
       col(cfg.cohort), cfg.cohort, cfg)
 
-  /** Column names the metric stack OWNS: a cohort materialized under
-    * one of these would be silently REPLACED by the per-user metric of
-    * the same name, and every later per-cohort window would group by
-    * the metric instead of the cohort — wrong numbers, no error (r17
-    * review). Internal scratch names are covered by the leading "_".
-    */
-  private val reservedMetricNames = Set(
-    "WIR", "PSW", "TSW", "TEW", "wgt_diff", "treatment_TBWL", "patient_TBWL")
-
   /** Pipeline with an ARBITRARY cohort expression (SURVEY §7.5): the
     * expression is materialized as `cohortName` and every per-cohort
     * metric groups by it, exactly like the built-in week/month/ClinicID
     * choices. `cfg.cohort` is ignored on this path; demographic filters,
-    * dedup, and strict/bug-compat diff semantics apply unchanged.
+    * dedup, and strict/bug-compat diff semantics apply unchanged. The
+    * filter is applied to the joined frame, below the metric pass and
+    * its `UID` exchange, in both modes.
     */
   def runWithCohortExpr(users: DataFrame, weights: DataFrame, treatments: DataFrame,
                         cohortExpr: Column, cohortName: String,
                         cfg: PipelineConfig = PipelineConfig()): DataFrame = {
-    require(!reservedMetricNames.contains(cohortName) &&
+    // a cohort named like a metric would collide with the metric the
+    // pass appends; internal scratch names are covered by the leading "_"
+    require(!Metrics.metricColumns.contains(cohortName) &&
         !cohortName.startsWith("_"),
       s"cohort name '$cohortName' collides with a metric/internal " +
         "column the pipeline derives — pick another name")
     val pre = withDerived(joined(users, weights, treatments))
     // materializing a cohort under an EXISTING column name silently
-    // replaces that column for every downstream metric, window key and
+    // replaces that column for every downstream metric, group key and
     // filter (r18 review: cohortName = "Weight" with a bucketing
     // expression corrupts PSW/TSW/TEW with no error — the exact class
-    // the reservedMetricNames guard covers for DERIVED names). The one
+    // the metric-name guard above covers for DERIVED names). The one
     // legitimate overlap is the built-in path's self-reference
     // (cohort = an existing column named by itself: `run` passes
     // col(cfg.cohort)), which replaces the column with its own value.
@@ -159,17 +150,9 @@ object Pipeline {
         "the cohort expression would silently replace it for every " +
         "downstream metric; pick another name")
     val base = pre.withColumn(cohortName, cohortExpr)
-    // Strict mode: the UserConstantPredicatePushdown rule moves the
-    // late Filters below the windows on its own. Bug-compat mode: the
-    // boundary join blocks that rule, so hand the (user-constant)
-    // predicate to the main branch explicitly; the late Filters pass
-    // below is then a cheap no-op re-check and the single authority
-    // for predicate definitions.
-    val early =
-      if (cfg.strictCohorts) None else Some(Filters.predicate(cfg))
-    val wide = withMetricsCohort(base, cohortName, cfg.strictCohorts, early)
-    val filtered = Filters(wide, cfg)
-    if (cfg.dedup) filtered.dropDuplicates() else filtered
+    val wide = withMetricsCohort(base, cohortName, cfg.strictCohorts,
+      Some(Filters.predicate(cfg)))
+    if (cfg.dedup) wide.dropDuplicates() else wide
   }
 
   /** README.md:25-29 presentation projection. */

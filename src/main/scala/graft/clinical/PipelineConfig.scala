@@ -5,7 +5,7 @@ package graft.clinical
   * SURVEY.md §2.8 (validate gender/cohort like argparse `choices` does;
   * pandas' silent fall-through for unknown gender strings is rejected).
   *
-  * @param cohort       grouping column for the windowed metrics:
+  * @param cohort       grouping column for the per-cohort metrics:
   *                     `week`, `month`, or `ClinicID`
   * @param gender       `all`, `Male`, or `Female`
   * @param minAge       closed lower bound on Age

@@ -125,6 +125,25 @@ object BigramRuntime {
 
   private val Empty = new GenericArrayData(Array.empty[Any])
 
+  /** The largest power-of-two array length. */
+  final val MaxSlots: Int = 1 << 30
+
+  /** Slots for an open-addressed table of up to `keys` distinct keys at
+    * load ≤ 1/2: the smallest power of two ≥ max(4, 2 × keys). Sized in
+    * Long arithmetic: in Int, 2 × keys wraps past 2^30 keys (the
+    * doubling loop then never ends) and a power of two past 2^30 goes
+    * negative (a NegativeArraySizeException). A table past [[MaxSlots]]
+    * is refused with an error instead.
+    */
+  def tableSlots(keys: Int): Int = {
+    require(keys >= 0, s"negative key count $keys")
+    val want = math.max(4L, 2L * keys)
+    require(want <= MaxSlots, s"a document with $keys tokens or bigrams needs a " +
+      s"hash table of more than $MaxSlots slots, past the largest array the kernel can size")
+    val p = java.lang.Long.highestOneBit(want)
+    (if (p == want) p else p << 1).toInt
+  }
+
   def bigramCounts(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     if (n < 2) return Empty
@@ -136,8 +155,7 @@ object BigramRuntime {
     while (i < n) { th(i) = tokenHash(arr, i, Seed); i += 1 }
     val pairs = n - 1
     // open-addressed map keyed on (h1, h2, h12); cnt == 0 marks empty
-    var cap = 4
-    while (cap < pairs * 2) cap <<= 1
+    val cap = tableSlots(pairs)
     val mask = cap - 1
     val kh1 = new Array[Long](cap); val kh2 = new Array[Long](cap)
     val kh12 = new Array[Long](cap); val cnt = new Array[Long](cap)
@@ -176,7 +194,7 @@ object BigramRuntime {
   def tokenHashCounts(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     if (n == 0) return Empty
-    val kh = new Array[Long](math.max(4, Integer.highestOneBit(n) * 4))
+    val kh = new Array[Long](tableSlots(n))
     val cnt = new Array[Long](kh.length)
     val mask = kh.length - 1
     val order = new Array[Int](n)

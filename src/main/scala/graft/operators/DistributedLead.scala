@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * price of the fix is globalRank's two construction-time driver jobs
   * (range sampling + zipWithIndex count) over `df` — callers pass a
   * cheap aggregate (see [[graft.clinical.Metrics.boundaryTable]]), not
-  * a window stack.
+  * the metric pass.
   *
   * Contract: `df` must have at most one row per `key` (it is an
   * aggregate output); `key` ordering is ascending, nulls last.

@@ -8,11 +8,13 @@ import org.apache.spark.sql.catalyst.rules.Rule
 /** Pushes filters through Window operators when the predicate is
   * partition-determined by DECLARED functional dependencies.
   *
-  * The clinical pipeline (SURVEY.md §4) applies its gender/age/clinic
-  * filters after the metrics — but those predicates are constant per
-  * user, and every window partitions by `UID`, so filtering BEFORE the
-  * windows removes whole partitions and cannot change any surviving
-  * row's metrics. Catalyst's stock PushPredicateThroughNonJoin only
+  * The motivating case was the clinical pipeline (SURVEY.md §4), whose
+  * gender/age/clinic filters the reference applies after the metrics —
+  * but those predicates are constant per user, and every window
+  * partitioned by `UID`, so filtering BEFORE the windows removes whole
+  * partitions and cannot change any surviving row's metrics. (The
+  * pipeline now applies them below its window-free metric pass itself,
+  * so the rule no longer fires there.) Catalyst's stock PushPredicateThroughNonJoin only
   * pushes predicates over the window's own partition keys; this rule
   * generalizes: a predicate may cross a Window node iff every column it
   * references is either (a) one of the node's window partition keys

@@ -13,7 +13,7 @@ import graft.sources.Tables
   * customer/orders (same arithmetic on both the Spark and DuckDB sides),
   * then run the real [[graft.clinical.Pipeline]]. This exercises every
   * reference operator — left joins, renames, day-diff derivation, all
-  * five window metrics including the §2.9 global diff(-1) — under the
+  * five metrics including the §2.9 global diff(-1) — under the
   * hash compare, at every scale factor.
   */
 object Clinical {
@@ -249,8 +249,9 @@ object Clinical {
     * CLI's validated column choices. Same metric machinery, same gate.
     *
     * Perf floor vs q31: this cfg keeps every gender and clinic, so
-    * ~2.3× the rows flow through the same window stack — warm runtime
-    * tracks that ratio (≈0.95 s vs 0.78 s at sf0.1, local[32]); the
+    * ~2.3× the rows flow through the same metric pass — warm runtime
+    * tracked that ratio under the earlier window stack (≈0.95 s vs
+    * 0.78 s at sf0.1, local[32]); the
     * larger driver-bench gap is first-run codegen of the distinct
     * expression-cohort plan, absorbed by the bench's untimed warm run.
     */

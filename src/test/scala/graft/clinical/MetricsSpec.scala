@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 import java.sql.Timestamp
 
-/** Hand-computed unit checks for the window metrics — the SURVEY.md §7.4
-  * trap list: full frames for first/last, null-skipping, the §2.9
-  * diff(-1) boundary quirk, day-diff floor semantics.
+/** Hand-computed unit checks for the metrics — the SURVEY.md §7.4 trap
+  * list: TEW is the treatment's LAST weight on every row, null-skipping,
+  * the §2.9 diff(-1) boundary quirk, day-diff floor semantics.
   */
 class MetricsSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
@@ -47,8 +47,8 @@ class MetricsSpec extends AnyFunSuite with SparkTestSession {
     val rows = metricRows(strict = false)
     assert(rows.take(3).forall(_.getDouble(3) == 100.0))   // u1 PSW
     assert(rows.take(3).forall(_.getDouble(4) == 100.0))   // u1 TSW
-    // TEW must be 97.0 on EVERY u1 row — breaks if the frame defaults
-    // to unboundedPreceding→currentRow
+    // TEW must be 97.0 on EVERY u1 row — the treatment's last weight,
+    // not the last weight seen so far
     assert(rows.take(3).forall(_.getDouble(5) == 97.0))
     assert(rows.take(3).forall(_.getDouble(6) == -3.0))    // treatment_TBWL
     assert(rows.drop(3).forall(_.getDouble(5) == 95.0))    // u2 TEW
@@ -105,9 +105,10 @@ class MetricsSpec extends AnyFunSuite with SparkTestSession {
       ("Male", 17L, 5066L), ("Male", 72L, 5066L), ("Male", 73L, 5066L),
       ("Male", 30L, 9999L))
       .toDF("Gender", "Age", "ClinicID")
-    assert(Filters(df, PipelineConfig()).count() == 3)                   // both genders, 18..72, clinic
-    assert(Filters(df, PipelineConfig(gender = "Female")).count() == 1)
-    assert(Filters(df, PipelineConfig(minAge = 17, maxAge = 17)).count() == 1)
+    def kept(cfg: PipelineConfig) = df.filter(Filters.predicate(cfg)).count()
+    assert(kept(PipelineConfig()) == 3)                   // both genders, 18..72, clinic
+    assert(kept(PipelineConfig(gender = "Female")) == 1)
+    assert(kept(PipelineConfig(minAge = 17, maxAge = 17)) == 1)
   }
 
   test("runWithCohortExpr(col) == run(cohort=col) for a validated choice") {
@@ -150,5 +151,15 @@ class MetricsSpec extends AnyFunSuite with SparkTestSession {
     assert(e.getMessage.contains("collides with an input/base column"))
     // the built-in self-reference path stays legal
     assert(Pipeline.runWithCohortExpr(u, w, t, col("month"), "month").count() > 0)
+  }
+
+  test("the metric pass fails loudly past its per-user row bound, naming the UID") {
+    val rows = wideFixture.orderBy(Metrics.sortKeys: _*).collect()
+    def pass(bound: Int) = new UserPass(wideFixture.schema, wideFixture.columns,
+      "week", withSuccessor = false, maxRowsPerUser = bound)
+    assert(pass(3)(rows.iterator).size == rows.length)   // u1 has exactly 3 rows
+    val e = intercept[IllegalStateException](pass(2)(rows.iterator).size)
+    assert(e.getMessage.contains("UID 'u1'") && e.getMessage.contains("more than 2 rows"),
+      e.getMessage)
   }
 }

@@ -3,6 +3,7 @@ package graft.clinical
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 import java.sql.Timestamp
@@ -13,7 +14,10 @@ import java.sql.Timestamp
   *  - filters only remove rows
   *  - dedup idempotent
   *  - pipeline deterministic under input permutation (sort keys are
-  *    unique in generated data, so the total order is well-defined)
+  *    unique in generated data apart from exact duplicate rows, so the
+  *    total order is well-defined)
+  * and the per-user metric pass equals the window formulation
+  * ([[WindowMetrics]]) on full rows.
   */
 class PipelinePropertySpec extends AnyFunSuite with SparkTestSession {
 
@@ -28,44 +32,66 @@ class PipelinePropertySpec extends AnyFunSuite with SparkTestSession {
 
   private val base = Timestamp.valueOf("2023-01-01 00:00:00").getTime
 
-  case class Fixture(users: Seq[(String, String, Long, Long)],
-      weighs: Seq[(String, Double, Long)])
+  /** users: (UID, gender, age, clinic); weighs: (UID, weight, minute,
+    * updated?); treatments: (UID, type, start day).
+    */
+  case class Fixture(users: Seq[(Option[String], String, Long, Long)],
+      weighs: Seq[(String, Option[Double], Long, Boolean)],
+      treatments: Seq[(String, Long, Long)])
 
-  /** Small random corpus: n users, each with k weigh-ins at unique
-    * minute offsets (unique sort keys by construction).
+  /** Small random corpus: n users (a few with a null UID), each with
+    * 0–6 weigh-ins at unique minute offsets and 0–2 treatments. Weights
+    * are sometimes null or NaN, updated dates sometimes null, and a
+    * weigh-in is sometimes duplicated whole (the dedup case).
     */
   private val fixtureGen: Gen[Fixture] = for {
     nUsers <- Gen.choose(1, 8)
-    users <- Gen.sequence[Seq[(String, String, Long, Long)], (String, String, Long, Long)](
+    users <- Gen.sequence[Seq[(Option[String], String, Long, Long)], (Option[String], String, Long, Long)](
       (0 until nUsers).map { i =>
         for {
+          nullUid <- Gen.frequency(1 -> true, 7 -> false)
           gender <- Gen.oneOf("Male", "Female")
           age <- Gen.choose(10L, 90L)
           clinic <- Gen.oneOf(5066L, 5067L)
-        } yield (f"u$i%03d", gender, age, clinic)
+        } yield (if (nullUid) None else Some(f"u$i%03d"), gender, age, clinic)
       })
-    weighs <- Gen.sequence[Seq[Seq[(String, Double, Long)]], Seq[(String, Double, Long)]](
+    weighs <- Gen.sequence[Seq[Seq[(String, Option[Double], Long, Boolean)]], Seq[(String, Option[Double], Long, Boolean)]](
       (0 until nUsers).map { i =>
         for {
-          k <- Gen.choose(1, 6)
-          ws <- Gen.listOfN(k, Gen.choose(50.0, 150.0))
-        } yield ws.zipWithIndex.map { case (w, j) =>
-          (f"u$i%03d", math.rint(w * 10) / 10, j.toLong)
+          k <- Gen.choose(0, 6)
+          ws <- Gen.listOfN(k, Gen.frequency(
+            8 -> Gen.choose(50.0, 150.0).map(w => Some(math.rint(w * 10) / 10)),
+            1 -> Gen.const(None), 1 -> Gen.const(Some(Double.NaN))))
+          updated <- Gen.listOfN(k, Gen.frequency(4 -> true, 1 -> false))
+          dup <- Gen.frequency(1 -> true, 4 -> false)
+        } yield {
+          val rows = ws.zip(updated).zipWithIndex.map { case ((w, u), j) =>
+            (f"u$i%03d", w, j.toLong, u)
+          }
+          if (dup) rows ++ rows.take(1) else rows
         }
       })
-  } yield Fixture(users, weighs.flatten)
+    treatments <- Gen.sequence[Seq[Seq[(String, Long, Long)]], Seq[(String, Long, Long)]](
+      (0 until nUsers).map { i =>
+        for {
+          n <- Gen.frequency(1 -> 0, 3 -> 1, 2 -> 2)
+          starts <- Gen.listOfN(n, Gen.choose(0L, 20L))
+        } yield starts.zipWithIndex.map { case (d, j) => (f"u$i%03d", j + 1L, d) }
+      })
+  } yield Fixture(users, weighs.flatten, treatments.flatten)
 
   private def toTables(fx: Fixture) = {
     val users = fx.users.map { case (uid, g, age, clinic) =>
-      (uid, "N", "L", g, 1L, new Timestamp(base), age, 170L,
+      (uid.orNull, "N", "L", g, 1L, new Timestamp(base), age, 170L,
         new Timestamp(base), true, clinic, Option.empty[Double], true)
     }.toDF(Schemas.users.fieldNames: _*)
-    val weights = fx.weighs.map { case (uid, w, j) =>
+    val weights = fx.weighs.map { case (uid, w, j, updated) =>
       val ts = new Timestamp(base + j * 60000 + 86400000L)
-      (uid, w, 25.0, 20.0, 55.0, 2.9, 9.7, 1500.0, 47.4, ts, ts, true, false)
+      (uid, w, 25.0, 20.0, 55.0, 2.9, 9.7, 1500.0, 47.4, ts,
+        if (updated) ts else null, true, false)
     }.toDF(Schemas.weights.fieldNames: _*)
-    val treatments = fx.users.map { case (uid, _, _, _) =>
-      (uid, 1L, new Timestamp(base))
+    val treatments = fx.treatments.map { case (uid, tt, day) =>
+      (uid, tt, new Timestamp(base + day * 86400000L))
     }.toDF(Schemas.treatments.fieldNames: _*)
     (users, weights, treatments)
   }
@@ -107,6 +133,67 @@ class PipelinePropertySpec extends AnyFunSuite with SparkTestSession {
         df.collect().map(_.toString).sorted.toSeq
       assert(canon(Pipeline.run(u, w, t, wideCfg)) ==
         canon(Pipeline.run(u, shuffledWeights, t, wideCfg)))
+    }
+  }
+
+  /** Full rows, schema included: the pass against the window form.
+    * Column metadata is compared by presence — each `Pipeline.joined`
+    * mints a fresh graft.plans.Fd token.
+    */
+  private def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    def shape(df: DataFrame) =
+      df.schema.map(f => (f.name, f.dataType, f.nullable, f.metadata.json == "{}"))
+    assert(shape(got) == shape(want), s"$what: schema")
+    def canon(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(canon(got) == canon(want), what)
+  }
+
+  /** The generated cases the equivalence specs must see at least once. */
+  private def cases(fx: Fixture): Set[String] = {
+    val uids = fx.users.flatMap(_._1).toSet
+    def weighs(uid: String) = fx.weighs.count(_._1 == uid)
+    def treatments(uid: String) = fx.treatments.count(_._1 == uid)
+    Set(
+      "null UID" -> fx.users.exists(_._1.isEmpty),
+      "no weigh-ins" -> uids.exists(weighs(_) == 0),
+      "no treatment" -> uids.exists(treatments(_) == 0),
+      "two treatments" -> uids.exists(treatments(_) == 2),
+      "null weight" -> fx.weighs.exists(_._2.isEmpty),
+      "NaN weight" -> fx.weighs.exists(_._2.exists(_.isNaN)),
+      "null update" -> fx.weighs.exists(!_._4),
+      "duplicate row" -> (fx.weighs.distinct.size < fx.weighs.size)
+    ).collect { case (name, true) => name }
+  }
+  private val allCases = Set("null UID", "no weigh-ins", "no treatment", "two treatments",
+    "null weight", "NaN weight", "null update", "duplicate row")
+
+  test("the per-user pass equals the window formulation (both modes, dedup on/off)") {
+    val cohorts = Seq("week", "month", "ClinicID")
+    var seen = Set.empty[String]
+    forAllSeeded(6) { fx =>
+      seen ++= cases(fx)
+      val (u, w, t) = toTables(fx)
+      for (strict <- Seq(true, false); dedup <- Seq(true, false)) {
+        val cfg = wideCfg.copy(cohort = cohorts(fx.users.size % 3),
+          strictCohorts = strict, dedup = dedup)
+        assertSameRows(Pipeline.run(u, w, t, cfg),
+          WindowMetrics.run(u, w, t, col(cfg.cohort), cfg.cohort, cfg), s"$fx $cfg")
+      }
+    }
+    assert(seen == allCases, s"cases never generated: ${allCases -- seen}")
+  }
+
+  test("the per-user pass equals the window formulation on a non-monotone cohort") {
+    // minute % 3 revisits cohorts 0, 1, 2 in sort order: a cohort's
+    // rows are not contiguous within a user
+    val cohort = pmod(minute(col("Wts_CreatedDate")), lit(3))
+    forAllSeeded(4) { fx =>
+      val (u, w, t) = toTables(fx)
+      for (strict <- Seq(true, false)) {
+        val cfg = wideCfg.copy(gender = "Male", strictCohorts = strict)
+        assertSameRows(Pipeline.runWithCohortExpr(u, w, t, cohort, "m3", cfg),
+          WindowMetrics.run(u, w, t, cohort, "m3", cfg), s"$fx $cfg")
+      }
     }
   }
 }

@@ -104,4 +104,18 @@ class BigramCountsSpec extends AnyFunSuite with SparkTestSession {
       Row(1L, Seq("only")), Row(2L, Seq.empty[String]), Row(3L, null))))
     assert(out.count() == 0L)
   }
+
+  test("table sizing: smallest power of two at load <= 1/2, refused past 2^30 slots") {
+    import BigramRuntime.{tableSlots, MaxSlots}
+    assert(Seq(0, 1, 2, 3, 4, 5, 1000).map(tableSlots) == Seq(4, 4, 4, 8, 8, 16, 2048))
+    assert(tableSlots((1 << 28) + 1) == MaxSlots)
+    assert(tableSlots(1 << 29) == MaxSlots)   // the largest table: exactly 2^30
+    // where Int sizing wrapped: the doubling loop's 2 * keys, and
+    // highestOneBit(n) * 4 going negative
+    for (keys <- Seq((1 << 29) + 1, 1 << 30, Int.MaxValue)) {
+      val e = intercept[IllegalArgumentException](tableSlots(keys))
+      assert(e.getMessage.contains(s"$keys tokens or bigrams"), e.getMessage)
+    }
+    intercept[IllegalArgumentException](tableSlots(-1))
+  }
 }

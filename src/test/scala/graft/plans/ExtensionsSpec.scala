@@ -2,8 +2,10 @@ package graft.plans
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, count, lit}
 import graft.SparkTestSession
-import graft.clinical.{Pipeline, PipelineConfig}
+import graft.clinical.Sources
 
 /** The documented registration path — `SparkSession.builder()
   * .withExtensions(new GraftExtensions)` — must inject the pushdown
@@ -21,9 +23,14 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestSession {
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       assert(extended ne spark)
-      val cfg = PipelineConfig(gender = "Male", minAge = 10, maxAge = 80,
-        strictCohorts = true)
-      val plan = Pipeline.runFromCsv(extended, "fixtures/clinical", cfg)
+      // the clinical declaration in miniature: the users table's Gender
+      // declared constant per UID, a UID-partitioned window, then a
+      // Gender filter (the clinical pipeline itself no longer has a
+      // window to push through)
+      val users = Sources.usersCsv(extended, "fixtures/clinical")
+      val plan = Fd.declareConstantPer(users, "UID", Seq("Gender"))
+        .withColumn("cnt", count(lit(1)).over(Window.partitionBy(col("UID"))))
+        .filter(col("Gender") === "Male")
         .queryExecution.optimizedPlan
       // with the rule active, a Window node must have a Filter on Gender below it
       var pushedBelowWindow = false

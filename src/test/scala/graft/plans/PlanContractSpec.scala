@@ -183,6 +183,22 @@ class PlanContractSpec extends AnyFunSuite with SparkTestSession {
       s"q30 has $w30 Window nodes (designed ceiling 12) — boundary re-grew the stack")
   }
 
+  test("q31 sorts once on the metric sort keys, right after the UID exchange") {
+    // the clinical metric pass (clinical.Metrics.withCohortMetrics): one
+    // hash exchange on UID, one sort within partitions, no Window — the
+    // six window specs it replaced sorted the joined row once each
+    val lines = plans("q31_clinical_pipeline_strict").linesIterator
+      .map(_.replaceAll("^[^A-Za-z]*", "")).toIndexedSeq
+    val sorts = lines.indices.filter { i =>
+      lines(i).startsWith("Sort [UID") && lines(i).contains("UIDCreatedDate") &&
+        lines(i).endsWith("false, 0")
+    }
+    assert(sorts.size == 1, s"expected one metric sort:\n${lines.mkString("\n")}")
+    assert(lines(sorts.head + 1).startsWith("Exchange hashpartitioning(UID"),
+      s"the metric sort must sit on the UID exchange:\n${lines.mkString("\n")}")
+    assert(!lines.exists(_.startsWith("Window ")), "q31 re-grew a window")
+  }
+
   test("clinical plans (both modes) have zero single-partition exchanges after execution") {
     for (name <- Seq("q30_clinical_pipeline", "q31_clinical_pipeline_strict")) {
       val df = SparkEntry.queries(name)(spark, dir)

@@ -1,14 +1,18 @@
 package graft.plans
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, Window => LWindow, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, Window => LWindow,
+  LogicalPlan, MapPartitions, RepartitionByExpression}
 import graft.SparkTestSession
 import graft.clinical.{Pipeline, PipelineConfig}
 
 /** The custom optimizer rule must (1) move user-constant predicates
-  * below UID-partitioned windows, (2) STOP at the bug-compatible global
-  * diff window (unpartitioned — removing users there changes neighbor
-  * rows), and (3) never change results.
+  * below UID-partitioned windows, (2) stop wherever the declared
+  * dependency may not hold (unions, outer joins, expands, same-named
+  * columns, nondeterministic conjuncts), and (3) never change results.
+  * The clinical pipeline no longer needs the rule — it has no window
+  * and filters before its metric pass — so its two plan tests pin that
+  * placement instead.
   */
 class PushdownSpec extends AnyFunSuite with SparkTestSession {
 
@@ -19,47 +23,38 @@ class PushdownSpec extends AnyFunSuite with SparkTestSession {
     try f finally { spark.experimental.extraOptimizations = Nil }
   }
 
-  /** Number of Window nodes strictly above the topmost Filter that
-    * touches Gender (plan is a tree; the clinical plan is a chain).
+  /** The clinical pipeline applies its demographic filter itself, below
+    * the metric pass: the topmost `UID` repartition under the pass (a
+    * MapPartitions) must hold every Filter that touches Gender, and at
+    * least one. Returns the plan as the failure message otherwise.
     */
-  private def windowsAboveGenderFilter(plan: LogicalPlan): Int = {
-    var windows = 0
-    var found = -1
-    def walk(p: LogicalPlan, depthWindows: Int): Unit = p match {
-      case w: LWindow => w.children.foreach(walk(_, depthWindows + 1))
-      case f: LFilter if f.condition.references.exists(_.name == "Gender") =>
-        if (found < 0) found = depthWindows
-        f.children.foreach(walk(_, depthWindows))
-      case other => other.children.foreach(walk(_, depthWindows))
+  private def assertGenderFilterBelowPass(plan: LogicalPlan): Unit = {
+    def genderFilters(p: LogicalPlan) = p.collect {
+      case f: LFilter if f.condition.references.exists(_.name == "Gender") => f
     }
-    walk(plan, 0)
-    windows = found
-    windows
+    val belowExchange = plan.collectFirst { case m: MapPartitions => m }.flatMap(
+      _.collectFirst {
+        case r: RepartitionByExpression
+            if r.partitionExpressions.exists(_.references.exists(_.name == "UID")) => r
+      })
+    assert(belowExchange.exists(r =>
+        genderFilters(r).nonEmpty && genderFilters(r).size == genderFilters(plan).size),
+      s"the Gender filter must sit below the metric pass and its UID exchange:\n$plan")
   }
 
-  test("strict mode: gender filter crosses every window down to the scan side") {
+  test("strict mode: gender filter sits below the metric pass and its UID exchange") {
     val cfg = PipelineConfig(gender = "Male", minAge = 10, maxAge = 80, strictCohorts = true)
-    val without = Pipeline.runFromCsv(spark, fixtureDir, cfg)
-      .queryExecution.optimizedPlan
-    val withPlan = withRule {
-      Pipeline.runFromCsv(spark, fixtureDir, cfg).queryExecution.optimizedPlan
-    }
-    val before = windowsAboveGenderFilter(without)
-    val after = windowsAboveGenderFilter(withPlan)
-    assert(before == 0, s"baseline keeps the filter above all windows (saw $before above)")
-    assert(after >= 3, s"rule must push below the window stack (only $after windows above)")
+    assertGenderFilterBelowPass(
+      Pipeline.runFromCsv(spark, fixtureDir, cfg).queryExecution.optimizedPlan)
   }
 
-  test("bug-compatible mode: pushdown crosses the UID-partitioned windows too") {
-    // since the boundary-join rework every bug-compat window partitions
-    // by UID (the cross-user successor table is captured eagerly from
-    // the unfiltered plan), so user-constant filters may cross them
+  test("bug-compatible mode: gender filter sits below the metric pass and exchange") {
+    // the successor table is built from the unfiltered frame and joined
+    // in on UID below the exchange; no Gender filter may appear above
+    // the pass or on that side
     val cfg = PipelineConfig(gender = "Male", minAge = 10, maxAge = 80, strictCohorts = false)
-    val withPlan = withRule {
-      Pipeline.runFromCsv(spark, fixtureDir, cfg).queryExecution.optimizedPlan
-    }
-    val after = windowsAboveGenderFilter(withPlan)
-    assert(after >= 1, s"at least the patient_TBWL window is crossed (saw $after)")
+    assertGenderFilterBelowPass(
+      Pipeline.runFromCsv(spark, fixtureDir, cfg).queryExecution.optimizedPlan)
   }
 
   test("a window keyed by a DIFFERENT column merely NAMED like the anchor is not crossed") {

@@ -60,9 +60,6 @@ object Main {
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("clinical-pipeline")
-      // strict mode's filter-below-windows plan relies on the graft
-      // pushdown rule; without the extensions the CLI session would
-      // run the documented optimization's UNoptimized plan silently
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))

@@ -179,8 +179,7 @@ object Metrics {
     input.repartition(col("UID"))
       .sortWithinPartitions(sortKeys: _*)
       .mapPartitions(pass(_))(Encoders.row(out))
-      // the encoder drops column metadata; `to` restores it (the users
-      // columns' graft.plans.Fd declaration still holds per UID)
+      // the encoder drops column metadata; `to` restores the input's
       .to(out)
   }
 }

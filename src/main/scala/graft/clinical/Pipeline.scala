@@ -55,14 +55,7 @@ object Pipeline {
     * preserve that exactly and rely on broadcast of the dimension sides.
     */
   def joined(users: DataFrame, weights: DataFrame, treatments: DataFrame): DataFrame = {
-    // users is one row per UID, so every users attribute is constant per
-    // UID — declared as per-plan FD metadata (graft.plans.Fd) so the
-    // window-pushdown rule can act on THESE columns and no others
-    val u = {
-      val r = renamedUsers(users)
-      graft.plans.Fd.declareConstantPer(r, "UID",
-        r.columns.filterNot(_ == "UID").toSeq)
-    }
+    val u = renamedUsers(users)
     val w = renamedWeights(weights)
     val t = renamedTreatments(treatments)
     u.join(w, u("UID") === w("MasterUserID"), "left")

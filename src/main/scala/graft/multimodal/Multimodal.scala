@@ -1,8 +1,7 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal (image/audio/video) columns for a training-data pipeline.
   *

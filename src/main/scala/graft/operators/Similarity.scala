@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions.{cosine_similarity, cosine_similarity6,
-  cosine_from_parts, cosine_from_parts6, dot_product, norm_sq}
+import graft.functions.VectorFunctions.{cosine_similarity6, cosine_from_parts,
+  cosine_from_parts6, dot_product, norm_sq}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *

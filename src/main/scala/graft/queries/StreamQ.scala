@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -68,7 +67,7 @@ object StreamQ {
       java.util.concurrent.atomic.AtomicInteger => (DataFrame, Int) => Unit) = {
     val acc = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
     def applyChanges(counter: java.util.concurrent.atomic.AtomicInteger)
-                    (changes: DataFrame, v: Int): Unit = {
+        : (DataFrame, Int) => Unit = (changes, _) => {
       counter.incrementAndGet()
       val sign = when(col("_change_type")
         .isin("insert", "update_postimage"), 1L).otherwise(-1L)

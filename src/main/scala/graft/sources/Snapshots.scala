@@ -62,6 +62,13 @@ object Snapshots {
         !l.startsWith("#props\t"))
   }
 
+  /** The parent's body refs a commit carries forward — none onto the
+    * empty table (parent 0, an append's first commit or a branch
+    * created at 0).
+    */
+  private def carriedRefs(root: String, parent: Int): Seq[String] =
+    if (parent == 0) Nil else bodyRefs(root, parent)
+
   /** All manifest body lines: data-file entries AND `#delete` lines
     * (the schema header is metadata, not an entry), with `#segment`
     * pointers resolved ([[resolveBody]]). Carried forward BY REFERENCE
@@ -440,6 +447,13 @@ object Snapshots {
           .asInstanceOf[org.apache.spark.sql.types.StructType] }
   }
 
+  /** [[schemaOf]], falling back to the files' inferred schema for a
+    * pre-r9 manifest.
+    */
+  private def schemaAt(spark: SparkSession, root: String, v: Int)
+      : org.apache.spark.sql.types.StructType =
+    schemaOf(root, v).getOrElse(rawScan(spark, root, v, files(root, v)).schema)
+
   /** Files of snapshot `v`, in manifest order. */
   def files(root: String, v: Int): Seq[String] =
     entries(root, v).map(_.split('\t').head)
@@ -462,21 +476,17 @@ object Snapshots {
     finally listing.close()
   }
 
-  /** Write `df` into this version's data dir and return the new data
+  /** Write `df` into a staged dir ([[Staged.dir]]) and return the new
     * files, sorted. The dir name carries a WRITER-UNIQUE token beside
     * the version (r9 optimistic concurrency): two writers racing on the
     * same target version write to disjoint directories, and the loser
     * of the manifest CAS renames its dir to the rebased version instead
     * of re-writing the data (Iceberg's uuid-named data files + retried
-    * metadata commit, reduced to a dir rename). Files.list holds a
-    * DirectoryStream fd until closed — a long-lived driver committing
-    * many snapshots would otherwise exhaust fds.
+    * metadata commit, reduced to a dir rename).
     */
-  private def writeDataFiles(df: DataFrame, rootP: Path, v: Int,
-                             token: String, kind: String = "data"): Seq[String] = {
-    val dataDir = rootP.resolve(s"${kind}_v${v}_$token")
-    df.write.mode("overwrite").parquet(dataDir.toString)
-    listParquet(dataDir)
+  private def writeStaged(df: DataFrame, dir: Path): Seq[String] = {
+    df.write.mode("overwrite").parquet(dir.toString)
+    listParquet(dir)
   }
 
   /** The `.parquet` files directly under a staged dir, absolute and
@@ -611,15 +621,14 @@ object Snapshots {
     * list. The manifest LINK is the commit — and the CAS: hard-linking
     * the staged file onto an existing manifest name throws
     * `FileAlreadyExistsException`, which is exactly the "another
-    * writer claimed this version" signal optimistic committers
-    * ([[append]]/[[deleteWhere]]) catch and rebase on. `_latest` is
+    * writer claimed this version" signal [[commitLoop]] catches and
+    * rebases on. `_latest` is
     * written after as a non-authoritative hint ([[latestVersion]] scans
     * the manifest dir). The staged temp name carries a writer-unique
     * token so racing stagings never collide.
     */
   private def commit(rootP: Path, v: Int, schema: org.apache.spark.sql.types.StructType,
-                     fileSet: Seq[String],
-                     props: Map[String, String] = Map.empty): Unit = {
+                     fileSet: Seq[String], props: Map[String, String]): Unit = {
     val token = newToken()
     val tmp = rootP.resolve("_manifests").resolve(s"_tmp_${v}_$token.txt")
     // commit timestamp (r14): stamped on EVERY commit, strictly
@@ -754,11 +763,8 @@ object Snapshots {
     */
   def append(df: DataFrame, root: String, bloomCols: Seq[String],
              branch: String = "main"): Int = {
-    val rootP = Paths.get(root)
-    Files.createDirectories(rootP.resolve("_manifests"))
-    val token = newToken()
-    val v = latestVersion(root) + 1
-    val newFiles = writeDataFiles(df, rootP, v, token)
+    val st = new Staged(root, Seq("data"))
+    val newFiles = writeStaged(df, st.dir("data"))
     val blooms = bloomCols.map(c =>
       c -> bloomHexByFile(df.sparkSession, newFiles, c)).toMap
     val lines = entryLines(df, newFiles).map { line =>
@@ -772,15 +778,13 @@ object Snapshots {
         s"#bloom:$c=${blooms(c).getOrElse(f, bitsToHex(Nil))}")
       (line +: toks).mkString("\t")
     }
-    casAppend(df, rootP, root, branch, v, token, lines)
+    casAppend(df, st, branch, lines)
   }
 
-  /** The append commit protocol, shared by [[append]] and
-    * [[appendChecked]]: optimistic CAS with rebase (an append
-    * conflicts with nothing semantically — its rows are new — so the
-    * retry always converges). The staged dirs carry the ATTEMPTED
-    * version in their name; a reallocation renames them so
-    * [[dataVersionOf]] sequence scoping stays truthful.
+  /** The append commit, shared by [[append]], [[appendChecked]] and
+    * [[appendPartitioned]]: an append conflicts with nothing
+    * semantically — its rows are new — so [[commitLoop]] rebases it
+    * onto any winner, under the parent's schema widened by `df`'s.
     *
     * `checks`/`validatedBasis` (r15): [[appendChecked]]'s snapshot-
     * wide Unique validation ran against `validatedBasis`'s live rows;
@@ -790,108 +794,43 @@ object Snapshots {
     * stays live under contention (its rows conflict with nothing
     * unless a key collides, which is exactly what the revalidation
     * refuses). Bounded at one key-pruned survivor scan per basis
-    * move; unchecked appends (checks empty) skip all of it.
+    * move; unchecked appends (checks empty) skip all of it. An
+    * InboundRef basis has no cheap key-scoped revalidation, so a
+    * commit that can REMOVE a referenced key aborts the append
+    * ([[basisInvalidated]]) — declaring a post-image check trades
+    * rebase liveness for the stronger promise.
     */
-  private def casAppend(df: DataFrame, rootP: Path, root: String,
-                        branch: String, v0: Int, token: String,
-                        lines0: Seq[String],
+  private def casAppend(df: DataFrame, st: Staged, branch: String,
+                        lines: Seq[String],
                         checks: Seq[graft.operators.QualityChecks.Check] = Nil,
                         validatedBasis: Int = -1): Int = {
-    var v = v0
-    var lines = lines0
     var basis = validatedBasis
     val uniques = checks.collect {
       case u: graft.operators.QualityChecks.Unique => u }
-    def reallocate(): Unit = {
-      val newV = reallocateStaged(rootP, root, v, token, Seq("data"))
-      lines = lines.map(
-        _.replace(s"data_v${v}_$token", s"data_v${newV}_$token"))
-      v = newV
-    }
-    val inbounds = checks.collect {
-      case i: graft.operators.QualityChecks.InboundRef => i }
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (v <= parent) reallocate() // stale pre-write allocation
-      else {
-      // an InboundRef's post-image basis is invalidated by a
-      // concurrent commit that can REMOVE a referenced key
-      // (delete/merge/update); unlike the Unique legs there is no
-      // cheap key-scoped revalidation, so the append ABORTS (the
-      // mergeChecked rule) — declaring a post-image check trades
-      // rebase liveness for the stronger promise. Rewrites carry the
-      // same rows and concurrent APPENDS only add keys — InboundRef
-      // is monotone in the table's key set (and cherry-picks strip
-      // delete lines, so op=append is purely additive everywhere) —
-      // so neither costs liveness (r16)
-      if (inbounds.nonEmpty && parent != basis && parent > 0 &&
-          basisWindowInvalidated(root, math.max(basis, 0), parent) { p =>
-            !p.get("rewrite").contains("true") &&
-              !p.get("op").contains("append")
-          }) {
-        deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
+    val inbounds = checks.filter(
+      _.isInstanceOf[graft.operators.QualityChecks.InboundRef])
+    commitLoop(st, branch) { (_, parent) =>
+      if (basisInvalidated(st.root, inbounds, basis, parent))
         throw new java.util.ConcurrentModificationException(
           s"checked append aborted: a concurrent commit in ($basis, " +
             s"$parent] invalidated its InboundRef post-image basis — " +
             "re-read and re-run")
-      }
-      if (uniques.nonEmpty && parent != basis && parent > 0) {
-        // the staged dir is deleted on refusal AND on a revalidation
-        // error — "a refused batch changes NOTHING" covers error
-        // paths here exactly as in validateStagedOrAbort
+      if (uniques.nonEmpty && parent != basis) {
+        val files = lines.map(l => st.moved(l.split('\t').head))
         val bad =
-          try {
-            val files = lines.map(_.split('\t').head)
-            if (files.isEmpty) Nil
-            else crossUniqueBad(df.sparkSession.read.parquet(files: _*),
-              uniques, read(df.sparkSession, root, parent))
-          } catch { case scala.util.control.NonFatal(e) =>
-            deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
-            throw e
-          }
-        if (bad.nonEmpty) {
-          deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
-          throw new IllegalStateException(
-            "appendChecked refused — constraint violations: " + bad.map {
-              case (n, c) => s"$n ($c rows)" }.mkString(", "))
-        }
+          if (files.isEmpty) Nil
+          else crossUniqueBad(df.sparkSession.read.parquet(files: _*),
+            uniques, read(df.sparkSession, st.root, parent))
+        if (bad.nonEmpty) throw new IllegalStateException(
+          "appendChecked refused — constraint violations: " + bad.map {
+            case (n, c) => s"$n ($c rows)" }.mkString(", "))
         basis = parent
       }
-      try {
-        if (publish(rootP, root, branch, v, seq,
-            parent, widenedSchema(df, root, parent),
-            (if (parent == 0) Nil else bodyRefs(root, parent)) ++ lines,
-            props = Map("op" -> "append")))
-          committed = v
-        else reallocate() // head CAS lost: rebase on the new head
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
-      }
+      () => Attempt(widenedSchema(df, st.root, parent),
+        carriedRefs(st.root, parent) ++ lines, Map("op" -> "append"))
     }
-    committed
   }
 
-  /** The ONE staged-batch validation of the checked writes
-    * ([[appendChecked]]/[[mergeChecked]]/[[updateChecked]]): run
-    * `checks` against the staged bytes at `newFiles`, extend every
-    * [[graft.operators.QualityChecks.Unique]] check to the POST-IMAGE
-    * by also counting batch keys colliding with `survivors` (the
-    * post-image rows NOT written by this commit — r15, closing the
-    * r14 batch-scoped-uniqueness gap), and on ANY violation or
-    * validation error delete `stagedDirs` and throw with the
-    * violating checks named. Scale shape: the batch legs are
-    * QualityChecks' one-scan report; each cross-batch unique leg is a
-    * key-column-pruned semi-join of the batch against the survivor
-    * scan — O(table's key column), the price of a uniqueness promise
-    * without a key index, paid only when a Unique check is declared.
-    * RowPredicate and RefIntegrity stay batch-scoped BY CONSTRUCTION,
-    * not as a gap: they are row-local, and rows not in this batch
-    * passed them at their own checked commit (delete/compact commits
-    * cannot mint a row-local violation).
-    */
   /** Cross-batch leg of a snapshot-wide Unique check: per check, how
     * many batch keys collide with `survivors`' keys. Null-SAFE
     * equality — two NULL keys in one batch refuse (report's groupBy
@@ -936,12 +875,30 @@ object Snapshots {
     }.filter(_._2 > 0)
   }
 
+  /** The ONE staged-batch validation of the checked writes
+    * ([[appendChecked]]/[[mergeChecked]]/[[updateChecked]]/
+    * [[deleteChecked]], whose batch is empty): run
+    * `checks` against the staged bytes at `newFiles`, extend every
+    * [[graft.operators.QualityChecks.Unique]] check to the POST-IMAGE
+    * by also counting batch keys colliding with `survivors` (the
+    * post-image rows NOT written by this commit — r15, closing the
+    * r14 batch-scoped-uniqueness gap), and on ANY violation or
+    * validation error delete the staged dirs and throw with the
+    * violating checks named. Scale shape: the batch legs are
+    * QualityChecks' one-scan report; each cross-batch unique leg is a
+    * key-column-pruned semi-join of the batch against the survivor
+    * scan — O(table's key column), the price of a uniqueness promise
+    * without a key index, paid only when a Unique check is declared.
+    * RowPredicate and RefIntegrity stay batch-scoped BY CONSTRUCTION,
+    * not as a gap: they are row-local, and rows not in this batch
+    * passed them at their own checked commit (delete/compact commits
+    * cannot mint a row-local violation).
+    */
   private def validateStagedOrAbort(spark: SparkSession,
-      stagedDirs: Seq[Path], newFiles: Seq[String],
+      st: Staged, newFiles: Seq[String],
       checks: Seq[graft.operators.QualityChecks.Check],
       survivors: => Option[DataFrame], op: String): Unit = {
     import org.apache.spark.sql.functions.col
-    def abort(): Unit = stagedDirs.foreach(deleteTreeQuietly)
     val uniques = checks.collect {
       case u: graft.operators.QualityChecks.Unique => u }
     // InboundRef (r16) is post-image-scoped BY NATURE: the referencing
@@ -1015,9 +972,9 @@ object Snapshots {
           (batchBad ++ crossBad ++ inboundBad).groupBy(_._1)
             .map { case (n, xs) => (n, xs.map(_._2).sum) }.toSeq.sortBy(_._1)
         }
-      } catch { case scala.util.control.NonFatal(e) => abort(); throw e }
+      } catch { case scala.util.control.NonFatal(e) => st.drop(); throw e }
     if (bad.nonEmpty) {
-      abort()
+      st.drop()
       throw new IllegalStateException(
         s"$op refused — constraint violations: " + bad.map {
           case (n, c) => s"$n ($c rows)" }.mkString(", "))
@@ -1055,34 +1012,16 @@ object Snapshots {
                     checks: Seq[graft.operators.QualityChecks.Check],
                     branch: String = "main"): Int = {
     require(checks.nonEmpty, "appendChecked without checks is append")
-    val rootP = Paths.get(root)
-    Files.createDirectories(rootP.resolve("_manifests"))
-    val token = newToken()
-    val v = latestVersion(root) + 1
-    val newFiles = writeDataFiles(df, rootP, v, token)
+    val st = new Staged(root, Seq("data"))
+    val newFiles = writeStaged(df, st.dir("data"))
     val head = headOf(root, branch)
-    validateStagedOrAbort(df.sparkSession,
-      Seq(rootP.resolve(s"data_v${v}_$token")), newFiles, checks,
+    validateStagedOrAbort(df.sparkSession, st, newFiles, checks,
       survivors = if (head > 0) Some(read(df.sparkSession, root, head))
                   else None,
       op = "appendChecked")
-    afterCheckedValidation()
-    casAppend(df, rootP, root, branch, v, token, entryLines(df, newFiles),
+    casAppend(df, st, branch, entryLines(df, newFiles),
       checks = checks, validatedBasis = head)
   }
-
-  /** Test seam (SnapshotsSpec): runs between a checked write's
-    * ([[appendChecked]]/[[deleteChecked]]) constraint validation and
-    * its CAS loop, so the revalidate-on-rebase and abort-on-basis-move
-    * paths are deterministically exercisable. A no-op in production. CONTRACT: single-threaded tests only — this is
-    * module-global state on a production object, so a test that sets
-    * it must restore it in a finally, and checked appends must not
-    * run concurrently with a test holding it. @volatile so a
-    * restore is at least visible across the suite's threads; the seam
-    * is deliberately not per-call plumbing (production call sites
-    * carry no test parameter).
-    */
-  @volatile private[sources] var afterCheckedValidation: () => Unit = () => ()
 
   /** COMPACTION — the small-file management every append-only snapshot
     * store accumulates a need for: rewrite the LATEST version's file
@@ -1108,12 +1047,11 @@ object Snapshots {
       "sortBy and zorderBy are exclusive clustering modes")
     require(zorderBy.isEmpty || zorderBy.size == 2,
       s"zorderBy interleaves exactly 2 columns: $zorderBy")
-    val rootP = Paths.get(root)
     val prev = headOf(root, branch)
     require(prev > 0, s"nothing to compact under $root")
-    var v = latestVersion(root) + 1
+    val st = new Staged(root, Seq("data"))
     val prevData = read(spark, root, prev)
-    import org.apache.spark.sql.functions.{broadcast, col, expr, lit, max, min}
+    import org.apache.spark.sql.functions.{broadcast, col, expr, max, min}
     // sortBy: CLUSTERED compaction (Iceberg sort-order rewrite / Delta
     // OPTIMIZE ZORDER's 1-column case) — range-partition + sort within,
     // so each output file covers a disjoint key range and footer
@@ -1154,42 +1092,23 @@ object Snapshots {
           .select(prevData.columns.map(col).toIndexedSeq: _*)
       case _ => prevData.repartition(targetFiles)
     }
-    val token = newToken()
-    var newFiles = writeDataFiles(reshaped, rootP, v, token)
-    var lines = entryLines(reshaped, newFiles)
+    val newFiles = writeStaged(reshaped, st.dir("data"))
+    val lines = entryLines(reshaped, newFiles)
+    val schema = schemaOf(root, prev).getOrElse(prevData.schema)
     // a compaction REWRITES version `prev`'s content, so a commit that
     // landed meanwhile ON THIS BRANCH invalidates the rewrite — fail
     // loudly for the caller to re-run against the new head (Iceberg's
     // rewrite_data_files revalidation, reduced to abort-and-retry);
     // appends/deletes rebase automatically because their rows are new.
     // A mere VERSION-NUMBER collision (another branch's writer claimed
-    // the number) is not a conflict: reallocate and retry.
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (parent != prev) {
-        deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
-        throw new IllegalStateException(
-          s"concurrent commit landed during compaction of v$prev — " +
-            "re-run compact against the new head version")
-      }
-      try {
-        if (publish(rootP, root, branch, v, seq, parent,
-            schemaOf(root, prev).getOrElse(prevData.schema), lines,
-            // Delta's dataChange=false: same rows, new bytes — CDC
-            // skips it
-            props = Map("rewrite" -> "true", "op" -> "rewrite")))
-          committed = v
-        // head CAS lost: loop re-resolves — a moved head aborts above
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          val newV = reallocateStaged(rootP, root, v, token, Seq("data"))
-          lines = lines.map(
-            _.replace(s"data_v${v}_$token", s"data_v${newV}_$token"))
-          v = newV
-      }
+    // the number) is not a conflict: the loop reallocates and retries.
+    commitLoop(st, branch) { (_, parent) =>
+      if (parent != prev) throw new IllegalStateException(
+        s"concurrent commit landed during compaction of v$prev — " +
+          "re-run compact against the new head version")
+      // Delta's dataChange=false: same rows, new bytes — CDC skips it
+      () => Attempt(schema, lines, Map("rewrite" -> "true", "op" -> "rewrite"))
     }
-    committed
   }
 
   /** METADATA-ONLY manifest compaction (r14 — Iceberg's
@@ -1241,6 +1160,11 @@ object Snapshots {
     compactManifestsImpl(None, root, branch, targetLines, clusterBy,
       Long.MaxValue)
 
+  /** Default body-size bound for the driver-side cluster sort
+    * (~40 MB of entry strings); above it the rewrite distributes.
+    */
+  val DriverSortMaxLines: Long = 1L << 18
+
   /** [[compactManifests]] with a DRIVER-MEMORY BOUND (r16 — the
     * Iceberg lesson that `rewrite_manifests` is a Spark job; named
     * after it): the no-session overload's cluster sort materializes the whole resolved
@@ -1266,11 +1190,6 @@ object Snapshots {
     * converge on identical files, and a lost CAS race orphans
     * segments that [[removeOrphans]] reaps like data files.
     */
-  /** Default body-size bound for the driver-side cluster sort
-    * (~40 MB of entry strings); above it the rewrite distributes.
-    */
-  val DriverSortMaxLines: Long = 1L << 18
-
   def rewriteManifests(spark: SparkSession, root: String,
                        branch: String = "main",
                        targetLines: Int = SegmentTargetLines,
@@ -1315,24 +1234,13 @@ object Snapshots {
           dels ++ data.sortBy(statMinOf(_, c).getOrElse(Long.MaxValue)),
           targetLines)
     }
-    var v = latestVersion(root) + 1
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
+    commitLoop(new Staged(root, Nil), branch) { (_, parent) =>
       if (parent != prev) throw new IllegalStateException(
         s"concurrent commit landed during manifest compaction of v$prev — " +
           "re-run against the new head version")
-      try {
-        if (publish(rootP, root, branch, v, seq, parent, schema, lines,
-            props = Map("rewrite" -> "true", "op" -> "rewrite-manifests")))
-          committed = v
-        else v = latestVersion(root) + 1 // head CAS lost: loop re-resolves
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          v = latestVersion(root) + 1 // number claimed by another branch
-      }
+      () => Attempt(schema, lines,
+        Map("rewrite" -> "true", "op" -> "rewrite-manifests"))
     }
-    committed
   }
 
   /** The distributed clustered rewrite (r16 — Iceberg's
@@ -1707,11 +1615,8 @@ object Snapshots {
                         spec: PartitionSpec,
                         branch: String = "main"): Int = {
     import org.apache.spark.sql.functions.col
-    val rootP = Paths.get(root)
-    Files.createDirectories(rootP.resolve("_manifests"))
-    val token = newToken()
-    var v = latestVersion(root) + 1
-    val dataDir = rootP.resolve(s"data_v${v}_$token")
+    val st = new Staged(root, Seq("data"))
+    val dataDir = st.dir("data")
     df.withColumn("_p", spec.partExpr)
       .repartition(col("_p"))
       .write.partitionBy("_p").parquet(dataDir.toString)
@@ -1741,33 +1646,11 @@ object Snapshots {
       finally listing.close()
     }
     val values = byFile.toMap
-    var lines = entryLines(df.drop("_p"), byFile.map(_._1)).map { line =>
+    val lines = entryLines(df.drop("_p"), byFile.map(_._1)).map { line =>
       val f = line.split('\t').head
       s"$line\t#part:${spec.tokenName}=${values(f)}"
     }
-    def reallocate(): Unit = {
-      val newV = reallocateStaged(rootP, root, v, token, Seq("data"))
-      lines = lines.map(
-        _.replace(s"data_v${v}_$token", s"data_v${newV}_$token"))
-      v = newV
-    }
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (v <= parent) reallocate() // stale pre-write allocation
-      else try {
-        if (publish(rootP, root, branch, v, seq, parent,
-            widenedSchema(df, root, parent),
-            (if (parent == 0) Nil else bodyRefs(root, parent)) ++ lines,
-            props = Map("op" -> "append")))
-          committed = v
-        else reallocate()
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
-    }
-    committed
+    casAppend(df, st, branch, lines)
   }
 
   /** Files of snapshot `v` in the partition a point-lookup literal
@@ -2060,58 +1943,8 @@ object Snapshots {
     * version.
     */
   def deleteWhere(spark: SparkSession, root: String, column: String,
-                  keys: DataFrame, branch: String = "main"): Int = {
-    import org.apache.spark.sql.functions.col
-    val rootP = Paths.get(root)
-    require(headOf(root, branch) > 0, s"nothing to delete from under $root")
-    val token = newToken()
-    var v = latestVersion(root) + 1
-    var delFiles = {
-      val delDir = rootP.resolve(s"delete_v${v}_$token")
-      keys.select(col(column)).distinct()
-        .write.mode("overwrite").parquet(delDir.toString)
-      listParquet(delDir)
-    }
-    def reallocate(): Unit = {
-      val newV = reallocateStaged(rootP, root, v, token, Seq("delete"))
-      delFiles = delFiles.map(
-        _.replace(s"delete_v${v}_$token", s"delete_v${newV}_$token"))
-      v = newV
-    }
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (v <= parent) { reallocate() } // stale pre-write allocation
-      else {
-      val schema = schemaOf(root, parent)
-        .getOrElse(rawScan(spark, root, parent, files(root, parent)).schema)
-      if (!schema.fieldNames.contains(column)) {
-        // "a refused batch changes NOTHING" covers error paths too
-        // (r16): a bad key column must not strand the staged
-        // tombstones until an age-guarded orphan sweep
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
-        throw new IllegalArgumentException(
-          s"delete key column '$column' is not in the table schema")
-      }
-      try {
-        if (publish(rootP, root, branch, v, seq, parent, schema,
-            bodyRefs(root, parent) ++
-              delFiles.map(f => s"#delete\t$f\t$column\t$v"),
-            props = Map("op" -> "delete")))
-          committed = v
-        else reallocate()
-      } catch {
-        // rebase like append: an equality delete is defined against
-        // "everything committed before me", so retrying on top of the
-        // winner preserves its semantics (the delete's sequence number
-        // moves up WITH the rebase)
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
-      }
-    }
-    committed
-  }
+                  keys: DataFrame, branch: String = "main"): Int =
+    deleteImpl(spark, root, column, keys, branch, Nil)
 
   /** CHECKED equality delete (r16 — closing the checked-DML surface's
     * delete gap: append/merge/update validated their writes, but a
@@ -2156,8 +1989,14 @@ object Snapshots {
                     keys: DataFrame,
                     checks: Seq[graft.operators.QualityChecks.Check],
                     branch: String = "main"): Int = {
-    import org.apache.spark.sql.functions.col
     require(checks.nonEmpty, "deleteChecked without checks is deleteWhere")
+    deleteImpl(spark, root, column, keys, branch, checks)
+  }
+
+  private def deleteImpl(spark: SparkSession, root: String, column: String,
+                         keys: DataFrame, branch: String,
+                         checks: Seq[graft.operators.QualityChecks.Check]): Int = {
+    import org.apache.spark.sql.functions.col
     // row removal cannot mint a RowPredicate or Unique violation —
     // those are write-side concerns, enforced when the rows were
     // WRITTEN (the scaladoc's scoping rule made executable, r16):
@@ -2169,98 +2008,40 @@ object Snapshots {
     // post-image-scoped inbound legs validate the delete.
     val inboundOnly = checks.filter(
       _.isInstanceOf[graft.operators.QualityChecks.InboundRef])
-    val rootP = Paths.get(root)
     val base0 = headOf(root, branch)
     require(base0 > 0, s"nothing to delete from under $root")
-    val token = newToken()
-    var v = latestVersion(root) + 1
-    var delFiles = {
-      val delDir = rootP.resolve(s"delete_v${v}_$token")
-      keys.select(col(column)).distinct()
-        .write.mode("overwrite").parquet(delDir.toString)
-      listParquet(delDir)
-    }
-    def dropStaged(): Unit =
-      deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
+    val st = new Staged(root, Seq("delete"))
+    val delFiles =
+      writeStaged(keys.select(col(column)).distinct(), st.dir("delete"))
     // post-image from the WRITTEN key bytes (deterministic; never
     // recomputes `keys`) — the appendChecked validate-what-was-
     // written rule applied to a tombstone set
-    val bad: Seq[(String, Long)] =
-      try {
-        if (inboundOnly.isEmpty) Nil
-        else {
-          val staged =
-            if (delFiles.isEmpty) keys.select(col(column)).limit(0)
-            else spark.read.parquet(delFiles: _*).select(col(column))
-          val post = read(spark, root, base0)
-            .join(staged, Seq(column), "left_anti")
-          graft.operators.QualityChecks.report(post, inboundOnly)
-            .filter(!col("passed"))
-            .collect() // bounded: ≤ one row per declared check
-            .map(r => (r.getString(0), r.getLong(1))).toSeq
-        }
-      } catch { case scala.util.control.NonFatal(e) =>
-        dropStaged(); throw e }
-    if (bad.nonEmpty) {
-      dropStaged()
-      throw new IllegalStateException(
-        "deleteChecked refused — constraint violations: " + bad.map {
-          case (n, c) => s"$n ($c rows)" }.mkString(", "))
-    }
-    afterCheckedValidation()
-    def reallocate(): Unit = {
-      val newV = reallocateStaged(rootP, root, v, token, Seq("delete"))
-      delFiles = delFiles.map(
-        _.replace(s"delete_v${v}_$token", s"delete_v${newV}_$token"))
-      v = newV
-    }
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (v <= parent) { reallocate() } // stale pre-write allocation
-      else {
-      // scoped precisely (r16): rewrites carry the same rows and
-      // APPENDS only add keys — InboundRef (the one check class this
-      // path validates) is monotone in the table's key set, so a
-      // concurrent append cannot invalidate the basis; only a
-      // concurrent delete/merge/update (which can REMOVE a referenced
-      // key) forces the abort. No inbound check ⇒ nothing validated ⇒
-      // full rebase liveness, like deleteWhere.
-      if (inboundOnly.nonEmpty && parent != base0 &&
-          basisWindowInvalidated(root, base0, parent) { p =>
-            !p.get("rewrite").contains("true") &&
-              !p.get("op").contains("append")
-          }) {
-        dropStaged()
+    if (inboundOnly.nonEmpty)
+      validateStagedOrAbort(spark, st, Nil, inboundOnly,
+        survivors = Some(read(spark, root, base0).join(
+          if (delFiles.isEmpty) keys.select(col(column)).limit(0)
+          else spark.read.parquet(delFiles: _*).select(col(column)),
+          Seq(column), "left_anti")),
+        op = "deleteChecked")
+    commitLoop(st, branch) { (v, parent) =>
+      // an equality delete is defined against "everything committed
+      // before me", so rebasing onto a winner preserves its semantics
+      // (the delete's sequence number moves up WITH the rebase) —
+      // unless an inbound leg validated a basis the winner can
+      // invalidate ([[basisInvalidated]]); no inbound check ⇒ nothing
+      // validated ⇒ full rebase liveness
+      if (basisInvalidated(root, inboundOnly, base0, parent))
         throw new java.util.ConcurrentModificationException(
           s"checked delete aborted: a concurrent commit in ($base0, " +
             s"$parent] invalidated its post-image validation basis — " +
             "re-read and re-run")
-      }
-      val schema = schemaOf(root, parent)
-        .getOrElse(rawScan(spark, root, parent, files(root, parent)).schema)
-      if (!schema.fieldNames.contains(column)) {
-        // "a refused batch changes NOTHING" covers error paths too
-        // (r16): a bad key column must not strand the staged
-        // tombstones until an age-guarded orphan sweep
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
+      val schema = schemaAt(spark, root, parent)
+      if (!schema.fieldNames.contains(column))
         throw new IllegalArgumentException(
           s"delete key column '$column' is not in the table schema")
-      }
-      try {
-        if (publish(rootP, root, branch, v, seq, parent, schema,
-            bodyRefs(root, parent) ++
-              delFiles.map(f => s"#delete\t$f\t$column\t$v"),
-            props = Map("op" -> "delete")))
-          committed = v
-        else reallocate()
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
-      }
+      () => Attempt(schema, carriedRefs(root, parent) ++
+        delFiles.map(f => s"#delete\t$f\t$column\t$v"), Map("op" -> "delete"))
     }
-    committed
   }
 
   /** POSITIONAL DELETE (merge-on-read, Iceberg v2's second delete
@@ -2287,59 +2068,19 @@ object Snapshots {
                           predicate: org.apache.spark.sql.Column,
                           branch: String = "main"): Int = {
     import org.apache.spark.sql.functions.col
-    val rootP = Paths.get(root)
-    require(headOf(root, branch) > 0, s"nothing to delete from under $root")
-    val token = newToken()
     val base0 = headOf(root, branch)
-    var v = latestVersion(root) + 1
-    var delFiles = {
-      val delDir = rootP.resolve(s"delete_v${v}_$token")
+    require(base0 > 0, s"nothing to delete from under $root")
+    val st = new Staged(root, Seq("delete"))
+    val delFiles = writeStaged(
       liveScan(spark, root, base0, files(root, base0), keepMeta = true)
         .filter(predicate)
         .select(col(FileCol).as("file_path"), col(PosCol).as("pos"))
-        .distinct()
-        .write.mode("overwrite").parquet(delDir.toString)
-      listParquet(delDir)
+        .distinct(), st.dir("delete"))
+    commitLoop(st, branch) { (v, parent) =>
+      abortIfRewritten(root, base0, parent, "positional delete")
+      () => Attempt(schemaAt(spark, root, parent), carriedRefs(root, parent) ++
+        delFiles.map(f => s"#posdelete\t$f\t$v"), Map("op" -> "delete"))
     }
-    def reallocate(): Unit = {
-      val newV = reallocateStaged(rootP, root, v, token, Seq("delete"))
-      delFiles = delFiles.map(
-        _.replace(s"delete_v${v}_$token", s"delete_v${newV}_$token"))
-      v = newV
-    }
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (v <= parent) { reallocate() } // stale pre-write allocation
-      else {
-      // a rewrite anywhere in the unseen window (the branch chain from
-      // this delete's base to the current head) moves rows to new
-      // paths — the tombstones would dangle and the rows resurrect;
-      // abort rather than corrupt
-      val rewrote = lineageBetween(root, base0, parent).find(w =>
-        propsOf(root, w).get("rewrite").contains("true"))
-      if (rewrote.isDefined) {
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
-        throw new java.util.ConcurrentModificationException(
-          s"positional delete aborted: commit ${rewrote.get} rewrote the " +
-            "data files these tombstones name — re-read and re-run")
-      }
-      try {
-        val schema = schemaOf(root, parent)
-          .getOrElse(rawScan(spark, root, parent, files(root, parent)).schema)
-        if (publish(rootP, root, branch, v, seq, parent, schema,
-            bodyRefs(root, parent) ++
-              delFiles.map(f => s"#posdelete\t$f\t$v"),
-            props = Map("op" -> "delete")))
-          committed = v
-        else reallocate()
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
-      }
-    }
-    committed
   }
 
   /** ROW-LEVEL UPDATE (merge-on-read): ONE atomic commit that
@@ -2400,21 +2141,15 @@ object Snapshots {
                   branch: String,
                   checks: Seq[graft.operators.QualityChecks.Check]): Int = {
     import org.apache.spark.sql.functions.col
-    val rootP = Paths.get(root)
-    require(headOf(root, branch) > 0, s"nothing to update under $root")
-    require(set.nonEmpty, "update needs at least one SET column")
-    val token = newToken()
     val base0 = headOf(root, branch)
-    var v = latestVersion(root) + 1
+    require(base0 > 0, s"nothing to update under $root")
+    require(set.nonEmpty, "update needs at least one SET column")
+    val st = new Staged(root, Seq("data", "delete"))
     val matching = liveScan(spark, root, base0, files(root, base0),
       keepMeta = true).filter(where)
-    var delFiles = {
-      val delDir = rootP.resolve(s"delete_v${v}_$token")
+    val delFiles = writeStaged(
       matching.select(col(FileCol).as("file_path"), col(PosCol).as("pos"))
-        .distinct()
-        .write.mode("overwrite").parquet(delDir.toString)
-      listParquet(delDir)
-    }
+        .distinct(), st.dir("delete"))
     // ONE select, not chained withColumn: SQL UPDATE evaluates every
     // SET right-hand side against the OLD row, so interdependent
     // assignments (SET a = b, b = a swaps) must not see each other's
@@ -2425,89 +2160,35 @@ object Snapshots {
         // the tombstones are already staged — a bad SET column must
         // not strand them until an age-guarded orphan sweep ("a
         // refused batch changes NOTHING" covers error paths, r16)
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
+        st.drop()
         throw new IllegalArgumentException(s"SET names unknown column '$c'")
       }
     }
     val updated = preimage.select(preimage.columns.toIndexedSeq.map(c =>
       set.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-    val newFiles = writeDataFiles(updated, rootP, v, token)
-    var dataLines = entryLines(updated, newFiles)
+    val newFiles = writeStaged(updated, st.dir("data"))
+    val dataLines = entryLines(updated, newFiles)
     if (checks.nonEmpty)
       // survivors = the head's rows the predicate does not match (a
       // NULL predicate row is unmatched and SURVIVES — coalesce keeps
       // it in the survivor leg; see updateChecked)
-      validateStagedOrAbort(spark,
-        Seq(rootP.resolve(s"data_v${v}_$token"),
-          rootP.resolve(s"delete_v${v}_$token")),
-        newFiles, checks,
+      validateStagedOrAbort(spark, st, newFiles, checks,
         survivors = Some(read(spark, root, base0)
           .filter(!org.apache.spark.sql.functions.coalesce(where,
             org.apache.spark.sql.functions.lit(false)))),
         op = "updateChecked")
-    def reallocate(): Unit = {
-      val newV = reallocateStaged(rootP, root, v, token,
-        Seq("data", "delete"))
-      dataLines = dataLines.map(
-        _.replace(s"data_v${v}_$token", s"data_v${newV}_$token"))
-      delFiles = delFiles.map(
-        _.replace(s"delete_v${v}_$token", s"delete_v${newV}_$token"))
-      v = newV
-    }
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (v <= parent) { reallocate() } // stale pre-write allocation
-      else {
-      // same post-image-scoped (Unique/InboundRef) validation-basis
-      // rule as the checked merge (rewrites are handled by the
-      // dangling-tombstone abort below). Appends invalidate a Unique
-      // basis (they can add a colliding key) but never an InboundRef
-      // one (only ever add keys — monotone), so an InboundRef-only
-      // check set keeps liveness under concurrent appends (r16)
-      if ({
-            val hasU = checks.exists(
-              _.isInstanceOf[graft.operators.QualityChecks.Unique])
-            val hasI = checks.exists(
-              _.isInstanceOf[graft.operators.QualityChecks.InboundRef])
-            (hasU || hasI) && parent != base0 &&
-              basisWindowInvalidated(root, base0, parent) { p =>
-                !p.get("rewrite").contains("true") &&
-                  (hasU || !p.get("op").contains("append"))
-              }
-          }) {
-        deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
+    commitLoop(st, branch) { (v, parent) =>
+      if (basisInvalidated(root, checks, base0, parent))
         throw new java.util.ConcurrentModificationException(
           s"checked update aborted: a concurrent commit in ($base0, " +
-            s"$parent] invalidated its Unique-validation basis — " +
+            s"$parent] invalidated its post-image validation basis — " +
             "re-read and re-run")
-      }
-      val rewrote = lineageBetween(root, base0, parent).find(w =>
-        propsOf(root, w).get("rewrite").contains("true"))
-      if (rewrote.isDefined) {
-        deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
-        throw new java.util.ConcurrentModificationException(
-          s"row update aborted: commit ${rewrote.get} rewrote the data " +
-            "files these tombstones name — re-read and re-run")
-      }
-      try {
-        if (publish(rootP, root, branch, v, seq, parent,
-            widenedSchema(updated, root, parent),
-            bodyRefs(root, parent) ++
-              delFiles.map(f => s"#posdelete\t$f\t$v") ++
-              dataLines,
-            props = Map("op" -> "update")))
-          committed = v
-        else reallocate()
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
-      }
+      abortIfRewritten(root, base0, parent, "row update")
+      () => Attempt(widenedSchema(updated, root, parent),
+        carriedRefs(root, parent) ++
+          delFiles.map(f => s"#posdelete\t$f\t$v") ++ dataLines,
+        Map("op" -> "update"))
     }
-    committed
   }
 
   /** MERGE (upsert, merge-on-read): ONE atomic commit that both
@@ -2572,10 +2253,6 @@ object Snapshots {
             source: DataFrame, branch: String,
             checks: Seq[graft.operators.QualityChecks.Check]): Int = {
     import org.apache.spark.sql.functions.{col, count, lit}
-    val rootP = Paths.get(root)
-    require(headOf(root, branch) > 0, s"nothing to merge into under $root")
-    require(source.columns.contains(column),
-      s"merge key column '$column' is not in the source")
     // the snapshot this merge's row values were DERIVED against — the
     // base the serializability check validates (any commit landing
     // after this point was never read by this merge). Captured at
@@ -2583,109 +2260,56 @@ object Snapshots {
     // dup-check or the data write is validated too, not only one
     // racing the manifest CAS.
     val base0 = headOf(root, branch)
+    require(base0 > 0, s"nothing to merge into under $root")
+    require(source.columns.contains(column),
+      s"merge key column '$column' is not in the source")
     val dup = source.groupBy(col(column)).agg(count(lit(1)).as("n"))
       .filter(col("n") > 1).limit(1).collect()
     require(dup.isEmpty,
       s"merge source has duplicate '$column' keys (e.g. ${dup.headOption})")
-    val token = newToken()
-    var v = latestVersion(root) + 1
-    val newFiles = writeDataFiles(source, rootP, v, token)
-    var dataLines = entryLines(source, newFiles)
-    var delFiles = {
-      val delDir = rootP.resolve(s"delete_v${v}_$token")
-      source.select(col(column)).write.mode("overwrite")
-        .parquet(delDir.toString)
-      listParquet(delDir)
-    }
+    val st = new Staged(root, Seq("data", "delete"))
+    val newFiles = writeStaged(source, st.dir("data"))
+    val dataLines = entryLines(source, newFiles)
+    val delFiles = writeStaged(source.select(col(column)), st.dir("delete"))
     // the merge's own key set, read back from the already-written
     // delete files (deterministic — never recomputes `source`)
-    def ownKeys = spark.read.parquet(delFiles: _*).select(col(column))
+    def ownKeys =
+      spark.read.parquet(delFiles.map(st.moved): _*).select(col(column))
     if (checks.nonEmpty)
       // survivors = the head's live rows minus the replaced keys: the
       // post-image complement of this staged batch (see mergeChecked)
-      validateStagedOrAbort(spark,
-        Seq(rootP.resolve(s"data_v${v}_$token"),
-          rootP.resolve(s"delete_v${v}_$token")),
-        newFiles, checks,
+      validateStagedOrAbort(spark, st, newFiles, checks,
         survivors = Some(read(spark, root, base0)
           .join(ownKeys, Seq(column), "left_anti")),
         op = "mergeChecked")
-    def reallocate(): Unit = {
-      val newV = reallocateStaged(rootP, root, v, token,
-        Seq("data", "delete"))
-      dataLines = dataLines.map(
-        _.replace(s"data_v${v}_$token", s"data_v${newV}_$token"))
-      delFiles = delFiles.map(
-        _.replace(s"delete_v${v}_$token", s"delete_v${newV}_$token"))
-      v = newV
-    }
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (v <= parent) { reallocate() } // stale pre-write allocation
-      else {
+    commitLoop(st, branch) { (v, parent) =>
       // a checked merge's cross-batch Unique validation (and any
       // InboundRef post-image leg, r16) ran against base0's
-      // survivors; a later NON-REWRITE commit could add a colliding
-      // row — or delete a referenced key — on a basis the merge-key
-      // serializability check
-      // does not cover — abort rather than publish an unvalidated
-      // post-image (r15; same re-read-and-re-run contract as a key
-      // conflict). Scoped precisely (second review pass): row-local
-      // checks are basis-free (they validate the written bytes
-      // alone), and a rewrite carries the same rows — neither can
-      // invalidate anything, so neither costs liveness here. Appends
-      // invalidate a Unique basis (can add a colliding key) but never
-      // an InboundRef one (only ever add keys — monotone), so an
-      // InboundRef-only check set keeps liveness under concurrent
-      // appends (r16)
-      if ({
-            val hasU = checks.exists(
-              _.isInstanceOf[graft.operators.QualityChecks.Unique])
-            val hasI = checks.exists(
-              _.isInstanceOf[graft.operators.QualityChecks.InboundRef])
-            (hasU || hasI) && parent != base0 &&
-              basisWindowInvalidated(root, base0, parent) { p =>
-                !p.get("rewrite").contains("true") &&
-                  (hasU || !p.get("op").contains("append"))
-              }
-          }) {
-        deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
+      // survivors; a later commit could add a colliding row — or
+      // delete a referenced key — on a basis the merge-key
+      // serializability check does not cover — abort rather than
+      // publish an unvalidated post-image (r15; same re-read-and-
+      // re-run contract as a key conflict)
+      if (basisInvalidated(root, checks, base0, parent))
         throw new java.util.ConcurrentModificationException(
           s"checked merge aborted: a concurrent commit in ($base0, " +
-            s"$parent] invalidated its Unique-validation basis — " +
+            s"$parent] invalidated its post-image validation basis — " +
             "re-read and re-run")
-      }
       // revalidate EVERY attempt's full unseen window — the branch
       // chain (base0, parent] — not only CAS losers': a commit landing
       // between entry and the first CAS succeeds at CAS yet was still
       // never read
       if (parent != base0 &&
-          keysTouchedBetween(spark, root, base0, parent, column, ownKeys)) {
-        deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
+          keysTouchedBetween(spark, root, base0, parent, column, ownKeys))
         throw new java.util.ConcurrentModificationException(
           s"serializable merge on '$column' aborted: a concurrent " +
             s"commit in ($base0, $parent] touched one of this merge's " +
             "keys — re-read the table and re-run the merge")
-      }
-      try {
-        if (publish(rootP, root, branch, v, seq, parent,
-            widenedSchema(source, root, parent),
-            bodyRefs(root, parent) ++
-              delFiles.map(f => s"#delete\t$f\t$column\t$v") ++
-              dataLines,
-            props = Map("op" -> "merge")))
-          committed = v
-        else reallocate()
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
-      }
+      () => Attempt(widenedSchema(source, root, parent),
+        carriedRefs(root, parent) ++
+          delFiles.map(f => s"#delete\t$f\t$column\t$v") ++ dataLines,
+        Map("op" -> "merge"))
     }
-    committed
   }
 
   /** True iff any commit in `(baseV, uptoV]` (rewrite commits excepted
@@ -3222,22 +2846,6 @@ object Snapshots {
     * of `to` (diverged refs have no linear window). Public because the
     * streaming ref tail replays exactly this window per ref advance.
     */
-  /** The checked-DML basis question — "did a commit land in
-    * (from, to] of a kind that can invalidate my validation?" —
-    * fail-SAFE under concurrent ref surgery (r16 review finding): a
-    * concurrent rollback makes `from` a non-ancestor of `to`, and
-    * [[lineageBetween]] would throw its divergence
-    * IllegalArgumentException from INSIDE the abort-condition
-    * expression — skipping the staged-dir cleanup and masking the
-    * documented ConcurrentModificationException contract. A window
-    * the walker cannot even resolve is by definition invalidated.
-    */
-  private def basisWindowInvalidated(root: String, from: Int, to: Int)(
-      invalidates: Map[String, String] => Boolean): Boolean =
-    try lineageBetween(root, from, to)
-      .exists(w => invalidates(propsOf(root, w)))
-    catch { case _: IllegalArgumentException => true }
-
   def lineageBetween(root: String, from: Int, to: Int): Seq[Int] = {
     var v = to
     var acc = List.empty[Int]
@@ -3364,50 +2972,26 @@ object Snapshots {
         dataVersionOf(l.split('\t').head) == v
     }
     require(own.nonEmpty, s"v$v added no data files; nothing to pick")
-    val token = newToken()
-    var w = latestVersion(root) + 1
+    val st = new Staged(root, Seq("data"))
     val rootAbs = rootP.toAbsolutePath
-    def relink(into: Int): Seq[String] = {
-      val dst = rootP.resolve(s"data_v${into}_$token")
-      own.map { line =>
-        val parts = line.split('\t')
-        val f = Paths.get(parts.head).toAbsolutePath
-        val rel = rootAbs.relativize(f)
-        // drop the source data dir's top segment, keep any partition
-        // subdirs beneath it
-        val sub = rel.subpath(1, rel.getNameCount)
-        val out = dst.resolve(sub.toString)
-        Files.createDirectories(out.getParent)
-        if (!Files.exists(out)) Files.createLink(out, f)
-        (out.toAbsolutePath.toString +: parts.tail.toSeq).mkString("\t")
-      }
+    val lines = own.map { line =>
+      val parts = line.split('\t')
+      val f = Paths.get(parts.head).toAbsolutePath
+      val rel = rootAbs.relativize(f)
+      // drop the source data dir's top segment, keep any partition
+      // subdirs beneath it
+      val sub = rel.subpath(1, rel.getNameCount)
+      val out = st.dir("data").resolve(sub.toString)
+      Files.createDirectories(out.getParent)
+      if (!Files.exists(out)) Files.createLink(out, f)
+      (out.toAbsolutePath.toString +: parts.tail.toSeq).mkString("\t")
     }
-    var lines = relink(w)
-    def reallocate(): Unit = {
-      val newW = reallocateStaged(rootP, root, w, token, Seq("data"))
-      lines = lines.map(
-        _.replace(s"data_v${w}_$token", s"data_v${newW}_$token"))
-      w = newW
+    val srcSchema = schemaAt(spark, root, v)
+    commitLoop(st, target) { (_, parent) =>
+      () => Attempt(promotedSchema(srcSchema, root, parent),
+        carriedRefs(root, parent) ++ lines,
+        Map("op" -> "append", "pickedFrom" -> v.toString))
     }
-    val srcSchema = schemaOf(root, v)
-      .getOrElse(rawScan(spark, root, v, files(root, v)).schema)
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, target, w)
-      if (w <= parent) { reallocate() } else
-      try {
-        if (publish(rootP, root, target, w, seq, parent,
-            promotedSchema(srcSchema, root, parent),
-            (if (parent == 0) Nil else bodyRefs(root, parent)) ++ lines,
-            props = Map("op" -> "append", "pickedFrom" -> v.toString)))
-          committed = w
-        else reallocate()
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
-    }
-    committed
   }
 
   /** ROLLBACK (Iceberg `rollback_to_snapshot`): move a ref's head
@@ -3467,6 +3051,151 @@ object Snapshots {
     (bs ++ ts).toDF("name", "type", "version")
   }
 
+  // ---- THE COMMIT PROTOCOL: one optimistic loop for every write path
+
+  /** Test seam (SnapshotsSpec, SnapshotDmlPropertySpec): runs once in
+    * [[commitLoop]], after a write path staged (and, when checked,
+    * validated) its files and before its first commit attempt, so every
+    * path's rebase, revalidate and abort branches are deterministically
+    * exercisable. A no-op in production; a commit the seam itself makes
+    * does not re-enter it. CONTRACT: single-threaded tests only — this
+    * is module-global state on a production object, so a test that sets
+    * it must restore it in a finally, and writes must not run
+    * concurrently with a test holding it. @volatile so a restore is at
+    * least visible across the suite's threads; the seam is deliberately
+    * not per-call plumbing (production call sites carry no test
+    * parameter).
+    */
+  @volatile private[sources] var afterCheckedValidation: () => Unit = () => ()
+
+  /** A commit's staged dirs, `<kind>_v<v>_<token>` under the table root,
+    * allocated at the next global version number and moved by
+    * [[commitLoop]] to every reallocated one, so [[dataVersionOf]]
+    * sequence scoping stays truthful. Paths write under [[dir]] and
+    * may name their staged files by the first-allocation paths; the
+    * loop [[moved]]s manifest lines to the attempt's number.
+    */
+  private final class Staged(val root: String, val kinds: Seq[String]) {
+    val rootP: Path = Paths.get(root)
+    Files.createDirectories(rootP.resolve("_manifests"))
+    val token: String = newToken()
+    private val v0 = latestVersion(root) + 1
+    var v: Int = v0
+    def dir(kind: String): Path = rootP.resolve(s"${kind}_v${v}_$token")
+    def moved(line: String): String = kinds.foldLeft(line)((l, k) =>
+      l.replace(s"${k}_v${v0}_$token", s"${k}_v${v}_$token"))
+    def drop(): Unit = kinds.foreach(k => deleteTreeQuietly(dir(k)))
+  }
+
+  /** What one commit attempt publishes: the committed schema, the whole
+    * manifest body (carried refs plus the commit's own lines) and the
+    * commit props.
+    */
+  private final case class Attempt(schema: org.apache.spark.sql.types.StructType,
+                                   lines: Seq[String], props: Map[String, String])
+
+  /** THE optimistic commit loop: every write path commits through it
+    * (Iceberg's `SnapshotProducer.commit` and Delta's
+    * `OptimisticTransaction` each keep exactly one retry loop). Per
+    * attempt at version v:
+    *   1. resolve the branch basis ([[commitBasis]]); v at or below the
+    *      parent is a stale pre-write allocation (another branch
+    *      advanced) and reallocates — publishing it would invert the
+    *      sequence order that delete scoping and lineage rely on;
+    *   2. `attempt(v, parent)` runs the path's CHECK, which aborts by
+    *      throwing — the staged dirs are deleted first, so a refused
+    *      commit changes NOTHING — or revalidates, and returns what to
+    *      publish;
+    *   3. [[publish]]; a lost head CAS or a version number another
+    *      writer claimed reallocates ([[reallocateStaged]]) and retries.
+    * Staged dirs are deleted ONLY when the check throws, never when
+    * commitBasis or publish throws: a linked manifest may already name
+    * them. Returns the committed version.
+    *
+    * The per-path checks:
+    *   - append, appendPartitioned, cherryPick: none (the rows are new);
+    *   - appendChecked: an InboundRef basis move aborts
+    *     ([[basisInvalidated]], CME); Unique legs revalidate against
+    *     the new head (ISE on a collision);
+    *   - deleteWhere: the key column missing from the parent's schema
+    *     (IAE); deleteChecked: an InboundRef basis move (CME) first;
+    *   - deleteWhereMatching: a rewrite in the window
+    *     ([[abortIfRewritten]], CME); updateWhere: the same;
+    *     updateChecked: a basis move (CME) first;
+    *   - merge: a concurrent commit touching its keys
+    *     ([[keysTouchedBetween]], CME); mergeChecked: a basis move
+    *     (CME) first;
+    *   - compact, compactManifests: any head move (ISE).
+    */
+  private def commitLoop(st: Staged, branch: String)(
+      attempt: (Int, Int) => () => Attempt): Int = {
+    // the test seam, once per commit; a commit it makes runs without it
+    val seam = afterCheckedValidation
+    afterCheckedValidation = () => ()
+    try seam() finally afterCheckedValidation = seam
+    var committed = -1
+    while (committed < 0) {
+      val (parent, seq) = commitBasis(st.root, branch, st.v)
+      if (st.v > parent) {
+        val publishable =
+          try attempt(st.v, parent)
+          catch { case scala.util.control.NonFatal(e) => st.drop(); throw e }
+        val a = publishable()
+        try {
+          if (publish(st.rootP, branch, st.v, seq, parent, a.schema,
+              a.lines.map(st.moved), a.props)) committed = st.v
+        } catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      }
+      if (committed < 0)
+        st.v = reallocateStaged(st.rootP, st.root, st.v, st.token, st.kinds)
+    }
+    committed
+  }
+
+  /** The checked-DML basis rule, one predicate for every checked write:
+    * did a commit in `(basis, parent]` invalidate a validation that ran
+    * against `basis`'s post-image? Only post-image-scoped checks have a
+    * basis (row-local checks validate the written bytes alone) and a
+    * rewrite carries the same rows, so neither costs liveness. A Unique
+    * basis falls to any other commit, since an append can add a
+    * colliding key; an InboundRef basis only to one that can REMOVE a
+    * key (delete/merge/update): appends only add keys, InboundRef is
+    * monotone in the table's key set, and cherry-picks strip delete
+    * lines, so op=append is purely additive everywhere (r16).
+    *
+    * Fail-SAFE under concurrent ref surgery (r16 review finding): a
+    * concurrent rollback makes `basis` a non-ancestor of `parent`, and
+    * [[lineageBetween]]'s divergence IllegalArgumentException must not
+    * mask the documented ConcurrentModificationException — a window the
+    * walker cannot even resolve is by definition invalidated.
+    */
+  private def basisInvalidated(root: String,
+      checks: Seq[graft.operators.QualityChecks.Check],
+      basis: Int, parent: Int): Boolean = {
+    val hasU = checks.exists(_.isInstanceOf[graft.operators.QualityChecks.Unique])
+    val hasI = checks.exists(_.isInstanceOf[graft.operators.QualityChecks.InboundRef])
+    (hasU || hasI) && parent != basis &&
+      (try lineageBetween(root, basis, parent).exists { w =>
+        val p = propsOf(root, w)
+        !p.get("rewrite").contains("true") &&
+          (hasU || !p.get("op").contains("append"))
+      } catch { case _: IllegalArgumentException => true })
+  }
+
+  /** Position tombstones name PHYSICAL files, so a rewrite anywhere in
+    * the unseen window — the branch chain `(base, parent]` — moves
+    * their rows to new paths: the tombstones would dangle and the rows
+    * resurrect. Abort rather than corrupt (the Iceberg
+    * validateNoConflicting* rule for position deletes).
+    */
+  private def abortIfRewritten(root: String, base: Int, parent: Int,
+                               what: String): Unit =
+    lineageBetween(root, base, parent)
+      .find(w => propsOf(root, w).get("rewrite").contains("true"))
+      .foreach { w => throw new java.util.ConcurrentModificationException(
+        s"$what aborted: commit $w rewrote the data files these " +
+          "tombstones name — re-read and re-run") }
+
   /** Resolve the basis of a commit on `branch`: (parent version, head
     * seq for the ref CAS). Legacy tables commit against the numeric
     * predecessor with no ref step (seq −1).
@@ -3483,23 +3212,12 @@ object Snapshots {
       (head, seq)
     }
 
-  /** Manifest link + (branched) ref CAS — the two-step publish of one
-    * commit attempt. Returns true when the commit is durable on the
-    * branch; false when the head CAS lost (own manifest unlinked —
-    * caller re-resolves the head and retries). Propagates
-    * [[java.nio.file.FileAlreadyExistsException]] when the VERSION
-    * NUMBER was claimed by someone else (caller reallocates).
-    */
   /** Pick the next attempt's version number and move the staged
     * `<kind>_v<v>_<token>` dirs under it — the ONE spelling of the
-    * rebase/reallocation step every committer retries through. The
+    * rebase/reallocation step [[commitLoop]] retries through. The
     * result exceeds BOTH the current global allocator state and the
-    * caller's previous attempt, so a version number never regresses
-    * across retries; callers must ALSO re-check `v > parent` each
-    * iteration (see the loop guards): a writer whose allocation went
-    * stale while another branch advanced could otherwise publish a
-    * commit numbered below its parent, inverting the sequence-number
-    * order that delete scoping and lineage both rely on.
+    * previous attempt, so a version number never regresses across
+    * retries.
     */
   private def reallocateStaged(rootP: Path, root: String, v: Int,
                                token: String, kinds: Seq[String]): Int = {
@@ -3512,7 +3230,14 @@ object Snapshots {
     newV
   }
 
-  private def publish(rootP: Path, root: String, branch: String, v: Int,
+  /** Manifest link + (branched) ref CAS — the two-step publish of one
+    * commit attempt. Returns true when the commit is durable on the
+    * branch; false when the head CAS lost (own manifest unlinked —
+    * caller re-resolves the head and retries). Propagates
+    * [[java.nio.file.FileAlreadyExistsException]] when the VERSION
+    * NUMBER was claimed by someone else (caller reallocates).
+    */
+  private def publish(rootP: Path, branch: String, v: Int,
                       seq: Int, parent: Int,
                       schema: org.apache.spark.sql.types.StructType,
                       lines: Seq[String],

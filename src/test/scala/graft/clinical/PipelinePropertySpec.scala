@@ -137,8 +137,7 @@ class PipelinePropertySpec extends AnyFunSuite with SparkTestSession {
   }
 
   /** Full rows, schema included: the pass against the window form.
-    * Column metadata is compared by presence — each `Pipeline.joined`
-    * mints a fresh graft.plans.Fd token.
+    * Column metadata is compared by presence.
     */
   private def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
     def shape(df: DataFrame) =

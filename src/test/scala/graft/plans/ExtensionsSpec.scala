@@ -2,18 +2,17 @@ package graft.plans
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.functions.lit
 import graft.SparkTestSession
-import graft.clinical.Sources
 
 /** The documented registration path — `SparkSession.builder()
-  * .withExtensions(new GraftExtensions)` — must inject the pushdown
-  * rule into a session's optimizer.
+  * .withExtensions(new GraftExtensions)` — must inject the graft SQL
+  * functions into a new session, resolving to the same kernels the
+  * DataFrame battery calls.
   */
 class ExtensionsSpec extends AnyFunSuite with SparkTestSession {
 
-  test("GraftExtensions injects the pushdown rule into a new session") {
+  test("GraftExtensions injects the graft SQL functions into a new session") {
     spark // force the shared session first
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -23,28 +22,14 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestSession {
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       assert(extended ne spark)
-      // the clinical declaration in miniature: the users table's Gender
-      // declared constant per UID, a UID-partitioned window, then a
-      // Gender filter (the clinical pipeline itself no longer has a
-      // window to push through)
-      val users = Sources.usersCsv(extended, "fixtures/clinical")
-      val plan = Fd.declareConstantPer(users, "UID", Seq("Gender"))
-        .withColumn("cnt", count(lit(1)).over(Window.partitionBy(col("UID"))))
-        .filter(col("Gender") === "Male")
-        .queryExecution.optimizedPlan
-      // with the rule active, a Window node must have a Filter on Gender below it
-      var pushedBelowWindow = false
-      plan.foreach {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window =>
-          w.child.foreach {
-            case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-                if f.condition.references.exists(_.name == "Gender") =>
-              pushedBelowWindow = true
-            case _ =>
-          }
-        case _ =>
+      GraftFunctions.registrations.foreach { case (name, _, _) =>
+        assert(extended.catalog.functionExists(name), s"$name not injected")
       }
-      assert(pushedBelowWindow, s"no Gender filter below any Window:\n$plan")
+      val sql = extended.sql("SELECT graft_md5_low60('abc') AS h").head().getLong(0)
+      val kernel = extended.range(1)
+        .select(graft.functions.Md5Functions.md5_low60(lit("abc")))
+        .head().getLong(0)
+      assert(sql == kernel)
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.setDefaultSession(spark)

@@ -241,6 +241,133 @@ class SnapshotDmlPropertySpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("every write path, raced through the commit loop by an append, a dependent delete and a compact") {
+    import graft.operators.QualityChecks.{InboundRef, Unique}
+    type Rows = Vector[(Long, Long)]
+    val S = Snapshots
+    def df(rows: (Long, Long)*) = rows.toDF("id", "v")
+    val base: Rows = (0L to 5L).map(k => k -> k).toVector
+    val refs1 = Seq(InboundRef("ri_1", Seq(1L).toDF("rid"), col("rid"), col("id")))
+    val unique = Seq(Unique("unique_id", col("id")))
+
+    // the racer commits inside the writer's loop, after it staged;
+    // `dep` is the key the writer depends on (its referenced key, or
+    // the key it merges, updates or deletes)
+    case class Racer(name: String, run: (String, Long) => Int,
+                     effect: (Rows, Long) => Rows)
+    val racers = Seq(
+      Racer("disjoint append", (r, _) => S.append(df(50L -> 50L), r),
+        (m, _) => m :+ (50L -> 50L)),
+      Racer("dependent delete",
+        (r, k) => S.deleteWhere(spark, r, "id", Seq(k).toDF("id")),
+        (m, k) => m.filterNot(_._1 == k)),
+      Racer("compact", (r, _) => S.compact(spark, r, targetFiles = 1),
+        (m, _) => m))
+
+    // a writer: its dependency key, its effect given the rows it read
+    // and the rows after the racer, its setup (run before the race,
+    // returning the raced call) and its documented outcome per racer —
+    // Some(exception class) aborts, None commits
+    val cme = Some(classOf[java.util.ConcurrentModificationException])
+    val ise = Some(classOf[IllegalStateException])
+    case class Writer(name: String, dep: Long, effect: (Rows, Rows) => Rows,
+                      setup: String => () => Int,
+                      outcomes: Seq[Option[Class[_ <: Throwable]]])
+    val bump: Rows => Rows = _.filter(_._1 == 2L).map { case (k, v) => (k, v + 100) }
+    val writers = Seq(
+      Writer("append", 1L, (_, m) => m :+ (10L -> 10L),
+        r => () => S.append(df(10L -> 10L), r), Seq(None, None, None)),
+      Writer("appendChecked Unique", 1L, (_, m) => m :+ (10L -> 10L),
+        r => () => S.appendChecked(df(10L -> 10L), r, unique), Seq(None, None, None)),
+      Writer("appendChecked InboundRef", 1L, (_, m) => m :+ (10L -> 10L),
+        r => () => S.appendChecked(df(10L -> 10L), r, refs1), Seq(None, cme, None)),
+      Writer("deleteWhere", 3L, (_, m) => m.filterNot(_._1 == 3L),
+        r => () => S.deleteWhere(spark, r, "id", Seq(3L).toDF("id")),
+        Seq(None, None, None)),
+      Writer("deleteChecked", 1L, (_, m) => m.filterNot(_._1 == 3L),
+        r => () => S.deleteChecked(spark, r, "id", Seq(3L).toDF("id"), refs1),
+        Seq(None, cme, None)),
+      Writer("deleteWhereMatching", 3L, (_, m) => m.filterNot(_._1 == 3L),
+        r => () => S.deleteWhereMatching(spark, r, col("id") === 3L),
+        Seq(None, None, cme)),
+      // an unchecked update rebases onto a non-rewrite winner: its
+      // tombstones name the rows it read, and its images of them are
+      // appended even when the winner deleted the key
+      Writer("updateWhere", 2L, (b, m) => m.filterNot(_._1 == 2L) ++ bump(b),
+        r => () => S.updateWhere(spark, r, col("id") === 2L,
+          Map("v" -> (col("v") + 100L))), Seq(None, None, cme)),
+      Writer("updateChecked", 2L, (b, m) => m.filterNot(_._1 == 2L) ++ bump(b),
+        r => () => S.updateChecked(spark, r, col("id") === 2L,
+          Map("v" -> (col("v") + 100L)), unique), Seq(cme, cme, cme)),
+      Writer("merge", 2L, (_, m) => m.filterNot(_._1 == 2L) :+ (2L -> 77L),
+        r => () => S.merge(spark, r, "id", df(2L -> 77L)), Seq(None, cme, None)),
+      Writer("mergeChecked", 1L, (_, m) => m.filterNot(_._1 == 2L) :+ (2L -> 77L),
+        r => () => S.mergeChecked(spark, r, "id", df(2L -> 77L), refs1),
+        Seq(None, cme, None)),
+      Writer("compact", 1L, (_, m) => m,
+        r => () => S.compact(spark, r, targetFiles = 2), Seq(ise, ise, ise)),
+      Writer("compactManifests", 1L, (_, m) => m,
+        r => () => S.compactManifests(r), Seq(ise, ise, ise)),
+      Writer("cherryPick", 1L, (_, m) => m :+ (30L -> 30L), { r =>
+        S.createBranch(r, "dev")
+        val picked = S.appendTo(df(30L -> 30L), r, "dev")
+        () => S.cherryPick(spark, r, "main", picked)
+      }, Seq(None, None, None)))
+
+    val failures = for {
+      (w, wi) <- writers.zipWithIndex
+      (racer, expected) <- racers.zip(w.outcomes)
+    } yield {
+      val root = Staging.tempDir(s"race_$wi").toString
+      S.append(df(base: _*).repartition(2), root)
+      val call = w.setup(root)
+      val before = S.latestVersion(root)
+      val result =
+        try {
+          S.afterCheckedValidation = () => { racer.run(root, w.dep); () }
+          try Right(call()) catch { case e: Exception => Left(e) }
+        } finally S.afterCheckedValidation = () => ()
+      val raced = racer.effect(base, w.dep)
+      val want = (if (expected.isEmpty) w.effect(base, raced) else raced).sorted
+      val got = S.read(spark, root).as[(Long, Long)].collect().toVector.sorted
+      val minted = S.latestVersion(root) - before
+      val problems = Seq(
+        (result, expected) match {
+          case (Right(v), None) if v == S.latestVersion(root) && minted == 2 => ""
+          case (Left(e), Some(c)) if c.isInstance(e) && minted == 1 => ""
+          case _ => s"outcome $result, ${minted} versions minted"
+        },
+        if (got == want) "" else s"rows $got, want $want",
+        {
+          val stray = unreferencedStagedDirs(root)
+          if (stray.isEmpty) "" else s"staged dirs left: $stray"
+        }).filter(_.nonEmpty)
+      if (problems.isEmpty) None
+      else Some(s"${w.name} raced by ${racer.name}: ${problems.mkString("; ")}")
+    }
+    assert(failures.flatten.isEmpty, failures.flatten.mkString("\n", "\n", ""))
+  }
+
+  /** `data_v*`/`delete_v*` dirs under `root` that no live manifest
+    * references — debris a refused or failed commit must not leave.
+    */
+  private def unreferencedStagedDirs(root: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val S = Snapshots
+    val rootP = java.nio.file.Paths.get(root).toAbsolutePath
+    val referenced = (1 to S.latestVersion(root))
+      .filter(v => java.nio.file.Files.exists(manifestsDir(root).resolve(s"$v.txt")))
+      .flatMap(v => S.files(root, v) ++ S.deleteSets(root, v).flatMap(_._2) ++
+        S.posDeleteSets(root, v).flatMap(_._2))
+      .map(f => rootP.relativize(java.nio.file.Paths.get(f).toAbsolutePath)
+        .getName(0).toString)
+      .toSet
+    val s = java.nio.file.Files.list(rootP)
+    val onDisk = try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.matches("(data|delete)_v\\d+_.*")).toSet finally s.close()
+    onDisk -- referenced
+  }
+
   private def manifestsDir(root: String) =
     java.nio.file.Paths.get(root).resolve("_manifests")
 

@@ -1,38 +1,58 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import graft.functions.TextFunctions
-import graft.sources.{Sinks, Staging, Tables}
+import graft.sources.{Sinks, Tables}
+import graft.sources.ArtifactStore.{staged, stagedDir}
 
-/** The write path under the driver's hash gate. Every other gate entry
-  * reads driver-generated parquet; this one exercises the engine's OWN
-  * output: project the documents table, write it hive-partitioned by
-  * `source` through [[Sinks.parquet]], re-read the written tree with a
-  * partition filter (pruned to one directory — SinksSpec asserts the
-  * PartitionFilters plan shape), and aggregate. The oracle computes the
-  * same aggregate straight from the source table, so a corrupted write
-  * (lost rows, mangled values, broken partition layout) breaks the
-  * hash match.
+/** The write paths and the lakehouse under the oracle hash gate.
+  * Every other gate entry reads the generated input parquet; these
+  * read back what the engine itself WROTE:
+  *   - format sinks and layouts: partitioned parquet (q81), bucketed
+  *     tables (q99), JSONL/CSV/ORC text fidelity (q109/q110/q151) and
+  *     mergeSchema evolution (q111);
+  *   - the [[graft.sources.Snapshots]] store: time travel, compaction,
+  *     expiration, stats/bloom/partition/manifest pruning, schema and
+  *     partition-spec evolution, every DML verb with its checked and
+  *     concurrent forms, CDC, metadata tables, branches, tags and
+  *     retention (q126–q224).
+  * Each gate stages its store once per (session, input dir) through
+  * [[graft.sources.ArtifactStore.staged]] and reads it on every call;
+  * DuckDB recomputes the same answer from the source tables, and the
+  * engine's own invariants (file, segment and version counts,
+  * refusals) are stated literally in the oracle.
   */
 object SinkQ {
 
-  // one staged output tree per (JVM, source dir): repeated invocations
-  // (bench warm + timed) re-use the written tree instead of leaking a
-  // fresh full-table copy into tmp each call; trees are reaped by
-  // Staging's shutdown hooks
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The content aggregate the snapshot gates report: a row count
+    * named `n`, the n_chars sum and, with `range`, the doc_id extremes
+    * — grouped by `by`, or one global row.
+    */
+  private def content(n: String = "n_docs", range: Boolean = true,
+      by: Seq[Column] = Nil)(df: DataFrame): DataFrame = {
+    val cols = Seq(count(lit(1)).as(n), sum(col("n_chars")).as("sum_chars")) ++
+      (if (range) Seq(min(col("doc_id")).as("min_id"),
+        max(col("doc_id")).as("max_id")) else Nil)
+    df.groupBy(by: _*).agg(cols.head, cols.tail: _*)
+  }
 
+  /** q81 — project the documents table, write it hive-partitioned by
+    * `source` through [[Sinks.parquet]], re-read the written tree with
+    * a partition filter (pruned to one directory — SinksSpec asserts
+    * the PartitionFilters plan shape), and aggregate. The oracle
+    * computes the same aggregate straight from the source table, so a
+    * corrupted write (lost rows, mangled values, broken partition
+    * layout) breaks the hash match.
+    */
   def writeRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = staged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_sink_gate")
-      val docs = Tables.documents(spark, d)
+    val out = stagedDir(spark, dir, "sink_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("lang"),
           TextFunctions.tokenCount(col("text")).as("n_tokens"))
-      Sinks.parquet(docs, o.toString, partitionBy = Seq("source"))
-      o.toString
-    })
+      Sinks.parquet(docs, o, partitionBy = Seq("source"))
+    }
     spark.read.parquet(out)
       .filter(col("source") === "src1")
       .groupBy(col("lang"))
@@ -45,25 +65,21 @@ object SinkQ {
     * the same bucket layout at WRITE time, so every later equi-join on
     * the bucket key runs with zero shuffle exchanges — the primitive
     * that amortizes one shuffle across every downstream join of a
-    * 100 TB fact table. Staged once per (JVM, source dir) as external
+    * 100 TB fact table. Staged once per (session, source dir) as external
     * bucketed tables in a temp warehouse path; the gate joins them and
     * aggregates, so a broken bucket layout (rows routed to the wrong
     * bucket drop out of the zero-exchange join) breaks the hash match.
     * PlanContractSpec asserts the no-Exchange plan shape; the oracle
     * computes the same aggregate from a plain join.
     */
-  // keyed (session, dir) like every artifact memo — the catalog
-  // registration is session-local, so a dir-only key would hand a
-  // second session a dangling table reference; the collision-free
-  // counter (not dir.hashCode) names the tables
+  // the catalog registration is session-local, which the (session,
+  // dir) memo key matches; the collision-free counter (not
+  // dir.hashCode) names the tables
   private val bucketSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val bucketed =
-    new graft.sources.SessionMemo[(SparkSession, String), String](_._1)
 
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val suffix = bucketed.get((spark, dir)) {
+    val suffix = staged(spark, dir, "bucket_gate") { o =>
       val sfx = s"g${bucketSeq.incrementAndGet()}"
-      val o = Staging.tempDir("graft_bucket_gate")
       Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"))
         .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
@@ -93,7 +109,7 @@ object SinkQ {
     * downstream and breaks the match against the oracle's direct read
     * of the original table. JSONL is schema-on-read with an explicit
     * StructType; CSV needs header+escape+multiLine (embedded newlines
-    * split records without it). Trees staged once per (JVM, dir).
+    * split records without it). Trees staged once per (session, dir).
     */
   private def roundtripAgg(df: DataFrame): DataFrame =
     // RAW-text md5 (not canonicalText): whitespace normalization would
@@ -112,19 +128,13 @@ object SinkQ {
       StructField("source", StringType)))
   }
 
-  private val jsonStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def jsonlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = jsonStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_jsonl_gate")
-      Sinks.json(Tables.documents(spark, d)
+    val out = stagedDir(spark, dir, "jsonl_gate") { o =>
+      Sinks.json(Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"), col("source")), s"$o/docs")
-      o.toString
-    })
+    }
     roundtripAgg(spark.read.schema(roundtripSchema).json(s"$out/docs"))
   }
-
-  private val orcStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q151 — ORC write→reread fidelity: the q109/q110 roundtrip for
     * Spark's OTHER built-in columnar format, raw-text md5 legs and
@@ -134,24 +144,18 @@ object SinkQ {
     * direction flips a distinct-md5 count.
     */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = orcStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_orc_gate")
-      Sinks.orc(Tables.documents(spark, d)
+    val out = stagedDir(spark, dir, "orc_gate") { o =>
+      Sinks.orc(Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"), col("source")), s"$o/docs")
-      o.toString
-    })
+    }
     roundtripAgg(spark.read.schema(roundtripSchema).orc(s"$out/docs"))
   }
 
-  private val csvStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = csvStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_csv_gate")
-      Sinks.csv(Tables.documents(spark, d)
+    val out = stagedDir(spark, dir, "csv_gate") { o =>
+      Sinks.csv(Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"), col("source")), s"$o/docs")
-      o.toString
-    })
+    }
     // nullValue sentinel: the writer distinguishes null (bare empty
     // field) from empty string (quoted "") — without remapping
     // nullValue away from "", the reader folds BOTH to null and an
@@ -171,20 +175,16 @@ object SinkQ {
     * original table with the batch split as a CASE — so a mergeSchema
     * regression (dropped column, misaligned fill) breaks the match.
     */
-  private val evoStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val out = evoStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_evo_gate")
-      val docs = Tables.documents(spark, d)
+    val out = stagedDir(spark, dir, "evo_gate") { o =>
+      val docs = Tables.documents(spark, dir)
       docs.filter(pmod(col("doc_id"), lit(2)) === 0)
         .select(col("doc_id"), col("text"), col("source"))
         .write.mode("overwrite").parquet(s"$o/docs/batch=0")
       docs.filter(pmod(col("doc_id"), lit(2)) === 1)
         .select(col("doc_id"), col("text"), col("source"), col("lang"))
         .write.mode("overwrite").parquet(s"$o/docs/batch=1")
-      o.toString
-    })
+    }
     spark.read.option("mergeSchema", "true").parquet(s"$out/docs")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
@@ -202,23 +202,18 @@ object SinkQ {
     * missing v1's carried-over files breaks the v2 row. Oracle is the
     * same CASE split over the base table.
     */
-  private val snapStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def timeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val root = snapStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_snap_gate")
-      val docs = Tables.documents(spark, d)
+    val root = stagedDir(spark, dir, "snap_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       graft.sources.Snapshots.append(
-        docs.filter(pmod(col("doc_id"), lit(3)) =!= 0), o.toString)
+        docs.filter(pmod(col("doc_id"), lit(3)) =!= 0), o)
       graft.sources.Snapshots.append(
-        docs.filter(pmod(col("doc_id"), lit(3)) === 0), o.toString)
-      o.toString
-    })
+        docs.filter(pmod(col("doc_id"), lit(3)) === 0), o)
+    }
     def agg(v: Int): DataFrame =
       graft.sources.Snapshots.read(spark, root, v)
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
+        .transform(content())
         .select(lit(v).as("version"), col("n_docs"), col("sum_chars"),
           col("min_id"), col("max_id"))
     agg(1).unionByName(agg(2))
@@ -237,18 +232,13 @@ object SinkQ {
     * (returning the oldest snapshot would silently misdate it), and
     * that refusal is the gate's boolean.
     */
-  private val tsTravelStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def timestampTravel(spark: SparkSession, dir: String): DataFrame = {
     val S = graft.sources.Snapshots
-    val root = tsTravelStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_ts_travel_gate")
-      val docs = Tables.documents(spark, d).select(col("doc_id"), col("n_chars"))
+    val root = stagedDir(spark, dir, "ts_travel_gate") { o =>
+      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
       (0 to 2).foreach(i => S.append(
-        docs.filter(pmod(col("doc_id"), lit(3)) === i), o.toString))
-      o.toString
-    })
+        docs.filter(pmod(col("doc_id"), lit(3)) === i), o))
+    }
     val legs = (1 to 3).map { v =>
       (s"${v}_at_commit_ts", S.versionAsOf(root, S.commitTimeOf(root, v)))
     } :+ (("4_beyond_head", S.versionAsOf(root, Long.MaxValue)))
@@ -278,21 +268,16 @@ object SinkQ {
     * literally (the q210/q158 pattern); content aggregates are
     * recomputed by DuckDB under the same `% 17` delete split.
     */
-  private val manifestRewriteStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def manifestRewrite(spark: SparkSession, dir: String): DataFrame = {
     val S = graft.sources.Snapshots
-    val root = manifestRewriteStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_manifest_rewrite_gate")
-      val docs = Tables.documents(spark, d).select(col("doc_id"), col("n_chars"))
+    val root = stagedDir(spark, dir, "manifest_rewrite_gate") { o =>
+      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
       (0 to 5).foreach(i => S.append(
-        docs.filter(pmod(col("doc_id"), lit(6)) === i).coalesce(1), o.toString))
-      S.deleteWhere(spark, o.toString, "doc_id",
+        docs.filter(pmod(col("doc_id"), lit(6)) === i).coalesce(1), o))
+      S.deleteWhere(spark, o, "doc_id",
         docs.filter(pmod(col("doc_id"), lit(17)) === 0).select(col("doc_id")))
-      S.compactManifests(o.toString)
-      o.toString
-    })
+      S.compactManifests(o)
+    }
     val (vPre, vPost) = (S.latestVersion(root) - 1, S.latestVersion(root))
     val filesSame = S.files(root, vPre) == S.files(root, vPost)
     // a rewrite-ONLY window is refused outright ("no data-changing
@@ -302,7 +287,7 @@ object SinkQ {
     val nCdc = S.changesBetween(spark, root, vPre - 1, vPost).count()
     def leg(name: String, v: Int): DataFrame =
       S.read(spark, root, v)
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content(range = false))
         .select(lit(name).as("leg"),
           lit(S.manifestsTable(spark, root, v).count()).as("n_segments"),
           lit(S.files(root, v).size).as("n_files"),
@@ -314,28 +299,6 @@ object SinkQ {
       .withColumn("n_cdc_rows", lit(nCdc))
   }
 
-  /** q218 — SIZE-BOUNDED manifest packing preserves pruning (r15; the
-    * missing half of q216's contract): a rewrite that packs a
-    * multi-commit list into ONE table-spanning segment is metadata-
-    * correct but destroys the two-level skip structure q210 exists to
-    * protect — the packed pointer's aggregate min/max covers the whole
-    * table, so every lookup opens it. [[graft.sources.Snapshots
-    * .compactManifests]] now bin-packs at a line target (Iceberg's
-    * `rewrite_manifests` target size), keeping packed stats
-    * commit-order-local. The gate stages EIGHT appends of contiguous
-    * doc_id eighths (an 8-pointer head list), rewrites with
-    * `targetLines = 2` → exactly 4 packed segments of 2 entries, then
-    * runs four pruning legs AFTER the rewrite metering
-    * [[graft.sources.Snapshots.segmentReads]]: a point lookup opens 1
-    * of 4 segments and scans 1 file, a half-range opens 2, full scan
-    * 4, below-range 0 — invariants the oracle states literally (the
-    * q210 pattern), with content aggregates recomputed by DuckDB over
-    * the same integer-eighth WHERE ranges so a wrong packed aggregate
-    * surfaces as lost rows.
-    */
-  private val packedPruneStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The ONE spelling of the q218/q221 gate (r15 review: the two were
     * near-verbatim copies): append the eight contiguous doc_id eighths
     * in `ingestOrder`, rewrite at `targetLines = 2` (optionally
@@ -346,13 +309,11 @@ object SinkQ {
     * shuffled one.
     */
   private def manifestPruneLegs(spark: SparkSession, dir: String,
-      staged: java.util.concurrent.ConcurrentHashMap[String, String],
-      tmpPrefix: String, ingestOrder: Seq[Int],
+      name: String, ingestOrder: Seq[Int],
       clusterBy: Option[String], distributed: Boolean = false): DataFrame = {
     val S = graft.sources.Snapshots
-    val root = staged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir(tmpPrefix)
-      val docs = Tables.documents(spark, d).select(col("doc_id"), col("n_chars"))
+    val root = stagedDir(spark, dir, name) { o =>
+      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
       val bounds = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
       val (mn, mx) = (bounds.getLong(0), bounds.getLong(1))
       val span = mx - mn + 1
@@ -360,16 +321,15 @@ object SinkQ {
         val lo = mn + span * i / 8
         val hi = mn + span * (i + 1) / 8 // exclusive
         S.append(docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
-          .coalesce(1), o.toString)
+          .coalesce(1), o)
       }
       if (distributed)
         // threshold 0 forces the Spark-job path at any body size
-        S.rewriteManifests(spark, o.toString, targetLines = 2,
+        S.rewriteManifests(spark, o, targetLines = 2,
           clusterBy = clusterBy, maxDriverSortLines = 0L)
       else
-        S.compactManifests(o.toString, targetLines = 2, clusterBy = clusterBy)
-      o.toString
-    })
+        S.compactManifests(o, targetLines = 2, clusterBy = clusterBy)
+    }
     val v = S.latestVersion(root)
     // the rewrite is metadata-only: same files, packed 8 → 4 segments.
     // ORDERED equality for the plain rewrite (entries ride verbatim —
@@ -396,7 +356,7 @@ object SinkQ {
     val nSegs = S.manifestsTable(spark, root, v).count().toInt
     legs.map { case (name, nScanned, opened, lo, hi) =>
       S.readPruned(spark, root, v, "doc_id", lo, hi)
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content(range = false))
         .select(lit(name).as("leg"), lit(nScanned).as("n_files_scanned"),
           lit(opened).as("segments_opened"), col("n_docs"), col("sum_chars"))
     }.reduce(_.unionByName(_))
@@ -404,9 +364,27 @@ object SinkQ {
       .withColumn("files_identical", lit(filesSame))
   }
 
+  /** q218 — SIZE-BOUNDED manifest packing preserves pruning (r15; the
+    * missing half of q216's contract): a rewrite that packs a
+    * multi-commit list into ONE table-spanning segment is metadata-
+    * correct but destroys the two-level skip structure q210 exists to
+    * protect — the packed pointer's aggregate min/max covers the whole
+    * table, so every lookup opens it. [[graft.sources.Snapshots
+    * .compactManifests]] now bin-packs at a line target (Iceberg's
+    * `rewrite_manifests` target size), keeping packed stats
+    * commit-order-local. The gate stages EIGHT appends of contiguous
+    * doc_id eighths (an 8-pointer head list), rewrites with
+    * `targetLines = 2` → exactly 4 packed segments of 2 entries, then
+    * runs four pruning legs AFTER the rewrite metering
+    * [[graft.sources.Snapshots.segmentReads]]: a point lookup opens 1
+    * of 4 segments and scans 1 file, a half-range opens 2, full scan
+    * 4, below-range 0 — invariants the oracle states literally (the
+    * q210 pattern), with content aggregates recomputed by DuckDB over
+    * the same integer-eighth WHERE ranges so a wrong packed aggregate
+    * surfaces as lost rows.
+    */
   def packedManifestPruning(spark: SparkSession, dir: String): DataFrame =
-    manifestPruneLegs(spark, dir, packedPruneStaged,
-      "graft_packed_prune_gate", 0 until 8, clusterBy = None)
+    manifestPruneLegs(spark, dir, "packed_prune_gate", 0 until 8, clusterBy = None)
 
   /** The q218/q221 shared oracle: the eighth-pair leg geometry stated
     * literally, content aggregates over the same integer-eighth WHERE
@@ -448,13 +426,9 @@ object SinkQ {
     * delete scoping ride through untouched, which files_identical
     * pins).
     */
-  private val clusteredPruneStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def clusteredManifestPruning(spark: SparkSession, dir: String): DataFrame =
-    manifestPruneLegs(spark, dir, clusteredPruneStaged,
-      "graft_clustered_prune_gate", Seq(0, 4, 1, 5, 2, 6, 3, 7),
-      clusterBy = Some("doc_id"))
+    manifestPruneLegs(spark, dir, "clustered_prune_gate",
+      Seq(0, 4, 1, 5, 2, 6, 3, 7), clusterBy = Some("doc_id"))
 
   /** q223 — DISTRIBUTED manifest rewrite (r16; Iceberg runs
     * `rewrite_manifests` as a Spark action for exactly this reason):
@@ -472,29 +446,10 @@ object SinkQ {
     * sort reproduces the driver sort's body ordering byte-for-byte
     * where it matters (entries, stats, file set).
     */
-  private val distributedPruneStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def distributedManifestPruning(spark: SparkSession, dir: String): DataFrame =
-    manifestPruneLegs(spark, dir, distributedPruneStaged,
-      "graft_distributed_prune_gate", Seq(0, 4, 1, 5, 2, 6, 3, 7),
-      clusterBy = Some("doc_id"), distributed = true)
-
-  /** q217 — CHECKED APPEND (Delta CHECK constraints / expectations
-    * with fail-the-write semantics;
-    * [[graft.sources.Snapshots.appendChecked]]): three legs — a clean
-    * batch commits under declared constraints (unique key, NOT NULL,
-    * range); a batch with a planted duplicate key is REFUSED with the
-    * staged files deleted and NOTHING published (no version, no
-    * manifest, no ref movement — the table still reads as leg 1);
-    * a clean retry then commits normally. Versions and refusal are
-    * engine invariants the oracle states literally; row counts are
-    * recomputed from the same `% 2` split. Validation runs against
-    * the WRITTEN bytes (one columnar re-read), so the gate also pins
-    * that the staged-write → validate → publish pipeline round-trips.
-    */
-  private val checkedAppendStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    manifestPruneLegs(spark, dir, "distributed_prune_gate",
+      Seq(0, 4, 1, 5, 2, 6, 3, 7), clusterBy = Some("doc_id"),
+      distributed = true)
 
   /** q224 — CHECKED DELETE (r16;
     * [[graft.sources.Snapshots.deleteChecked]] — closing the checked-
@@ -510,44 +465,51 @@ object SinkQ {
     * arithmetic; versions and the refusal are engine invariants
     * stated literally (the q217/q219 convention).
     */
-  private val checkedDeleteStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def checkedDelete(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.QualityChecks.InboundRef
     val S = graft.sources.Snapshots
-    val root = checkedDeleteStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_checked_delete_gate")
-      val docs = Tables.documents(spark, d).select(col("doc_id"), col("n_chars"))
+    val root = stagedDir(spark, dir, "checked_delete_gate") { o =>
+      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
       val parent = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-      S.append(parent, o.toString)
+      S.append(parent, o)
       val child = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
         .select(col("doc_id").as("ref_doc_id"))
       val checks = Seq(InboundRef("child_refs_covered", child,
         col("ref_doc_id"), col("doc_id")))
       val refused =
         try {
-          S.deleteChecked(spark, o.toString, "doc_id",
+          S.deleteChecked(spark, o, "doc_id",
             parent.filter(pmod(col("doc_id"), lit(4)) === 0), checks)
           false
         } catch { case e: IllegalStateException =>
           e.getMessage.contains("child_refs_covered") }
       require(refused, "orphaning delete must be refused naming the check")
-      S.deleteChecked(spark, o.toString, "doc_id",
+      S.deleteChecked(spark, o, "doc_id",
         parent.filter(pmod(col("doc_id"), lit(4)) === 2), checks)
-      o.toString
-    })
+    }
     // the refusal minted NOTHING: the clean delete is version 2, not 3
     val noVersionMinted = S.latestVersion(root) == 2
     def leg(name: String, v: Int): DataFrame =
-      S.read(spark, root, v).agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"))
+      S.read(spark, root, v).transform(content(range = false))
         .select(lit(name).as("leg"), lit(v).as("version"), col("n_docs"),
           col("sum_chars"),
           lit(noVersionMinted).as("refusal_minted_no_version"))
     leg("1_parent_table", 1).unionByName(leg("2_after_checked_delete", 2))
   }
 
+  /** q217 — CHECKED APPEND (Delta CHECK constraints / expectations
+    * with fail-the-write semantics;
+    * [[graft.sources.Snapshots.appendChecked]]): three legs — a clean
+    * batch commits under declared constraints (unique key, NOT NULL,
+    * range); a batch with a planted duplicate key is REFUSED with the
+    * staged files deleted and NOTHING published (no version, no
+    * manifest, no ref movement — the table still reads as leg 1);
+    * a clean retry then commits normally. Versions and refusal are
+    * engine invariants the oracle states literally; row counts are
+    * recomputed from the same `% 2` split. Validation runs against
+    * the WRITTEN bytes (one columnar re-read), so the gate also pins
+    * that the staged-write → validate → publish pipeline round-trips.
+    */
   def checkedAppend(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.QualityChecks.{RowPredicate, Unique}
     val S = graft.sources.Snapshots
@@ -555,20 +517,18 @@ object SinkQ {
       Unique("unique_doc_id", col("doc_id")),
       RowPredicate("doc_id_not_null", col("doc_id").isNull),
       RowPredicate("n_chars_nonneg", col("n_chars") < 0))
-    val root = checkedAppendStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_checked_append_gate")
-      val docs = Tables.documents(spark, d).select(col("doc_id"), col("n_chars"))
+    val root = stagedDir(spark, dir, "checked_append_gate") { o =>
+      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
       val even = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
       val odd = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-      S.appendChecked(even, o.toString, checks)
+      S.appendChecked(even, o, checks)
       val refused =
-        try { S.appendChecked(odd.unionByName(odd.limit(1)), o.toString, checks); false }
+        try { S.appendChecked(odd.unionByName(odd.limit(1)), o, checks); false }
         catch { case e: IllegalStateException =>
           e.getMessage.contains("unique_doc_id") }
       require(refused, "violating batch must be refused naming the check")
-      S.appendChecked(odd, o.toString, checks)
-      o.toString
-    })
+      S.appendChecked(odd, o, checks)
+    }
     // the refusal minted NOTHING: the clean retry is version 2, not 3
     val noVersionMinted = S.latestVersion(root) == 2
     def leg(name: String, v: Int): DataFrame =
@@ -590,36 +550,31 @@ object SinkQ {
     * post-image" is the whole point; versions and the refusal boolean
     * are engine invariants stated literally.
     */
-  private val checkedMergeStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def checkedMerge(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.QualityChecks.{RowPredicate, Unique}
     val S = graft.sources.Snapshots
     val checks = Seq(
       Unique("unique_doc_id", col("doc_id")),
       RowPredicate("n_chars_nonneg", col("n_chars") < 0))
-    val root = checkedMergeStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_checked_merge_gate")
-      val docs = Tables.documents(spark, d).select(col("doc_id"), col("n_chars"))
-      S.appendChecked(docs, o.toString, checks)
+    val root = stagedDir(spark, dir, "checked_merge_gate") { o =>
+      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
+      S.appendChecked(docs, o, checks)
       val fifth = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
       val refused =
         try {
-          S.mergeChecked(spark, o.toString, "doc_id",
+          S.mergeChecked(spark, o, "doc_id",
             fifth.withColumn("n_chars", lit(-1L)), checks); false
         } catch { case e: IllegalStateException =>
           e.getMessage.contains("n_chars_nonneg") }
       require(refused, "violating merge must be refused naming the check")
-      S.mergeChecked(spark, o.toString, "doc_id",
+      S.mergeChecked(spark, o, "doc_id",
         fifth.withColumn("n_chars", col("n_chars") + 1000L), checks)
-      o.toString
-    })
+    }
     // the refusal minted NOTHING: the clean merge is version 2, not 3
     val noVersionMinted = S.latestVersion(root) == 2
     def leg(name: String, v: Int): DataFrame =
       S.read(spark, root, v)
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content(range = false))
         .select(lit(name).as("leg"), lit(v).as("version"), col("n_docs"),
           col("sum_chars"), lit(noVersionMinted).as("refusal_minted_no_version"))
     leg("1_pre_merge", 1).unionByName(leg("2_post_merge", 2))
@@ -632,36 +587,31 @@ object SinkQ {
     * published), then the clean doubling of the same rows publishes
     * as v2 and its post-image hash-matches DuckDB's CASE arithmetic.
     */
-  private val checkedUpdateStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def checkedUpdate(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.QualityChecks.{RowPredicate, Unique}
     val S = graft.sources.Snapshots
     val checks = Seq(
       Unique("unique_doc_id", col("doc_id")),
       RowPredicate("n_chars_nonneg", col("n_chars") < 0))
-    val root = checkedUpdateStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_checked_update_gate")
-      val docs = Tables.documents(spark, d).select(col("doc_id"), col("n_chars"))
-      S.appendChecked(docs, o.toString, checks)
+    val root = stagedDir(spark, dir, "checked_update_gate") { o =>
+      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
+      S.appendChecked(docs, o, checks)
       val refused =
         try {
-          S.updateChecked(spark, o.toString,
+          S.updateChecked(spark, o,
             pmod(col("doc_id"), lit(7)) === 0,
             Map("n_chars" -> lit(-1L)), checks); false
         } catch { case e: IllegalStateException =>
           e.getMessage.contains("n_chars_nonneg") }
       require(refused, "violating update must be refused naming the check")
-      S.updateChecked(spark, o.toString,
+      S.updateChecked(spark, o,
         pmod(col("doc_id"), lit(7)) === 0,
         Map("n_chars" -> (col("n_chars") * 2L)), checks)
-      o.toString
-    })
+    }
     val noVersionMinted = S.latestVersion(root) == 2
     def leg(name: String, v: Int): DataFrame =
       S.read(spark, root, v)
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content(range = false))
         .select(lit(name).as("leg"), lit(v).as("version"), col("n_docs"),
           col("sum_chars"), lit(noVersionMinted).as("refusal_minted_no_version"))
     leg("1_pre_update", 1).unionByName(leg("2_post_update", 2))
@@ -685,25 +635,20 @@ object SinkQ {
     * literally (the q96 pattern); content aggregates are recomputed by
     * DuckDB from the base table.
     */
-  private val compactStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def snapshotCompaction(spark: SparkSession, dir: String): DataFrame = {
-    val root = compactStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_compact_gate")
-      val docs = Tables.documents(spark, d)
+    val root = stagedDir(spark, dir, "compact_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       for (i <- 0 to 3)
         graft.sources.Snapshots.append(
           docs.filter(pmod(col("doc_id"), lit(4)) === i)
             .repartition(2, col("doc_id")),
-          o.toString)
-      graft.sources.Snapshots.compact(spark, o.toString, targetFiles = 2)
-      o.toString
-    })
+          o)
+      graft.sources.Snapshots.compact(spark, o, targetFiles = 2)
+    }
     def row(v: Int): DataFrame =
       graft.sources.Snapshots.read(spark, root, v)
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
+        .transform(content())
         .select(lit(v).as("version"),
           lit(graft.sources.Snapshots.files(root, v).size).as("n_files"),
           col("n_docs"), col("sum_chars"), col("min_id"), col("max_id"))
@@ -724,22 +669,18 @@ object SinkQ {
     * table, which prove the retained version reads intact AFTER the
     * deletion sweep.
     */
-  private val expireStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def snapshotExpiration(spark: SparkSession, dir: String): DataFrame = {
-    val root = expireStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_expire_gate")
-      val docs = Tables.documents(spark, d)
+    val root = stagedDir(spark, dir, "expire_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       for (i <- 0 to 3)
         graft.sources.Snapshots.append(
           docs.filter(pmod(col("doc_id"), lit(4)) === i)
             .repartition(2, col("doc_id")),
-          o.toString)
-      graft.sources.Snapshots.compact(spark, o.toString, targetFiles = 2)
-      graft.sources.Snapshots.expire(o.toString, keepFrom = 5)
-      o.toString
-    })
+          o)
+      graft.sources.Snapshots.compact(spark, o, targetFiles = 2)
+      graft.sources.Snapshots.expire(o, keepFrom = 5)
+    }
     // rebuild the engine-measured invariants from the post-expire store
     // (idempotent across invocations — the memoized staging ran once)
     val nDiskFiles = {
@@ -753,8 +694,7 @@ object SinkQ {
       try { graft.sources.Snapshots.files(root, 4); false }
       catch { case _: IllegalArgumentException => true }
     graft.sources.Snapshots.read(spark, root, 5)
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-        min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
+      .transform(content())
       .select(lit(5).as("version"),
         lit(graft.sources.Snapshots.files(root, 5).size).as("n_files"),
         lit(nDiskFiles).as("n_disk_files"),
@@ -783,16 +723,13 @@ object SinkQ {
     * destructive q158/q159 pair keeps separate stores for exactly the
     * opposite reason).
     */
-  private val statsStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def statsStagedRoot(spark: SparkSession, dir: String): String =
-    statsStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_prune_gate")
+    stagedDir(spark, dir, "prune_gate") { o =>
       graft.sources.Snapshots.append(
-        Tables.documents(spark, d).select(col("doc_id"), col("n_chars")), o.toString)
-      graft.sources.Snapshots.compact(spark, o.toString, targetFiles = 4,
+        Tables.documents(spark, dir).select(col("doc_id"), col("n_chars")), o)
+      graft.sources.Snapshots.compact(spark, o, targetFiles = 4,
         sortBy = Some("doc_id"))
-      o.toString
-    })
+    }
 
   def prunedSnapshotRead(spark: SparkSession, dir: String): DataFrame = {
     val root = statsStagedRoot(spark, dir)
@@ -804,8 +741,7 @@ object SinkQ {
       val nScanned =
         graft.sources.Snapshots.prunedFiles(spark, root, v, "doc_id", lo, hi).size
       graft.sources.Snapshots.readPruned(spark, root, v, "doc_id", lo, hi)
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
+        .transform(content())
         .select(lit(name).as("leg"), lit(nScanned).as("n_files_scanned"),
           col("n_docs"), col("sum_chars"), col("min_id"), col("max_id"))
     }
@@ -850,7 +786,7 @@ object SinkQ {
     // taken after the last leg's plan is constructed
     val plans = legs.map { case (name, lo, hi, nScanned) =>
       graft.sources.Snapshots.readPruned(spark, root, v, "doc_id", lo, hi)
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content(range = false))
         .select(lit(name).as("leg"), lit(nScanned).as("n_files_scanned"),
           col("n_docs"), col("sum_chars"))
     }
@@ -877,14 +813,10 @@ object SinkQ {
     * quarter-arithmetic WHERE ranges, so a wrong pointer aggregate
     * surfaces as lost rows, not just a wrong count.
     */
-  private val segmentPruneStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def manifestSegmentPruning(spark: SparkSession, dir: String): DataFrame = {
     val S = graft.sources.Snapshots
-    val root = segmentPruneStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_segment_prune_gate")
-      val docs = Tables.documents(spark, d).select(col("doc_id"), col("n_chars"))
+    val root = stagedDir(spark, dir, "segment_prune_gate") { o =>
+      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
       val bounds = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
       val (mn, mx) = (bounds.getLong(0), bounds.getLong(1))
       val span = mx - mn + 1
@@ -892,10 +824,9 @@ object SinkQ {
         val lo = mn + span * i / 4
         val hi = mn + span * (i + 1) / 4 // exclusive
         S.append(docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
-          .coalesce(1), o.toString)
+          .coalesce(1), o)
       }
-      o.toString
-    })
+    }
     val v = S.latestVersion(root)
     // COUNTER-METERING CONVENTION (r16, ADVICE): the per-leg deltas
     // below read THREAD-LOCAL counters (segmentReadsHere /
@@ -923,7 +854,7 @@ object SinkQ {
     val nSegs = S.manifestsTable(spark, root, v).count().toInt
     legs.map { case (name, lo, hi, nScanned, opened, _) =>
       S.readPruned(spark, root, v, "doc_id", lo, hi)
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content(range = false))
         .select(lit(name).as("leg"), lit(nScanned).as("n_files_scanned"),
           lit(opened).as("segments_opened"), col("n_docs"), col("sum_chars"))
     }.reduce(_.unionByName(_))
@@ -947,28 +878,23 @@ object SinkQ {
     *   content aggregates survive (DuckDB recomputes them from the
     *     base table with the same doc_id % 3 split).
     */
-  private val evoSnapStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def snapshotSchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val root = evoSnapStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_evo_snap_gate")
-      val docs = Tables.documents(spark, d)
+    val root = stagedDir(spark, dir, "evo_snap_gate") { o =>
+      val docs = Tables.documents(spark, dir)
       // file counts are gate invariants — pin them (the q158 pattern)
       graft.sources.Snapshots.append(
         docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
           .select(col("doc_id"), col("n_chars"))
-          .repartition(2, col("doc_id")), o.toString)
+          .repartition(2, col("doc_id")), o)
       graft.sources.Snapshots.append(
         docs.filter(pmod(col("doc_id"), lit(3)) === 0)
           .select(col("doc_id"), col("n_chars"), col("source"))
-          .repartition(2, col("doc_id")), o.toString)
-      o.toString
-    })
+          .repartition(2, col("doc_id")), o)
+    }
     val v1 = graft.sources.Snapshots.read(spark, root, 1)
     val v2 = graft.sources.Snapshots.read(spark, root, 2)
     val leg1 = v1
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+      .transform(content(range = false))
       .select(lit(1).as("version"),
         lit(v1.schema.size).as("n_cols"),
         lit(graft.sources.Snapshots.files(root, 1).size).as("n_files"),
@@ -1002,19 +928,14 @@ object SinkQ {
     * Content aggregates per leg are recomputed by DuckDB with the same
     * WHERE, so a wrong skip surfaces as lost rows.
     */
-  private val zorderStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def zorderCompactionPruning(spark: SparkSession, dir: String): DataFrame = {
-    val root = zorderStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_zorder_gate")
+    val root = stagedDir(spark, dir, "zorder_gate") { o =>
       graft.sources.Snapshots.append(
-        Tables.documents(spark, d).select(col("doc_id"), col("n_chars")),
-        o.toString)
-      graft.sources.Snapshots.compact(spark, o.toString, targetFiles = 8,
+        Tables.documents(spark, dir).select(col("doc_id"), col("n_chars")),
+        o)
+      graft.sources.Snapshots.compact(spark, o, targetFiles = 8,
         zorderBy = Seq("doc_id", "n_chars"))
-      o.toString
-    })
+    }
     val v = graft.sources.Snapshots.latestVersion(root)
     def bounds(column: String): (Long, Long) = {
       val s = graft.sources.Snapshots.fileStats(spark, root, v, column)
@@ -1027,7 +948,7 @@ object SinkQ {
       val nScanned = graft.sources.Snapshots
         .prunedFiles(spark, root, v, column, lo, hi).size
       graft.sources.Snapshots.readPruned(spark, root, v, column, lo, hi)
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content(range = false))
         .select(lit(name).as("leg"),
           lit(exactFiles.getOrElse(-1)).as("n_files_scanned"),
           lit(exactFiles.map(_ == nScanned)
@@ -1062,29 +983,23 @@ object SinkQ {
     * n_delete_sets — manifest invariants stated literally) + content
     * aggregates DuckDB recomputes with the matching WHERE per version.
     */
-  private val deleteStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def equalityDelete(spark: SparkSession, dir: String): DataFrame = {
-    val root = deleteStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_delete_gate")
-      val docs = Tables.documents(spark, d)
+    val root = stagedDir(spark, dir, "delete_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       graft.sources.Snapshots.append(
         docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-          .repartition(2, col("doc_id")), o.toString)
-      graft.sources.Snapshots.deleteWhere(spark, o.toString, "doc_id",
+          .repartition(2, col("doc_id")), o)
+      graft.sources.Snapshots.deleteWhere(spark, o, "doc_id",
         docs.filter(pmod(col("doc_id"), lit(5)) === 0).select(col("doc_id")))
       graft.sources.Snapshots.append(
         docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-          .repartition(2, col("doc_id")), o.toString)
-      graft.sources.Snapshots.compact(spark, o.toString, targetFiles = 2)
-      o.toString
-    })
+          .repartition(2, col("doc_id")), o)
+      graft.sources.Snapshots.compact(spark, o, targetFiles = 2)
+    }
     def row(v: Int): DataFrame =
       graft.sources.Snapshots.read(spark, root, v)
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
+        .transform(content())
         .select(lit(v).as("version"),
           lit(graft.sources.Snapshots.files(root, v).size).as("n_files"),
           lit(graft.sources.Snapshots.deleteSets(root, v).size)
@@ -1107,13 +1022,9 @@ object SinkQ {
     * content is the whole table (DuckDB recomputes — a dropped or
     * double-committed slice breaks the aggregates).
     */
-  private val concurrentStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def concurrentAppends(spark: SparkSession, dir: String): DataFrame = {
-    val root = concurrentStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_concurrent_gate")
-      val docs = Tables.documents(spark, d)
+    val root = stagedDir(spark, dir, "concurrent_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
       try {
@@ -1124,20 +1035,18 @@ object SinkQ {
               latch.countDown(); latch.await() // maximize the race
               graft.sources.Snapshots.append(
                 docs.filter(pmod(col("doc_id"), lit(4)) === i)
-                  .repartition(1), o.toString)
+                  .repartition(1), o)
             }
           })
         }
         fs.foreach(_.get())
       } finally pool.shutdown()
-      o.toString
-    })
+    }
     val counts = (1 to 4).map(v =>
       graft.sources.Snapshots.read(spark, root, v).count())
     val monotone = counts.sliding(2).forall { case Seq(a, b) => a < b }
     graft.sources.Snapshots.read(spark, root, 4)
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-        min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
+      .transform(content())
       .select(
         lit(graft.sources.Snapshots.latestVersion(root)).as("latest_version"),
         lit(monotone).as("monotone_history"),
@@ -1158,33 +1067,27 @@ object SinkQ {
     * expressions — a lost update, a vanished insert, or a
     * double-applied delta breaks sum_chars exactly.
     */
-  private val mergeStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def mergedRoot(spark: SparkSession, dir: String): String =
-    mergeStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_merge_gate")
-      val docs = Tables.documents(spark, d)
+    stagedDir(spark, dir, "merge_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       graft.sources.Snapshots.append(
-        docs.repartition(2, col("doc_id")), o.toString)
+        docs.repartition(2, col("doc_id")), o)
       val updates = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
         .withColumn("n_chars", col("n_chars") + 1000)
       val inserts = docs.filter(pmod(col("doc_id"), lit(11)) === 3)
         .withColumn("doc_id", col("doc_id") + 1000000L)
         .withColumn("n_chars", col("n_chars") + 500)
-      graft.sources.Snapshots.merge(spark, o.toString, "doc_id",
+      graft.sources.Snapshots.merge(spark, o, "doc_id",
         updates.unionByName(inserts).repartition(1))
-      graft.sources.Snapshots.compact(spark, o.toString, targetFiles = 2)
-      o.toString
-    })
+      graft.sources.Snapshots.compact(spark, o, targetFiles = 2)
+    }
 
   def snapshotMerge(spark: SparkSession, dir: String): DataFrame = {
     val root = mergedRoot(spark, dir)
     def row(v: Int): DataFrame =
       graft.sources.Snapshots.read(spark, root, v)
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
+        .transform(content())
         .select(lit(v).as("version"),
           lit(graft.sources.Snapshots.files(root, v).size).as("n_files"),
           lit(graft.sources.Snapshots.deleteSets(root, v).size)
@@ -1210,10 +1113,9 @@ object SinkQ {
   def cdcChanges(spark: SparkSession, dir: String): DataFrame = {
     val root = mergedRoot(spark, dir)
     graft.sources.Snapshots.changesBetween(spark, root, 0, 3)
-      .groupBy(col("_commit_version").as("commit_version"),
-        col("_change_type").as("change_type"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("sum_chars"),
-        min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
+      .transform(content("n_rows",
+        by = Seq(col("_commit_version").as("commit_version"),
+          col("_change_type").as("change_type"))))
   }
 
   /** q174 — METADATA TABLES on the q172 history: Iceberg's
@@ -1263,25 +1165,20 @@ object SinkQ {
     * scan), and DuckDB recomputes both legs' aggregates from the base
     * table.
     */
-  private val bloomStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def bloomPointLookup(spark: SparkSession, dir: String): DataFrame = {
-    val root = bloomStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_bloom_gate")
+    val root = stagedDir(spark, dir, "bloom_gate") { o =>
       graft.sources.Snapshots.append(
-        Tables.documents(spark, d)
+        Tables.documents(spark, dir)
           .select(col("doc_id"), col("source"), col("n_chars"))
           .repartition(8, col("source")),
-        o.toString, bloomCols = Seq("source"))
-      o.toString
-    })
+        o, bloomCols = Seq("source"))
+    }
     def leg(name: String, value: String, lo: Int, hi: Int): DataFrame = {
       val scanned = graft.sources.Snapshots
         .bloomPrunedFiles(root, 1, "source", value).size
       graft.sources.Snapshots
         .readBloomPruned(spark, root, 1, "source", value)
-        .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content("n_rows", range = false))
         .select(lit(name).as("leg"),
           lit(graft.sources.Snapshots.files(root, 1).size)
             .as("n_files_total"),
@@ -1304,27 +1201,23 @@ object SinkQ {
     * the oracle — one file per partition value by construction — and
     * DuckDB recomputes every leg's content from the base table.
     */
-  private val partStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   def partitionPruning(spark: SparkSession, dir: String): DataFrame = {
-    val (idRoot, bkRoot) = partStaged.computeIfAbsent(dir, d => {
-      val docs = Tables.documents(spark, d)
+    // two stores in subdirectories of the one staged directory
+    val (idRoot, bkRoot) = staged(spark, dir, "part_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
-      val i = Staging.tempDir("graft_part_id")
-      graft.sources.Snapshots.appendPartitioned(docs, i.toString,
+      graft.sources.Snapshots.appendPartitioned(docs, s"$o/identity",
         graft.sources.Snapshots.IdentityPartition("source"))
-      val b = Staging.tempDir("graft_part_bk")
-      graft.sources.Snapshots.appendPartitioned(docs, b.toString,
+      graft.sources.Snapshots.appendPartitioned(docs, s"$o/bucket",
         graft.sources.Snapshots.BucketPartition("doc_id", 8))
-      (i.toString, b.toString)
-    })
+      (s"$o/identity", s"$o/bucket")
+    }
     def leg(name: String, root: String,
             spec: graft.sources.Snapshots.PartitionSpec,
             literal: String): DataFrame =
       graft.sources.Snapshots
         .readPartitionPruned(spark, root, 1, spec, literal)
-        .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content("n_rows", range = false))
         .select(lit(name).as("leg"),
           lit(graft.sources.Snapshots.files(root, 1).size)
             .as("n_files_total"),
@@ -1348,31 +1241,25 @@ object SinkQ {
     * manifest resolution), and latest is intact. Tags are immutable
     * hard-linked refs — the same CAS primitive as the commit itself.
     */
-  private val tagStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def snapshotTags(spark: SparkSession, dir: String): DataFrame = {
-    val root = tagStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_tag_gate")
-      val docs = Tables.documents(spark, d)
+    val root = stagedDir(spark, dir, "tag_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       graft.sources.Snapshots.append(
         docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-          .repartition(2, col("doc_id")), o.toString)
-      graft.sources.Snapshots.tag(o.toString, "baseline", 1)
+          .repartition(2, col("doc_id")), o)
+      graft.sources.Snapshots.tag(o, "baseline", 1)
       graft.sources.Snapshots.append(
         docs.filter(pmod(col("doc_id"), lit(2)) =!= 0)
-          .repartition(2, col("doc_id")), o.toString)
-      graft.sources.Snapshots.compact(spark, o.toString, targetFiles = 2)
-      graft.sources.Snapshots.expire(o.toString, keepFrom = 3)
-      o.toString
-    })
+          .repartition(2, col("doc_id")), o)
+      graft.sources.Snapshots.compact(spark, o, targetFiles = 2)
+      graft.sources.Snapshots.expire(o, keepFrom = 3)
+    }
     val v2Readable =
       try { graft.sources.Snapshots.read(spark, root, 2); true }
       catch { case _: IllegalArgumentException => false }
     def row(name: String, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-        min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
+      df.transform(content())
         .select(lit(name).as("leg"),
           lit(graft.sources.Snapshots.tagVersion(root, "baseline"))
             .as("tag_version"),
@@ -1390,13 +1277,9 @@ object SinkQ {
     * files, a second sweep removes zero (idempotent), and both
     * versions' content is untouched — DuckDB recomputes the halves.
     */
-  private val orphanStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int, Int)]()
-
   def orphanCleanup(spark: SparkSession, dir: String): DataFrame = {
-    val (root, first, second) = orphanStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_orphan_gate").toString
-      val docs = Tables.documents(spark, d)
+    val (root, first, second) = staged(spark, dir, "orphan_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       graft.sources.Snapshots.append(
         docs.filter(pmod(col("doc_id"), lit(2)) === 0), o)
@@ -1409,9 +1292,9 @@ object SinkQ {
       // flight inside this staged gate table
       (o, graft.sources.Snapshots.removeOrphans(o, olderThanMillis = 0L),
         graft.sources.Snapshots.removeOrphans(o, olderThanMillis = 0L))
-    })
+    }
     graft.sources.Snapshots.read(spark, root)
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+      .transform(content(range = false))
       .select(lit(first).as("n_orphans_removed"),
         lit(second).as("rerun_removed"),
         lit(graft.sources.Snapshots.read(spark, root, 1).count())
@@ -1515,29 +1398,24 @@ object SinkQ {
     * deliberate narrow-type inputs (the gate tests promotion), not
     * the engine's production arithmetic.
     */
-  private val promoStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def typePromotion(spark: SparkSession, dir: String): DataFrame = {
-    val root = promoStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_promo_gate")
-      val docs = Tables.documents(spark, d)
+    val root = stagedDir(spark, dir, "promo_gate") { o =>
+      val docs = Tables.documents(spark, dir)
       graft.sources.Snapshots.append(
         docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
           .select(col("doc_id").cast("int").as("doc_id"),
             (col("n_chars").cast("float") + lit(0.5f)).as("w"),
             expr("cast(cast(n_chars % 900 as decimal(5,2)) + 0.25" +
               " as decimal(5,2))").as("d"))
-          .repartition(2, col("doc_id")), o.toString)
+          .repartition(2, col("doc_id")), o)
       graft.sources.Snapshots.append(
         docs.filter(pmod(col("doc_id"), lit(3)) === 0)
           .select(col("doc_id").cast("long").as("doc_id"),
             (col("n_chars").cast("double") + lit(0.5d)).as("w"),
             expr("cast(cast(n_chars % 1000 as decimal(12,2)) * 1000000" +
               " + 0.25 as decimal(12,2))").as("d"))
-          .repartition(2, col("doc_id")), o.toString)
-      o.toString
-    })
+          .repartition(2, col("doc_id")), o)
+    }
     def leg(v: Int): DataFrame = {
       val t = graft.sources.Snapshots.read(spark, root, v)
       t.agg(count(lit(1)).as("n_docs"),
@@ -1568,17 +1446,11 @@ object SinkQ {
     * table; a lost append row, a double-applied merge, or a phantom
     * abort breaks the hash.
     */
-  private val serMergeStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val serMergeAborts =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
   def serializableMergeGate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = serMergeStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_sermerge_gate").toString
+    val (root, nAborted) = staged(spark, dir, "sermerge_gate") { o =>
       graft.sources.Snapshots.append(
-        Tables.documents(spark, d).filter(col("doc_id") <= 20)
+        Tables.documents(spark, dir).filter(col("doc_id") <= 20)
           .select(col("doc_id"), col("n_chars")).repartition(1), o)
       var aborts = 0
       def interleaved(srcRows: Seq[(Long, Long)],
@@ -1597,7 +1469,7 @@ object SinkQ {
         // pair that a later staging of the same root would reuse stale
         try {
         val wait = udf(() => {
-          val (gate, entered) = SinkQ.serLatches.get(rootKey)
+          val (gate, entered) = SinkQ.serLatches(rootKey)
           entered.countDown()
           gate.await()
           true
@@ -1613,16 +1485,16 @@ object SinkQ {
         // this gate polices — the latch never counts down, and a bare
         // await would hang the whole battery instead of failing the
         // gate; surface the worker's exception instead
-        if (!serLatches.get(rootKey)._2.await(
+        if (!serLatches(rootKey)._2.await(
             120, java.util.concurrent.TimeUnit.SECONDS)) {
-          serLatches.get(rootKey)._1.countDown()
+          serLatches(rootKey)._1.countDown()
           worker.get()  // rethrows the worker's real failure, if any
           throw new IllegalStateException(
             "q188: merge never parked on its source within 120 s")
         }
         graft.sources.Snapshots.append(
           Seq(concurrent).toDF("doc_id", "n_chars").repartition(1), o)
-        serLatches.get(rootKey)._1.countDown()
+        serLatches(rootKey)._1.countDown()
         try { worker.get(); () } catch {
           case e: java.util.concurrent.ExecutionException
               if e.getCause.isInstanceOf[java.util.ConcurrentModificationException] =>
@@ -1636,18 +1508,17 @@ object SinkQ {
         // counting down the removed gate latch is a no-op then, and on
         // a failure BEFORE the countdown it releases the parked worker
         // so nothing awaits a latch the map no longer owns
-        } finally Option(serLatches.remove(rootKey)).foreach(_._1.countDown())
+        } finally serLatches.remove(rootKey).foreach(_._1.countDown())
       }
       interleaved(Seq((5L, -100L), (1000001L, -1L)), (5L, 55L))
       interleaved(Seq((7L, -700L), (1000002L, -2L)), (888888L, 88L))
-      serMergeAborts.put(o, aborts)
-      o
-    })
+      (o, aborts)
+    }
     graft.sources.Snapshots.read(spark, root)
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).as("sum_id"),
         sum(col("n_chars")).as("sum_payload"))
-      .select(lit(serMergeAborts.get(root).toInt).as("n_aborted"),
+      .select(lit(nAborted).as("n_aborted"),
         col("n_docs"), col("sum_id"), col("sum_payload"))
   }
 
@@ -1655,10 +1526,10 @@ object SinkQ {
   // keyed by staged root because the parked UDF is serialized into
   // tasks and must deref the SAME cells in local mode, while two
   // stagings of different dirs must never cross-wire (r17 review):
-  // (gate, entered) per root
-  private[queries] val serLatches =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (java.util.concurrent.CountDownLatch, java.util.concurrent.CountDownLatch)]()
+  // (gate, entered) per root. A latch registry, not a memo: entries
+  // live only while one interleave runs
+  private[queries] val serLatches = scala.collection.concurrent.TrieMap.empty[
+    String, (java.util.concurrent.CountDownLatch, java.util.concurrent.CountDownLatch)]
 
   /** q189 — PARTITION-SPEC EVOLUTION (the Iceberg spec-id contract,
     * completing q178): one table whose LAYOUT changed across commits —
@@ -1675,13 +1546,9 @@ object SinkQ {
     * absence) and the untokened file. Content recomputes from the
     * base table — the three slices partition it.
     */
-  private val specEvoStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def partitionSpecEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val root = specEvoStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_specevo_gate").toString
-      val docs = Tables.documents(spark, d)
+    val root = stagedDir(spark, dir, "specevo_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       graft.sources.Snapshots.appendPartitioned(
         docs.filter(pmod(col("doc_id"), lit(3)) === 0), o,
@@ -1691,15 +1558,14 @@ object SinkQ {
         graft.sources.Snapshots.BucketPartition("source", 8))
       graft.sources.Snapshots.append(
         docs.filter(pmod(col("doc_id"), lit(3)) === 2).repartition(1), o)
-      o
-    })
+    }
     val specs: Seq[graft.sources.Snapshots.PartitionSpec] = Seq(
       graft.sources.Snapshots.IdentityPartition("source"),
       graft.sources.Snapshots.BucketPartition("source", 8))
     def leg(name: String, literal: String): DataFrame =
       graft.sources.Snapshots
         .readPartitionPruned(spark, root, 3, specs, literal)
-        .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content("n_rows", range = false))
         .select(lit(name).as("leg"),
           lit(graft.sources.Snapshots.files(root, 3).size)
             .as("n_files_total"),
@@ -1722,13 +1588,9 @@ object SinkQ {
     * DuckDB replays each version's row multiset from the base table;
     * the tombstone-set count pins merge-on-read (no rewrite happened).
     */
-  private val posDelStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def positionalDelete(spark: SparkSession, dir: String): DataFrame = {
-    val root = posDelStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_posdel_gate").toString
-      val docs = Tables.documents(spark, d)
+    val root = stagedDir(spark, dir, "posdel_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       graft.sources.Snapshots.append(
         docs.unionByName(docs.filter(pmod(col("doc_id"), lit(4)) === 0)
@@ -1740,11 +1602,10 @@ object SinkQ {
         docs.filter(pmod(col("doc_id"), lit(9)) === 4)
           .withColumn("n_chars", col("n_chars") * 2 + 1)
           .repartition(1), o)                                          // v3
-      o
-    })
+    }
     def leg(v: Int): DataFrame =
       graft.sources.Snapshots.read(spark, root, v)
-        .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content("n_rows", range = false))
         .select(lit(v).as("version"), col("n_rows"), col("sum_chars"),
           lit(graft.sources.Snapshots.posDeleteSets(root, v).size)
             .as("n_posdel_sets"))
@@ -1763,25 +1624,20 @@ object SinkQ {
     * bug), sums recompute exactly, and the tombstone-set count pins
     * merge-on-read (no rewrite happened).
     */
-  private val rowUpdStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def rowUpdate(spark: SparkSession, dir: String): DataFrame = {
-    val root = rowUpdStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_rowupd_gate").toString
+    val root = stagedDir(spark, dir, "rowupd_gate") { o =>
       graft.sources.Snapshots.append(
-        Tables.documents(spark, d)
+        Tables.documents(spark, dir)
           .select(col("doc_id"), col("source"), col("n_chars"))
           .repartition(2, col("doc_id")), o)                            // v1
       graft.sources.Snapshots.updateWhere(spark, o,
         col("source") === "src3", Map("n_chars" -> (col("n_chars") + 500L))) // v2
       graft.sources.Snapshots.updateWhere(spark, o,
         col("source") === "src3", Map("n_chars" -> (col("n_chars") + 7L)))   // v3
-      o
-    })
+    }
     def leg(v: Int): DataFrame =
       graft.sources.Snapshots.read(spark, root, v)
-        .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content("n_rows", range = false))
         .select(lit(v).as("version"), col("n_rows"), col("sum_chars"),
           lit(graft.sources.Snapshots.posDeleteSets(root, v).size)
             .as("n_posdel_sets"))
@@ -1819,14 +1675,10 @@ object SinkQ {
     * data, expire eating a branch-anchored version, or history
     * walking raw version numbers each break a different cell.
     */
-  private val branchStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def branchWap(spark: SparkSession, dir: String): DataFrame = {
     val S = graft.sources.Snapshots
-    val root = branchStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_branch_gate").toString
-      val docs = Tables.documents(spark, d)
+    val root = stagedDir(spark, dir, "branch_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       def slice(r: Int) =
         docs.filter(pmod(col("doc_id"), lit(5)) === r)
@@ -1851,11 +1703,10 @@ object SinkQ {
         "time travel to the expired v2 should fail loudly")
       require(scala.util.Try(S.read(spark, o, 1)).isSuccess,
         "expire ate the exp branch's fork-point version")
-      o
-    })
+    }
     Seq("exp", "main").map { b =>
       S.readBranch(spark, root, b)
-        .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content("n_rows", range = false))
         .select(lit(b).as("ref"), col("n_rows"), col("sum_chars"),
           lit(S.history(spark, root, b).count()).as("n_commits"))
     }.reduce(_.unionByName(_))
@@ -1874,14 +1725,10 @@ object SinkQ {
     * base table (main = the %4=0 base minus its %8=0 deletes, plus the
     * picked %4=1 slice INTACT — its %8=1 keys included).
     */
-  private val pickStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def cherryPickGate(spark: SparkSession, dir: String): DataFrame = {
     val S = graft.sources.Snapshots
-    val root = pickStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_pick_gate").toString
-      val docs = Tables.documents(spark, d)
+    val root = stagedDir(spark, dir, "pick_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       S.append(docs.filter(pmod(col("doc_id"), lit(4)) === 0)
         .repartition(2, col("doc_id")), o)                           // v1 main
@@ -1894,11 +1741,10 @@ object SinkQ {
       require(!scala.util.Try(S.fastForward(o, "main", "feat")).isSuccess,
         "diverged refs must refuse a fast-forward")
       S.cherryPick(spark, o, "main", 2)                              // v4 main
-      o
-    })
+    }
     Seq("feat", "main").map { b =>
       S.readBranch(spark, root, b)
-        .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content("n_rows", range = false))
         .select(lit(b).as("ref"), col("n_rows"), col("sum_chars"))
     }.reduce(_.unionByName(_))
   }
@@ -1913,14 +1759,10 @@ object SinkQ {
     * surviving states (main head, branch head, the pinned tag) against
     * DuckDB's recomputation from the source slices.
     */
-  private val retainStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def branchRetention(spark: SparkSession, dir: String): DataFrame = {
     val S = graft.sources.Snapshots
-    val root = retainStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_retain_gate").toString
-      val docs = Tables.documents(spark, d)
+    val root = stagedDir(spark, dir, "retain_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       def slice(r: Int) =
         docs.filter(pmod(col("doc_id"), lit(6)) === r)
@@ -1946,25 +1788,20 @@ object SinkQ {
         "the tagged mid-branch version must survive retention")
       require(S.history(spark, o, "logs").count() == 1,
         "the branch walk should truncate at the expired parent")
-      o
-    })
+    }
     Seq("main", "logs").map { b =>
       S.readBranch(spark, root, b)
-        .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content("n_rows", range = false))
         .select(lit(b).as("ref"), col("n_rows"), col("sum_chars"))
     }.reduce(_.unionByName(_))
       .unionByName(S.read(spark, root, 3)
-        .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("sum_chars"))
+        .transform(content("n_rows", range = false))
         .select(lit("pin3").as("ref"), col("n_rows"), col("sum_chars")))
   }
 
-  private val histStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def commitHistory(spark: SparkSession, dir: String): DataFrame = {
-    val root = histStaged.computeIfAbsent(dir, d => {
-      val o = Staging.tempDir("graft_hist_gate").toString
-      val docs = Tables.documents(spark, d)
+    val root = stagedDir(spark, dir, "hist_gate") { o =>
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       val S = graft.sources.Snapshots
       S.append(docs.repartition(2, col("doc_id")), o)                  // v1
@@ -1979,8 +1816,7 @@ object SinkQ {
         Map("n_chars" -> (col("n_chars") + 9L)))                       // v5
       S.deleteWhereMatching(spark, o,
         pmod(col("n_chars"), lit(2)) === 1 && col("source") === "src2") // v6
-      o
-    })
+    }
     graft.sources.Snapshots.history(spark, root)
   }
 

@@ -2096,9 +2096,13 @@ object Snapshots {
     * time travel, compaction purge and CDC (tombstoned preimages as
     * typed deletes, new images as inserts — the Iceberg
     * incremental-scan spelling of a MoR update) all compose from the
-    * existing machinery. Same concurrency rule as
-    * [[deleteWhereMatching]]: a rewrite in the unseen window aborts
-    * (positions would dangle), non-rewrite winners rebase.
+    * existing machinery. Concurrency: a rewrite in the unseen window
+    * aborts (positions would dangle), as for [[deleteWhereMatching]];
+    * so does any concurrent commit that removed one of the rows this
+    * update tombstones — a delete, another update or a merge of that
+    * row — with [[java.util.ConcurrentModificationException]] and the
+    * staged files deleted (the [[merge]] rule: rebasing would bring
+    * the deleted row back as its updated image). Other winners rebase.
     */
   def updateWhere(spark: SparkSession, root: String,
                   where: org.apache.spark.sql.Column,
@@ -2184,6 +2188,19 @@ object Snapshots {
             s"$parent] invalidated its post-image validation basis — " +
             "re-read and re-run")
       abortIfRewritten(root, base0, parent, "row update")
+      // merge's rule, not rebase: a row this update tombstones that a
+      // commit in the unseen window deleted (or re-tombstoned) would
+      // come back as its updated image — abort instead
+      if (parent != base0 && delFiles.nonEmpty &&
+          spark.read.parquet(delFiles.map(st.moved): _*)
+            .join(liveScan(spark, root, parent,
+              files(root, parent).filter(dataVersionOf(_) <= base0),
+              keepMeta = true)
+              .select(col(FileCol).as("file_path"), col(PosCol).as("pos")),
+              Seq("file_path", "pos"), "left_anti").limit(1).count() > 0)
+        throw new java.util.ConcurrentModificationException(
+          s"row update aborted: a concurrent commit in ($base0, $parent] " +
+            "deleted a row it updates — re-read and re-run")
       () => Attempt(widenedSchema(updated, root, parent),
         carriedRefs(root, parent) ++
           delFiles.map(f => s"#posdelete\t$f\t$v") ++ dataLines,

@@ -1,10 +1,13 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
-/** Temp-tree staging shared by the gate entries that write (SinkQ) or
-  * stream-from-directory (StreamQ). `File.deleteOnExit` is a no-op on
-  * non-empty directories, so every staged tree registers a
+/** Temp-tree staging under the gate entries that write (SinkQ) or
+  * stream-from-directory (StreamQ). Query modules do not call it
+  * directly: a memoized store is [[ArtifactStore.staged]], the one
+  * spelling, which takes its directory from [[tempDir]] and deletes it
+  * with [[delTree]] when the fill fails. `File.deleteOnExit` is a
+  * no-op on non-empty directories, so every staged tree registers a
   * recursive-delete shutdown hook instead — ONE implementation of the
   * lesson, not a copy per module.
   */
@@ -42,15 +45,5 @@ object Staging {
     val p = Files.createTempDirectory(prefix)
     pending.add(p)
     p
-  }
-
-  /** Stage a single file of `dir` into a fresh reaped temp directory
-    * (file-source streams read directories).
-    */
-  def stageCopy(dir: String, file: String): String = {
-    val stage = tempDir("graft_stage")
-    Files.copy(Paths.get(dir, file),
-      stage.resolve(file), StandardCopyOption.REPLACE_EXISTING)
-    stage.toString
   }
 }

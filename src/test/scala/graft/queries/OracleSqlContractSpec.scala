@@ -109,4 +109,23 @@ class OracleSqlContractSpec extends AnyFunSuite {
       s"round()->.cast(int) on the Spark side at: ${offenders.mkString(", ")} " +
         "— use floor(x*k + 0.5).cast(\"long\") (see the float-gate rule)")
   }
+
+  test("query modules memoize through ArtifactStore, not hand-rolled concurrent maps") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft/queries")
+    val forbidden = """ConcurrentHashMap|computeIfAbsent""".r
+    val walk = java.nio.file.Files.walk(root)
+    val offenders = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if forbidden.findFirstIn(line).isDefined =>
+            s"$p:${i + 1}"
+        }
+      }.toSeq
+    finally walk.close()
+    assert(offenders.isEmpty,
+      s"hand-rolled memo at: ${offenders.mkString(", ")} — stage stores " +
+        "with ArtifactStore.staged and memoize values with SessionMemo")
+  }
 }

@@ -290,12 +290,13 @@ class SnapshotDmlPropertySpec extends AnyFunSuite with SparkTestSession {
       Writer("deleteWhereMatching", 3L, (_, m) => m.filterNot(_._1 == 3L),
         r => () => S.deleteWhereMatching(spark, r, col("id") === 3L),
         Seq(None, None, cme)),
-      // an unchecked update rebases onto a non-rewrite winner: its
-      // tombstones name the rows it read, and its images of them are
-      // appended even when the winner deleted the key
+      // an unchecked update rebases onto a winner that leaves the rows
+      // it tombstones live (the disjoint append); a winner that deleted
+      // one of them aborts it, as a key conflict aborts a merge —
+      // rebasing would bring the deleted row back as its image
       Writer("updateWhere", 2L, (b, m) => m.filterNot(_._1 == 2L) ++ bump(b),
         r => () => S.updateWhere(spark, r, col("id") === 2L,
-          Map("v" -> (col("v") + 100L))), Seq(None, None, cme)),
+          Map("v" -> (col("v") + 100L))), Seq(None, cme, cme)),
       Writer("updateChecked", 2L, (b, m) => m.filterNot(_._1 == 2L) ++ bump(b),
         r => () => S.updateChecked(spark, r, col("id") === 2L,
           Map("v" -> (col("v") + 100L)), unique), Seq(cme, cme, cme)),

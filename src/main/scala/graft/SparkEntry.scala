@@ -60,18 +60,24 @@ object SparkEntry {
     df.orderBy(df.columns.map(c => df(c).asc_nulls_first).toIndexedSeq: _*)
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
-    val merged = modules.map(_._2).reduce(_ ++ _)
-    // a duplicated key across modules would SILENTLY shadow one
-    // implementation (Map ++ keeps the later entry) — the shadowed
-    // query would never bench or gate; fail at every entry point
-    require(merged.size == modules.map(_._2.size).sum,
-      "duplicate query key across modules: " +
-        modules.flatMap(_._2.keys).groupBy(identity)
-          .collect { case (k, vs) if vs.size > 1 => k }.mkString(", "))
-    merged.map { case (name, fn) =>
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    mergedOrFail(modules.map(_._2), "query").map { case (name, fn) =>
       name -> ((s: SparkSession, dir: String) => deterministicOrder(fn(s, dir)))
     }
+
+  /** The modules' maps merged into one, failing on a key two modules
+    * share: `Map ++` keeps the later entry, so a duplicate would
+    * SILENTLY shadow one implementation (never benched or gated) or
+    * replace one query's oracle SQL with another's — fail at every
+    * entry point instead.
+    */
+  private def mergedOrFail[V](maps: Seq[Map[String, V]], what: String): Map[String, V] = {
+    val merged = maps.reduce(_ ++ _)
+    require(merged.size == maps.map(_.size).sum,
+      s"duplicate $what key across modules: " +
+        maps.flatMap(_.keys).groupBy(identity)
+          .collect { case (k, vs) if vs.size > 1 => k }.mkString(", "))
+    merged
   }
 
   /** The module queries WITHOUT the deterministic-order wrapper — the
@@ -81,17 +87,8 @@ object SparkEntry {
     * own point), so timing it would charge every query a
     * harness-artifact sort. Verify keeps the wrapped [[queries]].
     */
-  private[graft] def rawQueries: Map[String, (SparkSession, String) => DataFrame] = {
-    val merged = modules.map(_._2).reduce(_ ++ _)
-    // same duplicate-key guard as [[queries]] (r18 review): without it
-    // the bench/explain surfaces silently shadowed a colliding query
-    // and timed the wrong implementation while Verify failed loudly
-    require(merged.size == modules.map(_._2.size).sum,
-      "duplicate query key across modules: " +
-        modules.flatMap(_._2.keys).groupBy(identity)
-          .collect { case (k, vs) if vs.size > 1 => k }.mkString(", "))
-    merged
-  }
+  private[graft] def rawQueries: Map[String, (SparkSession, String) => DataFrame] =
+    mergedOrFail(modules.map(_._2), "query")
 
   /** Gate-corpus cap preflights (r14, ADVICE): for each capped gate
     * whose oracle models the cap-free ideal, a guard returning
@@ -116,19 +113,11 @@ object SparkEntry {
     * the same parquet tables. Omitted keys get a weaker rows-only check.
     */
   def oracleSql: Map[String, String] = {
-    val merged = modules.map(_._3).reduce(_ ++ _)
-    // the guards queries/rawQueries carry, applied to the ORACLE side
-    // (r18 verdict #4, gate-harness review): a duplicated oracle key
-    // across modules silently replaced one query's SQL with another's
-    // (Map ++ keeps the later entry) — the gate would then compare the
-    // wrong semantics, or a typo'd oracle name would orphan its query
-    // into the driver's weaker rows-only check without anyone deciding
-    // that. Key-set equality (minus the explicit rows-only allowlist)
-    // makes either drift a build-time failure at every entry point.
-    require(merged.size == modules.map(_._3.size).sum,
-      "duplicate oracle key across modules: " +
-        modules.flatMap(_._3.keys).groupBy(identity)
-          .collect { case (k, vs) if vs.size > 1 => k }.mkString(", "))
+    val merged = mergedOrFail(modules.map(_._3), "oracle")
+    // a typo'd oracle name would orphan its query into the driver's
+    // weaker rows-only check without anyone deciding that: key-set
+    // equality (minus the explicit rows-only allowlist) makes that
+    // drift a failure at every entry point too
     val qKeys = modules.flatMap(_._2.keys).toSet
     val orphanOracles = merged.keySet -- qKeys
     val uncheckedQueries = qKeys -- merged.keySet -- rowsOnlyQueries

@@ -1,7 +1,6 @@
 package graft.clinical
 
 import org.apache.spark.sql.types._
-import java.sql.Timestamp
 
 /** Source-table schemas for the clinical weight data model.
   *
@@ -48,22 +47,3 @@ object Schemas {
     StructField("TreatmentTypeID", LongType),
     StructField("StartDate", TimestampType)))
 }
-
-/** Typed rows for the three source tables — type-safe ingestion surface
-  * (`Dataset[User]` etc.); the post-join wide table stays a DataFrame
-  * because the `cohort` grouping column is chosen at runtime.
-  */
-case class User(
-    UID: String, Name: String, LastName: String, Gender: String,
-    Unit: Long, Birthday: Timestamp, Age: Long, Height: Long,
-    CreatedDate: Timestamp, IsActive: Boolean, ClinicID: Long,
-    loginId: Option[Double], success: Boolean)
-
-case class WeightRecord(
-    MasterUserID: String, Weight: Double, BMI: Double, BodyFat: Double,
-    BodyWater: Double, Bone: Double, VisceralFat: Double, BMR: Double,
-    MuscleMass: Double, CreatedDate: Timestamp, UpdatedDate: Timestamp,
-    IsActive: Boolean, IsDelete: Boolean)
-
-case class Treatment(
-    MasterUserID: String, TreatmentTypeID: Long, StartDate: Timestamp)

@@ -1,13 +1,12 @@
 package graft.clinical
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Readers for the three clinical source tables.
   *
-  * CSV is the reference's only source format (pandas_DataModel.py:51-53);
-  * parquet is the scale path (columnar, splittable, predicate pushdown —
-  * CSV scans can't skip row groups). Explicit schemas make ingestion
+  * CSV is the reference's only source format (pandas_DataModel.py:51-53),
+  * and the only one read here. Explicit schemas make ingestion
   * deterministic; `mode=FAILFAST` surfaces malformed rows instead of
   * silently nulling them.
   */
@@ -27,25 +26,4 @@ object Sources {
     csv(spark, s"$dir/weights.csv", Schemas.weights)
   def treatmentsCsv(spark: SparkSession, dir: String): DataFrame =
     csv(spark, s"$dir/treatments.csv", Schemas.treatments)
-
-  def usersParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(Schemas.users).parquet(path)
-  def weightsParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(Schemas.weights).parquet(path)
-  def treatmentsParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(Schemas.treatments).parquet(path)
-
-  /** Typed views for compile-time field checks on the fixed-schema sources. */
-  def usersTyped(spark: SparkSession, dir: String): Dataset[User] = {
-    import spark.implicits._
-    usersCsv(spark, dir).as[User]
-  }
-  def weightsTyped(spark: SparkSession, dir: String): Dataset[WeightRecord] = {
-    import spark.implicits._
-    weightsCsv(spark, dir).as[WeightRecord]
-  }
-  def treatmentsTyped(spark: SparkSession, dir: String): Dataset[Treatment] = {
-    import spark.implicits._
-    treatmentsCsv(spark, dir).as[Treatment]
-  }
 }

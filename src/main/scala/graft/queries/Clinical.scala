@@ -64,10 +64,6 @@ object Clinical {
       (col("c_custkey") % 3 + 1).as("TreatmentTypeID"),
       timestamp_seconds(lit(tmtEpoch) + col("c_custkey") * 60).as("StartDate"))
 
-  private val outCols = Seq("UID", "Gender", "Age", "ClinicID", "Weight",
-    "Wts_CreatedDate", "week", "WIR", "PSW", "TSW", "TEW",
-    "treatment_TBWL", "patient_TBWL")
-
   /** Constructed-plan memo per (session, dir, variant).
     *
     * At production scale the bug-compat boundary successor table is a
@@ -86,39 +82,42 @@ object Clinical {
                       (build: => DataFrame): DataFrame =
     planMemo.get((spark, dir, variant))(build)
 
+  /** A clinical gate query: `cfg`'s pipeline over the synthetic
+    * tables, memoized per (session, dir, variant), in the gate
+    * projection ([[rounded]]).
+    */
+  private def pipelineQuery(spark: SparkSession, dir: String, variant: String,
+                            cfg: PipelineConfig): DataFrame =
+    memoized(spark, dir, variant) {
+      rounded(Pipeline.run(
+          syntheticUsers(spark, dir),
+          syntheticWeights(spark, dir),
+          syntheticTreatments(spark, dir), cfg), cfg.cohort)
+    }
+
+  /** The gate projection every clinical query shares: identity and
+    * cohort columns as they are, each weight metric rounded to 6
+    * places (the oracle rounds the same columns).
+    */
+  private def rounded(df: DataFrame, cohort: String): DataFrame =
+    df.select(
+      Seq("UID", "Gender", "Age", "ClinicID", "Wts_CreatedDate", cohort, "WIR")
+        .map(col) ++
+      Seq("Weight", "PSW", "TSW", "TEW", "treatment_TBWL", "patient_TBWL")
+        .map(c => round(col(c), 6).as(c)): _*)
+
   def pipeline(spark: SparkSession, dir: String): DataFrame =
-      memoized(spark, dir, "bugcompat") {
-    val cfg = PipelineConfig(cohort = "week", gender = "Male",
-      minAge = 20, maxAge = 60, clinicId = 1, dedup = false)
-    Pipeline.run(
-        syntheticUsers(spark, dir),
-        syntheticWeights(spark, dir),
-        syntheticTreatments(spark, dir), cfg)
-      .select(
-        (outCols.filterNot(Set("Weight", "PSW", "TSW", "TEW", "treatment_TBWL", "patient_TBWL"))
-          .map(col)) ++
-        Seq("Weight", "PSW", "TSW", "TEW", "treatment_TBWL", "patient_TBWL")
-          .map(c => round(col(c), 6).as(c)): _*)
-  }
+    pipelineQuery(spark, dir, "bugcompat", PipelineConfig(cohort = "week",
+      gender = "Male", minAge = 20, maxAge = 60, clinicId = 1, dedup = false))
 
   /** Strict-cohort variant: per-user lead, no single-partition window —
     * the shape that survives scale-up. Oracle differs only in the lead's
     * PARTITION BY.
     */
   def pipelineStrict(spark: SparkSession, dir: String): DataFrame =
-      memoized(spark, dir, "strict") {
-    val cfg = PipelineConfig(cohort = "week", gender = "Male",
-      minAge = 20, maxAge = 60, clinicId = 1, dedup = false, strictCohorts = true)
-    Pipeline.run(
-        syntheticUsers(spark, dir),
-        syntheticWeights(spark, dir),
-        syntheticTreatments(spark, dir), cfg)
-      .select(
-        (outCols.filterNot(Set("Weight", "PSW", "TSW", "TEW", "treatment_TBWL", "patient_TBWL"))
-          .map(col)) ++
-        Seq("Weight", "PSW", "TSW", "TEW", "treatment_TBWL", "patient_TBWL")
-          .map(c => round(col(c), 6).as(c)): _*)
-  }
+    pipelineQuery(spark, dir, "strict", PipelineConfig(cohort = "week",
+      gender = "Male", minAge = 20, maxAge = 60, clinicId = 1, dedup = false,
+      strictCohorts = true))
 
   /** DuckDB re-statement of the synthetic tables + pipeline. Same
     * arithmetic, same window frames, same null ordering.
@@ -224,19 +223,9 @@ object Clinical {
     * pipeline, cohort column swapped at runtime.
     */
   def pipelineMonth(spark: SparkSession, dir: String): DataFrame =
-      memoized(spark, dir, "month") {
-    val cfg = PipelineConfig(cohort = "month", gender = "Female",
-      minAge = 20, maxAge = 60, clinicId = 2, dedup = false, strictCohorts = true)
-    Pipeline.run(
-        syntheticUsers(spark, dir),
-        syntheticWeights(spark, dir),
-        syntheticTreatments(spark, dir), cfg)
-      .select(
-        Seq("UID", "Gender", "Age", "ClinicID", "Wts_CreatedDate", "month", "WIR")
-          .map(col) ++
-        Seq("Weight", "PSW", "TSW", "TEW", "treatment_TBWL", "patient_TBWL")
-          .map(c => round(col(c), 6).as(c)): _*)
-  }
+    pipelineQuery(spark, dir, "month", PipelineConfig(cohort = "month",
+      gender = "Female", minAge = 20, maxAge = 60, clinicId = 2, dedup = false,
+      strictCohorts = true))
 
   private def oracleMonth: String =
     oracle("PARTITION BY UID", cohort = "month",
@@ -266,11 +255,7 @@ object Clinical {
         cohortExpr = (year(col("Wts_CreatedDate")) * 100 +
           month(col("Wts_CreatedDate"))).cast("int"),
         cohortName = "calmonth", cfg)
-      .select(
-        Seq("UID", "Gender", "Age", "ClinicID", "Wts_CreatedDate", "calmonth", "WIR")
-          .map(col) ++
-        Seq("Weight", "PSW", "TSW", "TEW", "treatment_TBWL", "patient_TBWL")
-          .map(c => round(col(c), 6).as(c)): _*)
+      .transform(rounded(_, "calmonth"))
   }
 
   private def oracleExprCohort: String =

@@ -452,11 +452,13 @@ object Snapshots {
     */
   private def schemaAt(spark: SparkSession, root: String, v: Int)
       : org.apache.spark.sql.types.StructType =
-    schemaOf(root, v).getOrElse(rawScan(spark, root, v, files(root, v)).schema)
+    schemaOf(root, v).getOrElse(spark.read.parquet(files(root, v): _*).schema)
 
   /** Files of snapshot `v`, in manifest order. */
-  def files(root: String, v: Int): Seq[String] =
-    entries(root, v).map(_.split('\t').head)
+  def files(root: String, v: Int): Seq[String] = filesOf(entries(root, v))
+
+  private def filesOf(entries: Seq[String]): Seq[String] =
+    entries.map(_.split('\t').head)
 
   /** Latest committed version, 0 if the table is empty. Derived from
     * the MANIFEST DIRECTORY (max committed number), not the `_latest`
@@ -1353,39 +1355,61 @@ object Snapshots {
 
   /** The manifest files of snapshot `v` whose [column min, max] range
     * overlaps [lo, hi] — the file-skipping half of stats-based pruning.
-    *
-    * Two-level fast path (r13): a `#segment` pointer's aggregate stats
-    * decide whole segments WITHOUT opening them — a non-overlapping (or
-    * column-less, i.e. nothing inside can match) segment contributes
-    * zero I/O; only `#nostats` segments (legacy entries swept into a
-    * segment) and overlapping segments resolve to per-file checks. At
-    * 100 TB this is the difference between planning from k pointer
-    * lines and re-reading an O(files) manifest per query.
+    * A `#segment` pointer's aggregate stats decide whole segments
+    * WITHOUT opening them ([[prunedWalk]]); only `#nostats` segments
+    * (legacy entries swept into a segment) and overlapping segments
+    * resolve to per-file checks.
     */
   def prunedFiles(spark: SparkSession, root: String, version: Int,
-                  column: String, lo: Long, hi: Long): Seq[String] = {
+                  column: String, lo: Long, hi: Long): Seq[String] =
+    prunedWalk(root, bodyRefs(root, version),
+      statsPrune(spark, root, version, column, lo, hi))
+
+  /** [[prunedFiles]]' rule: a pointer whose aggregate range misses
+    * [lo, hi], or that carries no token for the column (no entry
+    * inside can match), skips unopened; a `#nostats` pointer always
+    * opens. An entry survives when its range — from its stats token
+    * or, for a pre-r9 entry, a counted footer read — overlaps.
+    */
+  private def statsPrune(spark: SparkSession, root: String, version: Int,
+                         column: String, lo: Long, hi: Long): FilePrune = {
     requireStatsPrunable(root, version, column)
-    val rootP = Paths.get(root)
     val conf = spark.sparkContext.hadoopConfiguration
-    def fileOverlap(line: String): Option[String] = {
-      if (line.startsWith("#delete\t") || line.startsWith("#posdelete\t"))
-        return None
-      entryStatsFor(conf, line, column)
-        .collect { case (f, mn, mx) if mx >= lo && mn <= hi => f }
-    }
-    bodyRefs(root, version).flatMap { ref =>
-      if (ref.startsWith(SegmentPtr)) {
-        val toks = ref.split('\t').drop(3)
-        val segmentCanMatch =
-          toks.contains("#nostats") ||
-            toks.collectFirst {
-              case t if t.startsWith(column + "=") =>
-                val b = t.substring(column.length + 1).split("\\.\\.")
-                b(1).toLong >= lo && b(0).toLong <= hi
-            }.getOrElse(false) // no agg token: no entry inside can match
-        if (!segmentCanMatch) Nil
-        else resolveBody(rootP, Seq(ref)).flatMap(fileOverlap)
-      } else fileOverlap(ref).toSeq
+    def overlaps(mn: Long, mx: Long) = mx >= lo && mn <= hi
+    FilePrune(
+      skipSegment = toks => !toks.contains("#nostats") &&
+        !toks.collectFirst {
+          case t if t.startsWith(column + "=") =>
+            val b = t.substring(column.length + 1).split("\\.\\.")
+            overlaps(b(0).toLong, b(1).toLong)
+        }.getOrElse(false),
+      keepEntry = line => entryStatsFor(conf, line, column)
+        .exists { case (_, mn, mx) => overlaps(mn, mx) })
+  }
+
+  /** What one file-pruning rule decides from manifest text alone:
+    * whether a `#segment` pointer's aggregate tokens prove that no
+    * entry inside survives (the segment is then skipped unopened), and
+    * whether one data entry keeps its file. A skip must be sound:
+    * every entry of a skipped segment fails `keepEntry` too.
+    */
+  private final case class FilePrune(skipSegment: Array[String] => Boolean,
+                                     keepEntry: String => Boolean)
+
+  /** THE file-pruning walk behind [[prunedFiles]],
+    * [[partitionPrunedFiles]] and [[bloomPrunedFiles]], in manifest
+    * order. Over a version's body refs it opens only the segments `p`
+    * cannot skip (the two-level fast path, r13: at 100 TB, planning
+    * from k pointer lines instead of an O(files) manifest); over an
+    * already resolved body, which holds no pointers, it is the plain
+    * entry filter. Delete lines never survive.
+    */
+  private def prunedWalk(root: String, refs: Seq[String], p: FilePrune): Seq[String] = {
+    def kept(lines: Seq[String]) = filesOf(entriesOf(lines).filter(p.keepEntry))
+    refs.flatMap { ref =>
+      if (!ref.startsWith(SegmentPtr)) kept(Seq(ref))
+      else if (p.skipSegment(ref.split('\t').drop(3))) Nil
+      else kept(resolveBody(Paths.get(root), Seq(ref)))
     }
   }
 
@@ -1684,10 +1708,12 @@ object Snapshots {
     */
   def partitionPrunedFiles(root: String, version: Int,
                            specs: Seq[PartitionSpec],
-                           literal: String): Seq[String] = {
+                           literal: String): Seq[String] =
+    prunedWalk(root, bodyRefs(root, version), partitionPrune(specs, literal))
+
+  private def partitionPrune(specs: Seq[PartitionSpec], literal: String): FilePrune = {
     require(specs.nonEmpty && specs.map(_.column).distinct.size == 1,
       s"point lookup needs >= 1 spec, all on one column: $specs")
-    val rootP = Paths.get(root)
     // the manifest token carries Spark's Hive-ESCAPED partition value
     // (TSV/line-grammar safety; see appendPartitioned) — but manifests
     // written BEFORE that fix stored the RAW value (r16 ADVICE), so a
@@ -1706,40 +1732,31 @@ object Snapshots {
         Set(raw, esc).map(v => s"#part:${s.tokenName}=$v"),
         s"#partagg:${s.tokenName}=", Set(raw, esc))
     }
-    def fileKeep(line: String): Option[String] = {
-      if (line.startsWith("#delete\t") || line.startsWith("#posdelete\t"))
-        return None
-      val parts = line.split('\t')
-      val pruned = wants.exists { case (prefix, wantSet, _, _) =>
-        parts.exists(_.startsWith(prefix)) && !parts.exists(wantSet.contains)
-      }
-      if (pruned) None else Some(parts.head)
-    }
-    // two-level fast path (r13): a pointer whose `#partagg:` summary
-    // for some spec's transform covers EVERY entry and lacks the
-    // literal's home value cannot contain a keepable file — sound
-    // because every entry then carries that transform's token with a
-    // different value, i.e. every entry prunes individually
-    bodyRefs(root, version).flatMap { ref =>
-      if (ref.startsWith(SegmentPtr)) {
-        val toks = ref.split('\t').drop(3)
-        val skippable = wants.exists { case (_, _, aggPrefix, wantSet) =>
-          toks.collectFirst { case t if t.startsWith(aggPrefix) =>
-            // both spellings, same legacy tolerance as fileKeep. The
-            // comma-split is sound for ANY literal — including one
-            // containing ',' — because a summary is only ever WRITTEN
-            // when every distinct value matches [A-Za-z0-9_.-]+
-            // (segmentAggTokens, guard present since the token's
-            // birth), so an existing summary PROVES the segment holds
-            // no comma/percent-valued partition: skipping on a
-            // no-fragment-match is then correct, never a false prune.
-            !t.stripPrefix(aggPrefix).split(',').exists(wantSet.contains)
-          }.getOrElse(false)
+    FilePrune(
+      // a pointer whose `#partagg:` summary for some spec's transform
+      // covers EVERY entry and lacks the literal's home value cannot
+      // contain a keepable file — sound because every entry then
+      // carries that transform's token with a different value, i.e.
+      // every entry prunes individually
+      skipSegment = toks => wants.exists { case (_, _, aggPrefix, wantSet) =>
+        toks.collectFirst { case t if t.startsWith(aggPrefix) =>
+          // both spellings, same legacy tolerance as keepEntry. The
+          // comma-split is sound for ANY literal — including one
+          // containing ',' — because a summary is only ever WRITTEN
+          // when every distinct value matches [A-Za-z0-9_.-]+
+          // (segmentAggTokens, guard present since the token's
+          // birth), so an existing summary PROVES the segment holds
+          // no comma/percent-valued partition: skipping on a
+          // no-fragment-match is then correct, never a false prune.
+          !t.stripPrefix(aggPrefix).split(',').exists(wantSet.contains)
+        }.getOrElse(false)
+      },
+      keepEntry = { line =>
+        val parts = line.split('\t')
+        !wants.exists { case (prefix, wantSet, _, _) =>
+          parts.exists(_.startsWith(prefix)) && !parts.exists(wantSet.contains)
         }
-        if (skippable) Nil
-        else resolveBody(rootP, Seq(ref)).flatMap(fileKeep)
-      } else fileKeep(ref).toSeq
-    }
+      })
   }
 
   /** Partition-pruned point lookup: the manifest routes to one
@@ -1756,15 +1773,9 @@ object Snapshots {
   def readPartitionPruned(spark: SparkSession, root: String, version: Int,
                           specs: Seq[PartitionSpec],
                           literal: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val paths = partitionPrunedFiles(root, version, specs, literal)
-    val base = schemaOf(root, version) match {
-      case Some(s) if paths.isEmpty =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case _ => rawScan(spark, root, version, paths)
-    }
-    base.where(col(specs.head.column).cast("string") === literal)
+    val prune = partitionPrune(specs, literal) // checks specs before .head
+    prunedRead(spark, root, version, prune,
+      org.apache.spark.sql.functions.col(specs.head.column).cast("string") === literal)
   }
 
   /** Files of snapshot `v` that MAY contain `value` in `column`, per
@@ -1777,19 +1788,19 @@ object Snapshots {
     * or footer I/O.
     */
   def bloomPrunedFiles(root: String, version: Int, column: String,
-                       value: String): Seq[String] = {
+                       value: String): Seq[String] =
+    prunedWalk(root, bodyRefs(root, version), bloomPrune(column, value))
+
+  private def bloomPrune(column: String, value: String): FilePrune = {
     val bits = (0 until BloomHashes)
       .map(j => (md5Low60(value + "#" + j) % BloomBits).toInt)
-    entries(root, version).flatMap { line =>
-      val parts = line.split('\t')
-      parts.collectFirst {
-        case t if t.startsWith(s"#bloom:$column=") =>
-          t.stripPrefix(s"#bloom:$column=")
-      } match {
-        case Some(hex) if !bits.forall(hexHasBit(hex, _)) => None
-        case _ => Some(parts.head)
-      }
-    }
+    val token = s"#bloom:$column="
+    FilePrune(
+      // a pointer carries no bloom aggregate: every segment opens
+      skipSegment = _ => false,
+      keepEntry = _.split('\t').collectFirst {
+        case t if t.startsWith(token) => t.stripPrefix(token)
+      }.forall(hex => bits.forall(hexHasBit(hex, _))))
   }
 
   /** Bloom-pruned point lookup: scan only the bloom-surviving files,
@@ -1798,17 +1809,9 @@ object Snapshots {
     * [[readPruned]]).
     */
   def readBloomPruned(spark: SparkSession, root: String, version: Int,
-                      column: String, value: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val paths = bloomPrunedFiles(root, version, column, value)
-    val base = schemaOf(root, version) match {
-      case Some(s) if paths.isEmpty =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case _ => rawScan(spark, root, version, paths)
-    }
-    base.where(col(column) === value)
-  }
+                      column: String, value: String): DataFrame =
+    prunedRead(spark, root, version, bloomPrune(column, value),
+      org.apache.spark.sql.functions.col(column) === value)
 
   /** Stats-pruned time-travel read: scan ONLY the files whose footer
     * min/max overlap [lo, hi], then apply the exact row predicate
@@ -1817,14 +1820,22 @@ object Snapshots {
     * [[compact]] on `column`, a narrow range touches one file of N.
     */
   def readPruned(spark: SparkSession, root: String, version: Int,
-                 column: String, lo: Long, hi: Long): DataFrame = {
-    val keep = prunedFiles(spark, root, version, column, lo, hi)
-    val base =
-      if (keep.nonEmpty) scanWithDeletes(spark, root, version, keep)
-      // all files skipped: empty relation, original schema
-      else read(spark, root, version)
-        .where(org.apache.spark.sql.functions.lit(false))
-    base.where(org.apache.spark.sql.functions.col(column).between(lo, hi))
+                 column: String, lo: Long, hi: Long): DataFrame =
+    prunedRead(spark, root, version, statsPrune(spark, root, version, column, lo, hi),
+      org.apache.spark.sql.functions.col(column).between(lo, hi))
+
+  /** THE pruned read: the files of snapshot `v` that `prune` keeps,
+    * through the merge-on-read scan ([[mergeOnRead]]), then the exact
+    * `predicate`. The body resolves once: its delete lines scope the
+    * scan, and [[prunedWalk]] over it is the plain entry filter, which
+    * keeps exactly the files the pointer-level walk keeps.
+    */
+  private def prunedRead(spark: SparkSession, root: String, v: Int,
+                         prune: FilePrune,
+                         predicate: org.apache.spark.sql.Column): DataFrame = {
+    val lines = rawLines(root, v)
+    mergeOnRead(spark, root, v, lines, prunedWalk(root, lines, prune),
+      keepMeta = false).where(predicate)
   }
 
   /** Time-travel read of snapshot `v` (defaults to latest), under the
@@ -1833,103 +1844,140 @@ object Snapshots {
     * the schema), and reading a post-evolution version null-fills the
     * new columns for rows in pre-evolution files (explicit-schema
     * parquet reads clip by name — no mergeSchema footer sweep over N
-    * files at planning time). Equality-delete sets in the manifest are
-    * MERGED ON READ ([[deleteWhere]]).
+    * files at planning time). Delete sets in the manifest are MERGED
+    * ON READ ([[mergeOnRead]]).
     */
   def read(spark: SparkSession, root: String, version: Int = -1): DataFrame = {
     val v = if (version == -1) headOf(root, "main") else version
-    // ONE body resolve feeds the file list and both delete-set views
-    // (r16): files() + deleteSets() + posDeleteSets() each re-resolved
-    // every segment — 3× O(table files) driver strings and segment
-    // I/O per read at the 10⁷-entry scale this store is sized for
+    // ONE body resolve feeds the file list and both delete flavors
     val lines = rawLines(root, v)
-    liveScanLines(spark, root, v,
-      entriesOf(lines).map(_.split('\t').head), lines, keepMeta = false)
+    mergeOnRead(spark, root, v, lines, filesOf(entriesOf(lines)), keepMeta = false)
   }
 
-  private def rawScan(spark: SparkSession, root: String, v: Int,
-                      paths: Seq[String]): DataFrame =
-    schemaOf(root, v) match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
-
-  /** Scan `paths` of snapshot `v` with its equality-delete sets merged
-    * on read, sequence-scoped: a delete committed at version d applies
-    * ONLY to data files from versions < d, so rows re-appended after
-    * the delete survive (the Iceberg v2 sequence-number contract —
-    * without it a re-insert of a deleted key would vanish). Data files
-    * are grouped by commit version and each group anti-joins exactly
-    * the delete sets that outrank it; a version with no applicable
-    * deletes scans clean. This per-group plan IS the production shape:
-    * split planning assigns each data file its applicable delete
-    * files, and the anti-join keys shuffle together at any scale.
+  /** A plain scan of `paths` under snapshot `v`'s schema, no delete
+    * applied: what [[mergeOnRead]] returns when no delete set outranks
+    * a scanned file, and the scan of a commit's OWN new files (which
+    * no delete in the commit or before it outranks). No paths is the
+    * empty relation under that schema.
     */
-  private def scanWithDeletes(spark: SparkSession, root: String, v: Int,
-                              paths: Seq[String]): DataFrame =
-    liveScan(spark, root, v, paths, keepMeta = false)
+  private def rawScan(spark: SparkSession, root: String, v: Int,
+                      paths: Seq[String]): DataFrame = {
+    val schema = schemaAt(spark, root, v)
+    if (paths.isEmpty)
+      spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schema)
+    else spark.read.schema(schema).parquet(paths: _*)
+  }
 
-  // reserved live-scan metadata column names (file identity + row
-  // position — the join keys of positional tombstones)
+  // reserved merge-on-read column names: the physical row identity
+  // (the join keys of positional tombstones), the data file's
+  // sequence number, and the delete side's keys and sequence number
   private val FileCol = "_gf_file"
   private val PosCol = "_gf_pos"
+  private val SeqCol = "_gf_seq"
+  private val DelKey = "_gf_dkey"
+  private val DelFile = "_gf_dfile"
+  private val DelPos = "_gf_dpos"
+  private val DelSeq = "_gf_dseq"
 
-  /** [[scanWithDeletes]] generalized over BOTH delete flavors, with an
-    * optional (file, pos) identity carried through: equality sets
-    * anti-join on their key column, positional sets on the physical
-    * row identity `_metadata` exposes — each scoped to data files of
-    * OLDER commits, exactly the sequence rule. Metadata columns are
-    * attached only when a positional set (or the caller) needs them:
-    * the common equality-only plan is byte-identical to the old one.
+  /** MERGE-ON-READ — the one scan behind every read of live rows:
+    * `paths` of snapshot `v` (whose resolved body is `lines`) minus
+    * the rows its delete sets kill, under the Iceberg v2 sequence
+    * rule: a delete committed at version d applies ONLY to data files
+    * committed before d. So a key re-inserted after its delete
+    * survives, an update's post-image outlives its own commit's
+    * tombstones, and time travel to a pre-delete version sees every
+    * row. The plan's shape depends only on WHICH delete flavors and
+    * equality-key columns outrank a scanned file, never on how many
+    * versions or sets there are:
+    *   - one scan of every file, each row tagged with its file's data
+    *     sequence number — [[dataVersionOf]] on the driver, looked up
+    *     per row by `_metadata.file_path` in a literal map;
+    *   - per equality-key column, one scan of its delete files under
+    *     the version schema's type for the column (sets written before
+    *     an int → long widening read as long), each key tagged with
+    *     its `#delete` version and reduced to max(seq), then one
+    *     `left_anti` join on `key AND del.seq > data.seq` — a null key
+    *     never matches;
+    *   - one `left_anti` join on (file, pos) for the positional sets,
+    *     with the same sequence condition.
+    * When no delete set outranks a scanned file this is the plain
+    * scan with no metadata columns. `keepMeta` keeps the (file, pos)
+    * row identity for row-level DML; an empty file set then gets typed
+    * null identity columns, so DML on an all-deleted version commits a
+    * clean no-op instead of failing to resolve.
     */
-  private def liveScan(spark: SparkSession, root: String, v: Int,
-                       paths: Seq[String], keepMeta: Boolean): DataFrame =
-    liveScanLines(spark, root, v, paths, rawLines(root, v), keepMeta)
-
-  /** [[liveScan]] over a PRE-RESOLVED body — the single-resolve read
-    * path's core (r16): both delete-set views derive from `lines`
-    * instead of re-resolving the manifest segments.
-    */
-  private def liveScanLines(spark: SparkSession, root: String, v: Int,
-                            paths: Seq[String], lines: Seq[String],
-                            keepMeta: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val dels = deleteSetsOf(lines)
-    val pdels = posDeleteSetsOf(lines)
-    def withMeta(df: DataFrame): DataFrame =
-      df.select(col("*"), col("_metadata.file_path").as(FileCol),
-        col("_metadata.row_index").as(PosCol))
-    if (dels.isEmpty && pdels.isEmpty || paths.isEmpty) {
-      val base = rawScan(spark, root, v, paths)
-      if (keepMeta) {
-        // an empty file set has no _metadata source — attach typed null
-        // identity columns so row-level DML on an all-deleted version
-        // commits a clean no-op instead of failing to resolve
-        if (paths.nonEmpty) withMeta(base)
-        else base.select(col("*"),
-          org.apache.spark.sql.functions.lit(null).cast("string").as(FileCol),
-          org.apache.spark.sql.functions.lit(null).cast("bigint").as(PosCol))
-      } else base
-    } else paths.groupBy(dataVersionOf).toSeq.sortBy(_._1)
-      .map { case (dv, group) =>
-        val needMeta = keepMeta || pdels.exists(_._1 > dv)
-        val base0 = rawScan(spark, root, v, group)
-        val base = if (needMeta) withMeta(base0) else base0
-        val afterEq = dels.filter(_._1._1 > dv).foldLeft(base) {
-          case (df, ((_, column), delFiles)) =>
-            df.join(spark.read.parquet(delFiles: _*)
-              .select(col(column)).distinct(), Seq(column), "left_anti")
+  private def mergeOnRead(spark: SparkSession, root: String, v: Int,
+                          lines: Seq[String], paths: Seq[String],
+                          keepMeta: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val oldest = paths.map(dataVersionOf).minOption.getOrElse(Int.MaxValue)
+    val eqSets = deleteSetsOf(lines).filter(_._1._1 > oldest)
+    val posSets = posDeleteSetsOf(lines).filter(_._1 > oldest)
+    val base = rawScan(spark, root, v, paths)
+    val filePath = col("_metadata.file_path")
+    val identity = Seq(col("*"), filePath.as(FileCol), col("_metadata.row_index").as(PosCol))
+    if (eqSets.isEmpty && posSets.isEmpty) {
+      if (!keepMeta) base
+      else if (paths.nonEmpty) base.select(identity: _*)
+      else base.select(col("*"), lit(null).cast("string").as(FileCol),
+        lit(null).cast("bigint").as(PosCol))
+    } else {
+      // the sequence number of the file a row came from: the driver's
+      // number per file, keyed by the local path as `_metadata` spells
+      // it (`file:` URI, escaped); a file missing from the map fails
+      // loudly instead of silently escaping every delete
+      def seqOf(bySeq: Seq[(Int, Seq[String])]): org.apache.spark.sql.Column = {
+        val m = bySeq.flatMap { case (seq, fs) => fs.map(f =>
+          new org.apache.hadoop.fs.Path("file", null, f).toUri.toString -> seq)
+        }.toMap
+        coalesce(element_at(typedLit(m), filePath),
+          raise_error(concat(lit("file outside the snapshot's manifest: "), filePath)))
+      }
+      val data = base.select(
+        identity :+ seqOf(paths.groupBy(dataVersionOf).toSeq).as(SeqCol): _*)
+      val afterEq = eqSets.groupBy(_._1._2).toSeq.sortBy(_._1)
+        .foldLeft(data) { case (df, (column, sets)) =>
+          val keys = spark.read
+            .schema(org.apache.spark.sql.types.StructType(Seq(base.schema(column))))
+            .parquet(sets.flatMap(_._2): _*)
+            .select(col(column).as(DelKey),
+              seqOf(sets.map { case ((seq, _), fs) => seq -> fs }).as(DelSeq))
+            .groupBy(DelKey).agg(max(DelSeq).as(DelSeq))
+          df.join(keys, col(column) === col(DelKey) && col(DelSeq) > col(SeqCol),
+            "left_anti")
         }
-        val afterPos = pdels.filter(_._1 > dv).foldLeft(afterEq) {
-          case (df, (_, delFiles)) =>
-            df.join(spark.read.parquet(delFiles: _*)
-              .select(col("file_path").as(FileCol), col("pos").as(PosCol))
-              .distinct(), Seq(FileCol, PosCol), "left_anti")
-        }
-        if (needMeta && !keepMeta) afterPos.drop(FileCol, PosCol)
-        else afterPos
-      }.reduce(_.unionByName(_))
+      val live =
+        if (posSets.isEmpty) afterEq
+        else afterEq.join(
+          spark.read.parquet(posSets.flatMap(_._2): _*)
+            .select(col("file_path").as(DelFile), col("pos").as(DelPos),
+              seqOf(posSets).as(DelSeq))
+            .groupBy(DelFile, DelPos).agg(max(DelSeq).as(DelSeq)),
+          col(FileCol) === col(DelFile) && col(PosCol) === col(DelPos) &&
+            col(DelSeq) > col(SeqCol), "left_anti")
+      if (keepMeta) live.drop(SeqCol) else live.drop(SeqCol, FileCol, PosCol)
+    }
   }
+
+  /** Live rows of snapshot `v` with their physical (file, pos)
+    * identity — what row-level DML tombstones and CDC resolves
+    * positional preimages through — optionally restricted to the
+    * files `keepFile` accepts.
+    */
+  private def identifiedRows(spark: SparkSession, root: String, v: Int,
+                             keepFile: String => Boolean = _ => true): DataFrame = {
+    val lines = rawLines(root, v)
+    mergeOnRead(spark, root, v, lines, filesOf(entriesOf(lines)).filter(keepFile),
+      keepMeta = true)
+  }
+
+  /** (file, pos) tombstones of positional delete files, as identity
+    * columns to semi-join [[identifiedRows]] against.
+    */
+  private def tombstones(spark: SparkSession, delFiles: Seq[String]): DataFrame =
+    spark.read.parquet(delFiles: _*).select(
+      org.apache.spark.sql.functions.col("file_path").as(FileCol),
+      org.apache.spark.sql.functions.col("pos").as(PosCol)).distinct()
 
   /** EQUALITY DELETE (merge-on-read, Iceberg v2 shape): commit a new
     * version whose manifest carries the previous entries PLUS a delete
@@ -2072,7 +2120,7 @@ object Snapshots {
     require(base0 > 0, s"nothing to delete from under $root")
     val st = new Staged(root, Seq("delete"))
     val delFiles = writeStaged(
-      liveScan(spark, root, base0, files(root, base0), keepMeta = true)
+      identifiedRows(spark, root, base0)
         .filter(predicate)
         .select(col(FileCol).as("file_path"), col(PosCol).as("pos"))
         .distinct(), st.dir("delete"))
@@ -2149,8 +2197,7 @@ object Snapshots {
     require(base0 > 0, s"nothing to update under $root")
     require(set.nonEmpty, "update needs at least one SET column")
     val st = new Staged(root, Seq("data", "delete"))
-    val matching = liveScan(spark, root, base0, files(root, base0),
-      keepMeta = true).filter(where)
+    val matching = identifiedRows(spark, root, base0).filter(where)
     val delFiles = writeStaged(
       matching.select(col(FileCol).as("file_path"), col(PosCol).as("pos"))
         .distinct(), st.dir("delete"))
@@ -2193,9 +2240,7 @@ object Snapshots {
       // come back as its updated image — abort instead
       if (parent != base0 && delFiles.nonEmpty &&
           spark.read.parquet(delFiles.map(st.moved): _*)
-            .join(liveScan(spark, root, parent,
-              files(root, parent).filter(dataVersionOf(_) <= base0),
-              keepMeta = true)
+            .join(identifiedRows(spark, root, parent, dataVersionOf(_) <= base0)
               .select(col(FileCol).as("file_path"), col(PosCol).as("pos")),
               Seq("file_path", "pos"), "left_anti").limit(1).count() > 0)
         throw new java.util.ConcurrentModificationException(
@@ -2363,10 +2408,8 @@ object Snapshots {
           case (_, fs) =>
             val p = parentOf(root, w)
             schemaOf(root, p).forall(_.fieldNames.contains(column)) &&
-            liveScan(spark, root, p, files(root, p), keepMeta = true)
-              .join(spark.read.parquet(fs: _*)
-                .select(col("file_path").as(FileCol), col("pos").as(PosCol))
-                .distinct(), Seq(FileCol, PosCol), "left_semi")
+            identifiedRows(spark, root, p)
+              .join(tombstones(spark, fs), Seq(FileCol, PosCol), "left_semi")
               .select(col(column))
               .join(keys, Seq(column), "left_semi").limit(1).count() > 0
         }
@@ -2423,10 +2466,8 @@ object Snapshots {
         // parent-version rows at exactly those physical positions
         val posAtW = posDeleteSets(root, w).filter(_._1 == w)
         val posTyped: Seq[DataFrame] = posAtW.map { case (_, delFiles) =>
-          liveScan(spark, root, prevW, files(root, prevW), keepMeta = true)
-            .join(spark.read.parquet(delFiles: _*)
-              .select(col("file_path").as(FileCol), col("pos").as(PosCol))
-              .distinct(), Seq(FileCol, PosCol), "left_semi")
+          identifiedRows(spark, root, prevW)
+            .join(tombstones(spark, delFiles), Seq(FileCol, PosCol), "left_semi")
             .drop(FileCol, PosCol)
             .withColumn("_change_type", lit("delete"))
         }

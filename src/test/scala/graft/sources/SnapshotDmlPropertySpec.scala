@@ -20,9 +20,15 @@ class SnapshotDmlPropertySpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
 
   private sealed trait Op
-  private case class Append(keys: Seq[Long], delta: Long) extends Op
+  // `asInt` writes the ids as int (the table widens to long on the
+  // first long write); `layout` picks the file layout the pruned
+  // reads route through
+  private case class Append(keys: Seq[Long], delta: Long, asInt: Boolean = false,
+                            layout: Layout = Plain) extends Op
   private case class Merge(keys: Seq[Long], delta: Long) extends Op
-  private case class Delete(keys: Seq[Long]) extends Op
+  private case class Delete(keys: Seq[Long], asInt: Boolean = false) extends Op
+  // positional tombstones over every live row whose v is a multiple
+  private case class DeleteMatching(mod: Long) extends Op
   private case class Update(mod: Long, delta: Long) extends Op
   private case object Compact extends Op
   private case object CompactManifests extends Op
@@ -46,6 +52,12 @@ class SnapshotDmlPropertySpec extends AnyFunSuite with SparkTestSession {
   // path — must be row-, scoping-, and history-invisible exactly like
   // the driver-sort spelling it replaces above the memory threshold
   private case object RewriteManifestsDistributed extends Op
+
+  private sealed trait Layout
+  private case object Plain extends Layout
+  private case object Bloom extends Layout
+  private case object Bucketed extends Layout
+  private val bucketSpec = Snapshots.BucketPartition("id", 4)
 
   private val keysGen = Gen.nonEmptyListOf(Gen.choose(0L, 39L)).map(_.distinct)
   private val opGen: Gen[Op] = Gen.frequency(
@@ -74,11 +86,29 @@ class SnapshotDmlPropertySpec extends AnyFunSuite with SparkTestSession {
   private val vChecks = Seq(
     graft.operators.QualityChecks.RowPredicate("v_nonneg", col("v") < 0L))
 
+  // the merge-on-read input: keys 2 and 3 die and come back across
+  // versions under both delete flavors, with equality sets on `id`
+  // written before and after the int -> long widening
+  private val reinsertScript: Seq[Op] = Seq(
+    Append((0L to 9L), 0L, asInt = true, layout = Bucketed),
+    Delete(Seq(1L, 2L, 3L), asInt = true),
+    Append(Seq(1L, 2L, 3L), 100L, asInt = true, layout = Bloom),
+    DeleteMatching(3L),
+    Append(Seq(2L, 3L, 4L, 11L), 200L, layout = Bloom),
+    Delete(Seq(2L, 3L, 11L)),
+    Merge(Seq(3L, 5L), 7L),
+    Append(Seq(2L, 11L), 400L, layout = Bucketed),
+    Update(2L, 1L))
+
   test("random DML interleavings match the reference interpreter; remembered versions stay stable") {
-    (1 to 5).foreach { i =>
-      val ops = Gen.listOfN(12, opGen)
-        .pureApply(Gen.Parameters.default, Seed(7000L + i))
-      val root = Staging.tempDir(s"dml_prop_$i").toString
+    val inputs = (1 to 5).map { i =>
+      i -> (Append((0L to 9L), 0L) +: Gen.listOfN(12, opGen)
+        .pureApply(Gen.Parameters.default, Seed(7000L + i)))
+    } :+ (6 -> reinsertScript)
+    inputs.foreach { case (i, ops) =>
+      // a space in the root: `_metadata.file_path` URI-escapes it, the
+      // manifest paths do not
+      val root = Staging.tempDir(s"dml_prop_$i").resolve("a table").toString
       val S = Snapshots
 
       // model: MULTISET of (id, v) — appends may duplicate ids; merge
@@ -88,23 +118,30 @@ class SnapshotDmlPropertySpec extends AnyFunSuite with SparkTestSession {
       var snapshots = List.empty[(Int, Vector[(Long, Long)])]
       def df(rows: Seq[(Long, Long)]) = rows.toDF("id", "v")
 
-      S.append(df((0L to 9L).map(k => k -> k)), root)
-      model = (0L to 9L).map(k => k -> k).toVector
-      snapshots ::= (1, model)
-
       ops.foreach { op =>
         val ver = op match {
-          case Append(keys, d) =>
+          case Append(keys, d, asInt, layout) =>
             val rows = keys.map(k => k -> (k + d))
             model = model ++ rows
-            S.append(df(rows).repartition(2), root)
+            val batch =
+              if (asInt) rows.map { case (k, v) => (k.toInt, v) }.toDF("id", "v")
+              else df(rows)
+            layout match {
+              case Plain => S.append(batch.repartition(2), root)
+              case Bloom => S.append(batch.repartition(2), root, bloomCols = Seq("id"))
+              case Bucketed => S.appendPartitioned(batch, root, bucketSpec)
+            }
           case Merge(keys, d) =>
             val rows = keys.map(k => k -> (k * 10 + d))
             model = model.filterNot(r => keys.contains(r._1)) ++ rows
             S.merge(spark, root, "id", df(rows).repartition(1))
-          case Delete(keys) =>
+          case Delete(keys, asInt) =>
             model = model.filterNot(r => keys.contains(r._1))
-            S.deleteWhere(spark, root, "id", keys.toDF("id"))
+            S.deleteWhere(spark, root, "id",
+              if (asInt) keys.map(_.toInt).toDF("id") else keys.toDF("id"))
+          case DeleteMatching(m) =>
+            model = model.filterNot(_._2 % m == 0)
+            S.deleteWhereMatching(spark, root, pmod(col("v"), lit(m)) === 0)
           case Update(m, d) =>
             model = model.map { case (k, v) =>
               if (v % m == 0) (k, v + d) else (k, v) }
@@ -203,11 +240,21 @@ class SnapshotDmlPropertySpec extends AnyFunSuite with SparkTestSession {
         snapshots ::= (ver, model)
       }
 
-      // every remembered version reads back exactly its frozen state
+      // every remembered version reads back exactly its frozen state,
+      // and so does every pruned read of it (the exact predicate over
+      // the model)
       snapshots.foreach { case (v, want) =>
-        val got = S.read(spark, root, v)
-          .as[(Long, Long)].collect().toVector.sorted
-        assert(got == want.sorted, s"seed $i: v$v drifted")
+        def check(what: String, got: org.apache.spark.sql.DataFrame,
+                  keep: ((Long, Long)) => Boolean): Unit = {
+          val rows = got.as[(Long, Long)].collect().toVector.sorted
+          assert(rows == want.filter(keep).sorted, s"seed $i: v$v $what drifted: $rows")
+        }
+        check("read", S.read(spark, root, v), _ => true)
+        check("readPruned", S.readPruned(spark, root, v, "id", 3L, 11L),
+          r => r._1 >= 3L && r._1 <= 11L)
+        check("readBloomPruned", S.readBloomPruned(spark, root, v, "id", "2"), _._1 == 2L)
+        check("readPartitionPruned",
+          S.readPartitionPruned(spark, root, v, bucketSpec, "3"), _._1 == 3L)
       }
 
       // two-level manifest invariants (r13), down the same random

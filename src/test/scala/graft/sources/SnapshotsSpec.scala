@@ -1168,6 +1168,68 @@ class SnapshotsSpec extends AnyFunSuite with SparkTestSession {
     assert(Snapshots.versionAsOf(root, t0 + 9999) == 3)
     intercept[IllegalArgumentException] { Snapshots.versionAsOf(root, t0 - 1) }
   }
+
+  test("bloom- and partition-pruned point lookups honor equality and positional deletes") {
+    val root = Staging.tempDir("snap_spec_pruned_mor").toString
+    val spec = Snapshots.IdentityPartition("s")
+    Snapshots.appendPartitioned(
+      Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L)).toDF("id", "s", "x"),
+      root, spec)
+    Snapshots.append(Seq((4L, "a", 40L), (5L, "b", 50L)).toDF("id", "s", "x"),
+      root, bloomCols = Seq("s"))
+    Snapshots.deleteWhere(spark, root, "id", Seq(1L, 4L).toDF("id"))
+    // positional: tombstones the pre-update rows, appends their images
+    val head = Snapshots.updateWhere(spark, root, $"id" === 2L || $"id" === 5L,
+      Map("x" -> ($"x" + 1L)))
+    val want = Map(
+      "a" -> Set((2L, "a", 21L)),
+      "b" -> Set((3L, "b", 30L), (5L, "b", 51L)))
+    for ((value, rows) <- want) {
+      assert(Snapshots.readBloomPruned(spark, root, head, "s", value)
+        .as[(Long, String, Long)].collect().toSet == rows, s"bloom '$value'")
+      assert(Snapshots.readPartitionPruned(spark, root, head, spec, value)
+        .as[(Long, String, Long)].collect().toSet == rows, s"partition '$value'")
+    }
+  }
+
+  test("head read plan keeps one shape however many versions and delete sets it merges") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val walk = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val root = Staging.tempDir("snap_spec_mor_shape").toString
+    def rows(ids: Range) = ids.map(i => (i.toLong, i * 10L)).toDF("id", "x")
+    // one data version plus an equality and a positional delete set
+    def round(i: Int): Unit = {
+      Snapshots.append(rows(i * 10 until i * 10 + 5), root)
+      Snapshots.deleteWhere(spark, root, "id", Seq(i * 10L).toDF("id"))
+      Snapshots.deleteWhereMatching(spark, root, $"id" === i * 10L + 1)
+    }
+    def shape(): (Int, Int, Int) = {
+      val df = Snapshots.read(spark, root)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val dataScans = walk.collect(plan) {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString.contains("/data_v")) => s
+      }
+      val antis = walk.collect(plan) {
+        case j: BaseJoinExec if j.joinType == LeftAnti => j
+      }
+      val unions = walk.collect(plan) { case u: UnionExec => u }
+      (dataScans.size, antis.size, unions.size)
+    }
+    def dataVersions =
+      Snapshots.filesTable(spark, root).select("commit_version").distinct().count()
+    (0 until 2).foreach(round)
+    assert(dataVersions == 2)
+    assert(shape() == (1, 2, 0), "2 data versions")
+    (2 until 6).foreach(round)
+    assert(dataVersions == 6)
+    assert(shape() == (1, 2, 0), "6 data versions")
+    assert(Snapshots.read(spark, root).select($"id").as[Long].collect().sorted.toSeq ==
+      (0 until 6).flatMap(i => (i * 10 + 2 until i * 10 + 5).map(_.toLong)))
+  }
 }
 
 object SnapshotsSpec {

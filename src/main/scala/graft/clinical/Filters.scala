@@ -9,10 +9,11 @@ import org.apache.spark.sql.functions.{col, lit}
   * PSW/TSW/TBWL are defined over the user's full unfiltered history
   * (SURVEY.md §4). The three predicates are constant per user (users
   * holds one row per UID) and every metric group is a user or finer, so
-  * [[Pipeline]] applies [[predicate]] to the joined frame instead, below
-  * the metric pass: the pass never sorts or walks rows the filter
-  * discards. The one cross-user metric, the bug-compatible diff, reads
-  * its successor table from the unfiltered frame.
+  * [[Pipeline]] evaluates [[predicate]] on the joined frame instead,
+  * below the metric pass: in strict mode the pass never sorts or walks
+  * rows the filter discards. The one cross-user metric, the
+  * bug-compatible diff, needs every user as a successor, so there the
+  * predicate is a keep flag and the pass emits only the kept rows.
   */
 object Filters {
 

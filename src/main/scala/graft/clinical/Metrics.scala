@@ -3,6 +3,8 @@ package graft.clinical
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.operators.Scratch
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.{ArrayBuffer, HashMap}
 
@@ -12,9 +14,9 @@ import scala.collection.mutable.{ArrayBuffer, HashMap}
   * (pandas_DataModel.py:85-90) and then computes every metric with
   * order-sensitive `groupby(...).transform(...)` calls. Every metric
   * group is a user or finer, so the sort only has to hold within a
-  * user: one hash exchange on `UID`, one sort within partitions on
-  * [[Metrics.sortKeys]], and one walk over each user's rows
-  * ([[UserPass]]) compute all five metrics. Six window specs used to
+  * user: one exchange on `UID`, one sort within partitions, and one
+  * walk over each user's rows ([[UserPass]]) compute all five metrics
+  * in both diff modes. Six window specs used to
   * re-sort the ~40-column joined row once each; that formulation now
   * lives on only as the reference the equivalence spec compares
   * against.
@@ -24,19 +26,14 @@ import scala.collection.mutable.{ArrayBuffer, HashMap}
   */
 object Metrics {
 
-  /** The reference's global sort order (pandas_DataModel.py:85-90).
-    * pandas `sort_values` places NaT/NaN last — hence asc_nulls_last.
+  /** The reference's global sort order (pandas_DataModel.py:85-90), by
+    * column. pandas `sort_values` places NaT/NaN last — hence
+    * asc_nulls_last in [[sortKeys]].
     */
-  val sortKeys: Seq[Column] = Seq(
-    col("UID").asc_nulls_last,
-    col("UIDCreatedDate").asc_nulls_last,
-    col("TreatmentTypeID").asc_nulls_last,
-    col("Tmt_StartDate").asc_nulls_last,
-    col("Wts_CreatedDate").asc_nulls_last,
-    col("Wts_UpdatedDate").asc_nulls_last)
+  private[clinical] val sortColumns: Seq[String] = Seq("UID", "UIDCreatedDate",
+    "TreatmentTypeID", "Tmt_StartDate", "Wts_CreatedDate", "Wts_UpdatedDate")
 
-  private val treatmentKeys = Seq(col("UID"), col("TreatmentTypeID"), col("Tmt_StartDate"))
-  private def cohortKeys(cohort: String) = treatmentKeys :+ col(cohort)
+  val sortKeys: Seq[Column] = sortColumns.map(col(_).asc_nulls_last)
 
   /** Days between two timestamps with pandas semantics:
     * `(a - b).dt.days` floors the true timedelta toward -inf
@@ -76,112 +73,94 @@ object Metrics {
   def weekCol: Column =
     floor(dayDiff(col("Wts_CreatedDate"), col("Tmt_StartDate")) / lit(7.0)).cast("int")
 
-  /** A column wrapped so struct-MIN ordering matches `asc_nulls_last`:
-    * the leading isNull flag makes every null sort after every value.
-    */
-  private def nullsLast(c: Column): Column = struct(c.isNull.as("n"), c.as("v"))
-
-  /** Each user's within-user global-sort key as one orderable struct
-    * (the [[sortKeys]] after UID, each null-last). Lets MIN-aggregates
-    * stand in for "first row in sort order" without a window sort.
-    */
-  private val userOrd: Column = struct(
-    nullsLast(col("UIDCreatedDate")).as("k1"),
-    nullsLast(col("TreatmentTypeID")).as("k2"),
-    nullsLast(col("Tmt_StartDate")).as("k3"),
-    nullsLast(col("Wts_CreatedDate")).as("k4"),
-    nullsLast(col("Wts_UpdatedDate")).as("k5"))
-
-  /** One row per user: (`_b_uid`, `_ufw`) where `_ufw` is the fw (the
-    * cohort's first non-null Weight) of the user's globally-FIRST row — i.e. the
-    * first non-null Weight of the user's first cohort. Formulated as two
-    * partial-aggregating GROUP BYs (per-cohort argmin, then per-user
-    * argmin over cohort groups) instead of a window: no sort, map-side
-    * combine on both levels, and Catalyst prunes the input to the six
-    * key/weight columns. Validated value-identical to the window
-    * formulation on all three sfs; the per-user pass itself never needs
-    * it — only the bug-compatible successor does.
-    */
-  def boundaryTable(src: DataFrame, cohort: String): DataFrame = {
-    src
-      .groupBy(cohortKeys(cohort): _*)
-      .agg(
-        // the cohort-group's first-row key...
-        min(userOrd).as("_k"),
-        // ...and its first non-null Weight in sort order (null when the
-        // whole cohort has no weights — matching first(ignoreNulls))
-        min(when(col("Weight").isNotNull,
-          struct(userOrd.as("o"), col("Weight").as("w")))).as("_fwp"))
-      .groupBy(col("UID"))
-      // the user's first row lives in the cohort-group with minimal _k;
-      // ties are impossible (_k embeds every within-user sort key and
-      // the cohort keys are functions of them).
-      // Tie semantics WITHIN a cohort group (_fwp): rows with identical
-      // sort keys but different Weights resolve to the SMALLEST weight
-      // (struct-min), deterministically. The window/pandas forms are
-      // no better there — Spark window order and pandas stable sort
-      // both depend on physical row order, which a distributed engine
-      // cannot reproduce; the fixtures are tie-free (validated
-      // value-identical to the window form at all three sfs).
-      .agg(min(struct(col("_k").as("k"), col("_fwp").getField("w").as("w")))
-        .as("_m"))
-      .select(col("UID").as("_b_uid"), col("_m").getField("w").as("_ufw"))
-  }
-
-  /** Each user's successor first weight for the bug-compatible
-    * `.diff(-1)`: one row per user, (`UID`, `_next_ufw`), where
-    * `_next_ufw` is the `_ufw` of the next UID in ascending order (null
-    * for the last). Built from `src` — the UNFILTERED frame — so the
-    * cross-user quirk sees every user whatever the demographic filter
-    * keeps. [[graft.operators.DistributedLead]]'s rank-idiom self-join
-    * gives partition-consistent ranks at scale; its two
-    * construction-time driver jobs run over the cheap [[boundaryTable]]
-    * aggregate, not over the metric pass.
-    */
-  def successorFirstWeights(src: DataFrame, cohort: String): DataFrame =
-    graft.operators.DistributedLead
-      .withSuccessorValue(boundaryTable(src, cohort), col("_b_uid"), col("_ufw"),
-        "_next_ufw")
-      .select(col("_b_uid").as("UID"), col("_next_ufw"))
-
   /** The columns [[withCohortMetrics]] appends, in output order. */
   val metricColumns: Seq[String] =
     Seq("WIR", "PSW", "TSW", "TEW", "treatment_TBWL", "patient_TBWL")
 
   /** The five metrics (pandas_DataModel.py:112-151) in one sorted
-    * per-user pass: `df` is hash-partitioned by `UID`, sorted within
-    * partitions by [[sortKeys]], and [[UserPass]] walks each user's rows
-    * once. Appends [[metricColumns]] to `df`'s columns, in `df`'s order.
+    * per-user pass: `df` is partitioned by `UID`, each partition is
+    * sorted so a user's rows arrive together and in [[sortKeys]] order,
+    * and [[UserPass]] walks each user's rows once. Appends
+    * [[metricColumns]] to `df`'s columns, in `df`'s order. `keep`, when
+    * given, keeps only the rows it holds for (null counts as false);
+    * like the reference's demographic filter (pandas_DataModel.py:6-31)
+    * it acts on the finished frame: no metric depends on it.
     *
     * The reference's `.diff(-1)` is x[i] − x[i+1] over the WHOLE frame
     * in global sort order, where x is the row's cohort-first weight; it
     * crosses cohort, treatment and even user boundaries (SURVEY.md
-    * §2.9). With `successor = None` (strict mode) the diff stays inside
-    * each user: a user's last row has a null diff. With `successor`
-    * given (bug-compatible mode, a [[successorFirstWeights]] table),
-    * only each user's last row sees a cross-user value, and because UID
-    * leads the global sort that value is the next UID's first-row
-    * weight: the pass reads it from the `_next_ufw` column the left join
-    * on `UID` attaches.
+    * §2.9). Only a user's last row sees a cross-user value, and because
+    * UID leads the global sort that value is the next UID's `_ufw`: the
+    * first weight of the cohort holding that user's first row.
+    *
+    * Strict mode keeps the diff inside each user (a user's last row has
+    * a null diff). Every metric group is then a user or finer, so a
+    * user-constant `keep` is applied first, and the pass runs on one
+    * `UID` hash exchange.
+    *
+    * Bug-compatible mode walks the UNFILTERED frame, because a user that
+    * `keep` drops can still be another user's successor:
+    *  - `keep` becomes the `_keep` flag, evaluated below the exchange;
+    *    the walk emits only the rows it holds for;
+    *  - one range exchange on `UID` into exactly P =
+    *    `spark.sql.shuffle.partitions` partitions. AQE never coalesces a
+    *    REPARTITION_BY_NUM exchange, and both of its consumers below take
+    *    every column (the summary is an opaque `mapPartitions`, so column
+    *    pruning cannot narrow its branch into a second exchange): they
+    *    read the same partitions from one exchange and one range sample
+    *    (the second read is a ReusedExchange). Two independently sampled
+    *    exchanges could disagree on the partition ids;
+    *  - within a partition users arrive in DESCENDING UID order, so a
+    *    user's successor is the user walked just before it, and the walk
+    *    carries that user's `_ufw`;
+    *  - each partition's first-walked user needs the `_ufw` of the
+    *    lowest UID in the next non-empty partition. [[UserPass.head]]
+    *    summarizes each partition's lowest UID in one row; for every
+    *    partition id the lowest non-empty partition above it is picked
+    *    from those at most P rows, and the result is joined back on the
+    *    partition id through a broadcast below the sort (a sort under a
+    *    join is dropped by EliminateSorts).
     */
-  def withCohortMetrics(df: DataFrame, cohort: String,
-                        successor: Option[DataFrame]): DataFrame = {
-    val clash = (metricColumns :+ "_next_ufw").filter(df.columns.contains)
-    require(clash.isEmpty,
-      s"column(s) ${clash.mkString(", ")} are derived by the metric pass — rename first")
+  def withCohortMetrics(df: DataFrame, cohort: String, strict: Boolean,
+                        keep: Option[Column] = None): DataFrame = {
+    Scratch.requireFree("the clinical metric pass", df.columns,
+      (metricColumns ++ Seq("_keep", "_pid", "_next_ufw")).contains)
     require(df.schema("Weight").dataType == DoubleType,
       s"Weight must be a double column, not ${df.schema("Weight").dataType}")
-    val input = successor.fold(df)(df.join(_, Seq("UID"), "left"))
     val out = StructType(df.schema.fields ++
       (StructField("WIR", LongType, nullable = false) +:
         metricColumns.tail.map(StructField(_, DoubleType))))
-    val pass = new UserPass(input.schema, df.columns, cohort, successor.isDefined)
-    input.repartition(col("UID"))
-      .sortWithinPartitions(sortKeys: _*)
-      .mapPartitions(pass(_))(Encoders.row(out))
-      // the encoder drops column metadata; `to` restores the input's
-      .to(out)
+    def walk(input: DataFrame, order: Seq[Column]): DataFrame = {
+      val pass = new UserPass(input.schema, df.columns, cohort, withSuccessor = !strict)
+      input.sortWithinPartitions(order: _*).mapPartitions(pass(_))(Encoders.row(out))
+    }
+    val metrics =
+      if (strict) walk(keep.fold(df)(df.filter).repartition(col("UID")), sortKeys)
+      else {
+        val p = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+        val ranged = df.withColumn("_keep", keep.fold(lit(true))(coalesce(_, lit(false))))
+          .repartitionByRange(p, col("UID").asc_nulls_last)
+          .withColumn("_pid", spark_partition_id())
+        val summary = new UserPass(ranged.schema, df.columns, cohort, withSuccessor = true)
+        val heads = ranged.mapPartitions(summary.head(_))(
+          Encoders.row(StructType.fromDDL("_hpid INT NOT NULL, _head DOUBLE")))
+        walk(ranged.join(broadcast(nextHeads(heads)), Seq("_pid"), "left"),
+          col("UID").desc_nulls_first +: sortKeys.tail)
+      }
+    // the encoder drops column metadata; `to` restores the input's
+    metrics.to(out)
   }
+
+  /** Per partition id, the `_head` of the lowest higher partition that
+    * has one (`_hpid`, `_head` rows from [[UserPass.head]]), as
+    * (`_pid`, `_next_ufw`): each head goes to every lower id (at most
+    * P²/2 rows, PrefixScan's carry-in) and the lowest wins. The guard
+    * keeps partition 0 off Spark's descending sequence.
+    */
+  private[clinical] def nextHeads(heads: DataFrame): DataFrame =
+    heads.select(explode(when(col("_hpid") > 0, sequence(lit(0), col("_hpid") - 1)))
+        .as("_pid"), col("_hpid"), col("_head"))
+      .groupBy("_pid").agg(min_by(col("_head"), col("_hpid")).as("_next_ufw"))
 }
 
 /** The per-user walk behind [[Metrics.withCohortMetrics]]. Input rows
@@ -196,6 +175,13 @@ object Metrics {
   *  - patient_TBWL: max over the cohort group of wgt_diff = fw − fw of
   *    the next row (fw: the cohort's first non-null Weight), nulls
   *    skipped and NaN ranking largest like Spark's `max`.
+  *
+  * With `withSuccessor` (bug-compatible mode) users arrive in
+  * descending UID order and a user's last row diffs against its
+  * successor's `_ufw` (its first row's fw): the previous user's, or for
+  * the partition's first user the `_next_ufw` column its rows carry.
+  * Without it a user's last row diffs against null. Only rows whose
+  * `_keep` column holds are emitted; every row when there is none.
   *
   * Treatment and cohort groups are keyed through hash maps, not by
   * contiguity: a cohort expression need not be monotone in sort order.
@@ -213,37 +199,70 @@ private[clinical] final class UserPass(in: StructType, outColumns: Array[String]
   import UserPass._
 
   private val uid = in.fieldIndex("UID")
+  private val withinUser = Metrics.sortColumns.tail.map(in.fieldIndex).toArray
   private val treatment = in.fieldIndex("TreatmentTypeID")
   private val start = in.fieldIndex("Tmt_StartDate")
   private val cohortAt = in.fieldIndex(cohort)
   private val weight = in.fieldIndex("Weight")
   private val updated = in.fieldIndex("Wts_UpdatedDate")
-  private val nextUfw = if (withSuccessor) in.fieldIndex("_next_ufw") else -1
+  private val keep = in.fieldNames.indexOf("_keep")
+  private val nextUfw = in.fieldNames.indexOf("_next_ufw")
   private val project = outColumns.map(in.fieldIndex)
 
   def apply(rows: Iterator[Row]): Iterator[Row] = {
     val it = rows.buffered
-    Iterator.continually(it).takeWhile(_.hasNext).flatMap(user)
+    var next: JDouble = if (nextUfw >= 0 && it.hasNext) it.head.getAs[JDouble](nextUfw) else null
+    Iterator.continually(it).takeWhile(_.hasNext).flatMap { it =>
+      val user = new User(take(it))
+      val out = user.emit(next)
+      if (withSuccessor) next = user.ufw
+      out
+    }
   }
 
-  /** Consumes one user's rows from `it` and returns them with metrics. */
-  private def user(it: collection.BufferedIterator[Row]): Iterator[Row] = {
+  /** A range partition's summary for the bug-compatible walk: one row
+    * (`_hpid`, `_head`) holding the partition id and the `_ufw` of its
+    * lowest UID (nulls last), or no row for an empty partition. The rows
+    * arrive unsorted, so the lowest UID's rows are collected, put in
+    * [[Metrics.sortKeys]] order (ties keep arrival order) and aggregated
+    * like any walked user.
+    */
+  def head(rows: Iterator[Row]): Iterator[Row] = {
+    val low = ArrayBuffer.empty[Row]
+    rows.foreach { r =>
+      val c = if (low.isEmpty) 0 else order(r.get(uid), low(0).get(uid))
+      if (c < 0) low.clear()
+      if (c <= 0) add(low, r)
+    }
+    val sorted = low.sortWith((a, b) =>
+      withinUser.iterator.map(k => order(a.get(k), b.get(k))).find(_ != 0).exists(_ < 0))
+    sorted.headOption.map(r => Row(r.getAs[Int]("_pid"), new User(sorted).ufw)).iterator
+  }
+
+  private def add(rows: ArrayBuffer[Row], r: Row): Unit = {
+    if (rows.length == maxRowsPerUser)
+      throw new IllegalStateException(s"UID '${r.get(uid)}' has more " +
+        s"than $maxRowsPerUser rows, the per-user bound of the clinical metric pass")
+    rows += r
+  }
+
+  /** Consumes one user's rows from `it`. */
+  private def take(it: collection.BufferedIterator[Row]): ArrayBuffer[Row] = {
     val key = groupKey(it.head.get(uid))
     val rows = ArrayBuffer.empty[Row]
-    while (it.hasNext && groupKey(it.head.get(uid)) == key) {
-      if (rows.length == maxRowsPerUser)
-        throw new IllegalStateException(s"UID '${it.head.get(uid)}' has more " +
-          s"than $maxRowsPerUser rows, the per-user bound of the clinical metric pass")
-      rows += it.next()
-    }
-    val n = rows.length
-    val treatments = HashMap.empty[(Any, Any), Treatment]
-    val cohorts = HashMap.empty[(Any, Any, Any), Cohort]
-    val byTreatment = new Array[Treatment](n)
-    val byCohort = new Array[Cohort](n)
-    var psw: JDouble = null
-    var i = 0
-    while (i < n) {
+    while (it.hasNext && groupKey(it.head.get(uid)) == key) add(rows, it.next())
+    rows
+  }
+
+  /** One user's rows in sort order, with their groups aggregated. */
+  private final class User(rows: ArrayBuffer[Row]) {
+    private val n = rows.length
+    private val byTreatment = new Array[Treatment](n)
+    private val byCohort = new Array[Cohort](n)
+    private var psw: JDouble = null
+    private val treatments = HashMap.empty[(Any, Any), Treatment]
+    private val cohorts = HashMap.empty[(Any, Any, Any), Cohort]
+    for (i <- 0 until n) {
       val r = rows(i)
       val tk = (groupKey(r.get(treatment)), groupKey(r.get(start)))
       val t = treatments.getOrElseUpdate(tk, new Treatment)
@@ -258,31 +277,32 @@ private[clinical] final class UserPass(in: StructType, outColumns: Array[String]
       }
       byTreatment(i) = t
       byCohort(i) = c
-      i += 1
     }
-    i = 0
-    while (i < n) {
-      val next: JDouble =
-        if (i + 1 < n) byCohort(i + 1).fw
-        else if (withSuccessor && !rows(i).isNullAt(nextUfw)) rows(i).getDouble(nextUfw)
-        else null
-      byCohort(i).observe(minus(byCohort(i).fw, next))
-      i += 1
-    }
-    Iterator.tabulate(n) { j =>
-      val r = rows(j)
-      val t = byTreatment(j)
-      val c = byCohort(j)
-      val out = new Array[Any](project.length + 6)
-      var k = 0
-      while (k < project.length) { out(k) = r.get(project(k)); k += 1 }
-      out(k) = c.wir
-      out(k + 1) = psw
-      out(k + 2) = t.first
-      out(k + 3) = t.last
-      out(k + 4) = minus(t.last, t.first)
-      out(k + 5) = c.maxDiff
-      Row.fromSeq(ArraySeq.unsafeWrapArray(out))
+
+    /** The user's `_ufw`: the fw of the cohort holding its first row. */
+    def ufw: JDouble = byCohort(0).fw
+
+    /** The kept rows with their metrics; `next` is the fw the last row
+      * diffs against.
+      */
+    def emit(next: JDouble): Iterator[Row] = {
+      for (i <- 0 until n)
+        byCohort(i).observe(minus(byCohort(i).fw, if (i + 1 < n) byCohort(i + 1).fw else next))
+      (0 until n).iterator.filter(j => keep < 0 || rows(j).getBoolean(keep)).map { j =>
+        val r = rows(j)
+        val t = byTreatment(j)
+        val c = byCohort(j)
+        val out = new Array[Any](project.length + 6)
+        var k = 0
+        while (k < project.length) { out(k) = r.get(project(k)); k += 1 }
+        out(k) = c.wir
+        out(k + 1) = psw
+        out(k + 2) = t.first
+        out(k + 3) = t.last
+        out(k + 4) = minus(t.last, t.first)
+        out(k + 5) = c.maxDiff
+        Row.fromSeq(ArraySeq.unsafeWrapArray(out))
+      }
     }
   }
 }
@@ -309,6 +329,19 @@ private[clinical] object UserPass {
   /** Spark's double ordering: NaN above everything, -0.0 equal to 0.0. */
   private def compare(a: Double, b: Double): Int =
     if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** Spark's ascending order, nulls last, over the external values of
+    * the sort key types (`Schemas`): strings by their UTF-8 bytes,
+    * doubles as [[compare]], the rest by their own `compareTo`.
+    */
+  private def order(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => 1
+    case (_, null) => -1
+    case (x: String, y: String) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+    case (x: Double, y: Double) => compare(x, y)
+    case (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+  }
 
   private def minus(a: JDouble, b: JDouble): JDouble =
     if (a == null || b == null) null else a - b

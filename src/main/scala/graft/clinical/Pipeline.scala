@@ -12,15 +12,16 @@ import org.apache.spark.sql.functions._
   *  - columns are disambiguated BEFORE the join (select-with-alias), so
   *    no post-join `_x/_y` drop/rename pass is needed
   *    (pandas_DataModel.py:63-74) and the join output is never ambiguous;
-  *  - the demographic filter runs BEFORE the metrics, not after
-  *    (pandas_DataModel.py:6-31 filters the finished frame): it is
-  *    constant per user and every metric group is a user or finer, so
-  *    only the cross-user bug-compatible diff could tell, and that one
-  *    reads its successor table from the unfiltered frame;
+  *  - the demographic filter is evaluated BELOW the metric pass's
+  *    exchange, not after the pass (pandas_DataModel.py:6-31 filters the
+  *    finished frame). It is constant per user and every metric group is
+  *    a user or finer, so strict mode filters before the exchange; the
+  *    bug-compatible diff crosses users, so there it rides as a keep
+  *    flag and the pass emits only the kept users' rows;
   *  - the global 6-key sort (py:85-90) is only needed within a user, so
-  *    it becomes one sort within `UID` hash partitions feeding the
-  *    metric pass ([[Metrics.withCohortMetrics]]); only presentation
-  *    sorts globally;
+  *    it becomes one sort within `UID` partitions feeding the metric
+  *    pass ([[Metrics.withCohortMetrics]]); only presentation sorts
+  *    globally;
   *  - users/treatments are broadcast to the weights side (they are small
   *    dimension tables — 1k rows in the reference); the big fact table
   *    never shuffles for the joins, only once for the metric pass.
@@ -77,22 +78,20 @@ object Pipeline {
     * callers materialize any expression as a column first (see
     * [[runWithCohortExpr]]).
     *
-    * `earlyFilter`, when given, must be a USER-CONSTANT predicate (each
-    * UID's rows all pass or all fail). Every metric group is a user or
-    * finer, so such a predicate commutes with the metric pass, which
-    * then never sees rows the filter discards. The bug-compatible
-    * diff's cross-user successor table is always built from the
-    * UNFILTERED frame, so the quirk still sees every user.
+    * `keep`, when given, must be a USER-CONSTANT predicate (each UID's
+    * rows all pass or all fail). Every metric group is a user or finer,
+    * so such a predicate commutes with the strict metric pass, which
+    * then never sees rows the filter discards. The bug-compatible pass
+    * walks every user and emits only the kept ones, so the cross-user
+    * quirk still sees the UNFILTERED frame.
     *
     * TEW is an intermediate in pandas (unnamed local, py:129) but a real
     * column in polars (polars_DataModel.py:130-132); it is kept — it
     * costs nothing and documents treatment_TBWL.
     */
   def withMetricsCohort(df: DataFrame, cohortCol: String, strict: Boolean,
-                        earlyFilter: Option[Column] = None)
-      : DataFrame =
-    Metrics.withCohortMetrics(earlyFilter.fold(df)(df.filter), cohortCol,
-      if (strict) None else Some(Metrics.successorFirstWeights(df, cohortCol)))
+                        keep: Option[Column] = None): DataFrame =
+    Metrics.withCohortMetrics(df, cohortCol, strict, keep)
 
   /** Full pipeline from the three (un-renamed) source tables. One
     * spelling (r17 review): delegates to [[runWithCohortExpr]] with the
@@ -111,7 +110,7 @@ object Pipeline {
     * metric groups by it, exactly like the built-in week/month/ClinicID
     * choices. `cfg.cohort` is ignored on this path; demographic filters,
     * dedup, and strict/bug-compat diff semantics apply unchanged. The
-    * filter is applied to the joined frame, below the metric pass and
+    * filter is evaluated on the joined frame, below the metric pass and
     * its `UID` exchange, in both modes.
     */
   def runWithCohortExpr(users: DataFrame, weights: DataFrame, treatments: DataFrame,

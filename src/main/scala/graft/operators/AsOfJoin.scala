@@ -43,13 +43,9 @@ object AsOfJoin {
     val dupCols = left.columns.toSet.intersect(rightValueCols.toSet)
     require(dupCols.isEmpty,
       s"right value columns collide with left: ${dupCols.mkString(", ")} — rename first")
-    // the operator's internal columns would silently OVERWRITE a user
-    // column of the same name (withColumn replaces) — refuse loudly
-    val reserved = Set("_ts", "_side", "_rpay", "_match")
-    val clash = (left.columns ++ right.columns).toSet.intersect(reserved) ++
-      left.columns.filter(_.startsWith("_l_"))
-    require(clash.isEmpty,
-      s"column names reserved by AsOfJoin: ${clash.mkString(", ")} — rename first")
+    Scratch.requireFree("AsOfJoin", left.columns ++ right.columns,
+      Set("_ts", "_side", "_rpay", "_match"))
+    Scratch.requireFree("AsOfJoin", left.columns, _.startsWith("_l_"))
     // the tolerance distance derives its long conversion from the LEFT
     // ts type and applies it to both sides (r16 ADVICE): if the sides
     // differed but union-coerced (DateType left + TimestampType right
@@ -196,11 +192,7 @@ object SkewJoin {
   def saltedInner(left: DataFrame, right: DataFrame, keys: Seq[String],
                   saltFactor: Int = 8): DataFrame = {
     require(saltFactor > 0)
-    // the internal column would silently overwrite a user's _salt
-    // (withColumn replaces) and then drop it — refuse loudly, the
-    // AsOfJoin reserved-name rule (r16 review finding)
-    require(!left.columns.contains("_salt") && !right.columns.contains("_salt"),
-      "column name reserved by SkewJoin: _salt — rename first")
+    Scratch.requireFree("SkewJoin", left.columns ++ right.columns, Set("_salt"))
     // salt by physical row identity, not a content hash (r16): exact
     // duplicate rows of the hot key all hashed to ONE salt (the skew
     // survived salting), and xxhash64 rejects unhashable column types

@@ -136,17 +136,8 @@ object Dedup {
     * so wide documents don't travel through the shuffle. Null-text rows
     * all survive (see [[contentHash]]).
     */
-  // the IntervalJoin/AsOfJoin scratch-name convention (r18 review):
-  // withColumn silently REPLACES a caller column of the same name and
-  // the trailing drop then removes it — user data loss with no error
-  private def requireNoScratch(df: DataFrame, names: String*): Unit = {
-    val clash = names.filter(df.columns.contains)
-    require(clash.isEmpty,
-      s"column(s) ${clash.mkString(", ")} are reserved by Dedup — rename first")
-  }
-
   def exact(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    requireNoScratch(docs, "content_hash", "rn")
+    Scratch.requireFree("Dedup", docs.columns, Set("content_hash", "rn"))
     val w = Window.partitionBy(col("content_hash")).orderBy(col(idCol).asc)
     docs
       .withColumn("content_hash", contentHash(idCol, textCol))
@@ -166,7 +157,7 @@ object Dedup {
     * there, and keep this for human-scale reports.
     */
   def exactDupGroups(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    requireNoScratch(docs, "content_hash")
+    Scratch.requireFree("Dedup", docs.columns, Set("content_hash"))
     docs
       .withColumn("content_hash", contentHash(idCol, textCol))
       .groupBy(col("content_hash"))

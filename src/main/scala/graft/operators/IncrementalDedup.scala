@@ -52,18 +52,10 @@ object IncrementalDedup {
     */
   def annotateAgainst(batch: DataFrame, history: DataFrame, bloom: BloomFilter,
                       textCol: String = "text"): DataFrame = {
-    // the Dedup.requireNoScratch convention (r18 review): the OUTPUT
-    // annotations bloom_hit/is_dup are written with withColumn, which
-    // silently replaces same-named caller columns (e.g. re-ingesting
-    // previously annotated output), and newDocs then DROPS them —
-    // user data loss with no error. The _gf_ internals are
-    // prefix-reserved; the public annotation names must be refused.
-    val clash = Seq("bloom_hit", "is_dup", "_gf_ch", "_gf_seen")
-      .filter(batch.columns.contains)
-    require(clash.isEmpty,
-      s"column(s) ${clash.mkString(", ")} are reserved by " +
-        "IncrementalDedup — rename them first (re-annotating already " +
-        "annotated output? drop the old annotations)")
+    // the OUTPUT annotations are refused too: newDocs drops them, so
+    // re-ingesting already annotated output would lose the old ones
+    Scratch.requireFree("IncrementalDedup", batch.columns,
+      Set("bloom_hit", "is_dup", "_gf_ch", "_gf_seen"))
     val probed = batch
       .withColumn("bloom_hit",
         bloom_might_contain(xxhash64(Dedup.canonicalText(col(textCol))), bloom))

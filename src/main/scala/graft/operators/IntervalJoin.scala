@@ -28,7 +28,7 @@ object IntervalJoin {
                       pointCol: String, loCol: String, hiCol: String,
                       bucketWidth: Long, keys: Seq[String] = Nil): DataFrame = {
     require(bucketWidth > 0)
-    requireNoScratch(points, intervals)
+    Scratch.requireFree("IntervalJoin", points.columns ++ intervals.columns, Set("_b"))
     val p = points.withColumn("_b", floorDiv(pointCol, bucketWidth))
     val iv = intervals.withColumn("_b",
       explode(sequence(floorDiv(loCol, bucketWidth),
@@ -49,7 +49,7 @@ object IntervalJoin {
               lStart: String, lEnd: String, rStart: String, rEnd: String,
               bucketWidth: Long, keys: Seq[String] = Nil): DataFrame = {
     require(bucketWidth > 0)
-    requireNoScratch(left, right)
+    Scratch.requireFree("IntervalJoin", left.columns ++ right.columns, Set("_b"))
     val l = left.withColumn("_b",
       explode(sequence(floorDiv(lStart, bucketWidth),
         floorDiv(lEnd, bucketWidth))))
@@ -62,13 +62,6 @@ object IntervalJoin {
       .filter(col("_b") === floorDivGreatest(lStart, rStart, bucketWidth))
       .drop("_b")
   }
-
-  // the scratch bucket column would silently REPLACE (withColumn) and
-  // then DROP a caller column of the same name — wrong join keys and
-  // data loss with no error; refuse loudly (the globalRank convention)
-  private def requireNoScratch(a: DataFrame, b: DataFrame): Unit =
-    require(!a.columns.contains("_b") && !b.columns.contains("_b"),
-      "column '_b' is reserved by IntervalJoin — rename it first")
 
   /** Exact floor division of the COLUMN named `name`, at ANY long
     * magnitude: subtracting the non-negative pmod makes the numerator

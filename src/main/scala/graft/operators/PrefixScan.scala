@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Distributed prefix scan: a global running aggregate in total `key`
   * order WITHOUT the single-partition window that `agg(...) OVER
-  * (ORDER BY key)` compiles to — the same execution cliff
-  * [[DistributedLead]] exists to avoid, solved for the
-  * running-aggregate case.
+  * (ORDER BY key)` compiles to — the execution cliff of every global
+  * ordered window, solved for the running-aggregate case.
   *
   * Shape: [[SortedNeighborhood.globalRank]] (range partition + local
   * sort + zipWithIndex) assigns each row its position in the total
@@ -76,7 +75,9 @@ object PrefixScan {
                    buckets: Int, agg: Column => Column,
                    combine: (Column, Column) => Column): DataFrame = {
     require(buckets > 0)
-    requireNoScratch(df)
+    // every _ps_* working column, in ONE list for the ONE skeleton
+    Scratch.requireFree("PrefixScan", df.columns,
+      Set("_ps_rnk", "_ps_bkt", "_ps_in", "_ps_prev", "_ps_bagg"))
     // lazy checkpoint: globalRank's range-sampling pass materializes the
     // (one-row-per-key, aggregate-sized) input once; the count job and
     // both scan legs below read cached blocks
@@ -106,19 +107,5 @@ object PrefixScan {
     within.join(broadcast(carry), Seq("_ps_bkt"), "left")
       .withColumn(out, combine(col("_ps_in"), col("_ps_prev")))
       .drop("_ps_rnk", "_ps_bkt", "_ps_in", "_ps_prev")
-  }
-
-  // the Dedup.requireNoScratch convention (r18 review): the _ps_*
-  // working columns are written with withColumn and dropped at the
-  // end — a caller column of the same name would be silently
-  // destroyed. _ps_rnk alone was guarded (globalRank's require);
-  // the other three were not. ONE list for the ONE skeleton (r19
-  // review: the per-variant copies had drifted — _ps_bmax guarded,
-  // _ps_bsum not).
-  private def requireNoScratch(df: DataFrame): Unit = {
-    val clash = Seq("_ps_rnk", "_ps_bkt", "_ps_in", "_ps_prev", "_ps_bagg")
-      .filter(df.columns.contains)
-    require(clash.isEmpty,
-      s"column(s) ${clash.mkString(", ")} are reserved by PrefixScan — rename first")
   }
 }

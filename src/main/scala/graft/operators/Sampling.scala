@@ -93,10 +93,7 @@ object Sampling {
   def fixedSizePerStratum(df: DataFrame, strataCol: Column, key: Column,
                           k: Int, salt: String = "s0"): DataFrame = {
     require(k > 0)
-    // the Dedup.requireNoScratch convention (r18 review): _rk is
-    // written and dropped — a caller's _rk would silently vanish
-    require(!df.columns.contains("_rk"),
-      "column '_rk' is reserved by fixedSizePerStratum — rename it first")
+    Scratch.requireFree("fixedSizePerStratum", df.columns, Set("_rk"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(strataCol)
       .orderBy(bucket(key, salt).asc_nulls_last, key.asc_nulls_last)
     df.withColumn("_rk", row_number().over(w))

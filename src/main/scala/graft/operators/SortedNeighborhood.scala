@@ -73,15 +73,13 @@ object SortedNeighborhood {
   def candidatePairs(df: DataFrame, blockCols: Seq[String], sortCols: Seq[Column],
                      window: Int): DataFrame = {
     require(window > 0)
-    require(!df.columns.exists(c => c == "rnk_b" || c.startsWith("_sn_")),
-      "columns 'rnk_b' and the '_sn_' prefix are reserved by " +
-        "candidatePairs — rename first")
+    Scratch.requireFree("candidatePairs", df.columns, c => c == "rnk_b" || c.startsWith("_sn_"))
     // lazy checkpoint: the rank table has FOUR consumers (two skinny
     // candidate legs + one payload re-join per side), and the ranked
     // RDD's post-shuffle sort would otherwise rerun once per consumer
     // (column pruning diverges their projections, so no exchange
     // reuse). One materialization into block storage instead — the
-    // DistributedLead/PrefixScan convention; a production pipeline at
+    // PrefixScan convention; a production pipeline at
     // persistent scale writes the ranked table to a table instead.
     val ranked = globalRank(df, blockCols.map(col) ++ sortCols, "rnk")
       .localCheckpoint(false)

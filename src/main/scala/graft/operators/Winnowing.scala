@@ -51,14 +51,7 @@ object Winnowing {
     */
   def contamination(all: DataFrame, isBenchmark: Column, k: Int, w: Int,
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // the operator's internal columns would silently OVERWRITE a user
-    // column of the same name (withColumn replaces) — refuse loudly,
-    // the AsOfJoin reserved-name rule (r18 sweep: scratch-clobber class)
-    val reserved = Set("_wn_bench", "_wn_hit")
-    val clash = all.columns.toSet.intersect(reserved)
-    require(clash.isEmpty,
-      s"column names reserved by Winnowing.contamination: " +
-        s"${clash.mkString(", ")} — rename first")
+    Scratch.requireFree("Winnowing.contamination", all.columns, Set("_wn_bench", "_wn_hit"))
     // a NULL flag (e.g. isBenchmark = source === "x" over a NULL
     // source) must screen the row as CORPUS, not silently exempt it
     // from decontamination (!NULL is NULL and drops the row, r16)

@@ -162,4 +162,13 @@ class MetricsSpec extends AnyFunSuite with SparkTestSession {
     assert(e.getMessage.contains("UID 'u1'") && e.getMessage.contains("more than 2 rows"),
       e.getMessage)
   }
+
+  test("each partition takes the head of the next NON-EMPTY partition") {
+    // partition 1 is empty and partition 3's lowest user has no weight:
+    // 0 and 1 take partition 2's head, 2 takes the null, 3 gets no row
+    val heads = Seq((0, Some(1.0)), (2, Some(3.0)), (3, None)).toDF("_hpid", "_head")
+    val got = Metrics.nextHeads(heads).collect()
+      .map(r => r.getInt(0) -> Option(r.get(1))).toMap
+    assert(got == Map(0 -> Some(3.0), 1 -> Some(3.0), 2 -> None), got)
+  }
 }

@@ -195,4 +195,46 @@ class PipelinePropertySpec extends AnyFunSuite with SparkTestSession {
       }
     }
   }
+
+  /** `n` users u000… with alternating genders, Male first, so every
+    * kept Male user's successor is a Female user that `gender = "Male"`
+    * removes. Each has 1–3 weigh-ins (the first one null for every
+    * seventh user, so some `_ufw` are null) and one treatment.
+    */
+  private def alternating(n: Int): Fixture = Fixture(
+    users = (0 until n).map(i =>
+      (Some(f"u$i%03d"), if (i % 2 == 0) "Male" else "Female", 30L, 5066L)),
+    weighs = (0 until n).flatMap(i => (0 to i % 3).map(j =>
+      (f"u$i%03d", if (i % 7 == 3 && j == 0) None else Some(60.0 + i + j * 0.5),
+        j.toLong, j != 1))),
+    treatments = (0 until n).map(i => (f"u$i%03d", 1L, (i % 5).toLong)))
+
+  private def withShufflePartitions(n: Int)(body: => Unit): Unit = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  private def assertBugCompatible(fx: Fixture, cfg: PipelineConfig): Unit = {
+    val (u, w, t) = toTables(fx)
+    for (cohort <- Seq("week", "ClinicID")) {
+      val c = cfg.copy(cohort = cohort, strictCohorts = false)
+      assertSameRows(Pipeline.run(u, w, t, c),
+        WindowMetrics.run(u, w, t, col(cohort), cohort, c), s"$c")
+    }
+  }
+
+  test("bug-compatible pass at 7 partitions, users at every partition tail") {
+    withShufflePartitions(7)(assertBugCompatible(alternating(60), wideCfg))
+  }
+
+  test("bug-compatible pass with more partitions than users (empty partitions)") {
+    val fx = alternating(5)
+    withShufflePartitions(16)(assertBugCompatible(
+      fx.copy(users = fx.users :+ ((None, "Male", 30L, 5066L))), wideCfg))
+  }
+
+  test("bug-compatible pass: a partition-tail user whose successor the filter removes") {
+    withShufflePartitions(7)(assertBugCompatible(alternating(60), wideCfg.copy(gender = "Male")))
+  }
 }

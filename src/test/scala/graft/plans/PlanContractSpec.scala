@@ -81,11 +81,8 @@ class PlanContractSpec extends AnyFunSuite with SparkTestSession {
                               // found-count scalars (the q83/q92 shape)
     "q215_embedding_decontamination", // 1×1×1 cross of the train/purged/
                               // survivor count scalars (the q135 shape)
-    "q222_semantic_pairs_distributed", // 1×1 crosses of six scalar
+    "q222_semantic_pairs_distributed") // 1×1 crosses of six scalar
                               // invariant aggregates (the q92 shape)
-    "q30_clinical_pipeline")  // DistributedLead partition-boundary fix-up:
-                              // both sides ≤ spark.sql.shuffle.partitions rows
-                              // by construction (bounded by config, not data)
 
   /** A Window (or Sort) whose child is Exchange SinglePartition funnels
     * every ROW through one task — the cliff. A global scalar AGGREGATE
@@ -160,27 +157,26 @@ class PlanContractSpec extends AnyFunSuite with SparkTestSession {
     assert(scans <= 2, s"q74 scans documents $scans times (expected print leg + n_docs leg)")
   }
 
-  test("q30's boundary build does not re-run the metric window stack") {
-    // round 2's regression: the bug-compat boundary table was derived
-    // from the full five-metric frame, executing the window stack
-    // twice. Two pins against its return: (a) boundaryTable alone is a
-    // pure aggregate — ZERO Window nodes; (b) q30's total Window count
-    // stays at its designed ceiling (main stack + per-user lead/rn/n +
-    // DistributedLead's bounded per-partition windows) — a boundary
-    // that re-grew the stack jumps well past it.
-    def windows(p: String) = p.linesIterator
-      .count(_.replaceAll("^[^A-Za-z]*", "").startsWith("Window "))
-    val joinedFrame = graft.clinical.Pipeline.withDerived(
-      graft.clinical.Pipeline.joined(
-        graft.queries.Clinical.syntheticUsers(spark, dir),
-        graft.queries.Clinical.syntheticWeights(spark, dir),
-        graft.queries.Clinical.syntheticTreatments(spark, dir)))
-    val bnd = graft.clinical.Metrics.boundaryTable(joinedFrame, "week")
-    assert(windows(bnd.queryExecution.executedPlan.toString) == 0,
-      "boundaryTable grew a Window — it must stay a pure two-level aggregate")
-    val w30 = windows(plans("q30_clinical_pipeline"))
-    assert(w30 <= 12,
-      s"q30 has $w30 Window nodes (designed ceiling 12) — boundary re-grew the stack")
+  test("q30 reads one shared UID range exchange and has no Window") {
+    // the bug-compatible pass (clinical.Metrics.withCohortMetrics): the
+    // walk and its partition-head summary must read ONE range exchange.
+    // Two exchanges would sample their range bounds independently, and
+    // the summary's partition ids would stop matching the walk's.
+    val df = SparkEntry.queries("q30_clinical_pipeline")(spark, dir)
+    df.collect()   // AQE finalizes stage reuse only on execution
+    val lines = df.queryExecution.executedPlan.toString.linesIterator
+      .takeWhile(!_.contains("Initial Plan"))
+      .map(_.replaceAll("^[^A-Za-z]*", "")).toIndexedSeq
+    val plan = lines.mkString("\n")
+    // the pass's exchange, not the gate wrapper's global presentation sort
+    val ranged = lines.filter(l =>
+      l.contains("Exchange rangepartitioning(UID") && l.contains("REPARTITION_BY_NUM"))
+    assert(ranged.count(_.startsWith("Exchange rangepartitioning(UID")) == 1,
+      s"q30 must plan exactly one UID range exchange:\n$plan")
+    assert(ranged.size >= 2 &&
+        ranged.filterNot(_.startsWith("Exchange ")).forall(_.startsWith("ReusedExchange")),
+      s"every other read of q30's range exchange must reuse it:\n$plan")
+    assert(!lines.exists(_.startsWith("Window ")), s"q30 re-grew a window:\n$plan")
   }
 
   test("q31 sorts once on the metric sort keys, right after the UID exchange") {

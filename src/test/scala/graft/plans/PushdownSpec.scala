@@ -1,14 +1,15 @@
 package graft.plans
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.expressions.{Alias, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter,
-  LogicalPlan, MapPartitions, RepartitionByExpression}
+  LogicalPlan, MapPartitions, Project, RepartitionByExpression}
 import graft.SparkTestSession
 import graft.clinical.{Pipeline, PipelineConfig}
 
-/** The clinical pipeline applies its demographic filters itself, below
-  * its metric pass: both modes' plans must keep every Gender filter
-  * under the pass's `UID` exchange.
+/** The clinical pipeline evaluates its demographic filters itself,
+  * below its metric pass's `UID` exchange: as a Filter in strict mode,
+  * as the pass's keep flag in bug-compatible mode.
   */
 class PushdownSpec extends AnyFunSuite with SparkTestSession {
 
@@ -39,12 +40,30 @@ class PushdownSpec extends AnyFunSuite with SparkTestSession {
       Pipeline.runFromCsv(spark, fixtureDir, cfg).queryExecution.optimizedPlan)
   }
 
-  test("bug-compatible mode: gender filter sits below the metric pass and exchange") {
-    // the successor table is built from the unfiltered frame and joined
-    // in on UID below the exchange; no Gender filter may appear above
-    // the pass or on that side
+  test("bug-compatible mode: Gender is the keep flag below the range exchange") {
+    // a user the filter drops can still be another user's successor, so
+    // the pass walks the unfiltered frame: the predicate is evaluated
+    // below the pass's UID range exchange as the `_keep` flag, and no
+    // Gender Filter sits above the pass (nor anywhere else)
     val cfg = PipelineConfig(gender = "Male", minAge = 10, maxAge = 80, strictCohorts = false)
-    assertGenderFilterBelowPass(
-      Pipeline.runFromCsv(spark, fixtureDir, cfg).queryExecution.optimizedPlan)
+    val plan = Pipeline.runFromCsv(spark, fixtureDir, cfg).queryExecution.optimizedPlan
+    val rangeExchange = plan.collectFirst { case m: MapPartitions => m }.flatMap(
+      _.collectFirst {
+        case r: RepartitionByExpression if r.partitionExpressions.exists {
+          case o: SortOrder => o.child.references.exists(_.name == "UID")
+          case _ => false
+        } => r
+      })
+    val keepFlags = rangeExchange.toSeq.flatMap(_.collect { case p: Project =>
+      p.projectList.collect {
+        case a: Alias if a.name == "_keep" && a.references.exists(_.name == "Gender") => a
+      }
+    }.flatten)
+    assert(keepFlags.nonEmpty,
+      s"the Gender predicate must be the keep flag below the UID range exchange:\n$plan")
+    val filters = plan.collect {
+      case f: LFilter if f.condition.references.exists(_.name == "Gender") => f
+    }
+    assert(filters.isEmpty, s"bug-compatible mode must not filter on Gender:\n$plan")
   }
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -37,18 +37,11 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * consumer (q149's c12 model) feeds its one shuffle distinct-per-doc
   * rows instead of every occurrence.
   */
-case class BigramCounts(child: Expression) extends UnaryExpression {
+case class BigramCounts(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = BigramRuntime.BigramArrayType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bigram_counts needs array<string> tokens, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     BigramRuntime.bigramCounts(input.asInstanceOf[ArrayData])
@@ -69,18 +62,11 @@ case class BigramCounts(child: Expression) extends UnaryExpression {
   * in-row fold, distinct (h, m) rows out. Same conventions as
   * [[BigramCounts]].
   */
-case class TokenHashCounts(child: Expression) extends UnaryExpression {
+case class TokenHashCounts(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = BigramRuntime.UnigramArrayType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"token_hash_counts needs array<string> tokens, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     BigramRuntime.tokenHashCounts(input.asInstanceOf[ArrayData])

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
@@ -22,18 +22,11 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * and are settled by the exact confirm join downstream.
   */
 case class BloomMightContain(child: Expression, filter: BloomFilter)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = BooleanType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case LongType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bloom_might_contain needs a bigint hash, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(LongType)
 
   override def nullSafeEval(input: Any): Any =
     filter.mightContainLong(input.asInstanceOf[Long])

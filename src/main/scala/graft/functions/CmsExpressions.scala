@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -73,19 +73,11 @@ object CmsUtil {
 }
 
 case class CmsEstimate(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, StringType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"cms_estimate needs (binary, string), got " +
-            s"(${l.catalogString}, ${r.catalogString})")
-    }
+  override def inputTypes = Seq(BinaryType, StringType)
 
   override def nullSafeEval(sketch: Any, item: Any): Any =
     CmsUtil.estimate(sketch.asInstanceOf[Array[Byte]], item.asInstanceOf[UTF8String])

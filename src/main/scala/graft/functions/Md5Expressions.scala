@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -39,18 +39,11 @@ object Md5Util {
     low60FromDigest(threadDigest().digest(bytes))
 }
 
-case class Md5Low60(child: Expression) extends UnaryExpression {
+case class Md5Low60(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"md5_low60 needs string input, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     Md5Util.low60(input.asInstanceOf[UTF8String].getBytes)

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -22,7 +22,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * ALU-bound.
   */
 case class MinHashSignature(child: Expression, numHashes: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   // construction-time validation, the ShingleHashes/WinnowSelect
   // convention (r16): numHashes < 0 would otherwise throw
@@ -39,14 +39,7 @@ case class MinHashSignature(child: Expression, numHashes: Int)
   // could legally assume non-null output and miscompile consumers
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_signature needs array<bigint> (shingle hashes), got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(ArrayType(LongType))
 
   override def nullSafeEval(input: Any): Any =
     MinHashRuntime.signature(input.asInstanceOf[ArrayData], numHashes)

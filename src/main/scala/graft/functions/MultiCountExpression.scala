@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -72,20 +72,13 @@ object MultiCountRuntime {
   * generated-class fields, not per-row allocations.
   */
 case class MultiSubstringCount(child: Expression, patterns: Seq[String])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(patterns.nonEmpty && patterns.forall(_.nonEmpty),
     "patterns must be non-empty literals")
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"multi_substring_count needs string input, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(StringType)
 
   @transient private lazy val patternBytes: Array[Array[Byte]] =
     patterns.map(_.getBytes("UTF-8")).toArray
@@ -114,7 +107,7 @@ case class MultiSubstringCount(child: Expression, patterns: Seq[String])
   * expression guarantees exactly one scan per row.
   */
 case class MarkerGroupArgmax(child: Expression, patterns: Seq[String],
-    groupSizes: Seq[Int]) extends UnaryExpression {
+    groupSizes: Seq[Int]) extends UnaryExpression with ExpectsInputTypes {
   // the MultiSubstringCount guards apply here too (r18 review): an
   // empty pattern phantom-matches at every position and skews the
   // argmax; a non-positive group size can pass the sum check while
@@ -126,14 +119,7 @@ case class MarkerGroupArgmax(child: Expression, patterns: Seq[String],
 
   override def dataType: DataType = IntegerType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"marker_group_argmax needs string input, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(StringType)
 
   @transient private lazy val patternBytes: Array[Array[Byte]] =
     patterns.map(_.getBytes("UTF-8")).toArray

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{
+  BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -135,20 +136,13 @@ object PqUtil {
 }
 
 case class PqEncode(child: Expression, centers: Array[Double], m: Int, ksub: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(m > 0 && ksub > 0 && centers.length % (m * ksub) == 0)
   private val dsub = centers.length / (m * ksub)
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pq_encode needs array<double>, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(ArrayType(DoubleType))
 
   override def nullSafeEval(input: Any): Any =
     PqUtil.encode(input.asInstanceOf[ArrayData], centers, m, ksub, dsub)
@@ -163,20 +157,13 @@ case class PqEncode(child: Expression, centers: Array[Double], m: Int, ksub: Int
 }
 
 case class PqTable(child: Expression, centers: Array[Double], m: Int, ksub: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(m > 0 && ksub > 0 && centers.length % (m * ksub) == 0)
   private val dsub = centers.length / (m * ksub)
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pq_table needs array<double>, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(ArrayType(DoubleType))
 
   override def nullSafeEval(input: Any): Any =
     PqUtil.table(input.asInstanceOf[ArrayData], centers, m, ksub, dsub)
@@ -191,19 +178,11 @@ case class PqTable(child: Expression, centers: Array[Double], m: Int, ksub: Int)
 }
 
 case class PqAdcDot(left: Expression, right: Expression, ksub: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(IntegerType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pq_adc_dot needs (array<double>, array<int>), got " +
-            s"(${l.catalogString}, ${r.catalogString})")
-    }
+  override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(IntegerType))
 
   override def nullSafeEval(t: Any, c: Any): Any =
     PqUtil.adcDot(t.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData], ksub)

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
@@ -98,20 +98,13 @@ object QualityStatsUtil {
   }
 }
 
-case class QualityStats(child: Expression) extends UnaryExpression {
+case class QualityStats(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_tok", IntegerType, nullable = false),
     StructField("q", DoubleType, nullable = false)))
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"quality_stats needs string, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     QualityStatsUtil.compute(input.asInstanceOf[UTF8String])

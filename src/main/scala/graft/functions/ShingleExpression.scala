@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -24,19 +24,12 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * their tokens (mirrors [[TextFunctions.shingles]]).
   */
 case class ShingleHashes(child: Expression, k: Int, dedup: Boolean = true)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(k >= 1, s"shingle size must be >= 1, got $k")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"shingle_hashes needs array<string> tokens, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     ShingleRuntime.shingleHashes(input.asInstanceOf[ArrayData], k, dedup)
@@ -71,19 +64,13 @@ case class ShingleHashes(child: Expression, k: Int, dedup: Boolean = true)
   * the per-doc hash array and summing run lengths > 1 — O(m log m)
   * in-row, zero exchange.
   */
-case class DupGramStats(child: Expression, k: Int) extends UnaryExpression {
+case class DupGramStats(child: Expression, k: Int)
+    extends UnaryExpression with ExpectsInputTypes {
   require(k >= 1, s"gram size must be >= 1, got $k")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dup_gram_stats needs array<string> tokens, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     new GenericArrayData(
@@ -283,19 +270,13 @@ object ShingleRuntime {
   * strings). Semantics (tie-break, char length, < k-token docs) in
   * [[ShingleRuntime.topGramStats]].
   */
-case class TopGramStats(child: Expression, k: Int) extends UnaryExpression {
+case class TopGramStats(child: Expression, k: Int)
+    extends UnaryExpression with ExpectsInputTypes {
   require(k >= 1, s"gram size must be >= 1, got $k")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"top_gram_stats needs array<string> tokens, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     new GenericArrayData(ShingleRuntime.topGramStats(input.asInstanceOf[ArrayData], k))

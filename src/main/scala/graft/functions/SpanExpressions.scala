@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -28,22 +28,14 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   */
 case class RemoveDupSpans(left: Expression, right: Expression,
                           k: Int, minSpan: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
   require(k >= 1 && minSpan >= k,
     s"need k >= 1 and minSpan >= k (a covered run is never shorter " +
       s"than k), got k=$k minSpan=$minSpan")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(IntegerType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"remove_dup_spans needs (array<string>, array<int>), got " +
-            s"${l.catalogString} / ${r.catalogString}")
-    }
+  override def inputTypes = Seq(ArrayType(StringType), ArrayType(IntegerType))
 
   override def nullSafeEval(ts: Any, starts: Any): Any =
     SpanRuntime.removeDupSpans(ts.asInstanceOf[ArrayData],

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{
+  BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -21,7 +22,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * norm is 0. Lengths must match (checked at runtime).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
 
@@ -31,18 +32,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   // unsafe projections skip the null bit
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"cosine_similarity needs array<float|double> inputs, got " +
-          s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
+  override def inputTypes = Seq.fill(2)(ColumnBridge.floatOrDoubleArray)
 
   private def elemIsFloat(e: Expression): Boolean = e.dataType match {
     case ArrayType(FloatType, _) => true
@@ -124,20 +114,13 @@ case class CosineSimilarity(left: Expression, right: Expression)
   * these parts is bit-identical to the fused expression. Null array →
   * null; null ELEMENT → null (same corrupt-embedding policy).
   */
-case class SumSquares(child: Expression) extends UnaryExpression {
+case class SumSquares(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
 
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"norm_sq needs array<float|double>, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(ColumnBridge.floatOrDoubleArray)
 
   @transient private lazy val isFloat = child.dataType match {
     case ArrayType(FloatType, _) => true
@@ -186,24 +169,13 @@ case class SumSquares(child: Expression) extends UnaryExpression {
   * array or null element → null, accumulation order identical.
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
 
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"dot_product needs array<float|double> inputs, got " +
-          s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
+  override def inputTypes = Seq.fill(2)(ColumnBridge.floatOrDoubleArray)
 
   private def elemIsFloat(e: Expression): Boolean = e.dataType match {
     case ArrayType(FloatType, _) => true
@@ -275,18 +247,11 @@ case class DotProduct(left: Expression, right: Expression)
   * rows-only. 60 bits split into 4 pigeonhole blocks of 15 for the
   * ≤3-differing-bits candidate join ([[graft.operators.Dedup.simhashPairs]]).
   */
-case class SimHash60(child: Expression) extends UnaryExpression {
+case class SimHash60(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash60 needs array<string>, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
@@ -352,21 +317,14 @@ case class SimHash60(child: Expression) extends UnaryExpression {
   * shuffle, no window.
   */
 case class NearestCentroids(child: Expression, centroids: Seq[Seq[Double]], nProbe: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   require(nProbe > 0, "nProbe must be positive")
   require(centroids.nonEmpty, "centroids must be non-empty")
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"nearest_centroids needs array<double>, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(ArrayType(DoubleType))
 
   /** Unit-norm centroid rows (zero vectors stay zero). */
   @transient private lazy val normed: Array[Array[Double]] = normalize(centroids)

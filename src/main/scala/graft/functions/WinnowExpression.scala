@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -91,20 +91,14 @@ object WinnowUtil {
   }
 }
 
-case class WinnowSelect(child: Expression, k: Int, w: Int) extends UnaryExpression {
+case class WinnowSelect(child: Expression, k: Int, w: Int)
+    extends UnaryExpression with ExpectsInputTypes {
   require(k > 0, s"shingle size must be > 0, got $k")
   require(w > 1, s"winnow window must be > 1, got $w")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"winnow_select needs array<string> tokens, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     WinnowUtil.selectFromTokens(input.asInstanceOf[ArrayData], k, w)

@@ -1,7 +1,7 @@
 package graft.multimodal
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -284,17 +284,11 @@ object MediaContainers {
 }
 
 /** Codegen'd container encoder: `media_encode(modality, payload)`. */
-case class MediaEncode(left: Expression, right: Expression) extends BinaryExpression {
+case class MediaEncode(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, BinaryType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"media_encode needs (string, binary), got ${l.catalogString}/${r.catalogString}")
-    }
+  override def inputTypes = Seq(StringType, BinaryType)
 
   override def nullSafeEval(m: Any, b: Any): Any =
     MediaContainers.encodeJava(m.asInstanceOf[UTF8String].toString, b.asInstanceOf[Array[Byte]])

@@ -1,7 +1,7 @@
 package graft.multimodal
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -157,7 +157,7 @@ object MediaHash {
 }
 
 /** `bmp_dhash(bytes)` — codegen'd; see [[MediaHash.dhashBmp]]. */
-case class BmpDHash(child: Expression) extends UnaryExpression {
+case class BmpDHash(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
 
   // null for undecodable bytes even when the child is non-nullable —
@@ -165,14 +165,7 @@ case class BmpDHash(child: Expression) extends UnaryExpression {
   // unsafe projections skip the null bit (the CosineSimilarity lesson)
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bmp_dhash needs binary input, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(BinaryType)
 
   override def nullSafeEval(input: Any): Any =
     MediaHash.dhashBmp(input.asInstanceOf[Array[Byte]])
@@ -192,18 +185,11 @@ case class BmpDHash(child: Expression) extends UnaryExpression {
 }
 
 /** `wav_fingerprint(bytes)` — codegen'd; see [[MediaHash.fingerprintWav]]. */
-case class WavFingerprint(child: Expression) extends UnaryExpression {
+case class WavFingerprint(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"wav_fingerprint needs binary input, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(BinaryType)
 
   override def nullSafeEval(input: Any): Any =
     MediaHash.fingerprintWav(input.asInstanceOf[Array[Byte]])
@@ -225,19 +211,12 @@ case class WavFingerprint(child: Expression) extends UnaryExpression {
 /** `avi_frame_dhash(bytes)` — per-frame hashes in frame order;
   * codegen'd; see [[MediaHash.dhashAviFrames]].
   */
-case class AviFrameDHash(child: Expression) extends UnaryExpression {
+case class AviFrameDHash(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"avi_frame_dhash needs binary input, got ${t.catalogString}")
-    }
+  override def inputTypes = Seq(BinaryType)
 
   override def nullSafeEval(input: Any): Any = {
     val hs = MediaHash.dhashAviFrames(input.asInstanceOf[Array[Byte]])

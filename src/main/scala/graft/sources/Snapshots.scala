@@ -20,9 +20,10 @@ import scala.jdk.CollectionConverters._
   * it, and a reader never sees a half-written commit: list and
   * segments are staged to temp names and atomically linked into place,
   * and files are referenced only after they are fully written (the
-  * parquet job completed). Pre-r13 flat manifests (inline entry lines)
-  * read unchanged and migrate into segments on their next
-  * carried-forward commit.
+  * parquet job completed). Every manifest line is written and read
+  * through ONE grammar ([[parseLine]]/[[render]]); the store reads
+  * only the format it writes and refuses a line or list lacking a
+  * token every commit writes.
   *
   * Deliberately NOT here: concurrent-writer conflict detection (a
   * single-writer commit protocol; formats add optimistic retry on the
@@ -40,67 +41,214 @@ object Snapshots {
   private def manifestPath(root: Path, v: Int): Path =
     root.resolve("_manifests").resolve(s"$v.txt")
 
-  /** Manifest entry lines of snapshot `v` (one per data file). Since r9
-    * each line is TSV: `path<TAB>#stats<TAB>col=min..max…` — the
-    * per-file INT64 column statistics collected ONCE at commit time,
-    * the Iceberg/Delta manifest contract (writers report stats with the
-    * commit; readers plan file skipping from the manifest alone, no
-    * footer I/O on the query path). Pre-r9 manifests are path-only
-    * lines; [[fileStats]] falls back to footer reads for those.
+  /** True iff version `v`'s manifest list exists: committed and not
+    * expired or reaped. The one spelling of "is this version live".
     */
-  /** All manifest body REFS of snapshot `v`, UNRESOLVED: `#segment`
-    * pointer lines stay pointers, inline entry/delete lines pass as-is.
-    * This is what carry-forward commits splice into their children —
-    * the two-level contract's whole point is that a child re-references
+  def isLive(root: String, v: Int): Boolean =
+    Files.exists(manifestPath(Paths.get(root), v))
+
+  // ---- THE MANIFEST GRAMMAR: one parser, one renderer ----
+  // A version's manifest LIST `_manifests/<v>.txt` holds, tab-separated:
+  //   #schema  <struct json>
+  //   #props   k=v …                 (sorted by key; always ts and op)
+  //   #segment <_seg_<sha256>.txt> <n> [col=min..max …] [#partagg:<tr>=v1,v2,… …]
+  // and each content-addressed SEGMENT file holds its n body lines:
+  //   <path> #stats [col=min..max …] #rows=<n> [#bloom:<col>=<hex> …] [#part:<tr>=<value> …]
+  //   #delete    <file> <column> <version>
+  //   #posdelete <file> <version>
+  // [[parseLine]] and [[render]] are the only code that splits or spells
+  // a line. A line or list read from disk that lacks a token every
+  // commit writes is refused with an IllegalStateException naming the
+  // file and the token: the store reads only the format it writes.
+  //
+  // Two-level metadata (Iceberg's manifest-list/manifest split): a
+  // commit writes ONE new segment for its own lines and re-references
+  // every carried-forward segment by name, so commit cost is O(new
+  // files + segments), not O(total files). The pointer's aggregate
+  // min/max and partition summary let pruning ([[prunedWalk]]) skip
+  // whole segments WITHOUT opening them. Content addressing makes racing
+  // writers of identical content converge on one file, and reaping
+  // refcounts segments exactly like data files ([[reapVersions]]).
+
+  /** One `col=min..max` stats token: the integral range of a column's
+    * non-null values in one file (an entry) or over a segment's
+    * entries (a pointer). A column with no token holds no non-null
+    * value there, so nothing can match it.
+    */
+  private[sources] final case class Stat(column: String, min: Long, max: Long)
+
+  /** A parsed manifest line. */
+  private[sources] sealed trait Line
+  private[sources] final case class SchemaLine(json: String) extends Line
+  private[sources] final case class PropsLine(props: Map[String, String]) extends Line
+
+  /** A body line of a commit: a segment pointer, or a file line that
+    * [[segmentize]] packs into a segment when the commit publishes.
+    */
+  private[sources] sealed trait BodyRef extends Line
+
+  /** A resolved body line: it names one data or delete file. */
+  private[sources] sealed trait FileLine extends BodyRef {
+    def path: String
+    def withPath(p: String): FileLine
+  }
+
+  /** A data file with its commit-time stats, physical row count, bloom
+    * bitsets and partition values.
+    */
+  private[sources] final case class Entry(path: String, stats: Seq[Stat], rows: Long,
+      blooms: Seq[(String, String)], parts: Seq[(String, String)]) extends FileLine {
+    def withPath(p: String): FileLine = copy(path = p)
+    def stat(column: String): Option[Stat] = stats.find(_.column == column)
+  }
+
+  /** An equality-delete file of `column` keys, committed at `version`. */
+  private[sources] final case class Delete(path: String, column: String, version: Int)
+      extends FileLine {
+    def withPath(p: String): FileLine = copy(path = p)
+  }
+
+  /** A positional-delete file of (file_path, pos) tombstones. */
+  private[sources] final case class PosDelete(path: String, version: Int) extends FileLine {
+    def withPath(p: String): FileLine = copy(path = p)
+  }
+
+  /** A pointer to segment file `name` holding `n` body lines, with the
+    * aggregate stats and partition summaries of its entries.
+    */
+  private[sources] final case class Segment(name: String, n: Long, stats: Seq[Stat],
+      partAggs: Seq[(String, Seq[String])]) extends BodyRef
+
+  /** The one renderer of a manifest line. */
+  private[sources] def render(l: Line): String = {
+    def stat(s: Stat) = s"${s.column}=${s.min}..${s.max}"
+    def kv(prefix: String)(p: (String, String)) = s"$prefix${p._1}=${p._2}"
+    (l match {
+      case SchemaLine(json) => Seq("#schema", json)
+      case PropsLine(props) => "#props" +: props.toSeq.sortBy(_._1).map(kv(""))
+      case Segment(name, n, stats, aggs) =>
+        Seq("#segment", name, n.toString) ++ stats.map(stat) ++
+          aggs.map { case (t, vs) => s"#partagg:$t=${vs.mkString(",")}" }
+      case Entry(path, stats, rows, blooms, parts) =>
+        (path +: "#stats" +: stats.map(stat)) ++ Seq(s"#rows=$rows") ++
+          blooms.map(kv("#bloom:")) ++ parts.map(kv("#part:"))
+      case Delete(path, column, v) => Seq("#delete", path, column, v.toString)
+      case PosDelete(path, v) => Seq("#posdelete", path, v.toString)
+    }).mkString("\t")
+  }
+
+  /** The one parser of a manifest line read from `file`: the inverse of
+    * [[render]] on every line the store writes. Refuses a line lacking
+    * a token every commit writes, or carrying one no commit writes.
+    */
+  private[sources] def parseLine(file: String, line: String): Line = {
+    def refuse(what: String): Nothing = throw new IllegalStateException(
+      s"$file: manifest line $what: '${line.take(160)}'")
+    val t = line.split('\t')
+    def arg(i: Int, what: String): String = t.lift(i).getOrElse(refuse(s"lacks $what"))
+    def num(i: Int, what: String): Long =
+      arg(i, what).toLongOption.getOrElse(refuse(s"lacks $what"))
+    // `<key>=<value>`: values never hold '=', names may
+    def kv(tok: String): (String, String) = {
+      val i = tok.lastIndexOf('=')
+      if (i < 0) refuse(s"has malformed token '$tok'")
+      (tok.take(i), tok.drop(i + 1))
+    }
+    def stat(tok: String): Stat = kv(tok) match {
+      case (c, r) => r.split("\\.\\.") match {
+        case Array(mn, mx) if mn.toLongOption.isDefined && mx.toLongOption.isDefined =>
+          Stat(c, mn.toLong, mx.toLong)
+        case _ => refuse(s"has malformed stats token '$tok'")
+      }
+    }
+    // a line's trailing `#<kind>:` tokens, all of one of the given kinds
+    def tagged(toks: Seq[String], kinds: String*): Seq[(String, (String, String))] =
+      toks.map { tok =>
+        kinds.find(tok.startsWith).map(k => k -> kv(tok.stripPrefix(k)))
+          .getOrElse(refuse(s"has unknown token '$tok'"))
+      }
+    t.head match {
+      case "#schema" => SchemaLine(arg(1, "the schema json"))
+      case "#props" => PropsLine(t.tail.map(kv).toMap)
+      case "#segment" =>
+        val (stats, rest) = t.drop(3).toSeq.span(!_.startsWith("#"))
+        Segment(arg(1, "the segment name"), num(2, "the entry count"), stats.map(stat),
+          tagged(rest, "#partagg:").map { case (_, (tr, vs)) => tr -> vs.split(',').toSeq })
+      case "#delete" =>
+        if (t.length != 4) refuse("is not '#delete <file> <column> <version>'")
+        Delete(t(1), t(2), num(3, "the delete version").toInt)
+      case "#posdelete" =>
+        if (t.length != 3) refuse("is not '#posdelete <file> <version>'")
+        PosDelete(t(1), num(2, "the delete version").toInt)
+      case k if k.startsWith("#") => refuse(s"has unknown kind '$k'")
+      case path =>
+        if (!t.lift(1).contains("#stats")) refuse("lacks #stats")
+        val (stats, rest) = t.drop(2).toSeq.span(!_.startsWith("#"))
+        val rows = rest.headOption.filter(_.startsWith("#rows="))
+          .flatMap(_.stripPrefix("#rows=").toLongOption)
+          .getOrElse(refuse("lacks #rows="))
+        val extra = tagged(rest.drop(1), "#bloom:", "#part:")
+        Entry(path, stats.map(stat), rows,
+          extra.collect { case ("#bloom:", p) => p }, extra.collect { case ("#part:", p) => p })
+    }
+  }
+
+  /** A file line of a segment file. */
+  private def parseFileLine(file: String, line: String): FileLine =
+    parseLine(file, line) match {
+      case f: FileLine => f
+      case _ => throw new IllegalStateException(
+        s"$file: a segment holds only entry and delete lines: '${line.take(160)}'")
+    }
+
+  /** Version `v`'s manifest list, parsed: the committed schema, the
+    * commit props and the segment pointers of its body.
+    */
+  private final case class Manifest(schemaJson: String, props: Map[String, String],
+                                    segments: Seq[Segment])
+
+  /** Read and parse version `v`'s list. Every commit writes `#schema`,
+    * `#props` with `ts` and `op`, and a body of `#segment` pointers only;
+    * a list lacking any of them is refused.
+    */
+  private def manifestOf(root: String, v: Int): Manifest = {
+    require(isLive(root, v), s"snapshot $v does not exist under $root")
+    val file = manifestPath(Paths.get(root), v)
+    def refuse(token: String): Nothing =
+      throw new IllegalStateException(s"$file: manifest list lacks $token")
+    val lines = Files.readAllLines(file).asScala.toSeq.map(parseLine(file.toString, _))
+    val props = lines.collectFirst { case PropsLine(p) => p }.getOrElse(refuse("#props"))
+    Seq("ts", "op").filterNot(props.contains).foreach(k => refuse(s"the $k prop"))
+    Manifest(lines.collectFirst { case SchemaLine(j) => j }.getOrElse(refuse("#schema")),
+      props,
+      lines.collect {
+        case s: Segment => s
+        case _: FileLine => refuse("#segment: an inline body line is not a pointer")
+      })
+  }
+
+  /** All manifest body REFS of snapshot `v`, UNRESOLVED: the segment
+    * pointers carry-forward commits splice into their children — the
+    * two-level contract's whole point is that a child re-references
     * the parent's segments by name instead of rewriting their entries.
     */
-  private def bodyRefs(root: String, v: Int): Seq[String] = {
-    val p = manifestPath(Paths.get(root), v)
-    require(Files.exists(p), s"snapshot $v does not exist under $root")
-    Files.readAllLines(p).asScala.toSeq
-      .filter(l => l.nonEmpty && !l.startsWith("#schema\t") &&
-        !l.startsWith("#props\t"))
-  }
+  private def bodyRefs(root: String, v: Int): Seq[Segment] = manifestOf(root, v).segments
 
   /** The parent's body refs a commit carries forward — none onto the
     * empty table (parent 0, an append's first commit or a branch
     * created at 0).
     */
-  private def carriedRefs(root: String, parent: Int): Seq[String] =
+  private def carriedRefs(root: String, parent: Int): Seq[Segment] =
     if (parent == 0) Nil else bodyRefs(root, parent)
 
-  /** All manifest body lines: data-file entries AND `#delete` lines
-    * (the schema header is metadata, not an entry), with `#segment`
-    * pointers resolved ([[resolveBody]]). Carried forward BY REFERENCE
-    * (see [[bodyRefs]]) by [[append]]/[[deleteWhere]].
+  /** All file lines of snapshot `v`, data entries AND delete lines,
+    * with its segment pointers resolved ([[resolveBody]]).
     */
-  private def rawLines(root: String, v: Int): Seq[String] =
+  private def rawLines(root: String, v: Int): Seq[FileLine] =
     resolveBody(Paths.get(root), bodyRefs(root, v))
 
-  // ---- MANIFEST LISTS (r13): two-level snapshot metadata ----
-  // A version's manifest is a LIST: header lines plus body refs, where
-  // a body ref is either an inline line (legacy / degenerate) or a
-  //   #segment\t<_seg_<sha256>.txt>\t<n>\t<agg col=min..max… | #nostats>
-  // pointer to an immutable, CONTENT-ADDRESSED segment file holding n
-  // body lines. Commits write ONE new segment for their own lines and
-  // re-reference every carried-forward segment by name, so commit cost
-  // is O(new files + segments), not O(total files) — at 100 TB the
-  // per-snapshot manifest is itself big data and rewriting it per
-  // commit is the scale bug this closes (Iceberg's manifest-list /
-  // manifest split, reduced to the reuse + pruning contract). The
-  // pointer carries per-column aggregate min/max over its entries, so
-  // stats pruning ([[prunedFiles]]) skips whole segments WITHOUT
-  // opening them; [[compact]] naturally collapses a long pointer list
-  // back to one segment (manifest compaction rides data compaction).
-  // Content addressing makes racing writers of identical content
-  // converge on one file, and reaping refcounts segments exactly like
-  // data files ([[reapVersions]]/[[removeOrphans]]).
-
-  private val SegmentPtr = "#segment\t"
-
-  /** Segment reads on any resolve path — the two-level analogue of
-    * [[queryPathFooterReads]]: SnapshotSegmentsSpec asserts stats
-    * pruning opens only the overlapping segments.
+  /** Segment reads on any resolve path: SnapshotSegmentsSpec asserts
+    * stats pruning opens only the overlapping segments.
     */
   val segmentReads = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -126,11 +274,10 @@ object Snapshots {
     ThreadLocal.withInitial[java.lang.Long](() => 0L)
   def bodyMaterializationsHere: Long = bodyMaterializationsTL.get()
 
-  /** Splice segment pointers: each `#segment` ref contributes its
-    * file's lines in place, inline refs pass through — resolution
-    * preserves manifest order exactly.
+  /** Splice segment pointers: each contributes its file's lines in
+    * place — resolution preserves manifest order exactly.
     */
-  private def resolveBody(rootP: Path, refs: Seq[String]): Seq[String] = {
+  private def resolveBody(rootP: Path, refs: Seq[Segment]): Seq[FileLine] = {
     bodyMaterializationsTL.set(bodyMaterializationsTL.get() + 1L)
     resolveBodyIter(rootP, refs).toVector
   }
@@ -138,30 +285,24 @@ object Snapshots {
   /** Lazy [[resolveBody]] (r16): one segment's lines in memory at a
     * time — the bound that lets the non-clustered manifest rewrite
     * stream a 10⁷-entry body through [[segmentize]]'s O(targetLines)
-    * run buffer instead of materializing O(table files) strings on
+    * run buffer instead of materializing O(table files) lines on
     * the driver.
     */
-  private def resolveBodyIter(rootP: Path, refs: Seq[String]): Iterator[String] =
-    refs.iterator.flatMap { l =>
-      if (l.startsWith(SegmentPtr)) {
-        segmentReads.incrementAndGet()
-        segmentReadsTL.set(segmentReadsTL.get() + 1L)
-      }
-      refLines(rootP, l).iterator
+  private def resolveBodyIter(rootP: Path, refs: Seq[Segment]): Iterator[FileLine] =
+    refs.iterator.flatMap { s =>
+      segmentReads.incrementAndGet()
+      segmentReadsTL.set(segmentReadsTL.get() + 1L)
+      segmentLines(rootP, s.name).iterator.map(_._2)
     }
 
-  /** One ref's lines, NO counters — the pure parsing core of the
-    * segment-pointer grammar, shared by [[resolveBodyIter]] (driver;
-    * counters at the call site) and the distributed rewrite's
-    * executor-side resolve, so a format change can never silently
-    * skip one copy (r16).
+  /** Segment file `name`'s lines, raw and parsed, NO counters — shared
+    * by [[resolveBodyIter]] (driver; counters there) and the
+    * distributed rewrite's executor-side resolve.
     */
-  private[sources] def refLines(rootP: Path, ref: String): Seq[String] =
-    if (ref.startsWith(SegmentPtr)) {
-      val name = ref.split('\t')(1)
-      Files.readAllLines(rootP.resolve("_manifests").resolve(name))
-        .asScala.toSeq.filter(_.nonEmpty)
-    } else Seq(ref)
+  private def segmentLines(rootP: Path, name: String): Seq[(String, FileLine)] = {
+    val p = rootP.resolve("_manifests").resolve(name)
+    Files.readAllLines(p).asScala.toSeq.map(l => l -> parseFileLine(p.toString, l))
+  }
 
   /** Most distinct partition values a `#partagg:` summary records; a
     * segment spanning more simply isn't partition-skippable (opened and
@@ -186,13 +327,11 @@ object Snapshots {
     */
   val SegmentTargetLines = 8192
 
-  /** Per-column aggregate stats tokens for a segment pointer:
-    * `col=min..max` over every entry that carries the column (entries
-    * without a column's token hold no matchable value — the pruner
-    * contract — so they don't widen the range); `#nostats` if any DATA
-    * entry predates commit-time stats (its files need the footer
-    * fallback, so the segment must never be skipped unopened). Delete
-    * lines carry no prunable stats and are ignored here.
+  /** Write `lines` as a content-addressed segment and return its
+    * pointer. The pointer's stats are per-column min/max over every
+    * entry that carries the column (entries without a column's token
+    * hold no matchable value, so they don't widen the range); delete
+    * lines carry no prunable stats.
     *
     * Partition summaries (r13): `#partagg:<transform>=v1,v2,…` when
     * EVERY data entry carries the transform's `#part:` token, the
@@ -202,63 +341,17 @@ object Snapshots {
     * unopened ([[partitionPrunedFiles]]). The all-entries condition is
     * what makes the skip sound: one untokened file inside would have
     * to be scanned.
-    */
-  private def segmentAggTokens(lines: Seq[String]): Seq[String] = {
-    val dataLines = lines.filterNot(l =>
-      l.startsWith("#delete\t") || l.startsWith("#posdelete\t"))
-    val colTokens: Seq[String] =
-      if (dataLines.exists { l =>
-          val parts = l.split('\t'); parts.length < 2 || parts(1) != "#stats" })
-        Seq("#nostats")
-      else {
-        val agg = scala.collection.mutable.Map[String, (Long, Long)]()
-        for (l <- dataLines; t <- l.split('\t').drop(2).takeWhile(!_.startsWith("#"))) {
-          val i = t.indexOf('=')
-          val c = t.take(i)
-          val b = t.drop(i + 1).split("\\.\\.")
-          val (mn, mx) = (b(0).toLong, b(1).toLong)
-          val cur = agg.get(c)
-          agg(c) = (cur.fold(mn)(p => math.min(p._1, mn)),
-            cur.fold(mx)(p => math.max(p._2, mx)))
-        }
-        agg.toSeq.sortBy(_._1).map { case (c, (mn, mx)) => s"$c=$mn..$mx" }
-      }
-    val partTokens: Seq[String] = {
-      val perEntry: Seq[Map[String, String]] = dataLines.map { l =>
-        l.split('\t').filter(_.startsWith("#part:")).map { t =>
-          val kv = t.stripPrefix("#part:")
-          val i = kv.indexOf('=')
-          kv.take(i) -> kv.drop(i + 1)
-        }.toMap
-      }
-      perEntry.flatMap(_.keys).distinct.sorted.flatMap { tr =>
-        val vals = perEntry.map(_.get(tr))
-        if (dataLines.nonEmpty && vals.forall(_.isDefined)) {
-          val distinct = vals.flatten.distinct.sorted
-          if (distinct.size <= MaxPartSummaryValues &&
-              distinct.forall(_.matches("[A-Za-z0-9_.-]+")))
-            Some(s"#partagg:$tr=${distinct.mkString(",")}")
-          else None
-        } else None
-      }
-    }
-    colTokens ++ partTokens
-  }
-
-  /** Write `lines` as a content-addressed segment (SHA-256 of content —
-    * identical content converges on one file; racing writers of the
-    * same bytes both succeed) and return its pointer line. SHA-256, not
-    * MD5: segment bytes embed data-derived values (`#part:` identity
-    * tokens), and MD5 collisions are CONSTRUCTIBLE — a crafted pair of
-    * partition values could alias two distinct segments and silently
-    * corrupt a snapshot's file set. md5-low-60 survives elsewhere only
-    * as a portable COMPARISON hash (bucketing/blooms), never identity.
+    *
+    * SHA-256 of content, not MD5: segment bytes embed data-derived
+    * values (`#part:` identity tokens), and MD5 collisions are
+    * CONSTRUCTIBLE — a crafted pair of partition values could alias two
+    * distinct segments and silently corrupt a snapshot's file set.
     * Staged under a `_tmp_` name (the crash-debris sweep's contract)
     * and hard-linked into place; EEXIST means the identical segment is
     * already published.
     */
-  private def writeSegment(rootP: Path, lines: Seq[String]): String = {
-    val bytes = lines.mkString("\n").getBytes("UTF-8")
+  private def writeSegment(rootP: Path, lines: Seq[FileLine]): Segment = {
+    val bytes = lines.map(render).mkString("\n").getBytes("UTF-8")
     val hash = java.security.MessageDigest.getInstance("SHA-256")
       .digest(bytes).map(b => f"$b%02x").mkString
     val name = s"_seg_$hash.txt"
@@ -270,24 +363,25 @@ object Snapshots {
       catch { case _: java.nio.file.FileAlreadyExistsException => () }
       finally Files.deleteIfExists(tmp)
     }
-    (Seq("#segment", name, lines.size.toString) ++
-      segmentAggTokens(lines)).mkString("\t")
+    val data = entriesOf(lines)
+    val stats = data.flatMap(_.stats).groupBy(_.column).toSeq.sortBy(_._1)
+      .map { case (c, ss) => Stat(c, ss.map(_.min).min, ss.map(_.max).max) }
+    val perEntry = data.map(_.parts.toMap)
+    val partAggs = perEntry.flatMap(_.keys).distinct.sorted.flatMap { tr =>
+      val vals = perEntry.map(_.get(tr))
+      val distinct = vals.flatten.distinct.sorted
+      if (vals.forall(_.isDefined) && distinct.size <= MaxPartSummaryValues &&
+          distinct.forall(_.matches("[A-Za-z0-9_.-]+")))
+        Some(tr -> distinct)
+      else None
+    }
+    Segment(name, lines.size.toLong, stats, partAggs)
   }
 
   /** Turn a commit's body into list form: each run of consecutive
-    * inline lines becomes one new segment, pointer refs pass through
+    * file lines becomes one new segment, pointers pass through
     * untouched — order-preserving for any interleaving, and in
     * practice a commit is (carried pointers)* + (its own new lines).
-    *
-    * Runs additionally split where consecutive DATA lines change
-    * "statsness": on flat-manifest migration the parent's carried
-    * legacy path-only entries and the commit's freshly written
-    * stats-bearing entries would otherwise merge into ONE segment,
-    * whose pointer gets `#nostats` — making the NEW files permanently
-    * unskippable (and footer-read-taxed) until a compact rewrites
-    * them. Flushing the legacy run separately quarantines `#nostats`
-    * to the entries that earned it. Delete lines carry no prunable
-    * stats and ride whichever run is open.
     *
     * Runs also cut at `targetLines` ([[SegmentTargetLines]]): a
     * resolved body re-packed by [[compactManifests]] (or one huge
@@ -298,8 +392,8 @@ object Snapshots {
     * windows are untouched (a segment boundary is physical grouping
     * only; [[resolveBody]] splices pointers back in place).
     */
-  private def segmentize(rootP: Path, lines: Seq[String],
-                         targetLines: Int = SegmentTargetLines): Seq[String] =
+  private def segmentize(rootP: Path, lines: Seq[BodyRef],
+                         targetLines: Int = SegmentTargetLines): Seq[Segment] =
     segmentizeIter(rootP, lines.iterator, targetLines)
 
   /** Iterator-driven [[segmentize]] core: memory is O(one run) —
@@ -309,86 +403,59 @@ object Snapshots {
     * content-addressed, so concurrent/retried writers converge)
     * share the ONE cutting spelling.
     */
-  private def segmentizeIter(rootP: Path, lines: Iterator[String],
-                             targetLines: Int): Seq[String] = {
+  private def segmentizeIter(rootP: Path, lines: Iterator[BodyRef],
+                             targetLines: Int): Seq[Segment] = {
     require(targetLines > 0, s"targetLines must be positive, got $targetLines")
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val run = scala.collection.mutable.ArrayBuffer[String]()
-    var runHasStats: Option[Boolean] = None
+    val out = scala.collection.mutable.ArrayBuffer[Segment]()
+    val run = scala.collection.mutable.ArrayBuffer[FileLine]()
     def flush(): Unit =
-      if (run.nonEmpty) {
-        out += writeSegment(rootP, run.toSeq); run.clear()
-        runHasStats = None
-      }
-    def isDelete(l: String) =
-      l.startsWith("#delete\t") || l.startsWith("#posdelete\t")
-    lines.foreach { l =>
-      if (l.startsWith(SegmentPtr)) { flush(); out += l }
-      else {
-        if (!isDelete(l)) {
-          val parts = l.split('\t')
-          val hasStats = parts.length >= 2 && parts(1) == "#stats"
-          if (runHasStats.exists(_ != hasStats)) flush()
-          runHasStats = Some(hasStats)
-        }
+      if (run.nonEmpty) { out += writeSegment(rootP, run.toSeq); run.clear() }
+    lines.foreach {
+      case s: Segment => flush(); out += s
+      case l: FileLine =>
         run += l
         if (run.size >= targetLines) flush()
-      }
     }
     flush()
     out.toSeq
   }
 
-  /** Segment files referenced by version `v`'s manifest list. */
-  private def segmentRefsOf(root: String, v: Int): Seq[String] =
-    bodyRefs(root, v).collect {
-      case l if l.startsWith(SegmentPtr) => l.split('\t')(1)
-    }
-
   /** Commit-scoped properties of version `v` (r9): `#props` header
-    * lines are metadata about THE COMMIT ITSELF — unlike entry lines
-    * they are NOT carried forward by children ([[rawLines]] strips
-    * them). Since r14 EVERY commit carries one (the monotone `ts`
-    * stamp, plus `op`/`parent`/`branch` where the writer sets them);
-    * notable consumers: [[compact]]'s `rewrite=true` (Delta's
-    * `dataChange=false` — the commit reorganized bytes without
-    * changing the table's rows, so CDC readers skip it) and
+    * lines are metadata about THE COMMIT ITSELF — unlike body lines
+    * they are NOT carried forward by children. EVERY commit carries
+    * the monotone `ts` stamp and its `op`, plus `parent`/`branch` on a
+    * branched table; notable consumers: [[compact]]'s `rewrite=true`
+    * (Delta's `dataChange=false` — the commit reorganized bytes
+    * without changing the table's rows, so CDC readers skip it) and
     * [[versionAsOf]]'s `ts`.
     */
-  def propsOf(root: String, v: Int): Map[String, String] = {
-    val p = manifestPath(Paths.get(root), v)
-    require(Files.exists(p), s"snapshot $v does not exist under $root")
-    Files.readAllLines(p).asScala
-      .filter(_.startsWith("#props\t"))
-      .flatMap(_.stripPrefix("#props\t").split('\t'))
-      .map { kv => val i = kv.indexOf('=')
-        kv.take(i) -> kv.drop(i + 1) }
-      .toMap
-  }
+  def propsOf(root: String, v: Int): Map[String, String] = manifestOf(root, v).props
 
   // ---- body-line views (r16): each is a pure function of ONE
   // resolved body, so a read path can resolve the segments once and
   // derive entries + both delete flavors from the same pass instead
   // of re-reading every segment file three times per read
-  private def entriesOf(lines: Seq[String]): Seq[String] =
-    lines.filterNot(l =>
-      l.startsWith("#delete\t") || l.startsWith("#posdelete\t"))
+  private def entriesOf(lines: Seq[FileLine]): Seq[Entry] =
+    lines.collect { case e: Entry => e }
 
-  private def deleteSetsOf(lines: Seq[String]): Seq[((Int, String), Seq[String])] =
-    lines.collect {
-      case l if l.startsWith("#delete\t") =>
-        val parts = l.split('\t')
-        ((parts(3).toInt, parts(2)), parts(1))
-    }.groupBy(_._1).map { case (k, vs) => (k, vs.map(_._2)) }.toSeq
+  private def deleteSetsOf(lines: Seq[FileLine]): Seq[((Int, String), Seq[String])] =
+    lines.collect { case Delete(f, c, v) => ((v, c), f) }
+      .groupBy(_._1).map { case (k, vs) => (k, vs.map(_._2)) }.toSeq
 
-  private def posDeleteSetsOf(lines: Seq[String]): Seq[(Int, Seq[String])] =
-    lines.collect {
-      case l if l.startsWith("#posdelete\t") =>
-        val parts = l.split('\t')
-        (parts(2).toInt, parts(1))
-    }.groupBy(_._1).map { case (k, vs) => (k, vs.map(_._2)) }.toSeq
+  private def posDeleteSetsOf(lines: Seq[FileLine]): Seq[(Int, Seq[String])] =
+    lines.collect { case PosDelete(f, v) => (v, f) }
+      .groupBy(_._1).map { case (k, vs) => (k, vs.map(_._2)) }.toSeq
 
-  private def entries(root: String, v: Int): Seq[String] =
+  /** The lines commit `v` itself added to its body: its own data files
+    * (those under its `data_v<v>` dir) and the delete sets stamped `v`.
+    */
+  private def addedBy(v: Int, lines: Seq[FileLine]): Seq[FileLine] = lines.filter {
+    case e: Entry => dataVersionOf(e.path) == v
+    case Delete(_, _, w) => w == v
+    case PosDelete(_, w) => w == v
+  }
+
+  private def entries(root: String, v: Int): Seq[Entry] =
     entriesOf(rawLines(root, v))
 
   /** Equality-delete sets of snapshot `v`, grouped (commit version,
@@ -434,31 +501,16 @@ object Snapshots {
     * version-travel correctly: reading v1 after a widening append
     * returns v1's OWN columns, and reading the widened version
     * null-fills the new column for rows in pre-evolution files (Spark's
-    * explicit-schema parquet read clips by name). None for a pre-r9
-    * path-only manifest (reader falls back to file-derived schema).
+    * explicit-schema parquet read clips by name).
     */
-  def schemaOf(root: String, v: Int): Option[org.apache.spark.sql.types.StructType] = {
-    val p = manifestPath(Paths.get(root), v)
-    require(Files.exists(p), s"snapshot $v does not exist under $root")
-    Files.readAllLines(p).asScala
-      .collectFirst { case l if l.startsWith("#schema\t") =>
-        org.apache.spark.sql.types.DataType
-          .fromJson(l.stripPrefix("#schema\t"))
-          .asInstanceOf[org.apache.spark.sql.types.StructType] }
-  }
-
-  /** [[schemaOf]], falling back to the files' inferred schema for a
-    * pre-r9 manifest.
-    */
-  private def schemaAt(spark: SparkSession, root: String, v: Int)
-      : org.apache.spark.sql.types.StructType =
-    schemaOf(root, v).getOrElse(spark.read.parquet(files(root, v): _*).schema)
+  def schemaOf(root: String, v: Int): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.DataType.fromJson(manifestOf(root, v).schemaJson)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
 
   /** Files of snapshot `v`, in manifest order. */
   def files(root: String, v: Int): Seq[String] = filesOf(entries(root, v))
 
-  private def filesOf(entries: Seq[String]): Seq[String] =
-    entries.map(_.split('\t').head)
+  private def filesOf(entries: Seq[Entry]): Seq[String] = entries.map(_.path)
 
   /** Latest committed version, 0 if the table is empty. Derived from
     * the MANIFEST DIRECTORY (max committed number), not the `_latest`
@@ -507,36 +559,24 @@ object Snapshots {
   private def newToken(): String =
     java.util.UUID.randomUUID.toString.take(8)
 
-  /** Query-path footer opens — incremented ONLY by the legacy
-    * footer-stats fallback, never by commit-time stats collection. The
-    * q165 gate asserts this stays at zero across a manifest-stats
-    * pruning plan: the production contract is that split planning reads
-    * manifests, not N data-file footers from the driver.
+  /** Query-path footer opens. No read path opens a footer: split
+    * planning reads manifests, never N data-file footers from the
+    * driver, and the only footer reads are commit-time stats
+    * collection ([[footerInfo]]), which this does not count. So it
+    * stays 0; the q165 family of gates and perfbench report it.
     */
   val queryPathFooterReads = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** THIS thread's query-path footer opens — the
-    * [[segmentReadsHere]] convention applied to the footer counter,
-    * for gates metering their own lookup's cost in a shared JVM.
+  /** THIS thread's query-path footer opens: 0, as for
+    * [[queryPathFooterReads]] — no read path opens a footer.
     */
-  private val queryPathFooterReadsTL =
-    ThreadLocal.withInitial[java.lang.Long](() => 0L)
-  def queryPathFooterReadsHere: Long = queryPathFooterReadsTL.get()
+  def queryPathFooterReadsHere: Long = 0L
 
-  /** Per-file min/max of every INT64 leaf column, from one footer read
-    * (metadata pages only). Used at COMMIT time — once per file
-    * lifetime, the write side of the manifest-stats contract — and as
-    * the [[fileStats]] fallback for pre-r9 path-only manifests.
-    */
-  private def footerLongStats(
-      conf: org.apache.hadoop.conf.Configuration,
-      f: String): Map[String, (Long, Long)] =
-    footerInfo(conf, f)._2
-
-  /** One footer read → (row count, per-integral-column min/max). Both
-    * facts ride the same metadata pages; reading them together keeps
-    * "one footer open per file lifetime" true after row counts joined
-    * the manifest (r9 metadata-tables work).
+  /** The manifest entry of a freshly written file, from ONE footer read
+    * at commit time: its row count and per-integral-column min/max ride
+    * the same metadata pages, so each file pays one footer open in its
+    * lifetime. A rowless (or all-null) column simply gets no stats
+    * token — "no value can match", exactly how the pruner treats it.
     *
     * INT32 columns record stats too (widened to Long — exact, ints
     * embed in longs; r16 review finding): the pruner's "no stats
@@ -548,9 +588,8 @@ object Snapshots {
     * those columns loudly ([[requireStatsPrunable]]) instead of
     * mis-pruning.
     */
-  private def footerInfo(
-      conf: org.apache.hadoop.conf.Configuration,
-      f: String): (Long, Map[String, (Long, Long)]) = {
+  private def footerEntry(
+      conf: org.apache.hadoop.conf.Configuration, f: String): Entry = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
       .fromPath(new org.apache.hadoop.fs.Path(f), conf)
@@ -566,13 +605,14 @@ object Snapshots {
         }
         .filter(c => c.getStatistics != null && c.getStatistics.hasNonNullValue)
         .groupBy(_.getPath.toDotString)
+        .toSeq.sortBy(_._1)
         .map { case (name, chunks) =>
           val st = chunks.map(_.getStatistics)
-          name -> (
+          Stat(name,
             st.map(_.genericGetMin.asInstanceOf[Number].longValue).min,
             st.map(_.genericGetMax.asInstanceOf[Number].longValue).max)
-        }.toMap
-      (rows, stats)
+        }
+      Entry(f, stats, rows, Nil, Nil)
     } finally reader.close()
   }
 
@@ -586,7 +626,7 @@ object Snapshots {
     */
   private def requireStatsPrunable(root: String, version: Int,
                                    column: String): Unit =
-    schemaOf(root, version).flatMap(_.fields.find(_.name == column))
+    schemaOf(root, version).fields.find(_.name == column)
       .map(_.dataType).foreach {
         case org.apache.spark.sql.types.LongType |
              org.apache.spark.sql.types.IntegerType |
@@ -601,22 +641,10 @@ object Snapshots {
             "drop live files; scan instead")
       }
 
-  /** Manifest entry lines for freshly written files: path + the
-    * commit-time stats block. A rowless (or all-null) column simply has
-    * no stats token — under the `#stats` marker that means "no value
-    * can match", which is exactly how the pruner treats it.
-    */
-  private def entryLines(df: DataFrame, newFiles: Seq[String]): Seq[String] = {
+  /** Manifest entries for freshly written files ([[footerEntry]]). */
+  private def entryLines(df: DataFrame, newFiles: Seq[String]): Seq[Entry] = {
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    newFiles.map { f =>
-      val (rows, colStats) = footerInfo(conf, f)
-      val stats = colStats.toSeq.sortBy(_._1)
-        .map { case (c, (mn, mx)) => s"$c=$mn..$mx" }
-      // trailing #rows token: never collides with a `col=..` stats
-      // token (column names can't start with '#'), ignored by pre-r9
-      // parsers that scan for their own column prefix
-      ((f +: "#stats" +: stats) :+ s"#rows=$rows").mkString("\t")
-    }
+    newFiles.map(footerEntry(conf, _))
   }
 
   /** Atomically publish version `v` with exactly `fileSet` as its file
@@ -630,7 +658,7 @@ object Snapshots {
     * token so racing stagings never collide.
     */
   private def commit(rootP: Path, v: Int, schema: org.apache.spark.sql.types.StructType,
-                     fileSet: Seq[String], props: Map[String, String]): Unit = {
+                     fileSet: Seq[BodyRef], props: Map[String, String]): Unit = {
     val token = newToken()
     val tmp = rootP.resolve("_manifests").resolve(s"_tmp_${v}_$token.txt")
     // commit timestamp (r14): stamped on EVERY commit, strictly
@@ -647,20 +675,17 @@ object Snapshots {
     // rather than aborting a commit whose data is already written
     val parentTs =
       try {
-        if (parentV >= 1 && Files.exists(manifestPath(rootP, parentV)))
+        if (parentV >= 1 && isLive(rootP.toString, parentV))
           commitTimeOf(rootP.toString, parentV)
         else 0L
       } catch { case scala.util.control.NonFatal(_) => 0L }
     val stamped = props +
       ("ts" -> math.max(System.currentTimeMillis(), parentTs + 1L).toString)
-    val headers = s"#schema\t${schema.json}" +:
-      Seq(("#props" +: stamped.toSeq.sortBy(_._1)
-        .map { case (k, w) => s"$k=$w" }).mkString("\t"))
     // two-level commit (r13): inline body lines become content-addressed
     // segments, carried-forward pointers ride through by reference —
     // the list file stays O(commits since last compact), never O(files)
-    Files.write(tmp, (headers ++ segmentize(rootP, fileSet))
-      .mkString("\n").getBytes("UTF-8"))
+    Files.write(tmp, (Seq(SchemaLine(schema.json), PropsLine(stamped)) ++
+      segmentize(rootP, fileSet)).map(render).mkString("\n").getBytes("UTF-8"))
     // hard link, NOT rename: POSIX rename(2) silently REPLACES an
     // existing target (ATOMIC_MOVE is no CAS there), while link(2)
     // fails with EEXIST — the one atomic create-if-absent the
@@ -717,22 +742,22 @@ object Snapshots {
         s"type change outside the promotion matrix: $a <-> $b " +
           "(int->long, float->double, decimal precision widening only)")
     }
-    (if (prev == 0) None else schemaOf(root, prev)) match {
-      case None => incoming
-      case Some(ps) =>
-        val widened = ps.fields.map { pf =>
-          incoming.find(_.name == pf.name) match {
-            case Some(f) =>
-              try pf.copy(dataType = promoted(pf.dataType, f.dataType))
-              catch { case e: IllegalArgumentException =>
-                throw new IllegalArgumentException(
-                  s"column '${pf.name}': ${e.getMessage}") }
-            case None => pf
-          }
+    if (prev == 0) incoming
+    else {
+      val ps = schemaOf(root, prev)
+      val widened = ps.fields.map { pf =>
+        incoming.find(_.name == pf.name) match {
+          case Some(f) =>
+            try pf.copy(dataType = promoted(pf.dataType, f.dataType))
+            catch { case e: IllegalArgumentException =>
+              throw new IllegalArgumentException(
+                s"column '${pf.name}': ${e.getMessage}") }
+          case None => pf
         }
-        StructType(
-          (widened ++ incoming.fields.filterNot(f =>
-            ps.fieldNames.contains(f.name))).map(_.copy(nullable = true)))
+      }
+      StructType(
+        (widened ++ incoming.fields.filterNot(f =>
+          ps.fieldNames.contains(f.name))).map(_.copy(nullable = true)))
     }
   }
 
@@ -769,16 +794,14 @@ object Snapshots {
     val newFiles = writeStaged(df, st.dir("data"))
     val blooms = bloomCols.map(c =>
       c -> bloomHexByFile(df.sparkSession, newFiles, c)).toMap
-    val lines = entryLines(df, newFiles).map { line =>
-      val f = line.split('\t').head
+    val lines = entryLines(df, newFiles).map { e =>
       // a file the bloom pass scanned but got no rows from (an empty
       // partition's file, or an all-null column) carries the EMPTY
       // bitset — "no value can match", the same semantics the stats
       // pruner gives a statless column. Only a column NOT configured
       // for blooms is exempt from pruning.
-      val toks = bloomCols.map(c =>
-        s"#bloom:$c=${blooms(c).getOrElse(f, bitsToHex(Nil))}")
-      (line +: toks).mkString("\t")
+      e.copy(blooms = bloomCols.map(c =>
+        c -> blooms(c).getOrElse(e.path, bitsToHex(Nil))))
     }
     casAppend(df, st, branch, lines)
   }
@@ -803,7 +826,7 @@ object Snapshots {
     * rebase liveness for the stronger promise.
     */
   private def casAppend(df: DataFrame, st: Staged, branch: String,
-                        lines: Seq[String],
+                        lines: Seq[Entry],
                         checks: Seq[graft.operators.QualityChecks.Check] = Nil,
                         validatedBasis: Int = -1): Int = {
     var basis = validatedBasis
@@ -818,7 +841,7 @@ object Snapshots {
             s"$parent] invalidated its InboundRef post-image basis — " +
             "re-read and re-run")
       if (uniques.nonEmpty && parent != basis) {
-        val files = lines.map(l => st.moved(l.split('\t').head))
+        val files = lines.map(e => st.moved(e.path))
         val bad =
           if (files.isEmpty) Nil
           else crossUniqueBad(df.sparkSession.read.parquet(files: _*),
@@ -1096,7 +1119,7 @@ object Snapshots {
     }
     val newFiles = writeStaged(reshaped, st.dir("data"))
     val lines = entryLines(reshaped, newFiles)
-    val schema = schemaOf(root, prev).getOrElse(prevData.schema)
+    val schema = schemaOf(root, prev)
     // a compaction REWRITES version `prev`'s content, so a commit that
     // landed meanwhile ON THIS BRANCH invalidates the rewrite — fail
     // loudly for the caller to re-run against the new head (Iceberg's
@@ -1152,9 +1175,8 @@ object Snapshots {
     * embedded version stamps and data files by their `data_v<N>`
     * paths, never by position ([[deleteSets]]/[[dataVersionOf]]) —
     * only scan order changes. Entries without a stats token for the
-    * column sort stably to the tail (and the statsness split keeps
-    * legacy `#nostats` runs quarantined as before); the sort reads
-    * TOKENS only — a metadata-only op never pays a footer read.
+    * column sort stably to the tail; the sort reads TOKENS only — a
+    * metadata-only op never pays a footer read.
     */
   def compactManifests(root: String, branch: String = "main",
                        targetLines: Int = SegmentTargetLines,
@@ -1207,13 +1229,10 @@ object Snapshots {
     val rootP = Paths.get(root)
     val prev = headOf(root, branch)
     require(prev > 0, s"nothing to compact under $root")
-    val schema = schemaOf(root, prev).getOrElse(
-      throw new IllegalStateException(
-        s"v$prev carries no schema header; commit data before compacting manifests"))
+    val schema = schemaOf(root, prev)
     val refs = bodyRefs(root, prev)
     // body size from the pointers' line-count token — no segment I/O
-    val totalLines = refs.iterator.map(l =>
-      if (l.startsWith(SegmentPtr)) l.split('\t')(2).toLong else 1L).sum
+    val totalLines = refs.iterator.map(_.n).sum
     // pre-cut the resolved body into size-bounded segments HERE (the
     // publish path passes `#segment` pointers through untouched) —
     // segment files are content-addressed and immutable, so writing
@@ -1230,10 +1249,9 @@ object Snapshots {
         // session was given; the no-session convenience carries the
         // O(body) driver bound documented above
         val resolved = resolveBody(rootP, refs)
-        val (dels, data) = resolved.partition(l =>
-          l.startsWith("#delete\t") || l.startsWith("#posdelete\t"))
+        val data = entriesOf(resolved)
         segmentize(rootP,
-          dels ++ data.sortBy(statMinOf(_, c).getOrElse(Long.MaxValue)),
+          resolved.filterNot(_.isInstanceOf[Entry]) ++ data.sortBy(clusterKey(_, c)),
           targetLines)
     }
     commitLoop(new Staged(root, Nil), branch) { (_, parent) =>
@@ -1258,29 +1276,25 @@ object Snapshots {
     * driver holds).
     */
   private def distributedClusteredSegments(sp: SparkSession, rootP: Path,
-      refs: Seq[String], column: String, targetLines: Int,
-      totalLines: Long): Seq[String] = {
+      refs: Seq[Segment], column: String, targetLines: Int,
+      totalLines: Long): Seq[Segment] = {
     import sp.implicits._
     import org.apache.spark.sql.functions.col
     val rootStr = rootP.toString
     val nPart = math.max(1, math.min(512,
       math.ceil(totalLines.toDouble / (targetLines.toDouble * 8)).toInt))
-    val resolved = refs.zipWithIndex.toDS()
+    val resolved = refs.map(_.name).zipWithIndex.toDS()
       .repartition(math.max(1, math.min(refs.size, nPart)))
-      .flatMap { case (ref, i) =>
-        // the shared parsing core ([[refLines]]) — the global counter
-        // increment is exact same-JVM accounting under local mode and
-        // best-effort on a real cluster (executor-side copies of the
-        // object don't report back; the metering convention's gates
-        // are driver-resolved, never this path)
-        if (ref.startsWith(SegmentPtr)) segmentReads.incrementAndGet()
-        val ls = refLines(java.nio.file.Paths.get(rootStr), ref)
-        ls.zipWithIndex.map { case (line, j) =>
-          val isDel = line.startsWith("#delete\t") ||
-            line.startsWith("#posdelete\t")
-          val key = if (isDel) Long.MinValue
-                    else statMinOf(line, column).getOrElse(Long.MaxValue)
-          (if (isDel) 0 else 1, key, i, j, line)
+      .flatMap { case (name, i) =>
+        // the global counter increment is exact same-JVM accounting
+        // under local mode and best-effort on a real cluster
+        // (executor-side copies of the object don't report back; the
+        // metering convention's gates are driver-resolved, never this
+        // path)
+        segmentReads.incrementAndGet()
+        segmentLines(java.nio.file.Paths.get(rootStr), name).zipWithIndex.map {
+          case ((raw, e: Entry), j) => (1, clusterKey(e, column), i, j, raw)
+          case ((raw, _), j) => (0, Long.MinValue, i, j, raw)
         }
       }.toDF("grp", "key", "i", "j", "line")
     val ptrs = resolved
@@ -1289,112 +1303,66 @@ object Snapshots {
       .select(col("line")).as[String]
       .mapPartitions { it =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
-        segmentizeIter(Paths.get(rootStr), it, targetLines)
-          .zipWithIndex.map { case (p, k) => (pid, k, p) }.iterator
+        segmentizeIter(Paths.get(rootStr), it.map(parseFileLine(rootStr, _)), targetLines)
+          .zipWithIndex.map { case (p, k) => (pid, k, render(p)) }.iterator
       }
       .collect()
-    ptrs.sortBy(t => (t._1, t._2)).map(_._3).toSeq
+    ptrs.sortBy(t => (t._1, t._2)).toSeq.map(t => parseLine(rootStr, t._3))
+      .collect { case s: Segment => s }
   }
 
-  /** TOKEN-ONLY stats min of a data entry's `column` — the cluster
-    * sort key of [[compactManifests]]: same `col=mn..mx` grammar as
-    * [[entryStatsFor]] but with NO footer fallback (a metadata-only
-    * rewrite must never open data files); None for path-only entries
-    * or entries holding no value of the column.
+  /** The cluster sort key of [[compactManifests]]: the entry's stats
+    * min of `column`, read from its token alone (a metadata-only
+    * rewrite never opens data files); entries holding no value of the
+    * column sort last.
     */
-  private def statMinOf(line: String, column: String): Option[Long] = {
-    val parts = line.split('\t')
-    if (parts.length > 1 && parts(1) == "#stats")
-      parts.drop(2).takeWhile(!_.startsWith("#")).collectFirst {
-        case t if t.startsWith(column + "=") =>
-          t.substring(column.length + 1).split("\\.\\.")(0).toLong
-      }
-    else None
-  }
+  private def clusterKey(e: Entry, column: String): Long =
+    e.stat(column).fold(Long.MaxValue)(_.min)
 
   /** Per-file (path, min, max) statistics of a LONG column of snapshot
     * `v` — read from the MANIFEST (r9): the stats were collected once
     * at commit time and travel with the file entry, so query-path split
     * planning is a manifest parse, zero data-file I/O (the Iceberg
-    * manifest-stats / Delta Add-action contract; q165 gates the
-    * zero-footer-opens invariant via [[queryPathFooterReads]]). A file
-    * with a `#stats` block but no token for `column` has no non-null
-    * value in it and is omitted (it can never match a predicate).
-    * Pre-r9 path-only entries fall back to a counted footer read.
+    * manifest-stats / Delta Add-action contract). A file with no token
+    * for `column` has no non-null value in it and is omitted (it can
+    * never match a predicate).
     */
   def fileStats(spark: SparkSession, root: String, version: Int,
-                column: String): Seq[(String, Long, Long)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    entries(root, version).flatMap(entryStatsFor(conf, _, column))
-  }
-
-  /** The ONE parser of a data entry's per-column stats (r13 review:
-    * [[fileStats]] and [[prunedFiles]] each carried a copy of the
-    * token grammar + footer-fallback accounting): `(path, min, max)`
-    * for `column`, from the entry's `#stats` token or — for a pre-r9
-    * path-only entry — a counted footer read; None when the file holds
-    * no non-null value of the column.
-    */
-  private def entryStatsFor(conf: org.apache.hadoop.conf.Configuration,
-                            line: String,
-                            column: String): Option[(String, Long, Long)] = {
-    val parts = line.split('\t')
-    val f = parts.head
-    if (parts.length > 1 && parts(1) == "#stats")
-      parts.drop(2).collectFirst {
-        case t if t.startsWith(column + "=") =>
-          val b = t.substring(column.length + 1).split("\\.\\.")
-          (f, b(0).toLong, b(1).toLong)
-      }
-    else {
-      queryPathFooterReads.incrementAndGet()
-      queryPathFooterReadsTL.set(queryPathFooterReadsTL.get() + 1L)
-      footerLongStats(conf, f).get(column).map { case (mn, mx) => (f, mn, mx) }
-    }
-  }
+                column: String): Seq[(String, Long, Long)] =
+    entries(root, version).flatMap(e => e.stat(column).map(s => (e.path, s.min, s.max)))
 
   /** The manifest files of snapshot `v` whose [column min, max] range
     * overlaps [lo, hi] — the file-skipping half of stats-based pruning.
     * A `#segment` pointer's aggregate stats decide whole segments
-    * WITHOUT opening them ([[prunedWalk]]); only `#nostats` segments
-    * (legacy entries swept into a segment) and overlapping segments
+    * WITHOUT opening them ([[prunedWalk]]); only overlapping segments
     * resolve to per-file checks.
     */
   def prunedFiles(spark: SparkSession, root: String, version: Int,
                   column: String, lo: Long, hi: Long): Seq[String] =
-    prunedWalk(root, bodyRefs(root, version),
-      statsPrune(spark, root, version, column, lo, hi))
+    prunedWalk(root, bodyRefs(root, version), statsPrune(root, version, column, lo, hi))
 
   /** [[prunedFiles]]' rule: a pointer whose aggregate range misses
     * [lo, hi], or that carries no token for the column (no entry
-    * inside can match), skips unopened; a `#nostats` pointer always
-    * opens. An entry survives when its range — from its stats token
-    * or, for a pre-r9 entry, a counted footer read — overlaps.
+    * inside can match), skips unopened. An entry survives when its
+    * stats range overlaps.
     */
-  private def statsPrune(spark: SparkSession, root: String, version: Int,
+  private def statsPrune(root: String, version: Int,
                          column: String, lo: Long, hi: Long): FilePrune = {
     requireStatsPrunable(root, version, column)
-    val conf = spark.sparkContext.hadoopConfiguration
-    def overlaps(mn: Long, mx: Long) = mx >= lo && mn <= hi
+    def overlaps(s: Option[Stat]) = s.exists(s => s.max >= lo && s.min <= hi)
     FilePrune(
-      skipSegment = toks => !toks.contains("#nostats") &&
-        !toks.collectFirst {
-          case t if t.startsWith(column + "=") =>
-            val b = t.substring(column.length + 1).split("\\.\\.")
-            overlaps(b(0).toLong, b(1).toLong)
-        }.getOrElse(false),
-      keepEntry = line => entryStatsFor(conf, line, column)
-        .exists { case (_, mn, mx) => overlaps(mn, mx) })
+      skipSegment = seg => !overlaps(seg.stats.find(_.column == column)),
+      keepEntry = e => overlaps(e.stat(column)))
   }
 
   /** What one file-pruning rule decides from manifest text alone:
-    * whether a `#segment` pointer's aggregate tokens prove that no
-    * entry inside survives (the segment is then skipped unopened), and
-    * whether one data entry keeps its file. A skip must be sound:
-    * every entry of a skipped segment fails `keepEntry` too.
+    * whether a segment pointer's aggregates prove that no entry inside
+    * survives (the segment is then skipped unopened), and whether one
+    * data entry keeps its file. A skip must be sound: every entry of a
+    * skipped segment fails `keepEntry` too.
     */
-  private final case class FilePrune(skipSegment: Array[String] => Boolean,
-                                     keepEntry: String => Boolean)
+  private final case class FilePrune(skipSegment: Segment => Boolean,
+                                     keepEntry: Entry => Boolean)
 
   /** THE file-pruning walk behind [[prunedFiles]],
     * [[partitionPrunedFiles]] and [[bloomPrunedFiles]], in manifest
@@ -1404,12 +1372,11 @@ object Snapshots {
     * already resolved body, which holds no pointers, it is the plain
     * entry filter. Delete lines never survive.
     */
-  private def prunedWalk(root: String, refs: Seq[String], p: FilePrune): Seq[String] = {
-    def kept(lines: Seq[String]) = filesOf(entriesOf(lines).filter(p.keepEntry))
-    refs.flatMap { ref =>
-      if (!ref.startsWith(SegmentPtr)) kept(Seq(ref))
-      else if (p.skipSegment(ref.split('\t').drop(3))) Nil
-      else kept(resolveBody(Paths.get(root), Seq(ref)))
+  private def prunedWalk(root: String, refs: Seq[BodyRef], p: FilePrune): Seq[String] = {
+    def kept(lines: Seq[FileLine]) = filesOf(entriesOf(lines).filter(p.keepEntry))
+    refs.flatMap {
+      case s: Segment => if (p.skipSegment(s)) Nil else kept(resolveBody(Paths.get(root), Seq(s)))
+      case l: FileLine => kept(Seq(l))
     }
   }
 
@@ -1477,113 +1444,88 @@ object Snapshots {
   /** COMMIT HISTORY — Delta's `DESCRIBE HISTORY` / Iceberg's
     * `table.history`: one row per version with the OPERATION the
     * commit recorded (`op=` prop, r10: append / merge / delete /
-    * update / rewrite; "unknown" for pre-r10 manifests), the rows its
-    * NEW data files added (summed from the manifest `#rows` tokens —
-    * zero data-file opens), and the delete sets it added. Driver-side
-    * manifest text by design, like every metadata table here.
-    * Expired versions (manifest deleted by [[expire]]) are simply
-    * absent rows — DESCRIBE HISTORY keeps working after retention,
-    * as it does in Delta/Iceberg. BRANCH-AWARE (r11): the history is
-    * the ref's parent-pointer [[lineage]], so two branches report
-    * disjoint-after-the-fork trails and version numbers another
-    * branch claimed never appear.
+    * update / rewrite), the rows its NEW data files added (summed from
+    * the manifest `#rows` tokens — zero data-file opens), and the
+    * delete sets it added. Driver-side manifest text by design, like
+    * every metadata table here. Expired versions (manifest deleted by
+    * [[expire]]) are simply absent rows — DESCRIBE HISTORY keeps
+    * working after retention, as it does in Delta/Iceberg.
+    * BRANCH-AWARE (r11): the history is the ref's parent-pointer
+    * [[lineage]], so two branches report disjoint-after-the-fork
+    * trails and version numbers another branch claimed never appear.
     */
   def history(spark: SparkSession, root: String,
               branch: String = "main"): DataFrame = {
     import spark.implicits._
-    lineage(root, headOf(root, branch))
-      .map { v =>
-      val op = propsOf(root, v).getOrElse("op", "unknown")
-      val added = entries(root, v)
-        .filter(l => dataVersionOf(l.split('\t').head) == v)
-      // −1 = "row count unknown" (a pre-r9 path-only entry): surface
-      // the sentinel rather than a wrong 0, as snapshotsTable does
-      val counts = added.map(rowsTokenOf)
-      val rows = if (counts.contains(-1L)) -1L else counts.sum
-      val delsAdded = deleteSets(root, v).count(_._1._1 == v) +
-        posDeleteSets(root, v).count(_._1 == v)
-      (v, op, rows, delsAdded)
+    lineage(root, headOf(root, branch)).map { v =>
+      val own = addedBy(v, rawLines(root, v))
+      (v, propsOf(root, v)("op"), entriesOf(own).map(_.rows).sum,
+        deleteSetsOf(own).size + posDeleteSetsOf(own).size)
     }.toDF("version", "operation", "rows_added", "delete_sets_added")
   }
-
-  private def rowsTokenOf(line: String): Long =
-    line.split('\t').collectFirst {
-      case t if t.startsWith("#rows=") => t.stripPrefix("#rows=").toLong
-    }.getOrElse(-1L)
 
   /** The per-file metadata TABLE of snapshot `v` — Iceberg's
     * `table.files` / Delta's Add actions surfaced as a DataFrame,
     * resolved from the MANIFEST alone (zero data-file opens): path,
     * the commit version the file belongs to (its sequence number), and
-    * its physical row count (−1 for a pre-r9 entry whose commit did
-    * not record one). Driver-side by design — manifests are the
+    * its physical row count. Driver-side by design — manifests are the
     * metadata a planner holds; the table is O(files), not O(rows).
     */
   def filesTable(spark: SparkSession, root: String, version: Int = -1)
       : DataFrame = {
     import spark.implicits._
     val v = if (version == -1) headOf(root, "main") else version
-    entries(root, v).map { line =>
-      val f = line.split('\t').head
-      (f, dataVersionOf(f), rowsTokenOf(line))
-    }.toDF("file", "commit_version", "row_count")
+    entries(root, v).map(e => (e.path, dataVersionOf(e.path), e.rows))
+      .toDF("file", "commit_version", "row_count")
   }
 
   /** The history TABLE — Iceberg's `table.snapshots` / Delta's
     * DESCRIBE HISTORY: one row per live (unexpired) version with its
-    * file count, delete-set count, manifest-summed physical row count
-    * (−1 if any entry predates row counts), and the rewrite flag.
-    * Resolved entirely from manifests.
+    * file count, equality-delete-set count, manifest-summed physical
+    * row count, and the rewrite flag. Resolved entirely from manifests.
     */
   def snapshotsTable(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val rootP = Paths.get(root)
-    (1 to latestVersion(root))
-      .filter(v => Files.exists(manifestPath(rootP, v)))
-      .map { v =>
-        val es = entries(root, v)
-        val counts = es.map(rowsTokenOf)
-        (v, es.size, deleteSets(root, v).size,
-          if (counts.contains(-1L)) -1L else counts.sum,
-          propsOf(root, v).get("rewrite").contains("true"))
-      }.toDF("version", "n_files", "n_delete_sets", "file_rows",
-        "is_rewrite")
+    liveVersions(root).map { v =>
+      val lines = rawLines(root, v)
+      val es = entriesOf(lines)
+      (v, es.size, deleteSetsOf(lines).size, es.map(_.rows).sum,
+        propsOf(root, v).get("rewrite").contains("true"))
+    }.toDF("version", "n_files", "n_delete_sets", "file_rows", "is_rewrite")
   }
 
   /** Metadata table over version `v`'s manifest LIST (r13 — Iceberg's
     * `.manifests` relation): one row per `#segment` pointer, in list
-    * order — segment file name, advertised entry count, and whether
-    * pointer-level aggregate stats permit skipping it unopened
-    * (`false` = a `#nostats` sweep of legacy entries). Inline legacy
-    * entry lines are not segments and do not appear; a fully flat
-    * pre-r13 manifest yields an empty relation.
+    * order — segment file name and advertised entry count.
     */
   def manifestsTable(spark: SparkSession, root: String,
                      version: Int = -1): DataFrame = {
     import spark.implicits._
     val v = if (version == -1) headOf(root, "main") else version
-    bodyRefs(root, v).zipWithIndex.collect {
-      case (l, i) if l.startsWith(SegmentPtr) =>
-        val t = l.split('\t')
-        (i, t(1), t(2).toLong, !t.drop(3).contains("#nostats"))
-    }.toDF("position", "segment", "n_entries", "skippable")
+    bodyRefs(root, v).zipWithIndex.map { case (s, i) => (i, s.name, s.n) }
+      .toDF("position", "segment", "n_entries")
+  }
+
+  /** The version `version` names (the main head for -1), with its
+    * resolved body, refused when it carries delete sets: merge-on-read
+    * makes physical ≠ logical, so manifest-only answers are unsound and
+    * a correct engine falls back to a scan.
+    */
+  private def deleteFreeBody(root: String, version: Int, unsound: String)
+      : (Int, Seq[Entry]) = {
+    val v = if (version == -1) headOf(root, "main") else version
+    val lines = rawLines(root, v)
+    require(lines.forall(_.isInstanceOf[Entry]),
+      s"v$v has merge-on-read delete sets: $unsound")
+    (v, entriesOf(lines))
   }
 
   /** Metadata-only `count(*)` — the Iceberg count pushdown: answered
     * from manifest row counts with ZERO data-file reads. Refuses when
-    * the version carries delete sets (merge-on-read makes physical ≠
-    * logical — a correct engine falls back to a scan, it does not
-    * return the wrong number) or when any entry predates row counts.
+    * the version carries delete sets ([[deleteFreeBody]]).
     */
-  def metadataCount(root: String, version: Int = -1): Long = {
-    val v = if (version == -1) headOf(root, "main") else version
-    require(deleteSets(root, v).isEmpty && posDeleteSets(root, v).isEmpty,
-      s"v$v has merge-on-read delete sets: physical rows != logical rows")
-    val counts = entries(root, v).map(rowsTokenOf)
-    require(!counts.contains(-1L),
-      s"v$v has pre-row-count manifest entries; scan instead")
-    counts.sum
-  }
+  def metadataCount(root: String, version: Int = -1): Long =
+    deleteFreeBody(root, version, "physical rows != logical rows")._2.map(_.rows).sum
 
   /** Partition TRANSFORMS (Iceberg's hidden partitioning, the two
     * workhorses): IDENTITY lays files out by the column value itself;
@@ -1670,10 +1612,8 @@ object Snapshots {
       finally listing.close()
     }
     val values = byFile.toMap
-    val lines = entryLines(df.drop("_p"), byFile.map(_._1)).map { line =>
-      val f = line.split('\t').head
-      s"$line\t#part:${spec.tokenName}=${values(f)}"
-    }
+    val lines = entryLines(df.drop("_p"), byFile.map(_._1))
+      .map(e => e.copy(parts = Seq(spec.tokenName -> values(e.path))))
     casAppend(df, st, branch, lines)
   }
 
@@ -1681,16 +1621,6 @@ object Snapshots {
     * lands in, per the manifest `#part:` tokens — EXACT pruning (a
     * partition either is or is not the literal's home). Files without
     * the spec's token are kept.
-    *
-    * Exactness caveat (r17): the legacy-spelling tolerance below means
-    * a literal whose RAW spelling coincides with ANOTHER value's
-    * escaped token (possible only when the literal contains '%', e.g.
-    * literal "a%3Ab" vs value "a:b") can over-KEEP that partition's
-    * files. Bounded and safe — reads re-filter on the exact predicate
-    * — but callers treating this count as an exact oracle (q178/q181
-    * n_scanned) must keep their fixture values '%'-free, which the
-    * gate corpora are. Under-pruning the literal's own home is
-    * impossible in every generation.
     */
   def partitionPrunedFiles(root: String, version: Int, spec: PartitionSpec,
                            literal: String): Seq[String] =
@@ -1715,48 +1645,23 @@ object Snapshots {
     require(specs.nonEmpty && specs.map(_.column).distinct.size == 1,
       s"point lookup needs >= 1 spec, all on one column: $specs")
     // the manifest token carries Spark's Hive-ESCAPED partition value
-    // (TSV/line-grammar safety; see appendPartitioned) — but manifests
-    // written BEFORE that fix stored the RAW value (r16 ADVICE), so a
-    // pre-existing table with an escapable char in a partition value
-    // (':' → %3A) would silently mis-prune under an escaped-only
-    // compare. Accept BOTH spellings on read: a false KEEP is safe
-    // (the exact predicate downstream re-filters — pruning is an
-    // optimization), and a false PRUNE cannot happen (legacy tokens
-    // match the raw spelling, current tokens the escaped one). When
-    // the value needs no escaping the two spellings coincide.
-    val wants = specs.map { s =>
-      val raw = s.valueFor(literal)
-      val esc = org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.escapePathName(raw)
-      (s"#part:${s.tokenName}=",
-        Set(raw, esc).map(v => s"#part:${s.tokenName}=$v"),
-        s"#partagg:${s.tokenName}=", Set(raw, esc))
-    }
+    // (TSV/line-grammar safety; see appendPartitioned), so the
+    // literal's home value compares in that spelling: exact for every
+    // value, '%'-bearing ones included
+    val homes = specs.map(s => s.tokenName -> org.apache.spark.sql.catalyst.catalog
+      .ExternalCatalogUtils.escapePathName(s.valueFor(literal)))
     FilePrune(
       // a pointer whose `#partagg:` summary for some spec's transform
       // covers EVERY entry and lacks the literal's home value cannot
       // contain a keepable file — sound because every entry then
       // carries that transform's token with a different value, i.e.
-      // every entry prunes individually
-      skipSegment = toks => wants.exists { case (_, _, aggPrefix, wantSet) =>
-        toks.collectFirst { case t if t.startsWith(aggPrefix) =>
-          // both spellings, same legacy tolerance as keepEntry. The
-          // comma-split is sound for ANY literal — including one
-          // containing ',' — because a summary is only ever WRITTEN
-          // when every distinct value matches [A-Za-z0-9_.-]+
-          // (segmentAggTokens, guard present since the token's
-          // birth), so an existing summary PROVES the segment holds
-          // no comma/percent-valued partition: skipping on a
-          // no-fragment-match is then correct, never a false prune.
-          !t.stripPrefix(aggPrefix).split(',').exists(wantSet.contains)
-        }.getOrElse(false)
-      },
-      keepEntry = { line =>
-        val parts = line.split('\t')
-        !wants.exists { case (prefix, wantSet, _, _) =>
-          parts.exists(_.startsWith(prefix)) && !parts.exists(wantSet.contains)
-        }
-      })
+      // every entry prunes individually. A summary is only written
+      // when every value matches [A-Za-z0-9_.-]+, so its comma-split
+      // list is exact
+      skipSegment = seg => homes.exists { case (tr, home) =>
+        seg.partAggs.find(_._1 == tr).exists(!_._2.contains(home)) },
+      keepEntry = e => !homes.exists { case (tr, home) =>
+        e.parts.find(_._1 == tr).exists(_._2 != home) })
   }
 
   /** Partition-pruned point lookup: the manifest routes to one
@@ -1794,13 +1699,11 @@ object Snapshots {
   private def bloomPrune(column: String, value: String): FilePrune = {
     val bits = (0 until BloomHashes)
       .map(j => (md5Low60(value + "#" + j) % BloomBits).toInt)
-    val token = s"#bloom:$column="
     FilePrune(
       // a pointer carries no bloom aggregate: every segment opens
       skipSegment = _ => false,
-      keepEntry = _.split('\t').collectFirst {
-        case t if t.startsWith(token) => t.stripPrefix(token)
-      }.forall(hex => bits.forall(hexHasBit(hex, _))))
+      keepEntry = _.blooms.find(_._1 == column)
+        .forall { case (_, hex) => bits.forall(hexHasBit(hex, _)) })
   }
 
   /** Bloom-pruned point lookup: scan only the bloom-surviving files,
@@ -1821,7 +1724,7 @@ object Snapshots {
     */
   def readPruned(spark: SparkSession, root: String, version: Int,
                  column: String, lo: Long, hi: Long): DataFrame =
-    prunedRead(spark, root, version, statsPrune(spark, root, version, column, lo, hi),
+    prunedRead(spark, root, version, statsPrune(root, version, column, lo, hi),
       org.apache.spark.sql.functions.col(column).between(lo, hi))
 
   /** THE pruned read: the files of snapshot `v` that `prune` keeps,
@@ -1862,7 +1765,7 @@ object Snapshots {
     */
   private def rawScan(spark: SparkSession, root: String, v: Int,
                       paths: Seq[String]): DataFrame = {
-    val schema = schemaAt(spark, root, v)
+    val schema = schemaOf(root, v)
     if (paths.isEmpty)
       spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schema)
     else spark.read.schema(schema).parquet(paths: _*)
@@ -1907,7 +1810,7 @@ object Snapshots {
     * clean no-op instead of failing to resolve.
     */
   private def mergeOnRead(spark: SparkSession, root: String, v: Int,
-                          lines: Seq[String], paths: Seq[String],
+                          lines: Seq[FileLine], paths: Seq[String],
                           keepMeta: Boolean): DataFrame = {
     import org.apache.spark.sql.functions._
     val oldest = paths.map(dataVersionOf).minOption.getOrElse(Int.MaxValue)
@@ -2083,12 +1986,12 @@ object Snapshots {
           s"checked delete aborted: a concurrent commit in ($base0, " +
             s"$parent] invalidated its post-image validation basis — " +
             "re-read and re-run")
-      val schema = schemaAt(spark, root, parent)
+      val schema = schemaOf(root, parent)
       if (!schema.fieldNames.contains(column))
         throw new IllegalArgumentException(
           s"delete key column '$column' is not in the table schema")
       () => Attempt(schema, carriedRefs(root, parent) ++
-        delFiles.map(f => s"#delete\t$f\t$column\t$v"), Map("op" -> "delete"))
+        delFiles.map(Delete(_, column, v)), Map("op" -> "delete"))
     }
   }
 
@@ -2126,8 +2029,8 @@ object Snapshots {
         .distinct(), st.dir("delete"))
     commitLoop(st, branch) { (v, parent) =>
       abortIfRewritten(root, base0, parent, "positional delete")
-      () => Attempt(schemaAt(spark, root, parent), carriedRefs(root, parent) ++
-        delFiles.map(f => s"#posdelete\t$f\t$v"), Map("op" -> "delete"))
+      () => Attempt(schemaOf(root, parent), carriedRefs(root, parent) ++
+        delFiles.map(PosDelete(_, v)), Map("op" -> "delete"))
     }
   }
 
@@ -2248,7 +2151,7 @@ object Snapshots {
             "deleted a row it updates — re-read and re-run")
       () => Attempt(widenedSchema(updated, root, parent),
         carriedRefs(root, parent) ++
-          delFiles.map(f => s"#posdelete\t$f\t$v") ++ dataLines,
+          delFiles.map(PosDelete(_, v)) ++ dataLines,
         Map("op" -> "update"))
     }
   }
@@ -2369,7 +2272,7 @@ object Snapshots {
             "keys — re-read the table and re-run the merge")
       () => Attempt(widenedSchema(source, root, parent),
         carriedRefs(root, parent) ++
-          delFiles.map(f => s"#delete\t$f\t$column\t$v") ++ dataLines,
+          delFiles.map(Delete(_, column, v)) ++ dataLines,
         Map("op" -> "merge"))
     }
   }
@@ -2390,12 +2293,13 @@ object Snapshots {
     lineageBetween(root, baseV, uptoV)
       .filterNot(w => propsOf(root, w).get("rewrite").contains("true"))
       .exists { w =>
-        val newFiles = files(root, w).filter(f => dataVersionOf(f) == w)
+        val own = addedBy(w, rawLines(root, w))
+        val newFiles = filesOf(entriesOf(own))
         val dataHit = newFiles.nonEmpty &&
-          schemaOf(root, w).forall(_.fieldNames.contains(column)) &&
+          schemaOf(root, w).fieldNames.contains(column) &&
           rawScan(spark, root, w, newFiles).select(col(column))
             .join(keys, Seq(column), "left_semi").limit(1).count() > 0
-        def delHit = deleteSets(root, w).filter(_._1._1 == w).exists {
+        def delHit = deleteSetsOf(own).exists {
           case ((_, c), fs) => c == column &&
             spark.read.parquet(fs: _*).select(col(c))
               .join(keys, Seq(column), "left_semi").limit(1).count() > 0
@@ -2404,10 +2308,10 @@ object Snapshots {
         // rows (the CDC spelling) — only those carry the merge column;
         // a preimage on a pre-promotion schema lacking it cannot
         // conflict, same skip rule as the dataHit branch
-        def posHit = posDeleteSets(root, w).filter(_._1 == w).exists {
+        def posHit = posDeleteSetsOf(own).exists {
           case (_, fs) =>
             val p = parentOf(root, w)
-            schemaOf(root, p).forall(_.fieldNames.contains(column)) &&
+            schemaOf(root, p).fieldNames.contains(column) &&
             identifiedRows(spark, root, p)
               .join(tombstones(spark, fs), Seq(FileCol, PosCol), "left_semi")
               .select(col(column))
@@ -2456,15 +2360,16 @@ object Snapshots {
       .filterNot(w => propsOf(root, w).get("rewrite").contains("true"))
       .flatMap { w =>
         val prevW = parentOf(root, w)
-        val newFiles = files(root, w).filter(f => dataVersionOf(f) == w)
+        val own = addedBy(w, rawLines(root, w))
+        val newFiles = filesOf(entriesOf(own))
         val ins = if (newFiles.isEmpty) None
           else Some(rawScan(spark, root, w, newFiles))
-        val delsAtW = deleteSets(root, w).filter(_._1._1 == w)
+        val delsAtW = deleteSetsOf(own)
         require(delsAtW.size <= 1,
           s"CDC expects at most one delete set per commit, v$w has ${delsAtW.size}")
         // positional tombstones committed AT w: their preimages are the
         // parent-version rows at exactly those physical positions
-        val posAtW = posDeleteSets(root, w).filter(_._1 == w)
+        val posAtW = posDeleteSetsOf(own)
         val posTyped: Seq[DataFrame] = posAtW.map { case (_, delFiles) =>
           identifiedRows(spark, root, prevW)
             .join(tombstones(spark, delFiles), Seq(FileCol, PosCol), "left_semi")
@@ -2502,12 +2407,8 @@ object Snapshots {
       s"no data-changing commits in ($fromV, $toV] under $root")
     val all = parts.reduce(_.unionByName(_, allowMissingColumns = true))
     // present in the target version's column order, change cols last
-    schemaOf(root, toV) match {
-      case Some(s) => all.select(
-        (s.fieldNames.toSeq ++ Seq("_change_type", "_commit_version"))
-          .map(col): _*)
-      case None => all
-    }
+    all.select((schemaOf(root, toV).fieldNames.toSeq ++
+      Seq("_change_type", "_commit_version")).map(col): _*)
   }
 
   /** ORPHAN FILE CLEANUP (Iceberg's `remove_orphan_files`): delete
@@ -2540,26 +2441,18 @@ object Snapshots {
     if (branched(root)) {
       val reachable = (branches(root).map(_._2) ++
         tags(root).map(_._2)).toSet.flatMap((h: Int) => lineage(root, h))
-      (1 to latestVersion(root))
-        .filterNot(reachable.contains)
+      liveVersions(root).filterNot(reachable.contains)
         .map(v => manifestPath(rootP, v))
-        .filter(p => Files.exists(p) &&
-          Files.getLastModifiedTime(p).toMillis <= cutoff)
+        .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
         .foreach(Files.delete(_))
     }
-    val liveVersions = (1 to latestVersion(root))
-      .filter(v => Files.exists(manifestPath(rootP, v)))
-    val referenced = liveVersions
-      .flatMap(v => rawLines(root, v).map { l =>
-        if (l.startsWith("#delete\t") || l.startsWith("#posdelete\t"))
-          l.split('\t')(1)
-        else l.split('\t').head
-      }).toSet
+    val live = liveVersions(root)
+    val referenced = live.flatMap(storagePathsOf(root, _)).toSet
     // orphaned SEGMENTS (r13): a crashed commit that published its
     // segment but never linked its list, or an unreachable manifest
     // reaped above, leaves `_seg_` files no surviving list names —
     // refcount them like data files, under the same age guard
-    val referencedSegs = liveVersions.flatMap(segmentRefsOf(root, _)).toSet
+    val referencedSegs = live.flatMap(segmentNamesOf(root, _)).toSet
     val segDirP = rootP.resolve("_manifests")
     if (Files.isDirectory(segDirP)) {
       val s = Files.list(segDirP)
@@ -2626,30 +2519,18 @@ object Snapshots {
     * [[metadataCount]], answered from manifest stats with zero file
     * I/O. Same refusal discipline: delete sets make the answer
     * unsound (a tombstoned row may BE the extreme — fall back to a
-    * scan, never return a wrong number), and a pre-stats entry means
-    * the manifest cannot answer. Files with no stats token for the
-    * column hold only nulls there and are skipped; all-null columns
-    * have no min/max to give.
+    * scan, never return a wrong number). Files with no stats token for
+    * the column hold only nulls there and are skipped; all-null
+    * columns have no min/max to give.
     */
   def metadataMinMax(root: String, version: Int = -1,
                      column: String): (Long, Long) = {
     val v = if (version == -1) headOf(root, "main") else version
     requireStatsPrunable(root, v, column)
-    require(deleteSets(root, v).isEmpty && posDeleteSets(root, v).isEmpty,
-      s"v$v has merge-on-read delete sets: manifest extremes are unsound")
-    val ranges = entries(root, v).map { line =>
-      val parts = line.split('\t')
-      require(parts.length > 1 && parts(1) == "#stats",
-        s"v$v has pre-stats manifest entries; scan instead")
-      parts.drop(2).collectFirst {
-        case t if t.startsWith(column + "=") =>
-          val b = t.substring(column.length + 1).split("\\.\\.")
-          (b(0).toLong, b(1).toLong)
-      }
-    }
-    val present = ranges.flatten
+    val present = deleteFreeBody(root, v, "manifest extremes are unsound")._2
+      .flatMap(_.stat(column))
     require(present.nonEmpty, s"no stats for column '$column' at v$v")
-    (present.map(_._1).min, present.map(_._2).max)
+    (present.map(_.min).min, present.map(_.max).max)
   }
 
   /** CONTENT DIFF between two versions — the complement of the change
@@ -2688,8 +2569,7 @@ object Snapshots {
   def tag(root: String, name: String, version: Int): Unit = {
     require(name.matches("[A-Za-z0-9_.-]+"), s"illegal tag name: $name")
     val rootP = Paths.get(root)
-    require(Files.exists(manifestPath(rootP, version)),
-      s"cannot tag missing version $version under $root")
+    require(isLive(root, version), s"cannot tag missing version $version under $root")
     val dir = rootP.resolve("_tags")
     Files.createDirectories(dir)
     val tmp = dir.resolve(s"_tmp_${name}_${newToken()}")
@@ -2745,9 +2625,8 @@ object Snapshots {
   // in its manifest props, so a ref's history is the PARENT-POINTER
   // CHAIN from its head — not the numeric range — and two branches'
   // histories interleave version numbers without ever sharing a
-  // commit. A manifest without a parent prop (pre-r11, or a
-  // never-branched table) has the implicit parent v−1, which keeps
-  // every legacy table a valid linear chain with zero migration.
+  // commit. A never-branched table's commits carry no parent prop and
+  // have the implicit parent v−1, so such a table is a linear chain.
   //
   // A committer that wins the manifest link but LOSES the head CAS
   // unlinks its own manifest before retrying (it was never reachable
@@ -2835,16 +2714,9 @@ object Snapshots {
     propsOf(root, v).get("parent").map(_.toInt).getOrElse(v - 1)
 
   /** Commit wall-clock of version `v`, epoch millis: the `ts` prop
-    * [[commit]] stamps (strictly monotone along a lineage); a pre-r14
-    * manifest without one falls back to the manifest file's mtime —
-    * the same physical clock retention already trusts. NOTE the
-    * fallback is RAW: mtimes can tie or invert along a legacy lineage
-    * (copies, clock steps), so consumers needing the monotone premise
-    * must clamp along the walk, as [[versionAsOf]] does.
+    * [[commit]] stamps (strictly monotone along a lineage).
     */
-  def commitTimeOf(root: String, v: Int): Long =
-    propsOf(root, v).get("ts").map(_.toLong).getOrElse(
-      Files.getLastModifiedTime(manifestPath(Paths.get(root), v)).toMillis)
+  def commitTimeOf(root: String, v: Int): Long = propsOf(root, v)("ts").toLong
 
   /** TIMESTAMP time travel (Iceberg's `FOR SYSTEM_TIME AS OF` /
     * Delta's `timestampAsOf`): the LATEST commit on `ref`'s lineage
@@ -2855,28 +2727,17 @@ object Snapshots {
     * reads on the driver, zero data I/O). Refuses a timestamp before
     * the ref's surviving history: there was no table to read then —
     * returning the oldest snapshot would silently misdate it.
-    *
-    * Pre-r14 history (r15, ADVICE): a legacy commit's mtime fallback
-    * can tie with or invert against its neighbors, which would break
-    * the uniqueness argument — so resolution clamps each commit's
-    * time to the RUNNING MAX along the ascending lineage. Stamped
-    * (r14+) commits are untouched by the clamp (already strictly
-    * increasing); legacy stretches resolve best-effort but
-    * DETERMINISTICALLY: the latest version whose clamped time is
-    * ≤ the ask, never an arbitrary member of a tied set.
     */
   def versionAsOf(root: String, tsMillis: Long, ref: String = "main"): Int = {
-    var run = Long.MinValue
     val at = lineage(root, headOf(root, ref)) // ascending
-      .map { v => run = math.max(run, commitTimeOf(root, v)); (v, run) }
-      .filter(_._2 <= tsMillis)
+      .filter(commitTimeOf(root, _) <= tsMillis)
     require(at.nonEmpty,
       s"no commit on '$ref' at or before ts=$tsMillis under $root " +
         "(timestamp predates the ref's surviving history)")
-    at.last._1
+    at.last
   }
 
-  /** The branch a commit landed on (`main` for legacy manifests). */
+  /** The branch a commit landed on (`main` on a never-branched table). */
   def branchOf(root: String, v: Int): String =
     propsOf(root, v).getOrElse("branch", "main")
 
@@ -2887,10 +2748,9 @@ object Snapshots {
     * to the horizon.
     */
   def lineage(root: String, head: Int): Seq[Int] = {
-    val rootP = Paths.get(root)
     var v = head
     var acc = List.empty[Int]
-    while (v > 0 && Files.exists(manifestPath(rootP, v))) {
+    while (v > 0 && isLive(root, v)) {
       acc = v :: acc
       v = parentOf(root, v)
     }
@@ -2931,7 +2791,7 @@ object Snapshots {
       casRef(rootP, "main", 0, cur)
     }
     val v = if (from == -1) headOf(root, "main") else from
-    require(v == 0 || Files.exists(manifestPath(rootP, v)),
+    require(v == 0 || isLive(root, v),
       s"cannot branch from missing version $v under $root")
     require(refHead(root, name)._2 < 0 && casRef(rootP, name, 0, v),
       s"branch '$name' already exists")
@@ -3013,9 +2873,8 @@ object Snapshots {
                  v: Int): Int = {
     val rootP = Paths.get(root)
     require(branched(root), s"no refs under $root")
-    require(Files.exists(manifestPath(rootP, v)),
-      s"cannot cherry-pick missing version $v under $root")
-    val op = propsOf(root, v).getOrElse("op", "unknown")
+    require(isLive(root, v), s"cannot cherry-pick missing version $v under $root")
+    val op = propsOf(root, v)("op")
     require(op == "append",
       s"only append commits cherry-pick; v$v is '$op' (its delta is " +
         "defined against its own parent's row set)")
@@ -3025,16 +2884,12 @@ object Snapshots {
         .contains(v.toString),
       s"v$v is already in '$target''s history — a second pick would " +
         "duplicate its rows")
-    val own = rawLines(root, v).filter { l =>
-      !l.startsWith("#delete\t") && !l.startsWith("#posdelete\t") &&
-        dataVersionOf(l.split('\t').head) == v
-    }
+    val own = entriesOf(addedBy(v, rawLines(root, v)))
     require(own.nonEmpty, s"v$v added no data files; nothing to pick")
     val st = new Staged(root, Seq("data"))
     val rootAbs = rootP.toAbsolutePath
-    val lines = own.map { line =>
-      val parts = line.split('\t')
-      val f = Paths.get(parts.head).toAbsolutePath
+    val lines = own.map { e =>
+      val f = Paths.get(e.path).toAbsolutePath
       val rel = rootAbs.relativize(f)
       // drop the source data dir's top segment, keep any partition
       // subdirs beneath it
@@ -3042,9 +2897,9 @@ object Snapshots {
       val out = st.dir("data").resolve(sub.toString)
       Files.createDirectories(out.getParent)
       if (!Files.exists(out)) Files.createLink(out, f)
-      (out.toAbsolutePath.toString +: parts.tail.toSeq).mkString("\t")
+      e.copy(path = out.toAbsolutePath.toString)
     }
-    val srcSchema = schemaAt(spark, root, v)
+    val srcSchema = schemaOf(root, v)
     commitLoop(st, target) { (_, parent) =>
       () => Attempt(promotedSchema(srcSchema, root, parent),
         carriedRefs(root, parent) ++ lines,
@@ -3092,9 +2947,7 @@ object Snapshots {
     * [[changesBetween]]'s non-empty-window require on every restart.
     */
   def commitHasChanges(root: String, v: Int): Boolean =
-    entries(root, v).exists(l => dataVersionOf(l.split('\t').head) == v) ||
-      deleteSets(root, v).exists(_._1._1 == v) ||
-      posDeleteSets(root, v).exists(_._1 == v)
+    addedBy(v, rawLines(root, v)).nonEmpty
 
   /** The refs metadata TABLE — Iceberg's `table.refs`: every branch
     * and tag with the version it names. Driver-side ref/tag files by
@@ -3131,7 +2984,7 @@ object Snapshots {
     * [[commitLoop]] to every reallocated one, so [[dataVersionOf]]
     * sequence scoping stays truthful. Paths write under [[dir]] and
     * may name their staged files by the first-allocation paths; the
-    * loop [[moved]]s manifest lines to the attempt's number.
+    * loop [[moved]]s manifest line paths to the attempt's number.
     */
   private final class Staged(val root: String, val kinds: Seq[String]) {
     val rootP: Path = Paths.get(root)
@@ -3140,7 +2993,7 @@ object Snapshots {
     private val v0 = latestVersion(root) + 1
     var v: Int = v0
     def dir(kind: String): Path = rootP.resolve(s"${kind}_v${v}_$token")
-    def moved(line: String): String = kinds.foldLeft(line)((l, k) =>
+    def moved(path: String): String = kinds.foldLeft(path)((l, k) =>
       l.replace(s"${k}_v${v0}_$token", s"${k}_v${v}_$token"))
     def drop(): Unit = kinds.foreach(k => deleteTreeQuietly(dir(k)))
   }
@@ -3150,7 +3003,7 @@ object Snapshots {
     * commit props.
     */
   private final case class Attempt(schema: org.apache.spark.sql.types.StructType,
-                                   lines: Seq[String], props: Map[String, String])
+                                   lines: Seq[BodyRef], props: Map[String, String])
 
   /** THE optimistic commit loop: every write path commits through it
     * (Iceberg's `SnapshotProducer.commit` and Delta's
@@ -3201,7 +3054,10 @@ object Snapshots {
         val a = publishable()
         try {
           if (publish(st.rootP, branch, st.v, seq, parent, a.schema,
-              a.lines.map(st.moved), a.props)) committed = st.v
+              a.lines.map {
+                case f: FileLine => f.withPath(st.moved(f.path))
+                case s: Segment => s
+              }, a.props)) committed = st.v
         } catch { case _: java.nio.file.FileAlreadyExistsException => () }
       }
       if (committed < 0)
@@ -3298,7 +3154,7 @@ object Snapshots {
   private def publish(rootP: Path, branch: String, v: Int,
                       seq: Int, parent: Int,
                       schema: org.apache.spark.sql.types.StructType,
-                      lines: Seq[String],
+                      lines: Seq[BodyRef],
                       props: Map[String, String]): Boolean = {
     val fullProps =
       if (seq < 0) props
@@ -3325,11 +3181,15 @@ object Snapshots {
   // reference-count DATA and DELETE files alike: a delete set is
   // reachable storage exactly as long as a retained manifest lists it
   private def storagePathsOf(root: String, v: Int): Seq[String] =
-    rawLines(root, v).map { l =>
-      if (l.startsWith("#delete\t") || l.startsWith("#posdelete\t"))
-        l.split('\t')(1)
-      else l.split('\t').head
-    }
+    rawLines(root, v).map(_.path)
+
+  /** Segment files referenced by version `v`'s manifest list. */
+  private def segmentNamesOf(root: String, v: Int): Seq[String] =
+    bodyRefs(root, v).map(_.name)
+
+  /** Versions whose manifest lists exist, ascending. */
+  private def liveVersions(root: String): Seq[Int] =
+    (1 to latestVersion(root)).filter(isLive(root, _))
 
   // shared destructive tail of [[expire]]/[[expireRefs]]: delete the
   // data files no surviving manifest references, then the doomed
@@ -3339,17 +3199,15 @@ object Snapshots {
   private def reapVersions(root: String, doomed: Seq[Int]): Int = {
     val rootP = Paths.get(root)
     val doomedSet = doomed.toSet
-    val retainedVs = (1 to latestVersion(root))
-      .filter(v => !doomedSet.contains(v) &&
-        Files.exists(manifestPath(rootP, v)))
+    val retainedVs = liveVersions(root).filterNot(doomedSet.contains)
     val retained = retainedVs.flatMap(storagePathsOf(root, _)).toSet
     val files = doomed.flatMap(storagePathsOf(root, _)).distinct
       .filterNot(retained.contains)
     // manifest SEGMENTS are reference-counted storage exactly like data
     // files (r13): a segment survives as long as any retained list
     // names it — resolve the doomed sets BEFORE their lists vanish
-    val retainedSegs = retainedVs.flatMap(segmentRefsOf(root, _)).toSet
-    val doomedSegs = doomed.flatMap(segmentRefsOf(root, _)).distinct
+    val retainedSegs = retainedVs.flatMap(segmentNamesOf(root, _)).toSet
+    val doomedSegs = doomed.flatMap(segmentNamesOf(root, _)).distinct
       .filterNot(retainedSegs.contains)
     files.foreach(f => Files.deleteIfExists(Paths.get(f)))
     doomed.foreach(v => Files.deleteIfExists(manifestPath(rootP, v)))

@@ -493,13 +493,10 @@ object Streaming {
         // so each seq applies the chain WINDOW (tip, v], not just v's
         // own delta; dropping the intermediates would silently lose
         // their changes from the feed.
-        val state = java.nio.file.Paths.get(checkpoint, "_graft_order")
-        var (hwm, chainTip, pending) =
-          if (java.nio.file.Files.exists(state)) {
-            val toks = new String(java.nio.file.Files.readAllBytes(state),
-              java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+")
+        var (hwm, chainTip, pending) = readOrderState(checkpoint) match {
+          case Some(toks) =>
             // the leading format marker is the migration tripwire: a
-            // legacy manifest-tail state is plain ints ("3 7" = hwm 3,
+            // manifest-tail state is plain ints ("3 7" = hwm 3,
             // pending {7}) and would otherwise PARSE as (hwm, tip) and
             // silently skip ref history
             require(toks.headOption.contains("ref2"),
@@ -509,7 +506,8 @@ object Streaming {
             (toks(1).toInt, toks(2).toInt, toks.drop(3).map { t =>
               val Array(s, v) = t.split("="); s.toInt -> v.toInt
             }.to(scala.collection.mutable.SortedMap))
-          } else (0, 0, scala.collection.mutable.SortedMap.empty[Int, Int])
+          case None => (0, 0, scala.collection.mutable.SortedMap.empty[Int, Int])
+        }
         pending ++= discovered.filter(_._1 > hwm)
         def applyCommit(v: Int): Unit =
           if (!S.propsOf(root, v).get("rewrite").contains("true") &&
@@ -530,8 +528,6 @@ object Streaming {
             // changes (a consumer needing exactness re-syncs — the
             // Delta CDF restore semantics); post-rollback commits
             // then flow as ordinary windows from the new head.
-            val mf = (w: Int) => java.nio.file.Files.exists(
-              java.nio.file.Paths.get(root, "_manifests", s"$w.txt"))
             val window =
               try Some(S.lineageBetween(root, chainTip, v))
               catch { case e: IllegalArgumentException =>
@@ -540,7 +536,7 @@ object Streaming {
                 // heads commit their manifest before the seq) —
                 // manifest-store corruption or a manual delete, named
                 // actionably instead of the raw walk require
-                if (!mf(v)) throw new IllegalStateException(
+                if (!S.isLive(root, v)) throw new IllegalStateException(
                   s"ref advance named version $v but its manifest is " +
                     "missing — manifest store corruption or a manual " +
                     "delete, not a rollback; restore the manifests or " +
@@ -565,7 +561,7 @@ object Streaming {
                   // reaped by removeOrphans (only abandonment orphans
                   // manifests), so that is corruption/expiry, loud.
                   var w = v
-                  while (w > 0 && w != chainTip && mf(w)) w = S.parentOf(root, w)
+                  while (w > 0 && w != chainTip && S.isLive(root, w)) w = S.parentOf(root, w)
                   if (w == chainTip) throw new IllegalStateException(
                     s"version $v descends from tip $chainTip whose manifest " +
                       "is missing: a live head's ancestor is never orphaned " +
@@ -589,17 +585,8 @@ object Streaming {
           }
           pending -= (hwm + 1); hwm += 1; chainTip = v
         }
-        val tmp = java.nio.file.Files.createTempFile(
-          java.nio.file.Paths.get(checkpoint), "_graft_order", ".tmp")
-        java.nio.file.Files.write(tmp,
-          (Seq("ref2", hwm.toString, chainTip.toString) ++
-            pending.toSeq.map { case (s, v) => s"$s=$v" })
-            .mkString(" ")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        java.nio.file.Files.move(tmp, state,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        ()
+        writeOrderState(checkpoint, Seq("ref2", hwm.toString, chainTip.toString) ++
+          pending.toSeq.map { case (s, v) => s"$s=$v" })
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -620,8 +607,7 @@ object Streaming {
                              parent: Int, v: Int): DataFrame =
     try graft.sources.Snapshots.changesBetween(spark, root, parent, v)
     catch {
-      case e: Exception if parent > 0 && !java.nio.file.Files.exists(
-          java.nio.file.Paths.get(root, "_manifests", s"$parent.txt")) =>
+      case e: Exception if parent > 0 && !graft.sources.Snapshots.isLive(root, parent) =>
         throw new IllegalStateException(
           s"change feed fell behind expiry: version $v needs its parent " +
             s"$parent's manifest for the preimage, but it was expired. " +
@@ -658,15 +644,12 @@ object Streaming {
         // absent on disk can only be an EXPIRED version — skip it;
         // a gap whose file still exists is merely not-yet-discovered —
         // hold the later versions until it arrives.
-        val state = java.nio.file.Paths.get(checkpoint, "_graft_order")
-        var (hwm, pending) =
-          if (java.nio.file.Files.exists(state)) {
-            val toks = new String(java.nio.file.Files.readAllBytes(state),
-              java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+")
+        var (hwm, pending) = readOrderState(checkpoint) match {
+          case Some(toks) =>
             (toks.head.toInt, toks.tail.map(_.toInt).to(scala.collection.mutable.SortedSet))
-          } else (0, scala.collection.mutable.SortedSet.empty[Int])
+          case None => (0, scala.collection.mutable.SortedSet.empty[Int])
+        }
         pending ++= versions.filter(_ > hwm)
-        val manifests = java.nio.file.Paths.get(root, "_manifests")
         var progress = true
         while (progress && pending.nonEmpty) {
           val next = hwm + 1
@@ -681,23 +664,40 @@ object Streaming {
                 graft.sources.Snapshots.commitHasChanges(root, next))
               apply(resolveChanges(spark, root, next - 1, next), next)
             pending -= next; hwm = next
-          } else if (!java.nio.file.Files.exists(manifests.resolve(s"$next.txt")))
+          } else if (!graft.sources.Snapshots.isLive(root, next))
             hwm = next // expired before discovery — will never arrive
           else progress = false // exists but not yet discovered: hold
         }
-        val tmp = java.nio.file.Files.createTempFile(
-          java.nio.file.Paths.get(checkpoint), "_graft_order", ".tmp")
-        java.nio.file.Files.write(tmp,
-          (hwm +: pending.toSeq).mkString(" ")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        java.nio.file.Files.move(tmp, state,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        ()
+        writeOrderState(checkpoint, (hwm +: pending.toSeq).map(_.toString))
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
+  }
+
+  /** A change-feed tail's ordering state, persisted beside the
+    * caller's checkpoint (same durability domain): its space-separated
+    * tokens, None before the first batch.
+    */
+  private def readOrderState(checkpoint: String): Option[Array[String]] = {
+    val state = java.nio.file.Paths.get(checkpoint, "_graft_order")
+    if (!java.nio.file.Files.exists(state)) None
+    else Some(new String(java.nio.file.Files.readAllBytes(state),
+      java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+"))
+  }
+
+  /** Replace the ordering state atomically: a temp file, then an
+    * ATOMIC_MOVE over the old state, so a crash leaves the old or the
+    * new state, never half of one.
+    */
+  private def writeOrderState(checkpoint: String, tokens: Seq[String]): Unit = {
+    val dir = java.nio.file.Paths.get(checkpoint)
+    val tmp = java.nio.file.Files.createTempFile(dir, "_graft_order", ".tmp")
+    java.nio.file.Files.write(tmp,
+      tokens.mkString(" ").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.move(tmp, dir.resolve("_graft_order"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Shared scaffolding for per-micro-batch lake commits: bounded

@@ -7,8 +7,7 @@ import graft.SparkTestSession
 
 /** Two-level manifests (r13): lists re-reference carried segments by
   * name (commit cost O(new), not O(table)), stats pruning skips whole
-  * unopened segments, reaping refcounts segments like data files, and
-  * pre-r13 flat manifests stay readable.
+  * unopened segments, and reaping refcounts segments like data files.
   */
 class SnapshotSegmentsSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
@@ -67,45 +66,6 @@ class SnapshotSegmentsSpec extends AnyFunSuite with SparkTestSession {
     // and the pointer aggregates agree with full resolution
     assert(Snapshots.prunedFiles(spark, root, 3, "id", 1L, 2000L).toSet ==
       Snapshots.files(root, 3).toSet)
-  }
-
-  test("a pre-r13 flat manifest reads unchanged and migrates on the next commit") {
-    val root = Staging.tempDir("seg_flat").toString
-    Snapshots.append(Seq((1L, "a")).toDF("id", "s"), root)
-    // rewrite v1's list to the legacy FLAT form (inline entries)
-    val rootP = Paths.get(root)
-    val v1 = rootP.resolve("_manifests").resolve("1.txt")
-    val headers = listLines(root, 1).filter(l =>
-      l.startsWith("#schema\t") || l.startsWith("#props\t"))
-    val inline = Snapshots.files(root, 1) // resolved entries, path-only
-    segFiles(root).foreach(s =>
-      Files.delete(rootP.resolve("_manifests").resolve(s)))
-    Files.write(v1, (headers ++ inline).mkString("\n").getBytes("UTF-8"))
-    assert(Snapshots.files(root, 1) == inline, "flat manifests must read as before")
-    assert(Snapshots.read(spark, root, 1).count() == 1)
-    // the next append sweeps the inline entries into a segment
-    Snapshots.append(Seq((2L, "b")).toDF("id", "s"), root)
-    assert(listLines(root, 2).forall(_.startsWith("#")))
-    assert(Snapshots.read(spark, root, 2).select($"id").as[Long].collect().toSet ==
-      Set(1L, 2L))
-    // the swept segment carries #nostats (path-only entries): pruning
-    // must fall back to per-file footer stats, not skip it
-    assert(Snapshots.prunedFiles(spark, root, 2, "id", 1L, 1L).nonEmpty)
-    // the legacy run is quarantined in ITS OWN segment: the commit's
-    // freshly written entries keep pointer-level stats instead of
-    // inheriting #nostats from the swept inline lines
-    val segs = Snapshots.manifestsTable(spark, root, 2)
-      .orderBy("position").collect()
-    assert(segs.length == 2,
-      s"legacy sweep and fresh entries must land in separate segments, got ${segs.length}")
-    assert(!segs(0).getBoolean(3), "legacy segment must be #nostats")
-    assert(segs(1).getBoolean(3), "fresh-entry segment must keep stats")
-    // and the fresh segment's stats actually skip: a predicate outside
-    // its range opens only the legacy (never-skippable) segment
-    val b0 = Snapshots.segmentReads.get()
-    Snapshots.prunedFiles(spark, root, 2, "id", 50L, 60L)
-    assert(Snapshots.segmentReads.get() - b0 == 1,
-      "only the #nostats legacy segment may need opening")
   }
 
   test("expire reaps segments no retained list references; shared segments survive") {

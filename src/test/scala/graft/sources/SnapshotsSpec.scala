@@ -264,52 +264,6 @@ class SnapshotsSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
-  test("legacy manifests with RAW (unescaped) partition tokens still prune correctly") {
-    // manifests written before the r16 escaping fix stored the raw
-    // partition value in the #part: token; the read path accepts both
-    // spellings (r16 ADVICE) so old tables are not silently mis-pruned.
-    // Simulate a legacy manifest by rewriting the committed token from
-    // the escaped to the raw spelling in whatever file holds it.
-    val root = Staging.tempDir("snap_spec_legacy_esc").toString
-    val df = Seq((1L, "a:b"), (2L, "plain")).toDF("id", "s")
-    Snapshots.appendPartitioned(df, root, Snapshots.IdentityPartition("s"))
-    val esc = "a%3Ab"
-    val raw = "a:b"
-    // version manifests AND content-addressed segments both live in
-    // _manifests/ — rewrite the token wherever it landed
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val holders = {
-      val listing = Files.list(Paths.get(root, "_manifests"))
-      try listing.iterator().asScala.toSeq.filter(Files.isRegularFile(_))
-        .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(esc))
-      finally listing.close()
-    }
-    assert(holders.nonEmpty, "expected the escaped token in some manifest file")
-    holders.foreach { p =>
-      val txt = new String(Files.readAllBytes(p), "UTF-8")
-      // rewrite ONLY the #part:/#partagg: token fields — the data-file
-      // PATH also contains the escaped spelling (_p=a%3Ab/…) and
-      // legacy manifests kept paths correct, only token values raw
-      val legacy = txt.split('\n').map { line =>
-        line.split('\t').map { f =>
-          if (f.startsWith("#part:") || f.startsWith("#partagg:"))
-            f.replace(esc, raw)
-          else f
-        }.mkString("\t")
-      }.mkString("\n")
-      Files.write(p, legacy.getBytes("UTF-8"))
-    }
-    val hit = Snapshots.readPartitionPruned(spark, root, 1,
-      Snapshots.IdentityPartition("s"), "a:b")
-    assert(hit.select($"id").as[Long].collect().toSeq == Seq(1L),
-      "legacy raw-spelled partition token must still match the lookup")
-    // and the other partition still prunes/reads fine
-    assert(Snapshots.readPartitionPruned(spark, root, 1,
-      Snapshots.IdentityPartition("s"), "plain")
-      .select($"id").as[Long].collect().toSeq == Seq(2L))
-  }
-
   test("comma-valued partitions never get a #partagg summary and still prune right") {
     // the comma is the #partagg list separator: a comma-containing
     // value can never be represented in a summary, so the writer's
@@ -1133,40 +1087,6 @@ class SnapshotsSpec extends AnyFunSuite with SparkTestSession {
     val bv = Snapshots.appendTo(Seq((99L, "y")).toDF("id", "s"), root, "b")
     assert(Snapshots.versionAsOf(root, Long.MaxValue, "b") == bv)
     assert(Snapshots.versionAsOf(root, ts(1), "b") == 2)
-  }
-
-  test("versionAsOf clamps legacy mtime fallbacks to a running max (pre-r14 history)") {
-    import java.nio.file.{Files, Paths}
-    import java.nio.file.attribute.FileTime
-    import scala.jdk.CollectionConverters._
-    val root = Staging.tempDir("snap_legacy_ts").toString
-    (1 to 3).foreach(i => Snapshots.append(Seq((i.toLong, "x")).toDF("id", "s"), root))
-    // simulate pre-r14 manifests: strip the ts stamps, then give the
-    // files TIED/INVERTED mtimes (copies and clock steps do this)
-    val md = Paths.get(root).resolve("_manifests")
-    (1 to 3).foreach { v =>
-      val p = md.resolve(s"$v.txt")
-      val lines = Files.readAllLines(p).asScala.map { l =>
-        if (l.startsWith("#props\t"))
-          l.split('\t').filterNot(_.startsWith("ts=")).mkString("\t")
-        else l
-      }
-      Files.write(p, lines.mkString("\n").getBytes("UTF-8"))
-    }
-    val t0 = 1000000L
-    Files.setLastModifiedTime(md.resolve("1.txt"), FileTime.fromMillis(t0))
-    Files.setLastModifiedTime(md.resolve("2.txt"), FileTime.fromMillis(t0 + 2000))
-    Files.setLastModifiedTime(md.resolve("3.txt"), FileTime.fromMillis(t0 + 1000))
-    // raw mtimes would resolve t0+1000 to v3 — a "reader at that
-    // instant" seeing a child of a commit (v2) that did not exist yet.
-    // The running-max clamp keeps resolution consistent with lineage:
-    assert(Snapshots.versionAsOf(root, t0) == 1)
-    assert(Snapshots.versionAsOf(root, t0 + 1000) == 1,
-      "v3's inverted mtime must clamp up to v2's, not shadow under it")
-    // tie at the clamped time: the LATEST version wins, deterministically
-    assert(Snapshots.versionAsOf(root, t0 + 2000) == 3)
-    assert(Snapshots.versionAsOf(root, t0 + 9999) == 3)
-    intercept[IllegalArgumentException] { Snapshots.versionAsOf(root, t0 - 1) }
   }
 
   test("bloom- and partition-pruned point lookups honor equality and positional deletes") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
 import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.Scratch
 import scala.collection.immutable.ArraySeq
-import scala.collection.mutable.{ArrayBuffer, HashMap}
+import scala.collection.mutable.{ArrayBuffer, HashMap, HashSet}
 
 /** Metric definitions — the heart of the data model.
   *
@@ -78,13 +78,16 @@ object Metrics {
     Seq("WIR", "PSW", "TSW", "TEW", "treatment_TBWL", "patient_TBWL")
 
   /** The five metrics (pandas_DataModel.py:112-151) in one sorted
-    * per-user pass: `df` is partitioned by `UID`, each partition is
-    * sorted so a user's rows arrive together and in [[sortKeys]] order,
-    * and [[UserPass]] walks each user's rows once. Appends
+    * per-user pass: each user's rows arrive together and in [[sortKeys]]
+    * order, and [[UserPass]] walks each user's rows once. Appends
     * [[metricColumns]] to `df`'s columns, in `df`'s order. `keep`, when
     * given, keeps only the rows it holds for (null counts as false);
     * like the reference's demographic filter (pandas_DataModel.py:6-31)
-    * it acts on the finished frame: no metric depends on it.
+    * it acts on the finished frame: no metric depends on it. With
+    * `dedup` the walk drops whole-row duplicates at emission, like the
+    * reference's final `drop_duplicates` (pandas_DataModel.py:161): the
+    * metrics still count every row, and the emitted values are
+    * normalized as Spark's grouping normalizes them.
     *
     * The reference's `.diff(-1)` is x[i] − x[i+1] over the WHOLE frame
     * in global sort order, where x is the row's cohort-first weight; it
@@ -95,8 +98,13 @@ object Metrics {
     *
     * Strict mode keeps the diff inside each user (a user's last row has
     * a null diff). Every metric group is then a user or finer, so a
-    * user-constant `keep` is applied first, and the pass runs on one
-    * `UID` hash exchange.
+    * user-constant `keep` is applied first, and the walk is a sorted
+    * group map on `UID` (`flatMapSortedGroups`): the planner knows it
+    * needs its input clustered by `UID`. An input already hash
+    * partitioned on `UID`, such as [[Pipeline.joined]]'s shuffled
+    * joins, feeds it in the same stage with no exchange; any other input
+    * gets one. The declared clustering also keeps AQE from splitting a
+    * skewed join partition, and so one user's rows, across tasks.
     *
     * Bug-compatible mode walks the UNFILTERED frame, because a user that
     * `keep` drops can still be another user's successor:
@@ -122,7 +130,7 @@ object Metrics {
     *    join is dropped by EliminateSorts).
     */
   def withCohortMetrics(df: DataFrame, cohort: String, strict: Boolean,
-                        keep: Option[Column] = None): DataFrame = {
+                        keep: Option[Column] = None, dedup: Boolean = false): DataFrame = {
     Scratch.requireFree("the clinical metric pass", df.columns,
       (metricColumns ++ Seq("_keep", "_pid", "_next_ufw")).contains)
     require(df.schema("Weight").dataType == DoubleType,
@@ -130,22 +138,27 @@ object Metrics {
     val out = StructType(df.schema.fields ++
       (StructField("WIR", LongType, nullable = false) +:
         metricColumns.tail.map(StructField(_, DoubleType))))
-    def walk(input: DataFrame, order: Seq[Column]): DataFrame = {
-      val pass = new UserPass(input.schema, df.columns, cohort, withSuccessor = !strict)
-      input.sortWithinPartitions(order: _*).mapPartitions(pass(_))(Encoders.row(out))
-    }
+    def pass(input: DataFrame) =
+      new UserPass(input.schema, df.columns, cohort, withSuccessor = !strict, dedup)
     val metrics =
-      if (strict) walk(keep.fold(df)(df.filter).repartition(col("UID")), sortKeys)
-      else {
+      if (strict) {
+        val input = keep.fold(df)(df.filter)
+        val walk = pass(input)
+        input.groupBy(col("UID"))
+          .as(Encoders.row(StructType(Seq(input.schema("UID")))), Encoders.row(input.schema))
+          .flatMapSortedGroups(sortKeys.tail: _*)((_, rows) => walk(rows))(Encoders.row(out))
+      } else {
         val p = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
         val ranged = df.withColumn("_keep", keep.fold(lit(true))(coalesce(_, lit(false))))
           .repartitionByRange(p, col("UID").asc_nulls_last)
           .withColumn("_pid", spark_partition_id())
-        val summary = new UserPass(ranged.schema, df.columns, cohort, withSuccessor = true)
+        val summary = pass(ranged)
         val heads = ranged.mapPartitions(summary.head(_))(
           Encoders.row(StructType.fromDDL("_hpid INT NOT NULL, _head DOUBLE")))
-        walk(ranged.join(broadcast(nextHeads(heads)), Seq("_pid"), "left"),
-          col("UID").desc_nulls_first +: sortKeys.tail)
+        val input = ranged.join(broadcast(nextHeads(heads)), Seq("_pid"), "left")
+        val walk = pass(input)
+        input.sortWithinPartitions(col("UID").desc_nulls_first +: sortKeys.tail: _*)
+          .mapPartitions(walk(_))(Encoders.row(out))
       }
     // the encoder drops column metadata; `to` restores the input's
     metrics.to(out)
@@ -182,11 +195,15 @@ object Metrics {
   * the partition's first user the `_next_ufw` column its rows carry.
   * Without it a user's last row diffs against null. Only rows whose
   * `_keep` column holds are emitted; every row when there is none.
+  * With `dedup` an emitted row equal to one the user already emitted is
+  * dropped, and every emitted value is normalized as Spark's grouping
+  * emits its keys: -0.0 as 0.0, each NaN as the one NaN. Whole-row
+  * duplicates share their UID, so they always meet in one user.
   *
-  * Treatment and cohort groups are keyed through hash maps, not by
-  * contiguity: a cohort expression need not be monotone in sort order.
-  * Group keys compare like Spark's grouping: -0.0 equals 0.0, every NaN
-  * equals every other, binary by content.
+  * Treatment and cohort groups, and with `dedup` whole rows, are keyed
+  * through hash maps, not by contiguity: a cohort expression need not
+  * be monotone in sort order. Keys compare like Spark's grouping: -0.0
+  * equals 0.0, every NaN equals every other, binary by content.
   *
   * A user holding more than `maxRowsPerUser` rows (262,144 in the
   * pipeline — about 250 MB of buffered rows at ~1 KB a row) fails the
@@ -194,7 +211,7 @@ object Metrics {
   * exhausting the executor's heap.
   */
 private[clinical] final class UserPass(in: StructType, outColumns: Array[String],
-    cohort: String, withSuccessor: Boolean,
+    cohort: String, withSuccessor: Boolean, dedup: Boolean = false,
     maxRowsPerUser: Int = UserPass.MaxRowsPerUser) extends Serializable {
   import UserPass._
 
@@ -282,13 +299,13 @@ private[clinical] final class UserPass(in: StructType, outColumns: Array[String]
     /** The user's `_ufw`: the fw of the cohort holding its first row. */
     def ufw: JDouble = byCohort(0).fw
 
-    /** The kept rows with their metrics; `next` is the fw the last row
-      * diffs against.
+    /** The kept rows with their metrics, without repeats under `dedup`;
+      * `next` is the fw the last row diffs against.
       */
     def emit(next: JDouble): Iterator[Row] = {
       for (i <- 0 until n)
         byCohort(i).observe(minus(byCohort(i).fw, if (i + 1 < n) byCohort(i + 1).fw else next))
-      (0 until n).iterator.filter(j => keep < 0 || rows(j).getBoolean(keep)).map { j =>
+      val kept = (0 until n).iterator.filter(j => keep < 0 || rows(j).getBoolean(keep)).map { j =>
         val r = rows(j)
         val t = byTreatment(j)
         val c = byCohort(j)
@@ -301,7 +318,12 @@ private[clinical] final class UserPass(in: StructType, outColumns: Array[String]
         out(k + 3) = t.last
         out(k + 4) = minus(t.last, t.first)
         out(k + 5) = c.maxDiff
-        Row.fromSeq(ArraySeq.unsafeWrapArray(out))
+        ArraySeq.unsafeWrapArray(out)
+      }
+      if (!dedup) kept.map(Row.fromSeq)
+      else {
+        val emitted = HashSet.empty[Seq[Any]]
+        kept.filter(v => emitted.add(v.map(groupKey))).map(v => Row.fromSeq(v.map(normalized)))
       }
     }
   }
@@ -346,11 +368,28 @@ private[clinical] object UserPass {
   private def minus(a: JDouble, b: JDouble): JDouble =
     if (a == null || b == null) null else a - b
 
-  /** A value as a grouping key: equal exactly when Spark groups it equal. */
-  private def groupKey(v: Any): Any = v match {
+  /** A value as Spark's grouping emits it (NormalizeFloatingNumbers):
+    * -0.0 as 0.0 and every NaN as the one NaN, in structs and arrays too.
+    */
+  private def normalized(v: Any): Any = v match {
     case d: Double => if (d == 0.0) 0.0 else if (d.isNaN) Double.NaN else d
     case f: Float => if (f == 0.0f) 0.0f else if (f.isNaN) Float.NaN else f
-    case b: Array[Byte] => ArraySeq.unsafeWrapArray(b)
+    case r: Row => Row.fromSeq(r.toSeq.map(normalized))
+    case s: collection.Seq[_] => s.map(normalized)
     case other => other
   }
+
+  /** A value as a hash key: equal exactly when Spark groups it equal.
+    * Boxed NaNs are unequal under `==`, so every NaN maps to one marker.
+    */
+  private def groupKey(v: Any): Any = normalized(v) match {
+    case d: Double if d.isNaN => NaN
+    case f: Float if f.isNaN => NaN
+    case b: Array[Byte] => ArraySeq.unsafeWrapArray(b)
+    case r: Row => r.toSeq.map(groupKey)
+    case s: collection.Seq[_] => s.map(groupKey)
+    case other => other
+  }
+
+  private case object NaN
 }

@@ -22,9 +22,17 @@ import org.apache.spark.sql.functions._
   *    it becomes one sort within `UID` partitions feeding the metric
   *    pass ([[Metrics.withCohortMetrics]]); only presentation sorts
   *    globally;
-  *  - users/treatments are broadcast to the weights side (they are small
-  *    dimension tables — 1k rows in the reference); the big fact table
-  *    never shuffles for the joins, only once for the metric pass.
+  *  - in strict mode the joins are shuffled hash joins ([[joined]]):
+  *    each source crosses one hash exchange on the user key, nothing is
+  *    broadcast, and the metric pass runs in the joins' stage on their
+  *    `UID` partitioning (the per-user cohort operator over co-located
+  *    activity tuples of "Cohort Analysis with Ease", SIGMOD 2018). The
+  *    bug-compatible pass needs a range exchange on `UID` anyway, so
+  *    there Catalyst picks the joins: at this scale it broadcasts the
+  *    weights and treatments sides (the build side of a left join is
+  *    its right side);
+  *  - the final full-row dedup (py:161) happens inside the metric pass,
+  *    not as a second exchange over every column.
   */
 object Pipeline {
 
@@ -47,18 +55,32 @@ object Pipeline {
     treatments.withColumnsRenamed(Map("StartDate" -> "Tmt_StartDate"))
 
   /** users ⟕ weights ⟕ treatments on UID = MasterUserID
-    * (pandas_DataModel.py:56-63), join keys dropped from the right sides.
-    *
-    * At reference scale Catalyst broadcasts automatically; at 100 TB the
-    * fact table is `weights`, so the scalable shape is
-    * (weights ⟖ users) — but the reference semantics keep ALL users
-    * (left join from users), including users with no weigh-ins, so we
-    * preserve that exactly and rely on broadcast of the dimension sides.
+    * (pandas_DataModel.py:56-63), join keys dropped from the right sides,
+    * as shuffled hash joins: the reference keeps ALL users (a left join
+    * from users, users with no weigh-ins included), so the build side is
+    * the right one, and a broadcast would ship the weights fact table to
+    * every task. A `shuffle_hash` hint on both right sides instead sends
+    * each source through one hash exchange on its user key, and the
+    * output stays hash partitioned on `UID`, as the strict metric pass
+    * needs it.
     */
-  def joined(users: DataFrame, weights: DataFrame, treatments: DataFrame): DataFrame = {
+  def joined(users: DataFrame, weights: DataFrame, treatments: DataFrame): DataFrame =
+    join(users, weights, treatments, shuffled = true)
+
+  /** [[joined]], leaving the join strategy to Catalyst unless `shuffled`.
+    *
+    * Measured and not kept: USING joins on the right sides' key renamed
+    * to `UID` (no `drop`s), with the identity cohort projection skipped,
+    * save three eager analyses of the joined plan per call, but read
+    * clinical `call_p50_s` 0.129 → 0.133 s and `pass_s` 0.907 → 0.935 s
+    * (perfbench, 3 pairs, seeds 1–3, 4 cores).
+    */
+  private def join(users: DataFrame, weights: DataFrame, treatments: DataFrame,
+                   shuffled: Boolean): DataFrame = {
+    def build(df: DataFrame) = if (shuffled) df.hint("shuffle_hash") else df
     val u = renamedUsers(users)
-    val w = renamedWeights(weights)
-    val t = renamedTreatments(treatments)
+    val w = build(renamedWeights(weights))
+    val t = build(renamedTreatments(treatments))
     u.join(w, u("UID") === w("MasterUserID"), "left")
       .drop(w("MasterUserID"))
       .join(t, u("UID") === t("MasterUserID"), "left")
@@ -90,8 +112,8 @@ object Pipeline {
     * costs nothing and documents treatment_TBWL.
     */
   def withMetricsCohort(df: DataFrame, cohortCol: String, strict: Boolean,
-                        keep: Option[Column] = None): DataFrame =
-    Metrics.withCohortMetrics(df, cohortCol, strict, keep)
+                        keep: Option[Column] = None, dedup: Boolean = false): DataFrame =
+    Metrics.withCohortMetrics(df, cohortCol, strict, keep, dedup)
 
   /** Full pipeline from the three (un-renamed) source tables. One
     * spelling (r17 review): delegates to [[runWithCohortExpr]] with the
@@ -122,7 +144,7 @@ object Pipeline {
         !cohortName.startsWith("_"),
       s"cohort name '$cohortName' collides with a metric/internal " +
         "column the pipeline derives — pick another name")
-    val pre = withDerived(joined(users, weights, treatments))
+    val pre = withDerived(join(users, weights, treatments, shuffled = cfg.strictCohorts))
     // materializing a cohort under an EXISTING column name silently
     // replaces that column for every downstream metric, group key and
     // filter (r18 review: cohortName = "Weight" with a bucketing
@@ -141,10 +163,8 @@ object Pipeline {
       s"cohort name '$cohortName' collides with an input/base column — " +
         "the cohort expression would silently replace it for every " +
         "downstream metric; pick another name")
-    val base = pre.withColumn(cohortName, cohortExpr)
-    val wide = withMetricsCohort(base, cohortName, cfg.strictCohorts,
-      Some(Filters.predicate(cfg)))
-    if (cfg.dedup) wide.dropDuplicates() else wide
+    withMetricsCohort(pre.withColumn(cohortName, cohortExpr), cohortName,
+      cfg.strictCohorts, Some(Filters.predicate(cfg)), cfg.dedup)
   }
 
   /** README.md:25-29 presentation projection. */

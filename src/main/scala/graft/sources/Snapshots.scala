@@ -1481,15 +1481,16 @@ object Snapshots {
 
   /** The history TABLE — Iceberg's `table.snapshots` / Delta's
     * DESCRIBE HISTORY: one row per live (unexpired) version with its
-    * file count, equality-delete-set count, manifest-summed physical
-    * row count, and the rewrite flag. Resolved entirely from manifests.
+    * file count, delete-set count (equality and positional sets, as
+    * [[history]] counts them), manifest-summed physical row count, and
+    * the rewrite flag. Resolved entirely from manifests.
     */
   def snapshotsTable(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     liveVersions(root).map { v =>
       val lines = rawLines(root, v)
       val es = entriesOf(lines)
-      (v, es.size, deleteSetsOf(lines).size, es.map(_.rows).sum,
+      (v, es.size, deleteSetsOf(lines).size + posDeleteSetsOf(lines).size, es.map(_.rows).sum,
         propsOf(root, v).get("rewrite").contains("true"))
     }.toDF("version", "n_files", "n_delete_sets", "file_rows", "is_rewrite")
   }

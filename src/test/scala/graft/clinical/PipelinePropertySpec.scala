@@ -5,6 +5,8 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import graft.SparkTestSession
 import java.sql.Timestamp
 
@@ -19,7 +21,8 @@ import java.sql.Timestamp
   * and the per-user metric pass equals the window formulation
   * ([[WindowMetrics]]) on full rows.
   */
-class PipelinePropertySpec extends AnyFunSuite with SparkTestSession {
+class PipelinePropertySpec extends AnyFunSuite with SparkTestSession
+    with AdaptiveSparkPlanHelper {
 
   /** scalatest-scalacheck bridge is not on the offline classpath; drive
     * the generator directly with deterministic seeds instead.
@@ -209,11 +212,18 @@ class PipelinePropertySpec extends AnyFunSuite with SparkTestSession {
         j.toLong, j != 1))),
     treatments = (0 until n).map(i => (f"u$i%03d", 1L, (i % 5).toLong)))
 
-  private def withShufflePartitions(n: Int)(body: => Unit): Unit = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  /** `body` under session confs `confs`, each restored after. */
+  private def withConfs(confs: (String, String)*)(body: => Unit): Unit = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
+
+  private def withShufflePartitions(n: Int)(body: => Unit): Unit =
+    withConfs("spark.sql.shuffle.partitions" -> n.toString)(body)
 
   private def assertBugCompatible(fx: Fixture, cfg: PipelineConfig): Unit = {
     val (u, w, t) = toTables(fx)
@@ -236,5 +246,80 @@ class PipelinePropertySpec extends AnyFunSuite with SparkTestSession {
 
   test("bug-compatible pass: a partition-tail user whose successor the filter removes") {
     withShufflePartitions(7)(assertBugCompatible(alternating(60), wideCfg.copy(gender = "Male")))
+  }
+
+  test("dedup in the pass equals dropDuplicates value for value on -0.0, 0.0 and NaN") {
+    // whole rows duplicated apart from the sign of a zero weight, or
+    // apart from the NaN's payload: Spark's grouping takes them as one
+    // row and emits its normalized key (0.0, the one NaN), so the pass
+    // must emit those values too
+    val otherNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+    val weighs = Seq("u000", "u001").flatMap(uid => Seq(
+      (uid, Some(-0.0), 0L, true), (uid, Some(0.0), 0L, true),
+      (uid, Some(Double.NaN), 1L, true), (uid, Some(otherNaN), 1L, true),
+      (uid, Some(-0.0), 2L, false), (uid, Some(-0.0), 2L, false),
+      (uid, Some(70.0), 3L, true)))
+    val fx = Fixture(
+      users = Seq((Some("u000"), "Male", 30L, 5066L), (Some("u001"), "Female", 40L, 5066L)),
+      weighs = weighs, treatments = Seq(("u000", 1L, 0L), ("u001", 1L, 0L)))
+    val (u, w, t) = toTables(fx)
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    }
+    def values(df: DataFrame) = df.collect().map(_.toSeq.map(bits).mkString("|")).sorted.toSeq
+    // per user: one row each for minutes 0 to 3, zeros and NaN normalized
+    val weightsOut = Seq(0.0, 0.0, 0.0, 0.0, Double.NaN, Double.NaN, 70.0, 70.0).map(bits)
+    // the weight itself, plain and in an array, as cohort keys too
+    val cohorts = Seq(col("week") -> "week", (col("Weight") * 1.0) -> "w1",
+      array(col("Weight")) -> "wa")
+    for (strict <- Seq(true, false); (cohort, name) <- cohorts) {
+      val cfg = wideCfg.copy(strictCohorts = strict)
+      def run(c: PipelineConfig) = Pipeline.runWithCohortExpr(u, w, t, cohort, name, c)
+      assert(values(run(cfg)) == values(run(cfg.copy(dedup = false)).dropDuplicates()),
+        s"$name $cfg")
+      assert(run(cfg).collect().map(r => bits(r.getAs[Double]("Weight"))).toSeq.sortBy(_.toString) ==
+        weightsOut.sortBy(_.toString), s"$name $cfg")
+      assertSameRows(run(cfg), WindowMetrics.run(u, w, t, cohort, name, cfg), s"$name $cfg")
+    }
+  }
+
+  test("a skewed user keeps its metrics: the walk's UID clustering refuses AQE's skew split") {
+    // u000 holds 200 user rows: one users-side exchange partition is
+    // skewed. With AQE's skew-join thresholds at their floor, a shuffled
+    // join whose output nothing needs clustered by UID is split, u000's
+    // rows spread across tasks; the walk declares that clustering, so the
+    // split is refused and its metrics equal the window reference's.
+    // One join only: a second join on UID would refuse the split itself.
+    val fx = Fixture(
+      users = Seq.fill(200)((Some("u000"), "Male", 30L, 5066L)) ++
+        (1 to 8).map(i => (Some(f"u$i%03d"), "Female", 40L, 5066L)),
+      weighs = (0 to 8).flatMap(i => (0 until 3).map(j =>
+        (f"u$i%03d", Some(60.0 + i + j), j.toLong, j != 1))),
+      treatments = (0 to 8).map(i => (f"u$i%03d", 1L, 0L)))
+    val (u, w, t) = toTables(fx)
+    val withTreatment = u.withColumnsRenamed(Map(
+        "CreatedDate" -> "UIDCreatedDate", "IsActive" -> "User_IsActive"))
+      .join(t.withColumnRenamed("StartDate", "Tmt_StartDate"),
+        col("UID") === col("MasterUserID"), "left").drop("MasterUserID")
+    val users = spark.createDataFrame(withTreatment.collectAsList(), withTreatment.schema)
+    val weights = w.withColumnsRenamed(Map("CreatedDate" -> "Wts_CreatedDate",
+      "UpdatedDate" -> "Wts_UpdatedDate", "IsActive" -> "Wts_IsActive",
+      "IsDelete" -> "Wts_IsDelete")).hint("shuffle_hash")
+    val frame = Pipeline.withDerived(users.join(weights, col("UID") === col("MasterUserID"), "left")
+      .drop("MasterUserID"))
+    def skewJoins(df: DataFrame) = {
+      df.collect()
+      collect(df.queryExecution.executedPlan) { case j: ShuffledHashJoinExec if j.isSkewJoin => j }
+    }
+    withConfs(
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1") {
+      assert(skewJoins(frame).nonEmpty, "the thresholds split no join")
+      val walked = Pipeline.withMetricsCohort(frame, "week", strict = true)
+      assertSameRows(walked, WindowMetrics.withMetrics(frame, "week", strict = true), "skewed u000")
+      assert(skewJoins(walked).isEmpty, "the walk's input join was split")
+    }
   }
 }

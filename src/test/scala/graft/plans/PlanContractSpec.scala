@@ -1,8 +1,11 @@
 package graft.plans
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import graft.SparkTestSession
 import graft.SparkEntry
+import graft.clinical.{Pipeline, PipelineConfig}
+import graft.queries.Clinical
 
 /** Battery-wide physical-plan contracts — the scale properties that
   * make these operators survive a 100 TB / 1000-executor deployment,
@@ -157,16 +160,23 @@ class PlanContractSpec extends AnyFunSuite with SparkTestSession {
     assert(scans <= 2, s"q74 scans documents $scans times (expected print leg + n_docs leg)")
   }
 
+  /** A plan's lines after execution (AQE finalizes stage reuse only
+    * then), up to AQE's initial plan, without tree drawing or
+    * whole-stage-codegen ids.
+    */
+  private def finalLines(df: DataFrame): IndexedSeq[String] = {
+    df.collect()
+    df.queryExecution.executedPlan.toString.linesIterator
+      .takeWhile(!_.contains("Initial Plan"))
+      .map(_.replaceAll("^[^A-Za-z]*", "")).toIndexedSeq
+  }
+
   test("q30 reads one shared UID range exchange and has no Window") {
     // the bug-compatible pass (clinical.Metrics.withCohortMetrics): the
     // walk and its partition-head summary must read ONE range exchange.
     // Two exchanges would sample their range bounds independently, and
     // the summary's partition ids would stop matching the walk's.
-    val df = SparkEntry.queries("q30_clinical_pipeline")(spark, dir)
-    df.collect()   // AQE finalizes stage reuse only on execution
-    val lines = df.queryExecution.executedPlan.toString.linesIterator
-      .takeWhile(!_.contains("Initial Plan"))
-      .map(_.replaceAll("^[^A-Za-z]*", "")).toIndexedSeq
+    val lines = finalLines(SparkEntry.queries("q30_clinical_pipeline")(spark, dir))
     val plan = lines.mkString("\n")
     // the pass's exchange, not the gate wrapper's global presentation sort
     val ranged = lines.filter(l =>
@@ -179,20 +189,48 @@ class PlanContractSpec extends AnyFunSuite with SparkTestSession {
     assert(!lines.exists(_.startsWith("Window ")), s"q30 re-grew a window:\n$plan")
   }
 
-  test("q31 sorts once on the metric sort keys, right after the UID exchange") {
-    // the clinical metric pass (clinical.Metrics.withCohortMetrics): one
-    // hash exchange on UID, one sort within partitions, no Window — the
-    // six window specs it replaced sorted the joined row once each
-    val lines = plans("q31_clinical_pipeline_strict").linesIterator
-      .map(_.replaceAll("^[^A-Za-z]*", "")).toIndexedSeq
+  test("q31: one hash exchange per source, no broadcast, sort on the joins") {
+    // the strict clinical plan (clinical.Pipeline.joined feeding
+    // clinical.Metrics.withCohortMetrics): users, weights and treatments
+    // each cross one hash exchange on their user key into two shuffled
+    // hash joins, and the walk sorts their output in that stage. No
+    // broadcast of the weights fact table, no second UID exchange, one
+    // metric sort and no Window (the six window specs it replaced sorted
+    // the joined row once each)
+    val lines = finalLines(SparkEntry.queries("q31_clinical_pipeline_strict")(spark, dir))
+    val plan = lines.mkString("\n")
+    assert(!plan.contains("Broadcast"), s"q31 broadcasts:\n$plan")
+    val hashed = lines.filter(_.startsWith("Exchange hashpartitioning("))
+    assert(hashed.map(_.takeWhile(_ != '#')) == Seq("Exchange hashpartitioning(UID",
+        "Exchange hashpartitioning(MasterUserID", "Exchange hashpartitioning(MasterUserID"),
+      s"expected one hash exchange per source on its user key:\n$plan")
+    assert(lines.count(_.startsWith("FileScan ")) == 3 &&
+        lines.count(_.startsWith("ShuffledHashJoin [UID#")) == 2,
+      s"expected three scans into two shuffled hash joins on UID:\n$plan")
     val sorts = lines.indices.filter { i =>
       lines(i).startsWith("Sort [UID") && lines(i).contains("UIDCreatedDate") &&
         lines(i).endsWith("false, 0")
     }
-    assert(sorts.size == 1, s"expected one metric sort:\n${lines.mkString("\n")}")
-    assert(lines(sorts.head + 1).startsWith("Exchange hashpartitioning(UID"),
-      s"the metric sort must sit on the UID exchange:\n${lines.mkString("\n")}")
-    assert(!lines.exists(_.startsWith("Window ")), "q31 re-grew a window")
+    assert(sorts.size == 1, s"expected one metric sort:\n$plan")
+    assert(lines(sorts.head - 1).startsWith("MapGroups ") &&
+        lines.drop(sorts.head + 1).dropWhile(_.startsWith("Project ")).head
+          .startsWith("ShuffledHashJoin [UID#"),
+      s"only a projection may sit between the joins and the metric sort under the walk:\n$plan")
+    assert(!lines.exists(_.startsWith("Window ")), s"q31 re-grew a window:\n$plan")
+  }
+
+  test("clinical plans (both modes) with dedup have no exchange above the metric walk") {
+    // duplicates are whole rows, so they meet in one user: the walk drops
+    // them itself, where a dropDuplicates above it shuffled every column
+    for (strict <- Seq(true, false)) {
+      val cfg = PipelineConfig(gender = "Male", minAge = 20, maxAge = 60, clinicId = 1,
+        strictCohorts = strict, dedup = true)
+      val lines = finalLines(Pipeline.run(Clinical.syntheticUsers(spark, dir),
+        Clinical.syntheticWeights(spark, dir), Clinical.syntheticTreatments(spark, dir), cfg))
+      val walk = lines.indexWhere(l => l.startsWith("MapGroups ") || l.startsWith("MapPartitions "))
+      assert(walk > 0 && !lines.take(walk).exists(_.contains("Exchange")),
+        s"strict = $strict: an exchange sits above the walk:\n${lines.mkString("\n")}")
+    }
   }
 
   test("clinical plans (both modes) have zero single-partition exchanges after execution") {

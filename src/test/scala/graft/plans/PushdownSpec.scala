@@ -1,9 +1,14 @@
 package graft.plans
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Alias, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter,
-  LogicalPlan, MapPartitions, Project, RepartitionByExpression}
+  MapPartitions, Project, RepartitionByExpression}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FilterExec, MapGroupsExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import graft.SparkTestSession
 import graft.clinical.{Pipeline, PipelineConfig}
 
@@ -16,28 +21,34 @@ class PushdownSpec extends AnyFunSuite with SparkTestSession {
   private val fixtureDir = "fixtures/clinical"
 
   /** The clinical pipeline applies its demographic filter itself, below
-    * the metric pass: the topmost `UID` repartition under the pass (a
-    * MapPartitions) must hold every Filter that touches Gender, and at
-    * least one. Returns the plan as the failure message otherwise.
+    * the metric pass: in the physical plan, the users side's `UID` hash
+    * exchange under the pass (a MapGroups) must hold every Filter that
+    * touches Gender, and at least one. Returns the plan as the failure
+    * message otherwise.
     */
-  private def assertGenderFilterBelowPass(plan: LogicalPlan): Unit = {
-    def genderFilters(p: LogicalPlan) = p.collect {
-      case f: LFilter if f.condition.references.exists(_.name == "Gender") => f
+  private def assertGenderFilterBelowPass(df: DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
     }
-    val belowExchange = plan.collectFirst { case m: MapPartitions => m }.flatMap(
+    def genderFilters(p: SparkPlan) = p.collect {
+      case f: FilterExec if f.condition.references.exists(_.name == "Gender") => f
+    }
+    val belowExchange = plan.collectFirst { case m: MapGroupsExec => m }.flatMap(
       _.collectFirst {
-        case r: RepartitionByExpression
-            if r.partitionExpressions.exists(_.references.exists(_.name == "UID")) => r
+        case e: ShuffleExchangeExec if (e.outputPartitioning match {
+          case h: HashPartitioning => h.references.exists(_.name == "UID")
+          case _ => false
+        }) => e
       })
-    assert(belowExchange.exists(r =>
-        genderFilters(r).nonEmpty && genderFilters(r).size == genderFilters(plan).size),
+    assert(belowExchange.exists(e =>
+        genderFilters(e).nonEmpty && genderFilters(e).size == genderFilters(plan).size),
       s"the Gender filter must sit below the metric pass and its UID exchange:\n$plan")
   }
 
   test("strict mode: gender filter sits below the metric pass and its UID exchange") {
     val cfg = PipelineConfig(gender = "Male", minAge = 10, maxAge = 80, strictCohorts = true)
-    assertGenderFilterBelowPass(
-      Pipeline.runFromCsv(spark, fixtureDir, cfg).queryExecution.optimizedPlan)
+    assertGenderFilterBelowPass(Pipeline.runFromCsv(spark, fixtureDir, cfg))
   }
 
   test("bug-compatible mode: Gender is the keep flag below the range exchange") {

@@ -225,6 +225,13 @@ class SnapshotsSpec extends AnyFunSuite with SparkTestSession {
     // merge-on-read tombstones make physical != logical: refuse
     Snapshots.deleteWhere(spark, root, "id", Seq(Tuple1(1L)).toDF("id"))
     intercept[IllegalArgumentException] { Snapshots.metadataCount(root) }
+    // v4 added an equality set, v5 a positional one: both tables count both
+    Snapshots.deleteWhereMatching(spark, root, $"id" === 2L)
+    val sets = Snapshots.snapshotsTable(spark, root)
+      .as[(Int, Int, Int, Long, Boolean)].collect().map(t => t._1 -> t._3).toMap
+    val added = Snapshots.history(spark, root)
+      .as[(Int, String, Long, Int)].collect().map(h => h._1 -> h._4).toMap
+    assert(sets(4) == 1 && sets(5) == 2 && added(4) == 1 && added(5) == 1, (sets, added))
   }
 
   test("bloom tokens skip point-lookup files with no false negatives") {

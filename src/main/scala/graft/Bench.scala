@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** The battery benchmark: every registry query's best-of-two steady
   * time, printed as the two-line stdout contract.
@@ -57,11 +56,7 @@ object Bench {
         shardSlice(allNames, i, n)
       case None => allNames
     })
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // steady-state warmup so the first timed query doesn't absorb JVM /
     // codegen / scheduler cold-start (the baseline's numbers are warm

@@ -1,7 +1,5 @@
 package graft.clinical
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI mirroring the reference's argparse surface (README.md:33-40,
   * pandas_DataModel.py:164-186):
   *
@@ -57,14 +55,10 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val (dir, cfg) = parse(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+    val spark = graft.LocalSession.builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .appName("clinical-pipeline")
       .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val out = Pipeline.runFromCsv(spark, dir, cfg)

@@ -65,7 +65,7 @@ object BpeLearn {
     // scheduler behavior. (Do NOT checkpoint per step: caching each
     // chain state costs more than the length-k column chain it saves —
     // measured 5× slower at sf0.1.)
-    var cur = words.localCheckpoint(false)
+    var cur = Materialize.local(words, "BpeLearn.learn words (vocabulary)")
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var step = 1
     var exhausted = false

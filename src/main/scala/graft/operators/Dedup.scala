@@ -454,9 +454,11 @@ object Dedup {
     * comparison: labels are non-increasing (label(label(u)) ≤ label(u)
     * by the `label(x) ≤ x` invariant), so the label SUM is strictly
     * decreasing until fixpoint; an unchanged sum IS convergence. Labels
-    * are localCheckpoint'ed per round (lazily — the sum job
-    * materializes them) so the plan does not grow with iteration count;
-    * superseded round blocks are released eagerly.
+    * are materialized per round ([[Materialize.local]], lazily — the sum
+    * job materializes them) so the plan does not grow with iteration
+    * count. A round's blocks are released once its successor's sum job
+    * has materialized the successor, and the edge list's once the loop
+    * ends: only the returned labels' blocks stay.
     *
     * Returns (node, component) with component = min node id in the
     * component.
@@ -465,19 +467,17 @@ object Dedup {
                           maxIter: Int = 20): DataFrame = {
     // both edge directions from ONE pass over pairs (a union of two
     // selects would recompute the upstream pair pipeline per branch)
-    val sym = pairs.select(explode(array(
+    val sym = Materialize.local(pairs.select(explode(array(
         struct(col(idA).as("u"), col(idB).as("v")),
         struct(col(idB).as("u"), col(idA).as("v")))).as("e"))
       .select(col("e.u").as("asker"), col("e.v").as("target"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), "Dedup.connectedComponents edges (operator input)")
     // seed with the first hop for free: the node list needs a groupBy on
     // asker anyway, so fold `min(self, neighbors)` into it — one fewer
     // full round than identity seeding
-    var labels = sym.groupBy(col("asker"))
+    var labels = Materialize.local(sym.groupBy(col("asker"))
       .agg(least(col("asker"), min(col("target"))).as("label"))
-      .select(col("asker").as("node"), col("label"))
-      .localCheckpoint(false)
+      .select(col("asker").as("node"), col("label")), "Dedup.connectedComponents seed (round)")
     // null-safe: sum over an EMPTY label table is null (no pairs at all
     // → zero nodes); treat as 0 so the loop converges on round 1
     // instead of throwing
@@ -489,26 +489,24 @@ object Dedup {
     // and lets round 1 detect a graph the seeding already converged
     var prevSum: Option[BigDecimal] = Some(labelSum(labels))
     var converged = false
-    var prev: Option[DataFrame] = Some(labels)
     while (!converged && iter < maxIter) {
       val requests = sym.unionByName(
         labels.select(col("node").as("asker"), col("label").as("target")))
-      val next = requests
+      val next = Materialize.local(requests
         .join(labels.select(col("node").as("target"), col("label").as("tl")), Seq("target"))
         .groupBy(col("asker")).agg(min(col("tl")).as("label"))
-        .select(col("asker").as("node"), col("label"))
-        .localCheckpoint(false)
+        .select(col("asker").as("node"), col("label")), "Dedup.connectedComponents round (round)")
       // decimal sum: node ids are longs; a plain long sum could overflow
-      // at production id ranges and fake a fixpoint
+      // at production id ranges and fake a fixpoint. Its job also
+      // materializes `next`, so the superseded round is free to go.
       val s = labelSum(next)
       converged = prevSum.contains(s)
       prevSum = Some(s)
-      prev.foreach(_.unpersist(false))
-      prev = Some(next)
+      Materialize.release(labels)
       labels = next
       iter += 1
     }
-    sym.unpersist(false)
+    Materialize.release(sym)
     // exhausting maxIter without the fixpoint must fail LOUDLY (the
     // file's no-silent-caps doctrine, r16): returning partial labels
     // would report one true component as several fragments, and

@@ -62,10 +62,9 @@ object DistributedSelection {
     // absent, as in SQL.
     val o = df.select(col(groupCol).as("g"), col(valueCol).cast("long").as("v"))
       .filter(col("v").isNotNull)
-    val coarse = o.groupBy(col("g"),
+    val coarse = Materialize.local(o.groupBy(col("g"),
         expr(bucketSql(bucketWidth)).as("cb"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
+      .agg(count(lit(1)).as("cnt")), "DistributedSelection histogram (aggregate)")
     val nstat = coarse.groupBy(col("g")).agg(sum(col("cnt")).as("n"))
     // (g, n, rank_idx, r): every requested rank, resolved from n
     // a rank outside [1, n] (or NULL, e.g. a typo'd expression) would

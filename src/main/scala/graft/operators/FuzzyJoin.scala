@@ -40,18 +40,17 @@ object FuzzyJoin {
     // the record itself + each single-character deletion, deduped
     // per record (deleting any of a run of equal chars yields the
     // same variant — "000" has one distinct deletion, not three)
-    val variants = df.select(col("id"), col("name"),
+    val variants = Materialize.local(df.select(col("id"), col("name"),
       explode(array_distinct(concat(
         array(col("name")),
         expr("""transform(sequence(1, length(name)),
                 i -> concat(substring(name, 1, i-1),
                             substring(name, i+1, length(name))))""")
-      ))).as("variant"))
-      // lazy checkpoint (r17 review): the deletion-neighborhood
-      // explode — and everything upstream of df — feeds BOTH legs of
-      // the self-join below; one materialization instead of two runs
-      // of the candidate generation
-      .localCheckpoint(false)
+      ))).as("variant")),
+      // the deletion-neighborhood explode — and everything upstream of
+      // df — feeds BOTH legs of the self-join below; one
+      // materialization instead of two runs of the candidate generation
+      "FuzzyJoin.ed1Pairs variants (operator input)")
     val cand = variants.as("a")
       .join(variants.as("b"),
         col("a.variant") === col("b.variant") &&

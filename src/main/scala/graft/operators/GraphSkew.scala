@@ -48,7 +48,7 @@ object GraphSkew {
                    (consume: (DataFrame, DataFrame) => DataFrame): DataFrame =
       hubs match {
         case Some(h) =>
-          val it = iterate.localCheckpoint(false)
+          val it = Materialize.local(iterate, "GraphSkew iterate (round)")
           consume(cold, it).unionByName(
             consume(hub, broadcast(it.join(h, Seq("src"), "left_semi"))))
         case None => consume(cold, iterate)
@@ -63,10 +63,9 @@ object GraphSkew {
   def split(e: DataFrame, hubDegreeCutoff: Long,
             degrees: Option[DataFrame] = None): SplitEdges =
     if (hubDegreeCutoff > 0) {
-      val h = degrees
+      val h = Materialize.local(degrees
         .getOrElse(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
-        .filter(col("deg") >= hubDegreeCutoff).select(col("src"))
-        .localCheckpoint(false)
+        .filter(col("deg") >= hubDegreeCutoff).select(col("src")), "GraphSkew hubs (node)")
       // NO hubs under the cutoff → degrade to the plain plan (r19
       // review): the Some branch charges every round a node-sized
       // iterate checkpoint plus an empty semi-join/broadcast leg —
@@ -76,8 +75,8 @@ object GraphSkew {
       // split time (the capHotBuckets skip-when-empty move).
       if (h.isEmpty) SplitEdges(e, e.limit(0), None)
       else SplitEdges(
-        e.join(h, Seq("src"), "left_anti").localCheckpoint(false),
-        e.join(h, Seq("src"), "left_semi").localCheckpoint(false),
+        Materialize.local(e.join(h, Seq("src"), "left_anti"), "GraphSkew tail edges (operator input)"),
+        Materialize.local(e.join(h, Seq("src"), "left_semi"), "GraphSkew hub edges (operator input)"),
         Some(h))
     } else SplitEdges(e, e.limit(0), None)
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one shuffle-join (edges ⋈ labels on src) + one
   * partial-agg count + one per-node window per round — the same
-  * per-round cost as [[PageRank]], with the same lazy-checkpointed
+  * per-round cost as [[PageRank]], over the same prepared (materialized)
   * graph artifacts so iteration N does not re-derive the edge list.
   * Min-label connected components ([[Dedup.connectedComponents]]) is
   * the related fixpoint; LPA differs by frequency voting, which splits
@@ -24,25 +24,13 @@ import org.apache.spark.sql.functions._
   */
 object LabelPropagation {
 
-  /** `iters` fixed synchronous rounds over UNDIRECTED `edges(src,
-    * dst)`; returns (node, label). Nodes = src ∪ dst.
-    */
-  def labels(edges: DataFrame, iters: Int): DataFrame = {
-    val eu = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(false)
-    val nodes = eu.select(col("src").as("node")).distinct()
-      .localCheckpoint(false)
-    labelsPrepared(eu, nodes, iters)
-  }
-
-  /** [[labels]] over a PREPARED graph: `eu` already undirected-distinct
-    * and `nodes` its node set, both backed by materialized storage
-    * (a written table / parquet artifact) — the caller owns the
-    * materialization (the [[PageRank.ranksPrepared]] contract).
-    */
-  /** HIGH-DEGREE HANDLING (r11): same contract as
+  /** `iters` fixed synchronous rounds over a PREPARED graph; returns
+    * (node, label). `eu(src, dst)` is already undirected-distinct (each
+    * edge in both directions) and `nodes` its node set, both backed by
+    * materialized storage — the caller owns the materialization (the
+    * [[PageRank.ranksPrepared]] contract).
+    *
+    * HIGH-DEGREE HANDLING (r11): same contract as
     * [[PageRank.ranksPrepared]] — with `hubDegreeCutoff` > 0 the
     * undirected edge set splits once, hub-source edges join a
     * broadcast of the (≤ |E|/cutoff) hub label rows, the tail keeps
@@ -86,7 +74,7 @@ object LabelPropagation {
         .select(col("node"), (-col("m.nl")).as("new_label"))
       // NOT checkpointed: each l is consumed exactly once (by the next
       // round's vote, or the caller), so the whole fixpoint stays one
-      // lazy plan over the two checkpointed graph artifacts — per-round
+      // lazy plan over the two prepared graph artifacts — per-round
       // materialization would only add job-scheduling overhead (the
       // [[PageRank]] discipline: checkpoint artifacts, not iterates)
       l = nodes

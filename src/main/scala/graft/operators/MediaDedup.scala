@@ -54,8 +54,8 @@ object MediaDedup {
     // the FuzzyJoin.ed1Pairs rule): an AQE broadcast conversion of one
     // leg defeats plain exchange reuse and re-executes the distinct +
     // hot-set anti-join pipeline per consumer — checkpoint once
-    val blocked = Dedup.capHotBuckets(blockedSigs(sigs),
-      Seq("block_id", "block_val"), maxBucketDf).localCheckpoint(false)
+    val blocked = Materialize.local(Dedup.capHotBuckets(blockedSigs(sigs),
+      Seq("block_id", "block_val"), maxBucketDf), "MediaDedup.nearDupPairs blocks (operator input)")
     blocked.as("a")
       .join(blocked.as("b"),
         col("a.block_id") === col("b.block_id") &&
@@ -126,10 +126,10 @@ object MediaDedup {
     // video participates in — drop them, matching signatures()
     // (r19 review). THREE consumers read the capped frame (sz + both
     // self-join legs): checkpoint once, the FuzzyJoin rule again.
-    val d = Dedup.capHotBuckets(
+    val d = Materialize.local(Dedup.capHotBuckets(
       frames.select(col("media_id"), col("sig"))
         .filter(col("sig").isNotNull).distinct(),
-      Seq("sig"), maxSigDf).localCheckpoint(false)
+      Seq("sig"), maxSigDf), "MediaDedup.frameJaccardPairs frames (operator input)")
     val sz = d.groupBy(col("media_id")).agg(count(lit(1)).as("n"))
     val inter = d.as("a")
       .join(d.as("b"),

@@ -27,28 +27,12 @@ object PageRank {
 
   val Scale = 1000000L
 
-  /** `iters` fixed rounds over `edges(src, dst)`; returns
-    * (node, rank_millionths). Nodes = src ∪ dst.
-    */
-  def ranks(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
-    // the graph artifacts feed EVERY iteration — without the lazy
-    // checkpoints each round's lazy plan re-derives the edge list (and
-    // whatever join produced it) from scratch, so a 3-iteration run
-    // paid the edge build ~7×. Production persists these as tables —
-    // callers that HAVE them as tables (the ArtifactStore gates) use
-    // [[ranksPrepared]] and skip the per-run materialization entirely.
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(false)
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(false)
-    ranksPrepared(e, nodes, iters, damping)
-  }
-
-  /** [[ranks]] over a PREPARED graph: `e` already (src, dst)-distinct
-    * and `nodes` its src ∪ dst set, both backed by materialized
-    * storage (a written table / parquet artifact) — the caller owns
-    * the materialization, nothing is checkpointed here.
+  /** `iters` fixed rounds over a PREPARED graph; returns (node,
+    * rank_millionths). `e(src, dst)` is already distinct and `nodes` its
+    * src ∪ dst set, both backed by materialized storage (a written table
+    * / parquet artifact): the graph feeds EVERY iteration, so an
+    * unmaterialized edge list would be re-derived from scratch each
+    * round. The caller owns that materialization.
     *
     * HIGH-DEGREE HANDLING (r11, `hubDegreeCutoff` > 0): the per-round
     * edges⋈ranks equi-join on `src` puts every edge of one source in
@@ -82,11 +66,11 @@ object PageRank {
     val dampM = math.round(damping * Scale)
     val baseM = Scale - dampM
     // iteration-invariant AND feeds every round + the hub split —
-    // lazily checkpointed (r17 review: unchckpointed, the full edge
-    // groupBy re-executed once per iteration on the hub path, exactly
-    // the artifacts-not-iterates waste this file's own doc names)
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(false)
+    // materialized once (r17 review: without it, the full edge groupBy
+    // re-executed once per iteration on the hub path, exactly the
+    // artifacts-not-iterates waste this file's own doc names)
+    val outDeg = Materialize.local(e.groupBy(col("src")).agg(count(lit(1)).as("deg")),
+      "PageRank out-degrees (node)")
     // hub split + per-round broadcast machinery: ONE spelling shared
     // with LabelPropagation ([[GraphSkew]], r17)
     val se = GraphSkew.split(e, hubDegreeCutoff, degrees = Some(outDeg))

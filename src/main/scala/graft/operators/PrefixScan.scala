@@ -78,20 +78,21 @@ object PrefixScan {
     // every _ps_* working column, in ONE list for the ONE skeleton
     Scratch.requireFree("PrefixScan", df.columns,
       Set("_ps_rnk", "_ps_bkt", "_ps_in", "_ps_prev", "_ps_bagg"))
-    // lazy checkpoint: globalRank's range-sampling pass materializes the
+    // globalRank's range-sampling pass materializes the
     // (one-row-per-key, aggregate-sized) input once; the count job and
     // both scan legs below read cached blocks
-    val src = df.localCheckpoint(false)
+    val src = Materialize.local(df, "PrefixScan input (operator input)")
     val n = src.count()
     val width = math.max(1L, (n + buckets - 1) / buckets)
     val p = math.max(1L, (n + width - 1) / width)
-    val ranked = SortedNeighborhood
+    val ranked = Materialize.local(SortedNeighborhood
       .globalRank(src, Seq(key.asc_nulls_last), "_ps_rnk")
       // exact integer division: Column./ on longs is DoubleType, whose
       // truncated quotient can round UP near 2^53-scale products —
       // div is exact at any rank (the DistributedSelection idiom)
-      .withColumn("_ps_bkt", expr(s"_ps_rnk div ${width}L"))
-      .localCheckpoint(false) // two consumers; rank+sort runs once
+      .withColumn("_ps_bkt", expr(s"_ps_rnk div ${width}L")),
+      // two consumers; rank+sort runs once
+      "PrefixScan ranked input (operator input)")
     val wIn = Window.partitionBy(col("_ps_bkt")).orderBy(col("_ps_rnk"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val within = ranked.withColumn("_ps_in", agg(value).over(wIn))

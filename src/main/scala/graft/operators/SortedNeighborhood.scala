@@ -74,15 +74,15 @@ object SortedNeighborhood {
                      window: Int): DataFrame = {
     require(window > 0)
     Scratch.requireFree("candidatePairs", df.columns, c => c == "rnk_b" || c.startsWith("_sn_"))
-    // lazy checkpoint: the rank table has FOUR consumers (two skinny
+    // the rank table has FOUR consumers (two skinny
     // candidate legs + one payload re-join per side), and the ranked
     // RDD's post-shuffle sort would otherwise rerun once per consumer
     // (column pruning diverges their projections, so no exchange
     // reuse). One materialization into block storage instead — the
     // PrefixScan convention; a production pipeline at
     // persistent scale writes the ranked table to a table instead.
-    val ranked = globalRank(df, blockCols.map(col) ++ sortCols, "rnk")
-      .localCheckpoint(false)
+    val ranked = Materialize.local(globalRank(df, blockCols.map(col) ++ sortCols, "rnk"),
+      "SortedNeighborhood.candidatePairs ranks (operator input)")
     val payload = ranked.columns.filterNot(c => blockCols.contains(c) || c == "rnk").toSeq
     val aKeys = ranked.select(blockCols.map(col) :+ col("rnk"): _*)
     val bKeys = ranked.select(blockCols.map(col) :+ col("rnk").as("rnk_b"): _*)

@@ -320,10 +320,10 @@ object AdvancedQ {
     */
   def binningReport(spark: SparkSession, dir: String): DataFrame = {
     // four consumers (total count, globalRank's range pass, min/max,
-    // the width leg) — one scan via the lazy-checkpoint idiom (r17)
-    val o = Tables.orders(spark, dir).select(col("o_orderkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .localCheckpoint(false)
+    // the width leg) — one written projection (r17)
+    val o = graft.sources.ArtifactStore.parquet(spark, dir, "order_cents")(
+      Tables.orders(spark, dir).select(col("o_orderkey"),
+        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")))
     val tot = o.agg(count(lit(1)).as("n"))
     val ranked = graft.operators.SortedNeighborhood
       .globalRank(o, Seq(col("cents"), col("o_orderkey")))

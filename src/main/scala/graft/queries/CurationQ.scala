@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.functions.BigramFunctions.{bigram_counts, token_hash_counts}
-import graft.operators.{Dedup, DistributedSelection, IncrementalDedup, Sampling, Winnowing}
+import graft.operators.{Dedup, DistributedSelection, IncrementalDedup, Materialize, Sampling, Winnowing}
 import graft.sources.Tables
 
 /** Corpus-curation operators beyond the per-document filters in
@@ -32,8 +32,8 @@ object CurationQ {
     * table — `min(total) / total`, i.e. downsample every source to the
     * smallest one — broadcasts back onto a second scan, where the
     * deterministic bucket predicate keeps the same rows on any engine.
-    * The 5-row totals artifact is lazily checkpointed so its two
-    * consumers (the min and the join) share one materialization; the
+    * The 5-row totals artifact is materialized ([[Materialize.local]]) so
+    * its two consumers (the min and the join) share one materialization; the
     * 5×1 cross join is a scalar broadcast, allowlisted in
     * PlanContractSpec. Nothing wider than (source, frac) ever leaves
     * the executors.
@@ -42,8 +42,8 @@ object CurationQ {
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
         tokenCount(col("text")).cast("long").as("n_tok"))
-    val totals = d.groupBy(col("source")).agg(sum(col("n_tok")).as("tot"))
-      .localCheckpoint(false)
+    val totals = Materialize.local(d.groupBy(col("source")).agg(sum(col("n_tok")).as("tot")),
+      "CurationQ.mixtureRebalance totals (aggregate)")
     // floor(x·1e6 + 0.5), NEVER round(x, 6), on a data-derived double
     // (r17 review): Spark rounds the shortest decimal repr HALF_UP
     // while DuckDB rounds the binary double — the battery-wide cosine
@@ -218,14 +218,13 @@ object CurationQ {
     // the tokenize + chunk + per-line md5 pass is the query's dominant
     // CPU cost and has two consumers (the dup-frequency aggregate and
     // the probe join) whose exchanges can't be deduped by
-    // ReuseExchange; the lazy checkpoint stands in for the written
-    // lines table a production pipeline materializes once (q85's move)
-    val lines = docs
+    // ReuseExchange: the corpus-sized lines table is written once, as a
+    // production pipeline materializes it (q85's move)
+    val lines = graft.sources.ArtifactStore.parquet(spark, dir, "curation_lines")(docs
       .select(col("doc_id"), col("source"), tokens(col("text")).as("ts"))
       .select(col("doc_id"), col("source"),
         posexplode(lineArr).as(Seq("line_no", "line")))
-      .withColumn("h", Winnowing.portableHash(col("line")))
-      .localCheckpoint(false)
+      .withColumn("h", Winnowing.portableHash(col("line"))))
     val dupHashes = lines
       .groupBy(col("h")).agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") > lineDupMaxDocs)
@@ -344,12 +343,11 @@ object CurationQ {
     val toks = Tables.documents(spark, dir)
       .select(col("source"), explode(tokens(col("text"))).as("term"))
     // counts is AGGREGATED (sources × vocab rows) with three consumers
-    // (vocab top-N, per-source totals, probs join) — checkpoint it so
+    // (vocab top-N, per-source totals, probs join) — materialize it so
     // the corpus tokenize+explode runs once, not per branch (the q149
-    // rule: vocab-sized model tables earn the checkpoint)
-    val counts = toks.groupBy(col("source"), col("term"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+    // rule: vocab-sized model tables earn the materialization)
+    val counts = Materialize.local(toks.groupBy(col("source"), col("term"))
+      .agg(count(lit(1)).as("c")), "CurationQ.sourceDrift counts (vocabulary)")
     val vocab = counts.groupBy(col("term")).agg(sum(col("c")).as("tc"))
       .orderBy(col("tc").desc, col("term").asc).limit(driftVocab)
       .select(col("term"))
@@ -385,10 +383,10 @@ object CurationQ {
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
     // the tokenize+explode pass has two consumers (vocab aggregate,
     // coverage join) whose exchanges ReuseExchange can't dedupe — the
-    // lazy checkpoint materializes it once (the q85/q93 move)
-    val sub = Tables.documents(spark, dir)
-      .select(col("source"), explode(bpeishTokens(col("text"))).as("t"))
-      .localCheckpoint(false)
+    // corpus-sized sub-token stream is written once (the q85/q93 move)
+    val sub = graft.sources.ArtifactStore.parquet(spark, dir, "curation_subtokens")(
+      Tables.documents(spark, dir)
+        .select(col("source"), explode(bpeishTokens(col("text"))).as("t")))
     val vocab = sub.groupBy(col("t")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("t").asc).limit(vocabSize)
       .select(col("t"), lit(true).as("in_vocab"))
@@ -428,26 +426,25 @@ object CurationQ {
   def evalSplit(spark: SparkSession, dir: String): DataFrame = {
     // the canonicalize+md5 scan feeds five plan legs (sample window,
     // eval hashes, rest filter, n_eval aggregate, residual semi-join)
-    // — checkpoint it once (the q85/q93/q105 diamond)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"),
+    // — the corpus-sized hash table is written once (the q85/q93/q105
+    // diamond)
+    val docs = graft.sources.ArtifactStore.parquet(spark, dir, "eval_split_hashes")(
+      Tables.documents(spark, dir).select(col("doc_id"), col("source"),
         md5(Dedup.canonicalText(col("text"))).as("ch"),
         // SECOND, independent content key (r17 review): the residual
         // check below semi-joined on the SAME ch that defined
         // `leaked`, so it was empty by construction and could not
         // trap a broken exclusion; xxhash64 re-derives content
         // identity through a different function
-        xxhash64(Dedup.canonicalText(col("text"))).as("ch2"))
-      .localCheckpoint(false)
+        xxhash64(Dedup.canonicalText(col("text"))).as("ch2")))
     // eval is BOUNDED (k per stratum) with FOUR consumers (evalHashes,
     // evalHashes2, the rest anti-filter, the n_eval aggregate) — each
-    // re-derived the full docs-wide rank window from the checkpointed
+    // re-derived the full docs-wide rank window from the materialized
     // docs (r19 plan audit: the pmod(md5low60(..)) sample salt appeared
-    // in 5 plan legs). The lazy checkpoint runs the window once; the
+    // in 5 plan legs). Materializing it runs the window once; the
     // materialized frame is k·|sources| rows at any scale.
-    val eval = Sampling.fixedSizePerStratum(docs, col("source"), col("doc_id"),
-      k = evalK, salt = "ev1")
-      .localCheckpoint(false)
+    val eval = Materialize.local(Sampling.fixedSizePerStratum(docs, col("source"), col("doc_id"),
+      k = evalK, salt = "ev1"), "CurationQ.evalSplit eval sample (aggregate)")
     val evalHashes = eval.select(col("ch")).distinct()
     val evalHashes2 = eval.select(col("ch2")).distinct()
     val rest = docs.join(eval.select(col("doc_id"), lit(true).as("_inEval")),
@@ -534,13 +531,14 @@ object CurationQ {
   val curriculumPhases = 4
 
   def curriculumPlan(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        graft.functions.QualityFunctions.quality_stats(col("text")).as("qs"))
-      .select(col("doc_id"),
-        floor(col("qs.q") * 1000000 + 0.5).cast("long").as("q_micro"),
-        col("qs.n_tok").cast("long").as("n_tok"))
-      .localCheckpoint(false) // count + rank share one materialization
+    // count + rank share one written per-doc quality table
+    val d = graft.sources.ArtifactStore.parquet(spark, dir, "curriculum_quality")(
+      Tables.documents(spark, dir)
+        .select(col("doc_id"),
+          graft.functions.QualityFunctions.quality_stats(col("text")).as("qs"))
+        .select(col("doc_id"),
+          floor(col("qs.q") * 1000000 + 0.5).cast("long").as("q_micro"),
+          col("qs.n_tok").cast("long").as("n_tok")))
     val n = d.count()
     graft.operators.SortedNeighborhood
       .globalRank(d, Seq(col("q_micro").asc, col("doc_id").asc), "_rnk")
@@ -685,11 +683,10 @@ object CurationQ {
     // (the scoring join's model side + the c1 rollup) and was REBUILT
     // for each — two artifact scans and two (h1, h12) aggregations per
     // run where one suffices. Same rule as q149's c12: the AGGREGATED,
-    // vocab-sized bigram-type table earns a checkpoint; per-doc tables
-    // don't.
-    val c12 = docBigrams.groupBy(col("h1"), col("h12"))
-      .agg(sum(col("m")).as("c12"))
-      .localCheckpoint(false)
+    // vocab-sized bigram-type table earns a materialization; per-doc
+    // tables don't.
+    val c12 = Materialize.local(docBigrams.groupBy(col("h1"), col("h12"))
+      .agg(sum(col("m")).as("c12")), "CurationQ bigram-type counts (vocabulary)")
     val c1 = c12.groupBy(col("h1")).agg(sum(col("c12")).as("c1"))
     docBigrams
       .join(c12, Seq("h1", "h12"))
@@ -763,22 +760,21 @@ object CurationQ {
     // kernel), so the shuffle and partial agg see distinct-per-doc
     // (h1, h12, m) rows, not every occurrence; sum(m) ≡ the old
     // count(1). c12 feeds two branches (c1 rollup + the scoring
-    // left-join): checkpoint the aggregated bigram-type table so each
+    // left-join): materialize the aggregated bigram-type table so each
     // reads the materialized model, not a re-explode of the train split
-    val c12 = train
+    val c12 = Materialize.local(train
       .select(explode(bigram_counts(col("ts"))).as("b"))
       .groupBy(col("b.h1").as("h1"), col("b.h12").as("h12"))
-      .agg(sum(col("b.m")).as("c12"))
-      .localCheckpoint(false)
+      .agg(sum(col("b.m")).as("c12")), "CurationQ train bigram-type counts (vocabulary)")
     val c1 = c12.groupBy(col("h1")).agg(sum(col("c12")).as("c1"))
     // r20 (guide §2.4 double-compute sweep): uni feeds TWO consumers
     // (the backoff broadcast join + the t_tokens scalar) and was
     // REBUILT for each — the t leg re-scanned and re-tokenized the
     // whole train split to sum a table the join leg had already
-    // aggregated. Vocab-sized ⇒ earns the checkpoint (the c12 rule).
-    val uni = train.select(explode(token_hash_counts(col("ts"))).as("u"))
-      .groupBy(col("u.h").as("h2")).agg(sum(col("u.m")).as("c2"))
-      .localCheckpoint(false)
+    // aggregated. Vocab-sized ⇒ earns the materialization (the c12 rule).
+    val uni = Materialize.local(train.select(explode(token_hash_counts(col("ts"))).as("u"))
+      .groupBy(col("u.h").as("h2")).agg(sum(col("u.m")).as("c2")),
+      "CurationQ train unigram counts (vocabulary)")
     val t = uni.agg(sum(col("c2")).as("t_tokens"))
     docBigramsOf(held)
       .join(c12, Seq("h1", "h12"), "left")

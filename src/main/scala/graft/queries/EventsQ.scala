@@ -13,6 +13,19 @@ import graft.sources.Tables
   */
 object EventsQ {
 
+  /** The skinny events projection q106, q136, q150 and the funnel read
+    * from several consumers each, written once per (session, dir) so
+    * every consumer scans a narrow columnar table instead of the events
+    * file. `ts_us` is FLOORED µs (r17/r18 reviews: `div 1000` truncates
+    * a negative pre-1970 ts_ns 1 µs late against the oracle's
+    * epoch_us(ts), and `Tables.deriveEventTs` floors `ts` the same way,
+    * so `timestamp_micros(ts_us)` is exactly `ts`).
+    */
+  private[queries] def eventsUs(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.ArtifactStore.parquet(spark, dir, "events_us")(
+      Tables.events(spark, dir).select(col("user_id"), col("event_id"), col("event_type"),
+        expr("(ts_ns - pmod(ts_ns, 1000)) div 1000").as("ts_us"), col("value")))
+
   /** JSON extraction from the props column + grouped aggregate. */
   def jsonExtract(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
@@ -91,16 +104,8 @@ object EventsQ {
     */
   def resampleFfill(spark: SparkSession, dir: String): DataFrame = {
     val hourUs = 3600L * 1000000L
-    // FLOOR, not truncation (r17 review): `div 1000` lands a negative
-    // pre-1970 ts_ns 1 µs late vs the oracle's epoch_us(ts) (ts is
-    // floored by Tables.deriveEventTs) — same pmod discipline here.
-    // Lazily checkpointed: obs and the grid bounds BOTH read ev (the
-    // retentionMatrix/attribution multi-consumer idiom; unchecked, the
-    // events scan ran twice per invocation).
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id"),
-        expr("(ts_ns - pmod(ts_ns, 1000)) div 1000").as("ts_us"), col("value"))
-      .localCheckpoint(false)
+    // obs and the grid bounds BOTH read ev
+    val ev = eventsUs(spark, dir)
     val obs = ev.groupBy(col("user_id"), col("ts_us"))
       .agg(max(col("value")).as("obs_value"))
       .withColumnRenamed("ts_us", "obs_us")
@@ -131,18 +136,17 @@ object EventsQ {
     * per-row projection.
     */
   def retentionMatrix(spark: SparkSession, dir: String): DataFrame = {
-    // three consumers (cohort, cohort sizes, distinct activity) — one
-    // events scan via the lazy-checkpoint artifact idiom
+    // three consumers (cohort, cohort sizes, distinct activity) of the
+    // written events projection.
     // greatest(0, ·) before the div: Spark div truncates toward zero,
     // DuckDB // floors — they differ on negatives, so clamp the
     // day-delta at the epoch anchor on BOTH sides (the fixture starts
     // exactly at the anchor; the clamp makes that an invariant, not a
     // latent hash divergence)
-    val a = Tables.events(spark, dir)
+    val a = eventsUs(spark, dir)
       .select(col("user_id"),
-        expr("greatest(0L, CAST(datediff(CAST(ts AS DATE), DATE '2024-01-01') AS BIGINT)) div 7L")
-          .as("wk"))
-      .localCheckpoint(false)
+        expr("greatest(0L, CAST(datediff(CAST(timestamp_micros(ts_us) AS DATE), " +
+          "DATE '2024-01-01') AS BIGINT)) div 7L").as("wk"))
     val cohort = a.groupBy(col("user_id")).agg(min(col("wk")).as("cohort_wk"))
     val cohortSize = cohort.groupBy(col("cohort_wk"))
       .agg(count(lit(1)).as("cohort_size"))
@@ -223,25 +227,13 @@ object EventsQ {
     */
   def attribution(spark: SparkSession, dir: String): DataFrame = {
     val lookbackUs = 7L * 86400L * 1000000L
-    // one events scan: p anchors BOTH the candidate join and the final
-    // left join, c is the second consumer — lazy-checkpoint the
-    // projected stream (the retentionMatrix idiom), pre-filtered to
-    // the three event types either leg consumes so the materialized
-    // artifact carries no dead rows
-    val ev = Tables.events(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("user_id"), col("event_id"),
-        // floor, not truncation — the q106/funnel negative-ts
-        // discipline (r18 review: the truncating spelling diverged
-        // from the oracle's floored epoch_us on a nanos-encoded
-        // pre-1970 event by 1 µs)
-        expr("(ts_ns - pmod(ts_ns, 1000)) div 1000").as("ts_us"),
-        col("event_type"))
-      .localCheckpoint(false)
+    // p anchors BOTH the candidate join and the final left join, c is
+    // the second consumer: each scans the written events projection,
+    // its event-type filter pushed into the scan
+    val ev = eventsUs(spark, dir)
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("purchase_id"),
         col("ts_us").as("p_ts"))
-      .localCheckpoint(false)
     val c = ev.filter(col("event_type").isin("click", "view"))
       .select(col("user_id"), col("event_id").as("c_id"),
         col("ts_us").as("c_ts"))

@@ -123,11 +123,10 @@ object Shapes {
     // scanned and distinct-shuffled FOUR times; Spark does not dedupe
     // identical subplans). The intersect/except operators themselves
     // stay — they are the surface this gate exists to exercise.
-    val buyersByYear = Tables.orders(spark, dir)
+    val buyersByYear = graft.operators.Materialize.local(Tables.orders(spark, dir)
       .filter(year(col("o_orderdate")).isin(1995, 1996))
       .select(year(col("o_orderdate")).as("y"), col("o_custkey"))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct(), "Shapes.setOps buyers by year (aggregate)")
     def buyers(y: Int) =
       buyersByYear.filter(col("y") === y).select(col("o_custkey"))
     val both = buyers(1995).intersect(buyers(1996))

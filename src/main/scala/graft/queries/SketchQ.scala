@@ -194,21 +194,21 @@ object SketchQ {
     val cents = Tables.lineitem(spark, dir)
       .select(col("l_returnflag").as("flag"),
         expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)").as("cents"))
-    val est = cents.groupBy(col("flag"))
+    val est = graft.operators.Materialize.local(cents.groupBy(col("flag"))
       .agg(graft.functions.QDigest.qdigest_quantiles(
         col("cents"), qdigLog2U, qdigK, Seq(0.25, 0.5, 0.75)).as("est"),
         count(lit(1)).as("n"))
       .select(col("flag"), col("n"),
         element_at(col("est"), 1).as("e25"),
         element_at(col("est"), 2).as("e50"),
-        element_at(col("est"), 3).as("e75"))
-      // lazy checkpoint (r17 review): est has TWO consumers under
-      // different exchanges (broadcast into ranks, shuffle into the
-      // final join) — no exchange reuse possible, so the battery's
-      // most expensive UDAF pass over lineitem ran twice; and since
-      // digest node sets are batching-dependent, the two evaluations
-      // could even disagree. One materialization of the 3-row table.
-      .localCheckpoint(false)
+        element_at(col("est"), 3).as("e75")),
+      // (r17 review) est has TWO consumers under different exchanges
+      // (broadcast into ranks, shuffle into the final join) — no
+      // exchange reuse possible, so the battery's most expensive UDAF
+      // pass over lineitem ran twice; and since digest node sets are
+      // batching-dependent, the two evaluations could even disagree.
+      // One materialization of the 3-row table.
+      "SketchQ.qdigestQuantiles estimates (aggregate)")
     // exact ranks of the three estimates, one conditional-sum scan
     val ranks = cents.join(broadcast(est), Seq("flag"))
       .groupBy(col("flag"))

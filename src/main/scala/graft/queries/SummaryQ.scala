@@ -41,15 +41,9 @@ object SummaryQ {
     * detection, SQL-expressible for the oracle.
     */
   def funnel(spark: SparkSession, dir: String): DataFrame = {
-    // floor, not truncation — the q36/q106 negative-ts discipline (r17)
-    // lazy checkpoint: the signup and purchase legs are TWO consumers
-    // of the same skinny projection — the multi-consumer idiom
-    // (q106/q136/q150); unchecked, the events scan ran twice per
-    // invocation (r18 review)
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"),
-        expr("(ts_ns - pmod(ts_ns, 1000)) div 1000").as("ts_us"))
-      .localCheckpoint(false)
+    // the signup and purchase legs are TWO consumers of the written
+    // events projection (floored µs, the q36/q106 negative-ts rule)
+    val ev = EventsQ.eventsUs(spark, dir)
     val firstSignup = ev.filter(col("event_type") === "signup")
       .groupBy(col("user_id")).agg(min(col("ts_us")).as("signup_us"))
     val firstPurchaseAfter = ev.filter(col("event_type") === "purchase")

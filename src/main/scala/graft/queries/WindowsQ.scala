@@ -77,13 +77,15 @@ object WindowsQ {
     * oracle keeps the plain ntile/percent_rank/cume_dist SQL.
     */
   def distribution(spark: SparkSession, dir: String): DataFrame = {
-    val ranked = graft.operators.SortedNeighborhood.globalRank(
-      Tables.orders(spark, dir)
-        .select(year(col("o_orderdate")).as("y"), col("o_orderkey"),
-          col("o_totalprice")),
-      Seq(col("y").asc, col("o_totalprice").asc, col("o_orderkey").asc),
-      "_g")
-      .localCheckpoint(false) // two consumers: offsets + the join back
+    // two consumers: offsets + the join back — the corpus-sized ranked
+    // orders are written once
+    val ranked = graft.sources.ArtifactStore.parquet(spark, dir, "ranked_orders_by_year")(
+      graft.operators.SortedNeighborhood.globalRank(
+        Tables.orders(spark, dir)
+          .select(year(col("o_orderdate")).as("y"), col("o_orderkey"),
+            col("o_totalprice")),
+        Seq(col("y").asc, col("o_totalprice").asc, col("o_orderkey").asc),
+        "_g"))
     val years = ranked.groupBy(col("y"))
       .agg(min(col("_g")).as("_y0"), count(lit(1)).as("_n"))
     ranked.join(broadcast(years), Seq("y"))

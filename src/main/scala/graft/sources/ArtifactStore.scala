@@ -27,8 +27,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * its own store, nothing leaks across sessions, and repeat consumers
   * get the SAME value (for parquet, the same DataFrame — plan reuse on
   * top of the file reuse). Names share one namespace per (session,
-  * dir). Every store lives in one [[Staging.tempDir]] — reaped at JVM
-  * exit, same lifetime the localCheckpoint blocks had.
+  * dir). Every store lives in one [[Staging.tempDir]], reaped at JVM
+  * exit. This is the corpus-sized class of
+  * [[graft.operators.Materialize]]'s policy; bounded data stays in
+  * local blocks there.
   */
 object ArtifactStore {
 
@@ -78,7 +80,7 @@ object ArtifactStore {
 
 /** Session-keyed memo with [[ArtifactStore.staged]]'s concurrency and
   * lifecycle contract — the memo under it — for the in-memory
-  * artifacts (checkpointed doc-/vocab-sized tables, broadcast model
+  * artifacts (the memoized duplicate components, driver-held model
   * rows, metering baselines) that need no directory; anything that
   * stages files goes through [[ArtifactStore.staged]] instead.
   * Entries of STOPPED sessions are evicted on every access (a static map would otherwise pin the

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Print a registry query's formatted physical plan — the ".explain
   * the plan you ship" discipline as a one-liner:
@@ -10,9 +9,7 @@ import org.apache.spark.sql.SparkSession
 object QExplain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.LocalSession.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { n =>
       println(s"==== $n ====")

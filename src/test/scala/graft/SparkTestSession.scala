@@ -4,13 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One lazily-created local session shared across all suites in the JVM. */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession.builder("4").appName("graft-tests").getOrCreate()
 }
 
 trait SparkTestSession {

@@ -125,6 +125,21 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("connected components leaves only the returned labels' blocks persisted") {
+    val sc = spark.sparkContext
+    val path = (1L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    // the path needs 3+ rounds, so several rounds were superseded
+    intercept[IllegalStateException](Dedup.connectedComponents(path, maxIter = 2))
+    val before = sc.getPersistentRDDs.keySet
+    val cc = Dedup.connectedComponents(path)
+    val labels = cc.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(labels.isDefined)
+    assert(sc.getPersistentRDDs.keySet -- before == labels.toSet)
+    assert(cc.filter(col("component") === 1L).count() == 30L)
+  }
+
   test("embedding near-dups drops wrong-length vectors instead of bucketing them together") {
     val dim = 4
     val embs = Seq(

@@ -145,9 +145,9 @@ class EmptyInputSpec extends AnyFunSuite with SparkTestSession {
 
   test("round-6 operators on empty and singleton inputs") {
     val noEdges = Seq.empty[(Long, Long)].toDF("src", "dst")
-    assert(LabelPropagation.labels(noEdges, iters = 2).count() == 0)
+    assert(GraphPrep.labels(noEdges, iters = 2).count() == 0)
     val oneEdge = Seq((1L, 2L)).toDF("src", "dst")
-    assert(LabelPropagation.labels(oneEdge, iters = 0).count() == 2)
+    assert(GraphPrep.labels(oneEdge, iters = 0).count() == 2)
     // hard negatives: all-same-label corpus yields nothing; empty
     // queries yield nothing
     val vecs = Seq((1L, Array(1.0f, 0.0f), 7), (2L, Array(0.0f, 1.0f), 7))

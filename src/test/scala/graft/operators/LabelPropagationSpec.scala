@@ -16,7 +16,7 @@ class LabelPropagationSpec extends AnyFunSuite with SparkTestSession {
       (10L, 11L), (10L, 12L), (11L, 12L),
       (3L, 10L)
     ).toDF("src", "dst")
-    val l = LabelPropagation.labels(edges, iters = 3)
+    val l = GraphPrep.labels(edges, iters = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(l == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 3L, 11L -> 3L, 12L -> 3L))
@@ -24,11 +24,11 @@ class LabelPropagationSpec extends AnyFunSuite with SparkTestSession {
 
   test("zero iterations returns self-labels; ties pick the smallest label") {
     val edges = Seq((5L, 7L)).toDF("src", "dst")
-    val l0 = LabelPropagation.labels(edges, iters = 0)
+    val l0 = GraphPrep.labels(edges, iters = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(l0 == Map(5L -> 5L, 7L -> 7L))
     // one round: each node's single neighbor wins the vote
-    val l1 = LabelPropagation.labels(edges, iters = 1)
+    val l1 = GraphPrep.labels(edges, iters = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(l1 == Map(5L -> 7L, 7L -> 5L))
   }
@@ -38,7 +38,7 @@ class LabelPropagationSpec extends AnyFunSuite with SparkTestSession {
     // (ANSI) or casts to null and silently resets every node to its
     // own label — the guard fails at plan time instead
     val e = intercept[IllegalArgumentException] {
-      LabelPropagation.labels(
+      GraphPrep.labels(
         Seq(("a", "b")).toDF("src", "dst"), 1).collect()
     }
     assert(e.getMessage.contains("numeric node ids"))
@@ -47,7 +47,7 @@ class LabelPropagationSpec extends AnyFunSuite with SparkTestSession {
   test("all-tied votes pick the smallest label") {
     // node 100's neighbors {9, 5, 7} each vote their own label once
     val edges = Seq((100L, 9L), (100L, 5L), (100L, 7L)).toDF("src", "dst")
-    val l1 = LabelPropagation.labels(edges, iters = 1)
+    val l1 = GraphPrep.labels(edges, iters = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(l1(100L) == 5L)
   }
@@ -58,7 +58,7 @@ class LabelPropagationSpec extends AnyFunSuite with SparkTestSession {
     // majority label 59 must win although 40 is smaller
     val edges = Seq((100L, 50L), (100L, 60L), (100L, 61L),
       (50L, 40L), (60L, 59L), (61L, 59L)).toDF("src", "dst")
-    val l2 = LabelPropagation.labels(edges, iters = 2)
+    val l2 = GraphPrep.labels(edges, iters = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(l2(100L) == 59L)
   }

@@ -8,7 +8,7 @@ class PageRankSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
 
   private def ranksOf(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
-    PageRank.ranks(edges.toDF("src", "dst"), iters)
+    GraphPrep.ranks(edges.toDF("src", "dst"), iters)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("a hub fed by many nodes outranks its feeders; zero iterations = uniform") {
@@ -37,11 +37,11 @@ class PageRankSpec extends AnyFunSuite with SparkTestSession {
     val e = Seq((1L, 2L)).toDF("src", "dst")
     for (bad <- Seq(-0.1, 1.2))
       assert(intercept[IllegalArgumentException] {
-        PageRank.ranks(e, 1, damping = bad)
+        GraphPrep.ranks(e, 1, damping = bad)
       }.getMessage.contains("damping"))
   }
 
   test("empty edge list yields empty ranks") {
-    assert(PageRank.ranks(Seq.empty[(Long, Long)].toDF("src", "dst"), 3).count() == 0L)
+    assert(GraphPrep.ranks(Seq.empty[(Long, Long)].toDF("src", "dst"), 3).count() == 0L)
   }
 }

@@ -128,4 +128,24 @@ class OracleSqlContractSpec extends AnyFunSuite {
       s"hand-rolled memo at: ${offenders.mkString(", ")} — stage stores " +
         "with ArtifactStore.staged and memoize values with SessionMemo")
   }
+
+  test("only operators.Materialize checkpoints or releases blocks") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val owner = java.nio.file.Paths.get("src/main/scala/graft/operators/Materialize.scala")
+    val forbidden = """localCheckpoint\(|\.unpersist\(""".r
+    val walk = java.nio.file.Files.walk(root)
+    val offenders = try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != owner)
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if forbidden.findFirstIn(line).isDefined =>
+            s"$p:${i + 1}"
+        }
+      }.toSeq
+    finally walk.close()
+    assert(offenders.isEmpty,
+      s"raw checkpoint or release at: ${offenders.mkString(", ")} — use " +
+        "Materialize.local / Materialize.release, or ArtifactStore.parquet for corpus-sized data")
+  }
 }

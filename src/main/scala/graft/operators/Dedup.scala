@@ -511,10 +511,13 @@ object Dedup {
     // file's no-silent-caps doctrine, r16): returning partial labels
     // would report one true component as several fragments, and
     // keepCanonical would silently let duplicates survive dedup
-    if (!converged) throw new IllegalStateException(
-      s"connected components did not converge in $maxIter rounds — " +
-        "raise maxIter (cluster diameter exceeds the pointer-jump " +
-        "budget); partial labels would under-merge duplicate clusters")
+    if (!converged) {
+      Materialize.release(labels)
+      throw new IllegalStateException(
+        s"connected components did not converge in $maxIter rounds — " +
+          "raise maxIter (cluster diameter exceeds the pointer-jump " +
+          "budget); partial labels would under-merge duplicate clusters")
+    }
     labels.withColumnRenamed("label", "component")
   }
 

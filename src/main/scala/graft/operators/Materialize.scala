@@ -30,7 +30,7 @@ import org.apache.spark.storage.StorageLevel
   */
 object Materialize {
 
-  /** Serialized bytes one partition of a local materialization may
+  /** `UnsafeRow` bytes one partition of a local materialization may
     * hold: AQE's own target size for a shuffle partition. */
   val MaxBlockBytes: Long = 64L << 20
 

@@ -85,9 +85,8 @@ object ArtifactStore {
   * stages files goes through [[ArtifactStore.staged]] instead.
   * Entries of STOPPED sessions are evicted on every access (a static map would otherwise pin the
   * session, its DataFrames and their plans for the JVM lifetime — the
-  * r16 ArtifactStore finding, found again in indexStatsMemo by the r17
-  * review), and the multi-second build runs under a PER-KEY monitor,
-  * never inside a ConcurrentHashMap bin lock (an eager computeIfAbsent
+  * r16 ArtifactStore finding), and the multi-second build runs under a
+  * PER-KEY monitor, never inside a ConcurrentHashMap bin lock (an eager computeIfAbsent
   * body blocks unrelated keys hashing to the same bin and deadlocks on
   * recursive resolution). One spelling for every query-module memo —
   * the per-file CHMs this replaces each re-decided eviction (none did)

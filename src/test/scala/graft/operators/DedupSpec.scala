@@ -128,9 +128,11 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
   test("connected components leaves only the returned labels' blocks persisted") {
     val sc = spark.sparkContext
     val path = (1L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    // the path needs 3+ rounds, so several rounds were superseded
-    intercept[IllegalStateException](Dedup.connectedComponents(path, maxIter = 2))
     val before = sc.getPersistentRDDs.keySet
+    // the path needs 3+ rounds, so several rounds were superseded; a run
+    // that exhausts maxIter keeps nothing either
+    intercept[IllegalStateException](Dedup.connectedComponents(path, maxIter = 2))
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
     val cc = Dedup.connectedComponents(path)
     val labels = cc.queryExecution.analyzed.collectFirst {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
